@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.{LogSpace, LongDoubleMap, MapLookup}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -20,31 +21,38 @@ import org.apache.spark.storage.StorageLevel
   *    has a line even if dangling
   *    (reference/assignment4/src/main/basic/BuildPageRankRecords.java:79-95)
   *
-  * Architecture (Spark-first, NOT the reference's design):
-  *  - The reference multiplexes mass messages and node structure through one
-  *    shuffle via a tagged-union Writable (PageRankNode.java:36-54). Here the
-  *    adjacency relation is built once, hash-partitioned on `src`, and
-  *    persisted; each iteration is scatter (join + explode) -> gather
-  *    (groupBy sum, with automatic partial aggregation standing in for the
-  *    reference's combiner, RunPageRankBasic.java:206-237).
-  *  - The reference computes total mass via reducer side-files read by the
-  *    driver (RunPageRankBasic.java:304-318,515-523); here the dangling mass
-  *    is one driver-side scalar `agg(sum)` per iteration.
-  *  - The reference materializes every iteration to HDFS (iterXXXX dirs);
-  *    here `localCheckpoint()` truncates lineage, keeping the plan O(1) per
-  *    iteration instead of O(iterations).
-  *  - The reference does float32 log-space arithmetic to dodge underflow
-  *    (sumLogProbs, RunPageRankBasic.java:570-582). Double-precision linear
-  *    space is safe far beyond 1e9 nodes (rank >= alpha/N >= 1e-10 at
-  *    N=1e9, comfortably inside double range) and keeps every operation
-  *    codegen-friendly, so the engine uses doubles.
+  * One scatter/gather skeleton runs every walk. A round sends each
+  * vertex's mass along its out-edges, sums it per destination (the
+  * gather's partial aggregation stands in for the reference's combiner,
+  * RunPageRankBasic.java:206-237) and applies the teleport/dangling
+  * update. Three values parameterize it:
+  *  - a [[Walk]] rule — initial rank, per-edge mass (`r/d`, or `r - log d`
+  *    in log space), gather aggregate (`sum` or `LogSpace.logSumExp`) and
+  *    update — with linear, log-space and personalized instances. Rules
+  *    are written once over [[Arith]], so the driver's doubles and the
+  *    join regime's Columns run the same IEEE operations;
+  *  - a [[Stop]] rule: a fixed round count, or L∞ change < tol;
+  *  - a [[Scatter]] layout built once by [[prepare]]: adjacency arrays
+  *    (`explode(adj)`), or — when the hub guard trips — the persisted flat
+  *    (src, dst) relation joined per round, so a 100M-out-degree hub never
+  *    becomes one giant array row.
   *
-  * Scale notes: at 100 TB the iteration state is (nodeid, rank) — tiny next
-  * to the edge relation. The edge/adjacency table is the big side: it is
-  * shuffled ONCE at build, then every per-iteration join reuses its
-  * partitioning (`repartition(src)` + persist). Skewed high-degree nodes
-  * fan out through `explode`, which is map-side and spill-free; the gather
-  * groupBy benefits from partial aggregation before the shuffle.
+  * Each walk runs in one of two regimes, chosen by [[localizes]]:
+  *  - localized (|walks| x n under the cutoff): rank state lives on the
+  *    driver and re-enters each scatter as a [[MapLookup]] table; a round
+  *    is ONE job, its gather collected to the driver. Dangling mass, the
+  *    update and the L∞ change are driver arithmetic — the reduction the
+  *    reference does through reducer side-files (RunPageRankBasic.java:
+  *    515-523). The final ranks leave through one lookup per walk.
+  *  - join (above it): state is a relation joined against the graph each
+  *    round. Dangling rank flows to a NULL `dst` sentinel inside the same
+  *    gather and comes back as a driver scalar per walk, so each round's
+  *    plan reads the checkpointed gather once (two references would square
+  *    Catalyst's size estimate every round). The per-round lineage cut
+  *    ([[LineageCutter]]) keeps the plan O(1) where the reference writes
+  *    iterXXXX dirs to HDFS.
+  * The graph side never moves to the driver: its relations are built and
+  * persisted once, partitioned on `src`.
   */
 object GraphOps {
 
@@ -65,12 +73,6 @@ object GraphOps {
     (edges, verts)
   }
 
-  /** Vertex set implied by an edge relation (src union dst). */
-  def verticesOf(edges: DataFrame): DataFrame =
-    edges.select(col("src").as("nodeid"))
-      .union(edges.select(col("dst").as("nodeid")))
-      .distinct()
-
   /** Partition an edge relation by source — hash by default; `byRange`
     * gives the reference's contiguous node-id ranges
     * (reference/assignment4/src/main/basic/RangePartitioner.java:37-40),
@@ -82,22 +84,24 @@ object GraphOps {
     if (byRange) edges.repartitionByRange(parts, col("src"))
     else edges.repartition(parts, col("src"))
 
-  /** (src, adj: array<long>, outdeg) — built once, reused every iteration.
-    * `dedupe=false` preserves repeated out-edges (the reference keeps
-    * duplicates in adjacency lists and divides by the raw list length).
-    */
-  def adjacencyOf(edges: DataFrame, parts: Int, dedupe: Boolean,
-                  byRange: Boolean = false): DataFrame =
-    partitionEdges(if (dedupe) edges.distinct() else edges, parts, byRange)
+  /** The adjacency layout's graph relation (src, adj, outdeg), built in ONE
+    * aggregation shuffle: collect_set dedupes per source map-side,
+    * collect_list keeps the reference's duplicate out-edges (it divides by
+    * the raw list length). */
+  private[graft] def adjacency(edges: DataFrame, parts: Int, dedupe: Boolean,
+                               byRange: Boolean): DataFrame =
+    partitionEdges(edges, parts, byRange)
       .groupBy("src")
-      .agg(collect_list(col("dst")).as("adj"), count(lit(1)).as("outdeg"))
+      .agg((if (dedupe) collect_set(col("dst")) else collect_list(col("dst"))).as("adj"))
+      .withColumn("outdeg", size(col("adj")).cast("long"))
 
   /** Iterative PageRank on a SMALL graph is latency-bound: per-iteration
     * AQE re-planning + extra stages cost more than they save (measured ~2x
     * per iteration at 2e4 nodes), while on a big graph AQE's skew-join and
-    * coalescing matter. Disable AQE for the iteration loop below this
-    * vertex count; the setup shuffles (edge dedup, adjacency build) run
-    * before the switch and keep AQE either way.
+    * coalescing matter. Below this vertex count the iteration loop runs
+    * with AQE off and 8 shuffle partitions; the graph build runs before
+    * the switch and keeps AQE either way. The same count is the default
+    * [[localizedCutoff]].
     *
     * The toggle saves and restores the SESSION conf (finally-guarded):
     * unrelated queries issued on the same session concurrently with a
@@ -106,15 +110,12 @@ object GraphOps {
     * `SparkSession.newSession()` to isolate. */
   private val aqeIterationCutoff = 1000000L
 
-  private def withIterationAqe[T](df: DataFrame, n: Long)(body: => T): T = {
-    val conf = df.sparkSession.conf
+  private def withIterationAqe[T](spark: SparkSession, n: Long)(body: => T): T = {
+    val conf = spark.conf
     val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     val prev = keys.map(k => k -> conf.getOption(k))
     if (n < aqeIterationCutoff) {
       conf.set(keys.head, "false")
-      // per-iteration shuffles at small n are pure task-scheduling
-      // overhead — 8 partitions instead of the session default (AQE, which
-      // would coalesce them itself, is off in this regime)
       conf.set(keys(1), "8")
     }
     try body
@@ -124,65 +125,23 @@ object GraphOps {
     }
   }
 
-  /** Shared setup: adjacency in ONE aggregation shuffle (collect_set does
-    * the per-source dedupe map-side; collect_list keeps the reference's
-    * duplicate out-edges when dedupe=false), vertex set derived from the
-    * adjacency relation (src ∪ exploded dst), both persisted + materialized.
-    * @return (vertices, vertexCount, adjacency(src, adj, outdeg))
-    */
-  private def buildGraph(edges: DataFrame, vertices: Option[DataFrame],
-                         numPartitions: Int, dedupeEdges: Boolean,
-                         rangePartition: Boolean = false)
-      : (DataFrame, Long, DataFrame) = {
-    val adj = partitionEdges(edges, numPartitions, rangePartition)
-      .groupBy("src")
-      .agg((if (dedupeEdges) collect_set(col("dst")) else collect_list(col("dst")))
-        .as("adj"))
-      .withColumn("outdeg", size(col("adj")).cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count()
-    val verts = vertices.getOrElse(
-        adj.select(col("src").as("nodeid"))
-          .union(adj.select(explode(col("adj")).as("nodeid")))
-          .distinct())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = verts.count()
-    (verts, n, adj)
-  }
+  /** System-property override for the localized-regime cutoff (default
+    * [[aqeIterationCutoff]]). Tests force the distributed join regime onto
+    * small graphs with -Dgraft.graph.localizedCutoff=0. */
+  private def localizedCutoff: Long =
+    sys.props.get("graft.graph.localizedCutoff").map(_.toLong)
+      .getOrElse(aqeIterationCutoff)
 
-  /** Hub-safe graph build for the edge-relation scatter: NO adjacency
-    * arrays. A hub with 100M out-edges would make `collect_set` produce a
-    * single ~1 GB array row — an executor OOM no partitioner fixes. Here
-    * the big side stays the flat (src, dst) relation, partitioned by src
-    * once and persisted; out-degrees are a separate narrow relation.
-    * @return (vertices, n, edges(src,dst) partitioned, deg(src, outdeg))
-    */
-  private def buildEdgeGraph(edges: DataFrame, vertices: Option[DataFrame],
-                             numPartitions: Int, dedupeEdges: Boolean,
-                             rangePartition: Boolean)
-      : (DataFrame, Long, DataFrame, DataFrame) = {
-    val e = partitionEdges(if (dedupeEdges) edges.distinct() else edges,
-        numPartitions, rangePartition)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    // reuses e's partitioning (clustered on src) — no extra exchange
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    deg.count()
-    val verts = vertices.getOrElse(
-        e.select(col("src").as("nodeid"))
-          .union(e.select(col("dst").as("nodeid")))
-          .distinct())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = verts.count()
-    (verts, n, e, deg)
-  }
+  /** Regime gate: the localized regime holds one rank array of n doubles
+    * per walk on the driver and collects up to |walks| x n gathered rows a
+    * round, so it runs only while that product is under the cutoff. */
+  private[graft] def localizes(n: Long, walks: Int): Boolean =
+    n * walks < localizedCutoff
 
   /** Max raw out-degree AND total raw edge count in one partially-aggregated
     * count pass — the max is an upper bound on the deduped out-degree, so the
     * hub guard triggers conservatively without paying a distinct; the total
-    * drives the data-derived partition clamp in [[resolveParts]]. One pass
-    * serves both decisions. */
+    * drives the data-derived partition clamp in [[resolveParts]]. */
   private def degreeStats(edges: DataFrame): (Long, Long) = {
     val r = edges.groupBy("src").agg(count(lit(1)).as("d"))
       .agg(max(col("d")), sum(col("d"))).head()
@@ -195,16 +154,13 @@ object GraphOps {
     * into per-iteration scheduling confetti. */
   private val edgesPerPartition = 262144L
 
-  /** Graph partition count (guide §2: partitioning must scale with BOTH the
-    * deployment and the data). An explicit positive `numPartitions` pins it.
-    * Otherwise the cluster cap is max(defaultParallelism,
-    * spark.sql.shuffle.partitions) — defaultParallelism alone can be tiny on
-    * a dynamic-allocation cluster before executors register (ADVICE r11) —
-    * clamped so each partition carries at least [[edgesPerPartition]] raw
-    * edges. r11 derived parts from defaultParallelism alone, which handed a
-    * 2e4-node sf0.1 graph 32-partition relations whose per-iteration
-    * scheduling dwarfed the work (the r11 32-core anti-scaling:
-    * PERF_r11.json scaling 0.11-0.58 across the whole iterative family). */
+  /** Graph partition count: scales with BOTH the deployment and the data.
+    * An explicit positive `numPartitions` pins it. Otherwise the cluster cap
+    * is max(defaultParallelism, spark.sql.shuffle.partitions) —
+    * defaultParallelism alone can be tiny on a dynamic-allocation cluster
+    * before executors register — clamped so each partition carries at
+    * least [[edgesPerPartition]] raw edges (a 2e4-node graph cut into 32
+    * partitions spends its rounds scheduling tasks). */
   private def resolveParts(spark: SparkSession, numPartitions: Int,
                            totalRawEdges: Long): Int =
     if (numPartitions > 0) numPartitions
@@ -215,318 +171,293 @@ object GraphOps {
         (totalRawEdges + edgesPerPartition - 1) / edgesPerPartition)).toInt
     }
 
-  // ---------------------------------------------------------------------
-  // Localized iteration regime (small graphs)
-  // ---------------------------------------------------------------------
-  //
-  // Below this vertex count the per-iteration rank state lives on the
-  // DRIVER and re-enters each scatter as a graft.functions.MapLookup table
-  // (a constructor constant riding the stage's task-binary broadcast),
-  // instead of as a checkpointed relation joined back against the graph.
-  // What that buys, per iteration (event-log evidence in
-  // OPTIMIZATION_r12.md): the old regime ran ~4 jobs — a broadcast-exchange
-  // build of the loop-invariant adjacency (re-collected EVERY step; Spark
-  // caches broadcast exchanges per query execution, and every iteration is
-  // a new execution), the scatter/gather + its lineage-cut, a driver scalar
-  // read of the dangling mass, and a broadcast build of the fresh gather
-  // for the rank update. The localized regime runs ONE: the scatter/gather,
-  // collected straight to the driver (<= n rows of 16 bytes). Dangling
-  // mass, the rank update and the convergence delta are driver arithmetic
-  // over <= n doubles — the same reduction the reference performs through
-  // reducer side-files read by its driver (RunPageRankBasic.java:515-523).
-  // Lineage is O(1) by construction (every iteration's plan reads only the
-  // persisted graph relation plus constant tables), so the per-iteration
-  // lineage cut disappears too; only the FINAL relation is cut, which keeps
-  // the public result a checkpoint scan exactly as before.
-  //
-  // The update arithmetic mirrors the join regime's column expressions
-  // operation for operation (same IEEE ops in the same order; JVM >= 17
-  // doubles are strictfp), so ranks agree to the ulp and the 9-decimal
-  // gate output is unchanged. Above the cutoff nothing changes: the state
-  // is corpus-sized there and the join regime (AQE, planner-chosen
-  // strategies, distributed checkpoints) is the only thing that scales.
-  // The graph side NEVER moves to the driver in either regime — adjacency/
-  // edge relations stay persisted and distributed, so the driver holds at
-  // most 3 arrays of n longs/doubles, strictly less than ONE of the old
-  // regime's per-iteration adjacency broadcast builds.
+  /** Scatter layout over a persisted graph relation partitioned on `src`:
+    * adjacency rows (src, adj, outdeg), or flat edges (src, dst) with the
+    * separate out-degree relation `deg` (src, outdeg). */
+  private final case class Scatter(graph: DataFrame, deg: DataFrame, exploded: Boolean) {
+    /** each source's out-neighbours, one row per out-edge */
+    def dst: Column = if (exploded) explode(col("adj")) else col("dst")
 
-  /** System-property override for the localized-regime vertex cutoff
-    * (default [[aqeIterationCutoff]]). Tests force the distributed join
-    * regime onto small graphs with -Dgraft.graph.localizedCutoff=0. */
-  private def localizedCutoff: Long =
-    sys.props.get("graft.graph.localizedCutoff").map(_.toLong)
-      .getOrElse(aqeIterationCutoff)
+    /** Localized regime: (tags, dst, m) per out-edge, `m` a column over
+      * `src`. */
+    def fanOut(m: Column, tags: Seq[Column]): DataFrame =
+      graph.select(tags ++ Seq(dst.as("dst"), m.as("m")): _*)
 
-  /** Driver-held graph skeleton for the localized regime: sorted vertex
-    * ids, per-source out-degrees (raw list length — duplicates included
-    * when dedupe=false, matching the reference), dangling positions. */
-  private final class DriverGraph(val vertIds: Array[Long],
-                                  val srcIds: Array[Long],
-                                  val outdegs: Array[Long]) {
-    /** position of each source in vertIds; < 0 marks a PHANTOM source (an
-      * edge src outside an explicit vertex set): it has no rank row and
-      * sends no mass — exactly the unmatched side of the ranks⋈adj join
-      * this regime replaces. */
-    private val srcPos: Array[Int] =
-      srcIds.map(s => java.util.Arrays.binarySearch(vertIds, s))
-    /** positions (in vertIds) of dangling vertices — no out-edges; their
-      * whole rank is the "missing mass" routed through the driver. */
-    val danglingPos: Array[Int] = vertIds.indices
-      .filter(i => java.util.Arrays.binarySearch(srcIds, vertIds(i)) < 0)
-      .toArray
-    def rankIndexOf(nodeid: Long): Int =
-      java.util.Arrays.binarySearch(vertIds, nodeid)
-    /** Scatter mass table src -> f(rank(src), outdeg(src)); phantom
-      * sources are excluded (their lookup misses -> NULL m -> sum skips
-      * the row, like the old join's unmatched side). */
-    def massMap(ranks: Array[Double],
-                f: (Double, Long) => Double): graft.functions.LongDoubleMap = {
-      val ks = Array.newBuilder[Long]
-      val vs = Array.newBuilder[Double]
-      var j = 0
-      while (j < srcIds.length) {
-        if (srcPos(j) >= 0) { ks += srcIds(j); vs += f(ranks(srcPos(j)), outdegs(j)) }
-        j += 1
-      }
-      new graft.functions.LongDoubleMap(ks.result(), vs.result())
-    }
-    def danglingSum(ranks: Array[Double]): Double = {
-      var s = 0.0
-      var i = 0
-      while (i < danglingPos.length) { s += ranks(danglingPos(i)); i += 1 }
-      s
-    }
-    def danglingLogSum(ranks: Array[Double]): Double = {
-      var s = Double.NegativeInfinity
-      var i = 0
-      while (i < danglingPos.length) {
-        s = graft.functions.LogSpace.logAddScalar(s, ranks(danglingPos(i)))
-        i += 1
-      }
-      s
+    /** Join regime: (keys, dst, m) from a (keys, nodeid, rank) state. A
+      * vertex without out-edges sends its whole rank to the NULL `dst`
+      * sentinel, so the gather yields the dangling mass in the same pass. */
+    def fromState(state: DataFrame, keys: Seq[Column],
+                  mass: (Column, Column) => Column): DataFrame = {
+      val m = when(col("outdeg").isNull, col("rank"))
+        .otherwise(mass(col("rank"), col("outdeg"))).as("m")
+      if (exploded)
+        state.join(graph, col("nodeid") === col("src"), "left_outer")
+          .select(keys ++ Seq(explode_outer(col("adj")).as("dst"), m): _*)
+      else
+        state.join(deg, col("nodeid") === col("src"), "left_outer")
+          .select(keys ++ Seq(col("nodeid"), m): _*)
+          .join(graph, col("nodeid") === col("src"), "left_outer")
+          .select(keys ++ Seq(col("dst"), col("m")): _*)
     }
   }
 
-  /** One-time driver collect of the graph skeleton (two <= n-row jobs over
-    * already-persisted relations). `deg` is (src, outdeg). */
-  private def collectDriverGraph(verts: DataFrame, deg: DataFrame): DriverGraph = {
-    val vertIds = verts.select(col("nodeid")).collect().map(_.getLong(0))
-    java.util.Arrays.sort(vertIds)
-    val degRows = deg.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    new DriverGraph(vertIds, degRows.map(_._1), degRows.map(_._2))
+  /** A prepared graph: vertex relation, vertex count, scatter layout. */
+  private final case class Graph(verts: DataFrame, n: Long, scatter: Scatter) {
+    def unpersist(): Unit =
+      Seq(verts, scatter.graph, scatter.deg).foreach(_.unpersist())
   }
 
-  /** Collect a gathered (key, in_mass) relation into a lookup table. A
-    * NULL in_mass group (every contributor was a phantom source) is
-    * skipped: absent == "no mass", same as the old outer join + coalesce. */
-  private def collectInMass(gathered: DataFrame): graft.functions.LongDoubleMap =
-    graft.functions.LongDoubleMap.fromPairs(
-      gathered.collect().iterator
-        .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-        .map(r => (r.getLong(0), r.getDouble(1))).toArray)
-
-  private def emptyMap = new graft.functions.LongDoubleMap(Array.empty, Array.empty)
-
-  /** Localized fixed-iteration PageRank loop: ONE distributed job per
-    * iteration (scatter/gather, collected), zero per-iteration broadcast
-    * builds or cuts. `scatter(mm)` must yield (dst, m) rows off the
-    * persisted graph relation. */
-  private def localizedPageRank(scatter: graft.functions.LongDoubleMap => DataFrame,
-                                verts: DataFrame, g: DriverGraph, n: Long,
-                                iterations: Int, alpha: Double,
-                                cut: DataFrame => DataFrame,
-                                tag: String): DataFrame = {
-    if (iterations <= 0)
-      return cut(verts.withColumn("rank", lit(1.0 / n)))
-    var ranks = Array.fill(g.vertIds.length)(1.0 / n)
-    var inMass = emptyMap
-    var missing = 0.0
-    for (it <- 1 to iterations) {
-      val mm = g.massMap(ranks, (r, d) => r / d.toDouble)
-      missing = g.danglingSum(ranks)
-      val gathered = scatter(mm).groupBy("dst").agg(sum(col("m")).as("in_mass"))
-      explainIterOnce(tag, gathered, it)
-      inMass = collectInMass(gathered)
-      // same IEEE ops in the same order as the join regime's update column
-      val aN = alpha / n
-      val oneMinus = 1 - alpha
-      val mN = missing / n
-      val next = new Array[Double](ranks.length)
-      var i = 0
-      while (i < next.length) {
-        next(i) = aN + oneMinus * (inMass.getOrElse(g.vertIds(i), 0.0) + mN)
-        i += 1
-      }
-      ranks = next
+  /** Shared setup of every walk: one degree pass sizes the partitioning and
+    * runs the hub guard (a raw out-degree above `hubDegreeThreshold`,
+    * default 4M ≈ a 32 MB array row, selects flat edges); then the layout's
+    * relations and the vertex set (explicit, or src ∪ dst) are built,
+    * persisted and materialized. */
+  private def prepare(edges: DataFrame, vertices: Option[DataFrame],
+                      numPartitions: Int, dedupeEdges: Boolean,
+                      rangePartition: Boolean, hubDegreeThreshold: Long): Graph = {
+    val (maxDeg, totalEdges) = degreeStats(edges)
+    val parts = resolveParts(edges.sparkSession, numPartitions, totalEdges)
+    def persisted(df: DataFrame) = {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK); p.count(); p
     }
-    // the final relation plans the SAME update expression as the join
-    // regime, with the last gather re-entering as a lookup table
-    cut(verts.select(verts("nodeid"),
-      (lit(alpha / n) + lit(1 - alpha) *
-        (coalesce(graft.functions.MapLookup.lookup(inMass, verts("nodeid")),
-          lit(0.0)) + lit(missing / n))).as("rank")))
+    val scatter =
+      if (maxDeg > hubDegreeThreshold) {
+        val e = persisted(partitionEdges(if (dedupeEdges) edges.distinct() else edges,
+          parts, rangePartition))
+        // reuses e's partitioning (clustered on src) — no extra exchange
+        Scatter(e, persisted(e.groupBy("src").agg(count(lit(1)).as("outdeg"))),
+          exploded = false)
+      } else {
+        val adj = persisted(adjacency(edges, parts, dedupeEdges, rangePartition))
+        Scatter(adj, adj.select(col("src"), col("outdeg")), exploded = true)
+      }
+    val verts = vertices.map(_.select(col("nodeid"))).getOrElse(
+        scatter.graph.select(col("src").as("nodeid"))
+          .union(scatter.graph.select(scatter.dst.as("nodeid")))
+          .distinct())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    Graph(verts, verts.count(), scatter)
   }
 
-  /** Localized convergence loop: [[localizedPageRank]]'s iteration plus the
-    * L∞ delta, computed on the driver from the same per-node doubles the
-    * old distributed max-abs join aggregated — identical stopping rule. */
-  private def localizedPageRankConverged(
-      scatter: graft.functions.LongDoubleMap => DataFrame,
-      verts: DataFrame, g: DriverGraph, n: Long, tol: Double,
-      maxIterations: Int, alpha: Double, cut: DataFrame => DataFrame,
-      tag: String): (DataFrame, Int) = {
-    var ranks = Array.fill(g.vertIds.length)(1.0 / n)
-    var inMass = emptyMap
-    var missing = 0.0
-    var iters = 0
-    var delta = Double.MaxValue
-    while (delta > tol && iters < maxIterations) {
-      val mm = g.massMap(ranks, (r, d) => r / d.toDouble)
-      missing = g.danglingSum(ranks)
-      val gathered = scatter(mm).groupBy("dst").agg(sum(col("m")).as("in_mass"))
-      explainIterOnce(tag, gathered, iters + 1)
-      inMass = collectInMass(gathered)
-      val aN = alpha / n
-      val oneMinus = 1 - alpha
-      val mN = missing / n
-      var d = 0.0
-      val next = new Array[Double](ranks.length)
-      var i = 0
-      while (i < next.length) {
-        next(i) = aN + oneMinus * (inMass.getOrElse(g.vertIds(i), 0.0) + mN)
-        val ad = math.abs(next(i) - ranks(i))
-        if (ad > d) d = ad
-        i += 1
-      }
-      delta = d
-      ranks = next
-      iters += 1
-    }
-    val out =
-      if (iters == 0) cut(verts.withColumn("rank", lit(1.0 / n)))
-      else cut(verts.select(verts("nodeid"),
-        (lit(alpha / n) + lit(1 - alpha) *
-          (coalesce(graft.functions.MapLookup.lookup(inMass, verts("nodeid")),
-            lit(0.0)) + lit(missing / n))).as("rank")))
-    (out, iters)
+  /** The arithmetic walk rules are written in: driver doubles (localized
+    * regime) or Columns (join regime). Stating each rule once makes both
+    * regimes run the same IEEE operations in the same order (JVM >= 17
+    * doubles are strictfp; driver-side literals fold to the same double),
+    * so their ranks agree to the ulp. */
+  private sealed trait Arith[T] {
+    def num(d: Double): T
+    def plus(a: T, b: T): T
+    def minus(a: T, b: T): T
+    def times(a: T, b: T): T
+    def div(a: T, b: T): T
+    def ln(a: T): T
+    def logAdd(a: T, b: T): T
   }
 
-  /** Localized log-space loop: scatter mass is rank - log(outdeg)
-    * (StrictMath.log — what Catalyst's `log` compiles to), the gather is
-    * the grouped log-sum-exp, the driver update is the scalar mirror of
-    * the logAdd column expression. */
-  private def localizedPageRankLogSpace(
-      scatter: graft.functions.LongDoubleMap => DataFrame,
-      verts: DataFrame, g: DriverGraph, n: Long, iterations: Int,
-      alpha: Double, cut: DataFrame => DataFrame, tag: String): DataFrame = {
-    import graft.functions.LogSpace
-    val logN = math.log(n.toDouble)
-    if (iterations <= 0)
-      return cut(verts.withColumn("rank", lit(-logN)))
-    var ranks = Array.fill(g.vertIds.length)(-logN)
-    var inMass = emptyMap
-    var missingLog = Double.NegativeInfinity
-    for (it <- 1 to iterations) {
-      val mm = g.massMap(ranks, (r, d) => r - StrictMath.log(d.toDouble))
-      missingLog = g.danglingLogSum(ranks)
-      val gathered = scatter(mm).groupBy("dst")
-        .agg(LogSpace.logSumExp(col("m")).as("in_mass"))
-      explainIterOnce(tag, gathered, it)
-      inMass = collectInMass(gathered)
-      val logAN = math.log(alpha / n)
-      val log1mA = math.log(1 - alpha)
-      val mLog = missingLog - logN
-      val next = new Array[Double](ranks.length)
-      var i = 0
-      while (i < next.length) {
-        val in = inMass.getOrElse(g.vertIds(i), Double.NegativeInfinity)
-        next(i) = LogSpace.logAddScalar(logAN,
-          log1mA + LogSpace.logAddScalar(in, mLog))
-        i += 1
-      }
-      ranks = next
-    }
-    val negInf = lit(Double.NegativeInfinity)
-    val in = coalesce(
-      graft.functions.MapLookup.lookup(inMass, verts("nodeid")), negInf)
-    cut(verts.select(verts("nodeid"),
-      graft.functions.LogSpace.logAdd(lit(math.log(alpha / n)),
-        lit(math.log(1 - alpha)) +
-          graft.functions.LogSpace.logAdd(in, lit(missingLog - logN)))
-        .as("rank")))
+  private object Scalar extends Arith[Double] {
+    def num(d: Double): Double = d
+    def plus(a: Double, b: Double): Double = a + b
+    def minus(a: Double, b: Double): Double = a - b
+    def times(a: Double, b: Double): Double = a * b
+    def div(a: Double, b: Double): Double = a / b
+    def ln(a: Double): Double = StrictMath.log(a) // what Catalyst's `log` runs
+    def logAdd(a: Double, b: Double): Double = LogSpace.logAddScalar(a, b)
   }
 
-  /** Localized personalized loop: the |sources| independent walks share
-    * one gather job per iteration (a union of per-source scatters grouped
-    * by (source, dst)); teleport and per-source dangling mass are driver
-    * arithmetic, mirroring the join regime's update column per source. */
-  private def localizedPpr(
-      scatterFor: (Long, graft.functions.LongDoubleMap) => DataFrame,
-      verts: DataFrame, g: DriverGraph, sources: Seq[Long], iterations: Int,
-      alpha: Double, cut: DataFrame => DataFrame, tag: String): DataFrame = {
-    val nSrc = sources.length
-    if (iterations <= 0) {
-      val init = sources.map(k => verts.select(lit(k).as("source"),
-        verts("nodeid"),
-        when(verts("nodeid") === lit(k), lit(1.0)).otherwise(lit(0.0))
-          .as("rank")))
-      return cut(init.reduce(_.union(_)))
-    }
-    val srcIdx = sources.map(k => g.rankIndexOf(k)).toArray
-    var ranks: Array[Array[Double]] = Array.tabulate(nSrc)(ki =>
-      Array.tabulate(g.vertIds.length)(i => if (srcIdx(ki) == i) 1.0 else 0.0))
-    var inMass: Array[graft.functions.LongDoubleMap] = Array.fill(nSrc)(emptyMap)
-    val miss = new Array[Double](nSrc)
-    for (it <- 1 to iterations) {
-      val scatters = sources.indices.map { ki =>
-        scatterFor(sources(ki), g.massMap(ranks(ki), (r, d) => r / d.toDouble))
-      }
-      sources.indices.foreach(ki => miss(ki) = g.danglingSum(ranks(ki)))
-      val gathered = scatters.reduce(_.union(_))
-        .groupBy("source", "dst").agg(sum(col("m")).as("in_mass"))
-      explainIterOnce(tag, gathered, it)
-      val rows = gathered.collect()
-      inMass = sources.indices.map { ki =>
-        graft.functions.LongDoubleMap.fromPairs(rows.iterator
-          .filter(r => !r.isNullAt(0) && r.getLong(0) == sources(ki) &&
-            !r.isNullAt(1) && !r.isNullAt(2))
-          .map(r => (r.getLong(1), r.getDouble(2))).toArray)
-      }.toArray
-      val oneMinus = 1 - alpha
-      val next = Array.tabulate(nSrc) { ki =>
-        val a = new Array[Double](g.vertIds.length)
-        var i = 0
-        while (i < a.length) {
-          val jump = if (i == srcIdx(ki)) alpha else 0.0
-          val extra = if (i == srcIdx(ki)) miss(ki) else 0.0
-          a(i) = jump + oneMinus *
-            (inMass(ki).getOrElse(g.vertIds(i), 0.0) + extra)
-          i += 1
+  private object Columns extends Arith[Column] {
+    def num(d: Double): Column = lit(d)
+    def plus(a: Column, b: Column): Column = a + b
+    def minus(a: Column, b: Column): Column = a - b
+    def times(a: Column, b: Column): Column = a * b
+    def div(a: Column, b: Column): Column = a / b
+    def ln(a: Column): Column = log(a)
+    def logAdd(a: Column, b: Column): Column = LogSpace.logAdd(a, b)
+  }
+
+  /** A walk rule. `delta` is 1.0 at a personalized walk's source vertex
+    * and 0.0 elsewhere; global walks ignore it. */
+  private sealed abstract class Walk {
+    /** one walk per source; empty for the single global walk */
+    def sources: Seq[Long] = Nil
+    /** key columns of a rank row besides `nodeid` */
+    def keys: Seq[String] = if (sources.isEmpty) Nil else Seq("source")
+    def start[T](a: Arith[T], n: Long, delta: T): T
+    /** mass a source of out-degree `outdeg` sends along each out-edge */
+    def mass[T](a: Arith[T], rank: T, outdeg: T): T
+    def gather(m: Column): Column
+    /** the gather's identity: no incoming (or dangling) mass */
+    def none: Double
+    /** the driver's fold of dangling ranks, the scalar twin of `gather` */
+    def add(x: Double, y: Double): Double
+    /** teleport + dangling update of one vertex */
+    def update[T](a: Arith[T], n: Long, in: T, missing: T, delta: T): T
+  }
+
+  /** p' = α/n + (1-α)·(in + missing/n) */
+  private class Linear(alpha: Double) extends Walk {
+    def start[T](a: Arith[T], n: Long, delta: T): T = a.num(1.0 / n)
+    def mass[T](a: Arith[T], rank: T, outdeg: T): T = a.div(rank, outdeg)
+    def gather(m: Column): Column = sum(m)
+    def none: Double = 0.0
+    def add(x: Double, y: Double): Double = x + y
+    def update[T](a: Arith[T], n: Long, in: T, missing: T, delta: T): T =
+      a.plus(a.num(alpha / n), a.times(a.num(1 - alpha),
+        a.plus(in, a.div(missing, a.num(n.toDouble)))))
+  }
+
+  /** Teleport and dangling mass go to the source only:
+    * p' = α·δ + (1-α)·(in + missing·δ). */
+  private final class Personalized(alpha: Double, override val sources: Seq[Long])
+      extends Linear(alpha) {
+    override def start[T](a: Arith[T], n: Long, delta: T): T = delta
+    override def update[T](a: Arith[T], n: Long, in: T, missing: T, delta: T): T =
+      a.plus(a.times(a.num(alpha), delta), a.times(a.num(1 - alpha),
+        a.plus(in, a.times(missing, delta))))
+  }
+
+  /** Linear's walk in log space: mass r - log d, log-sum-exp gather,
+    * p' = logAdd(log(α/n), log(1-α) + logAdd(in, missing - log n)). */
+  private final class LogLinear(alpha: Double) extends Walk {
+    def start[T](a: Arith[T], n: Long, delta: T): T = a.num(-math.log(n.toDouble))
+    def mass[T](a: Arith[T], rank: T, outdeg: T): T = a.minus(rank, a.ln(outdeg))
+    def gather(m: Column): Column = LogSpace.logSumExp(m)
+    def none: Double = Double.NegativeInfinity
+    def add(x: Double, y: Double): Double = LogSpace.logAddScalar(x, y)
+    def update[T](a: Arith[T], n: Long, in: T, missing: T, delta: T): T =
+      a.logAdd(a.num(math.log(alpha / n)), a.plus(a.num(math.log(1 - alpha)),
+        a.logAdd(in, a.minus(missing, a.num(math.log(n.toDouble))))))
+  }
+
+  /** Stop rule: `rounds` rounds, or fewer once the L∞ rank change is at or
+    * below `tol`. */
+  private final case class Stop(rounds: Int, tol: Option[Double] = None) {
+    def continues(done: Int, change: Double): Boolean =
+      done < rounds && tol.forall(change > _)
+  }
+
+  /** The skeleton: prepare the graph, run the walk in the regime the gate
+    * picks, release the graph relations. Returns (ranks, rounds run). */
+  private def walk(edges: DataFrame, vertices: Option[DataFrame], numPartitions: Int,
+                   dedupeEdges: Boolean, rangePartition: Boolean,
+                   hubDegreeThreshold: Long, checkpointDir: Option[String],
+                   rule: Walk, stop: Stop): (DataFrame, Int) = {
+    val g = prepare(edges, vertices, numPartitions, dedupeEdges, rangePartition,
+      hubDegreeThreshold)
+    val cut = new LineageCutter(checkpointDir)
+    try withIterationAqe(edges.sparkSession, g.n) {
+      if (localizes(g.n, rule.sources.size max 1)) localizedWalk(g, rule, stop, cut)
+      else joinWalk(g, rule, stop, cut)
+    } finally g.unpersist()
+  }
+
+  /** Localized regime: rank arrays on the driver, one gather job a round.
+    * Phantom sources (an edge src outside an explicit vertex set) have no
+    * rank and send no mass; mass to a phantom dst is never read back. */
+  private def localizedWalk(g: Graph, rule: Walk, stop: Stop,
+                            cut: DataFrame => DataFrame): (DataFrame, Int) = {
+    val ids = g.verts.select(col("nodeid")).collect().map(_.getLong(0)).sorted
+    val (srcIds, outdegs) = g.scatter.deg.collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).unzip
+    val srcPos = srcIds.map(s => java.util.Arrays.binarySearch(ids, s))
+    val dangling = ids.indices
+      .filter(i => java.util.Arrays.binarySearch(srcIds, ids(i)) < 0).toArray
+    val roots = if (rule.sources.isEmpty) Seq(None) else rule.sources.map(Some(_))
+    val walks = roots.size
+    val tags = roots.map(_.map(s => lit(s).as("source")).toSeq)
+    val srcAt = roots.map(_.fold(-1)(s => java.util.Arrays.binarySearch(ids, s)))
+    def delta(k: Int, i: Int) = if (i == srcAt(k)) 1.0 else 0.0
+    val walkOf = rule.sources.zipWithIndex.toMap
+    val keyCols = rule.keys.size
+
+    var ranks = Array.tabulate(walks, ids.length)((k, i) =>
+      rule.start(Scalar, g.n, delta(k, i)))
+    var rounds = 0
+    var change = Double.MaxValue
+    while (stop.continues(rounds, change)) {
+      val scattered = (0 until walks).map { k =>
+        val ks = Array.newBuilder[Long]
+        val ms = Array.newBuilder[Double]
+        for (j <- srcIds.indices if srcPos(j) >= 0) {
+          ks += srcIds(j)
+          ms += rule.mass(Scalar, ranks(k)(srcPos(j)), outdegs(j).toDouble)
         }
-        a
+        g.scatter.fanOut(
+          MapLookup.lookup(new LongDoubleMap(ks.result(), ms.result()), col("src")),
+          tags(k))
       }
+      val gathered = scattered.reduce(_.union(_))
+        .groupBy((rule.keys :+ "dst").map(col): _*)
+        .agg(rule.gather(col("m")).as("in_mass"))
+      // one pass buckets the |walks| x n rows per walk; a NULL in_mass (all
+      // contributors phantom) is "no mass"
+      val in = Array.fill(walks)(Array.newBuilder[(Long, Double)])
+      gathered.collect().foreach { r =>
+        if (!r.isNullAt(keyCols) && !r.isNullAt(keyCols + 1))
+          in(if (keyCols > 0) walkOf(r.getLong(0)) else 0) +=
+            (r.getLong(keyCols) -> r.getDouble(keyCols + 1))
+      }
+      val inMass = in.map(b => LongDoubleMap.fromPairs(b.result()))
+      val next = Array.tabulate(walks) { k =>
+        val missing = dangling.foldLeft(rule.none)((s, i) => rule.add(s, ranks(k)(i)))
+        Array.tabulate(ids.length)(i => rule.update(Scalar, g.n,
+          inMass(k).getOrElse(ids(i), rule.none), missing, delta(k, i)))
+      }
+      change = next.indices.iterator.flatMap(k => ids.indices.iterator
+        .map(i => math.abs(next(k)(i) - ranks(k)(i)))).foldLeft(0.0)((a, b) => math.max(a, b))
       ranks = next
+      rounds += 1
     }
-    val outs = sources.indices.map { ki =>
-      val k = sources(ki)
-      val in = coalesce(
-        graft.functions.MapLookup.lookup(inMass(ki), verts("nodeid")), lit(0.0))
-      verts.select(lit(k).as("source"), verts("nodeid"),
-        (when(verts("nodeid") === lit(k), lit(alpha)).otherwise(lit(0.0)) +
-          lit(1 - alpha) * (in +
-            when(verts("nodeid") === lit(k), lit(miss(ki))).otherwise(lit(0.0))))
-          .as("rank"))
-    }
-    cut(outs.reduce(_.union(_)))
+    // the lookup always hits (every vertex is a table key); the coalesce
+    // only keeps `rank` non-nullable, as in the join regime
+    val out = (0 until walks).map(k => g.verts.select(tags(k) ++ Seq(col("nodeid"),
+      coalesce(MapLookup.lookup(new LongDoubleMap(ids, ranks(k)), col("nodeid")),
+        lit(Double.NaN)).as("rank")): _*))
+    (cut(out.reduce(_.union(_))), rounds)
   }
 
-  /** First-iteration plan dump for the loop bodies (measurement aid: the
-    * public result of an iterative query is just a checkpoint scan, so the
-    * judge-facing plan evidence must come from inside the loop). */
-  private def explainIterOnce(tag: String, df: DataFrame, iter: Int): Unit =
-    if (iter == 1 && sys.env.contains("SPARK_GRAFT_EXPLAIN_ITER"))
-      println(s"===== iter-plan $tag =====\n" + df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+  /** Join regime: (keys, nodeid, rank) state joined against the graph each
+    * round; the gather and, when converging, the new ranks are cut. */
+  private def joinWalk(g: Graph, rule: Walk, stop: Stop,
+                       cut: DataFrame => DataFrame): (DataFrame, Int) = {
+    val spark = g.verts.sparkSession
+    import spark.implicits._
+    val keys = rule.keys
+    val base = if (keys.isEmpty) g.verts else rule.sources.toDF("source").crossJoin(g.verts)
+    val delta = if (keys.isEmpty) lit(0.0)
+      else when(col("nodeid") === col("source"), lit(1.0)).otherwise(lit(0.0))
+    def ranked(df: DataFrame, rank: Column) =
+      df.select(keys.map(col) ++ Seq(col("nodeid"), rank.as("rank")): _*)
+
+    var state = ranked(base, rule.start(Columns, g.n, delta))
+    var rounds = 0
+    var change = Double.MaxValue
+    while (stop.continues(rounds, change)) {
+      val gathered = g.scatter
+        .fromState(state, keys.map(col), rule.mass(Columns, _, _))
+        .groupBy((keys :+ "dst").map(col): _*).agg(rule.gather(col("m")).as("in_mass"))
+        .transform(cut)
+      val dangling = gathered.where(col("dst").isNull)
+        .select((keys :+ "in_mass").map(col): _*).collect()
+      val missing =
+        if (keys.isEmpty) lit(dangling.headOption.fold(rule.none)(_.getDouble(0)))
+        else coalesce(MapLookup.lookup(LongDoubleMap.fromPairs(
+          dangling.map(r => r.getLong(0) -> r.getDouble(1))), col("source")),
+          lit(rule.none))
+      val in = gathered.where(col("dst").isNotNull)
+        .select(keys.map(k => col(k).as("g_" + k)) ++ Seq(col("dst"), col("in_mass")): _*)
+      val on = keys.foldLeft(col("nodeid") === col("dst"))((c, k) => c && col(k) === col("g_" + k))
+      val next = ranked(base.join(in, on, "left_outer"), rule.update(Columns, g.n,
+        coalesce(col("in_mass"), lit(rule.none)), missing, delta))
+      state = if (stop.tol.isEmpty) next else {
+        val kept = cut(next)
+        change = kept.join(state.withColumnRenamed("rank", "prev"), keys :+ "nodeid")
+          .agg(max(abs(col("rank") - col("prev")))).head().getDouble(0)
+        kept
+      }
+      rounds += 1
+    }
+    (if (stop.tol.nonEmpty && rounds > 0) state else cut(state), rounds)
+  }
 
   /** Per-iteration lineage cut for the iterative family (G9). The default
     * `localCheckpoint()` stores cut blocks on executors — fastest, and the
@@ -573,15 +504,13 @@ object GraphOps {
     * `rdd-*` directory per cut for the whole job's lifetime.
     *
     * Deletion lags by [[LineageCutter.retainedCuts]] generations, not one:
-    * the loops cut up to TWO relations per iteration (the gathered
-    * intermediate and the new ranks) and read at most ONE iteration back
-    * (the convergence delta joins the previous ranks AFTER the new ranks'
-    * cut), so a retained window of 4 cuts keeps everything within two full
-    * iterations alive and deletes strictly older files — which are
-    * unreachable in every loop here (each relation is rebuilt from the
-    * persisted graph + the newest cuts each iteration; proven by the
-    * bit-identical reliable-checkpoint spec running all loops through this
-    * cutter). The created-set is detected by listing the checkpoint
+    * the join regime cuts up to TWO relations per round (the gather and,
+    * when converging, the new ranks) and reads at most ONE round back (the
+    * L∞ change joins the previous ranks AFTER the new ranks' cut), so a
+    * window of 4 cuts keeps everything within two full rounds alive and
+    * deletes strictly older files, which no round reads again (proven by
+    * the bit-identical reliable-checkpoint spec running every walk through
+    * this cutter). The created-set is detected by listing the checkpoint
     * location around the cut, which assumes no OTHER reliable-checkpoint
     * loop runs concurrently on the same SparkContext — the loops here are
     * driver-sequential; callers wanting concurrent loops should pass
@@ -633,156 +562,16 @@ object GraphOps {
                vertices: Option[DataFrame] = None, numPartitions: Int = 0,
                dedupeEdges: Boolean = true, rangePartition: Boolean = false,
                hubDegreeThreshold: Long = 4000000L,
-               checkpointDir: Option[String] = None): DataFrame = {
-    val cut = new LineageCutter(checkpointDir)
-    // Hub guard: one cheap count pass over the edges; if any source's raw
-    // out-degree exceeds the threshold (default 4M ≈ a 32 MB array row),
-    // iterate off the flat edge relation instead of adjacency arrays —
-    // identical semantics, no giant collect_set row (VERDICT r2 §wrong-3).
-    // The same pass yields the raw edge total that sizes the partitioning.
-    val (maxDeg, totalEdges) = degreeStats(edges)
-    val parts = resolveParts(edges.sparkSession, numPartitions, totalEdges)
-    if (maxDeg > hubDegreeThreshold)
-      return pageRankEdgeScatter(edges, iterations, alpha, vertices,
-        parts, dedupeEdges, rangePartition, checkpointDir)
-    // ONE shuffle builds the adjacency: collect_set dedupes per source
-    // during the aggregation itself (map-side partial included), replacing
-    // the old standalone edges.distinct() shuffle + regroup. The vertex set
-    // then derives from the (much smaller) adjacency relation.
-    val (verts, n, adj) = buildGraph(edges, vertices, parts, dedupeEdges,
-      rangePartition)
-    if (n < localizedCutoff)
-      return try withIterationAqe(edges, n) {
-        val g = collectDriverGraph(verts, adj.select(col("src"), col("outdeg")))
-        val scatter = (mm: graft.functions.LongDoubleMap) =>
-          adj.select(explode(col("adj")).as("dst"),
-            graft.functions.MapLookup.lookup(mm, col("src")).as("m"))
-        localizedPageRank(scatter, verts, g, n, iterations, alpha, cut,
-          "pagerank.gathered")
-      } finally { adj.unpersist(); verts.unpersist() }
-    // join regime (big graphs; tests force it via the cutoff override) —
-    // the broadcast hints below still key off the AQE cutoff
-    val small = n < aqeIterationCutoff
-    // on a SMALL graph the per-iteration relations are a few MB: hint both
-    // joins broadcast (the checkpointed gather's rewritten stats look huge
-    // to the planner, which would otherwise sort-merge every step). On a big
-    // graph the hints would be harmful — adj no longer fits an executor —
-    // so leave strategy choice to the planner/AQE.
-    def maybeBroadcast(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+               checkpointDir: Option[String] = None): DataFrame =
+    walk(edges, vertices, numPartitions, dedupeEdges, rangePartition,
+      hubDegreeThreshold, checkpointDir, new Linear(alpha), Stop(iterations))._1
 
-    var ranks = verts.withColumn("rank", lit(1.0 / n))
-    try withIterationAqe(edges, n) { for (it <- 1 to iterations) {
-      // One scatter pass: dangling nodes (no adjacency row) send their whole
-      // rank to a NULL sentinel destination; linked nodes send rank/outdeg to
-      // each neighbor. The gather aggregation then yields per-node in-mass
-      // AND the total dangling mass (the reference's "missing mass",
-      // RunPageRankBasic.java:437-450) from the SAME shuffle — one
-      // scatter/gather job per iteration instead of a separate aggregation
-      // that recomputed the rank-adjacency join.
-      //
-      // The checkpoint sits on `gathered` and the dangling mass re-enters as
-      // a DRIVER SCALAR (8 bytes — the reference's side-file total), read
-      // off the already-checkpointed result. Re-entering it as a broadcast
-      // join instead makes the iteration plan reference `gathered` twice,
-      // and Catalyst's size-only stats (a BigInt PRODUCT over join children)
-      // then SQUARE per iteration — by iteration ~30 stats estimation is
-      // multiplying million-digit BigIntegers. With the single reference the
-      // stats exponent grows linearly, which stays trivial for hundreds of
-      // iterations. The rank update itself is left lazy; the next
-      // iteration's checkpoint (or the final one after the loop)
-      // materializes it.
-      val gathered = ranks.join(maybeBroadcast(adj),
-          ranks("nodeid") === adj("src"), "left_outer")
-        .select(
-          explode(when(col("adj").isNull, array(lit(null).cast("long")))
-            .otherwise(col("adj"))).as("dst"),
-          when(col("outdeg").isNull, col("rank"))
-            .otherwise(col("rank") / col("outdeg")).as("m"))
-        .groupBy("dst").agg(sum(col("m")).as("in_mass"))
-        .transform(df => { explainIterOnce("pagerank.gathered", df, it); cut(df) })
-      val missing = gathered.where(col("dst").isNull)
-        .agg(coalesce(sum(col("in_mass")), lit(0.0))).head().getDouble(0)
-      ranks = verts.join(maybeBroadcast(gathered.where(col("dst").isNotNull)),
-          verts("nodeid") === col("dst"), "left_outer")
-        .select(verts("nodeid"),
-          (lit(alpha / n) +
-            lit(1 - alpha) * (coalesce(col("in_mass"), lit(0.0)) + lit(missing / n)))
-            .as("rank"))
-      }
-      // materialize the last (lazy) update before dropping its cached inputs
-      ranks = cut(ranks)
-    }
-    // unpersist on the failure path too — no cache-entry leak
-    finally { adj.unpersist(); verts.unpersist() }
-    ranks
-  }
-
-  /** Hub-safe PageRank iteration: scatter straight off the flat (src, dst)
-    * relation — rank⋈deg computes each source's per-edge mass on a narrow
-    * join, the (src-partitioned, persisted) edge relation fans it out, and
-    * dangling rank reaches the NULL sentinel via the deg left-outer join.
-    * Everything downstream of the scatter (sentinel gather, checkpointed
-    * aggregation, driver-scalar dangling mass, rank update) is identical to
-    * [[pageRank]]'s adjacency path, so results match bit-for-bit.
-    */
-  private def pageRankEdgeScatter(edges: DataFrame, iterations: Int, alpha: Double,
-                                  vertices: Option[DataFrame], numPartitions: Int,
-                                  dedupeEdges: Boolean, rangePartition: Boolean,
-                                  checkpointDir: Option[String] = None): DataFrame = {
-    val cut = new LineageCutter(checkpointDir)
-    val (verts, n, e, deg) =
-      buildEdgeGraph(edges, vertices, numPartitions, dedupeEdges, rangePartition)
-    if (n < localizedCutoff)
-      return try withIterationAqe(edges, n) {
-        val g = collectDriverGraph(verts, deg)
-        // hub-safe scatter: the mass table carries rank/outdeg per source
-        // (driver arithmetic over n entries), the persisted flat edge
-        // relation fans it out — no adjacency arrays anywhere
-        val scatter = (mm: graft.functions.LongDoubleMap) =>
-          e.select(col("dst"), graft.functions.MapLookup.lookup(mm, col("src")).as("m"))
-        localizedPageRank(scatter, verts, g, n, iterations, alpha, cut,
-          "pagerank_edge.gathered")
-      } finally { e.unpersist(); deg.unpersist(); verts.unpersist() }
-    val small = n < aqeIterationCutoff
-    def maybeBroadcast(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-
-    var ranks = verts.withColumn("rank", lit(1.0 / n))
-    try withIterationAqe(edges, n) { for (_ <- 1 to iterations) {
-      // verts, deg and e all derive from the same edge relation — alias
-      // every side so the self-join attributes stay unambiguous
-      val rd = ranks.as("r").join(maybeBroadcast(deg.as("dg")),
-        col("r.nodeid") === col("dg.src"), "left_outer")
-      val linked = rd.where(col("dg.outdeg").isNotNull)
-        .select(col("r.nodeid").as("esrc"), (col("r.rank") / col("dg.outdeg")).as("m"))
-        .join(e.as("eg"), col("esrc") === col("eg.src"))
-        .select(col("eg.dst").as("dst"), col("m"))
-      val dangling = rd.where(col("dg.outdeg").isNull)
-        .select(lit(null).cast("long").as("dst"), col("r.rank").as("m"))
-      val gathered = linked.union(dangling)
-        .groupBy("dst").agg(sum(col("m")).as("in_mass"))
-        .transform(cut)
-      val missing = gathered.where(col("dst").isNull)
-        .agg(coalesce(sum(col("in_mass")), lit(0.0))).head().getDouble(0)
-      ranks = verts.join(maybeBroadcast(gathered.where(col("dst").isNotNull)),
-          verts("nodeid") === col("dst"), "left_outer")
-        .select(verts("nodeid"),
-          (lit(alpha / n) +
-            lit(1 - alpha) * (coalesce(col("in_mass"), lit(0.0)) + lit(missing / n)))
-            .as("rank"))
-      }
-      ranks = cut(ranks)
-    }
-    finally { e.unpersist(); deg.unpersist(); verts.unpersist() }
-    ranks
-  }
-
-  /** Personalized (multi-source) PageRank — G2/G8.
-    *
-    * State is the relation (source, nodeid, rank): all sources iterate in
-    * ONE job per step, grouped by (source, dst) — the relational analogue of
-    * the reference widening rank to a per-source float vector
+  /** Personalized (multi-source) PageRank — G2/G8. All sources iterate in
+    * ONE job per round, grouped by (source, dst) — the relational analogue
+    * of the reference widening rank to a per-source float vector
     * (PersonalizedPageRankNode.java:36-37). Teleport and dangling mass go
-    * only to each walk's own source (RunPersonalizedPageRankBasic.java:312-340).
+    * only to each walk's own source (RunPersonalizedPageRankBasic.java:
+    * 312-340). A source listed twice is walked once.
     *
     * @return (source, nodeid, rank); per source, sum(rank) == 1
     */
@@ -792,153 +581,16 @@ object GraphOps {
                            rangePartition: Boolean = false,
                            hubDegreeThreshold: Long = 4000000L,
                            checkpointDir: Option[String] = None): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val cut = new LineageCutter(checkpointDir)
-    // same hub guard as pageRank: adjacency arrays are per-source rows, so
-    // a 100M-out-degree hub OOMs identically here
-    val (maxDeg, totalEdges) = degreeStats(edges)
-    val parts = resolveParts(spark, numPartitions, totalEdges)
-    if (maxDeg > hubDegreeThreshold)
-      return personalizedPageRankEdgeScatter(edges, sources, iterations, alpha,
-        vertices, parts, dedupeEdges, rangePartition, checkpointDir)
-    val (verts, nVerts, adj) = buildGraph(edges, vertices, parts, dedupeEdges,
-      rangePartition)
-    if (nVerts < localizedCutoff)
-      return try withIterationAqe(edges, nVerts) {
-        val g = collectDriverGraph(verts, adj.select(col("src"), col("outdeg")))
-        val scatterFor = (k: Long, mm: graft.functions.LongDoubleMap) =>
-          adj.select(lit(k).as("source"), explode(col("adj")).as("dst"),
-            graft.functions.MapLookup.lookup(mm, col("src")).as("m"))
-        localizedPpr(scatterFor, verts, g, sources, iterations, alpha, cut,
-          "ppr.gathered")
-      } finally { adj.unpersist(); verts.unpersist() }
-    val small = nVerts < aqeIterationCutoff
-    def maybeBroadcast(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val srcDf = sources.toDF("source")
-
-    var state = verts.crossJoin(srcDf)
-      .withColumn("rank", when(col("nodeid") === col("source"), lit(1.0)).otherwise(lit(0.0)))
-    try withIterationAqe(edges, nVerts) { for (_ <- 1 to iterations) {
-      // Same single-pass scatter/gather as pageRank: dangling rank flows to
-      // a NULL sentinel dst within the one (source, dst) aggregation. The
-      // per-source dangling mass (|sources| rows) is collected and
-      // re-entered as a LITERAL local relation joined on source — like
-      // pageRank's scalar, this keeps the iteration plan referencing the
-      // checkpointed aggregation exactly once (see pageRank above for the
-      // stats-squaring hazard). Aggregated sides get renamed keys
-      // (gsource/gdst/msource) so the re-join against the vertex frame has
-      // no ambiguous attributes.
-      val gathered0 = state.join(maybeBroadcast(adj),
-          state("nodeid") === adj("src"), "left_outer")
-        .select(col("source"),
-          explode(when(col("adj").isNull, array(lit(null).cast("long")))
-            .otherwise(col("adj"))).as("dst"),
-          when(col("outdeg").isNull, col("rank"))
-            .otherwise(col("rank") / col("outdeg")).as("m"))
-        .groupBy("source", "dst").agg(sum(col("m")).as("in_mass"))
-        .transform(cut)
-      val missing = gathered0.where(col("dst").isNull)
-        .select(col("source"), col("in_mass"))
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        .toDF("msource", "miss")
-      val gathered = gathered0.where(col("dst").isNotNull)
-        .withColumnRenamed("source", "gsource").withColumnRenamed("dst", "gdst")
-      state = verts.crossJoin(srcDf)
-        .join(maybeBroadcast(gathered),
-          col("nodeid") === col("gdst") && col("source") === col("gsource"),
-          "left_outer")
-        .join(broadcast(missing), col("source") === col("msource"), "left_outer")
-        .select(col("source"), col("nodeid"),
-          (when(col("nodeid") === col("source"), lit(alpha)).otherwise(lit(0.0)) +
-            lit(1 - alpha) * (coalesce(col("in_mass"), lit(0.0)) +
-              when(col("nodeid") === col("source"), coalesce(col("miss"), lit(0.0)))
-                .otherwise(lit(0.0))))
-            .as("rank"))
-      }
-      // materialize the last (lazy) update before dropping its cached inputs
-      state = cut(state)
-    }
-    finally { adj.unpersist(); verts.unpersist() }
-    state
-  }
-
-  /** Hub-safe personalized PageRank: the per-source state scatters off the
-    * flat (src, dst) relation exactly as [[pageRankEdgeScatter]] does for
-    * the global walk — state⋈deg computes per-edge mass on the narrow
-    * join, the persisted edge relation fans it out, dangling rank reaches
-    * the NULL sentinel via the deg anti-side. Downstream (per-source
-    * literal dangling relation, state update) is identical to the
-    * adjacency path, so ranks match bit-for-bit.
-    */
-  private def personalizedPageRankEdgeScatter(
-      edges: DataFrame, sources: Seq[Long], iterations: Int, alpha: Double,
-      vertices: Option[DataFrame], numPartitions: Int,
-      dedupeEdges: Boolean, rangePartition: Boolean,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val cut = new LineageCutter(checkpointDir)
-    val (verts, nVerts, e, deg) =
-      buildEdgeGraph(edges, vertices, numPartitions, dedupeEdges, rangePartition)
-    if (nVerts < localizedCutoff)
-      return try withIterationAqe(edges, nVerts) {
-        val g = collectDriverGraph(verts, deg)
-        val scatterFor = (k: Long, mm: graft.functions.LongDoubleMap) =>
-          e.select(lit(k).as("source"), col("dst"),
-            graft.functions.MapLookup.lookup(mm, col("src")).as("m"))
-        localizedPpr(scatterFor, verts, g, sources, iterations, alpha, cut,
-          "ppr_edge.gathered")
-      } finally { e.unpersist(); deg.unpersist(); verts.unpersist() }
-    val small = nVerts < aqeIterationCutoff
-    def maybeBroadcast(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val srcDf = sources.toDF("source")
-
-    var state = verts.crossJoin(srcDf)
-      .withColumn("rank", when(col("nodeid") === col("source"), lit(1.0)).otherwise(lit(0.0)))
-    try withIterationAqe(edges, nVerts) { for (_ <- 1 to iterations) {
-      val rd = state.as("st").join(maybeBroadcast(deg.as("dg")),
-        col("st.nodeid") === col("dg.src"), "left_outer")
-      val linked = rd.where(col("dg.outdeg").isNotNull)
-        .select(col("st.source").as("source"), col("st.nodeid").as("esrc"),
-          (col("st.rank") / col("dg.outdeg")).as("m"))
-        .join(e.as("eg"), col("esrc") === col("eg.src"))
-        .select(col("source"), col("eg.dst").as("dst"), col("m"))
-      val dangling = rd.where(col("dg.outdeg").isNull)
-        .select(col("st.source").as("source"),
-          lit(null).cast("long").as("dst"), col("st.rank").as("m"))
-      val gathered0 = linked.union(dangling)
-        .groupBy("source", "dst").agg(sum(col("m")).as("in_mass"))
-        .transform(cut)
-      val missing = gathered0.where(col("dst").isNull)
-        .select(col("source"), col("in_mass"))
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        .toDF("msource", "miss")
-      val gathered = gathered0.where(col("dst").isNotNull)
-        .withColumnRenamed("source", "gsource").withColumnRenamed("dst", "gdst")
-      state = verts.crossJoin(srcDf)
-        .join(maybeBroadcast(gathered),
-          col("nodeid") === col("gdst") && col("source") === col("gsource"),
-          "left_outer")
-        .join(broadcast(missing), col("source") === col("msource"), "left_outer")
-        .select(col("source"), col("nodeid"),
-          (when(col("nodeid") === col("source"), lit(alpha)).otherwise(lit(0.0)) +
-            lit(1 - alpha) * (coalesce(col("in_mass"), lit(0.0)) +
-              when(col("nodeid") === col("source"), coalesce(col("miss"), lit(0.0)))
-                .otherwise(lit(0.0))))
-            .as("rank"))
-      }
-      state = cut(state)
-    }
-    finally { e.unpersist(); deg.unpersist(); verts.unpersist() }
-    state
+    require(sources.nonEmpty, "personalizedPageRank needs at least one source")
+    walk(edges, vertices, numPartitions, dedupeEdges, rangePartition,
+      hubDegreeThreshold, checkpointDir, new Personalized(alpha, sources.distinct),
+      Stop(iterations))._1
   }
 
   /** PageRank with ranks carried in LOG space — the reference's exact
     * numeric regime (float32 log-space there; float64 log-space here):
     * scatter is `rank - log(outdeg)`, gather is a grouped log-sum-exp
-    * (graft.functions.LogSpace.LogSumExpAgg — its merge is the combiner),
-    * teleport is `logAdd(log(α/N), log(1-α) + logAdd(in, missing - log N))`.
+    * (graft.functions.LogSpace.LogSumExpAgg — its merge is the combiner).
     * Linear-space [[pageRank]] is the production path (double never
     * underflows at realistic N); this variant exists for numeric parity
     * and as the engine's typed-Aggregator showcase.
@@ -948,130 +600,14 @@ object GraphOps {
                        numPartitions: Int = 0,
                        rangePartition: Boolean = false,
                        hubDegreeThreshold: Long = 4000000L,
-                       checkpointDir: Option[String] = None): DataFrame = {
-    import graft.functions.LogSpace
-    val cut = new LineageCutter(checkpointDir)
-    // same hub guard as [[pageRank]]: above the threshold the log-space
-    // walk scatters off the flat edge relation (rank - log outdeg per
-    // edge) instead of building adjacency array rows
-    val (maxDeg, totalEdges) = degreeStats(edges)
-    val parts = resolveParts(edges.sparkSession, numPartitions, totalEdges)
-    if (maxDeg > hubDegreeThreshold)
-      return pageRankLogSpaceEdgeScatter(edges, iterations, alpha, vertices,
-        parts, rangePartition, checkpointDir)
-    // same single-pass iteration structure as [[pageRank]] with the
-    // arithmetic in log space: scatter subtracts log(outdeg), the gather is
-    // a grouped log-sum-exp (its merge = the reference's combiner)
-    val (verts, n, adj) = buildGraph(edges, vertices, parts,
-      dedupeEdges = true, rangePartition)
-    if (n < localizedCutoff)
-      return try withIterationAqe(edges, n) {
-        val g = collectDriverGraph(verts, adj.select(col("src"), col("outdeg")))
-        val scatter = (mm: graft.functions.LongDoubleMap) =>
-          adj.select(explode(col("adj")).as("dst"),
-            graft.functions.MapLookup.lookup(mm, col("src")).as("m"))
-        localizedPageRankLogSpace(scatter, verts, g, n, iterations, alpha,
-          cut, "pagerank_log.gathered")
-      } finally { adj.unpersist(); verts.unpersist() }
-    val small = n < aqeIterationCutoff
-    def maybeBroadcast(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val negInf = lit(Double.NegativeInfinity)
-
-    var ranks = verts.withColumn("rank", lit(-math.log(n.toDouble)))
-    try withIterationAqe(edges, n) { for (_ <- 1 to iterations) {
-      val gathered = ranks.join(maybeBroadcast(adj),
-          ranks("nodeid") === adj("src"), "left_outer")
-        .select(
-          explode(when(col("adj").isNull, array(lit(null).cast("long")))
-            .otherwise(col("adj"))).as("dst"),
-          when(col("outdeg").isNull, col("rank"))
-            .otherwise(col("rank") - log(col("outdeg").cast("double"))).as("m"))
-        .groupBy("dst").agg(LogSpace.logSumExp(col("m")).as("in_mass"))
-        .transform(cut)
-      val missingLog = gathered.where(col("dst").isNull)
-        .select(col("in_mass")).collect().headOption
-        .flatMap(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
-        .getOrElse(Double.NegativeInfinity)
-      val in = coalesce(col("in_mass"), negInf)
-      val linkAndMissing = LogSpace.logAdd(in, lit(missingLog - math.log(n.toDouble)))
-      ranks = verts.join(maybeBroadcast(gathered.where(col("dst").isNotNull)),
-          verts("nodeid") === col("dst"), "left_outer")
-        .select(verts("nodeid"),
-          LogSpace.logAdd(lit(math.log(alpha / n)),
-            lit(math.log(1 - alpha)) + linkAndMissing).as("rank"))
-      }
-      ranks = cut(ranks)
-    }
-    finally { adj.unpersist(); verts.unpersist() }
-    ranks
-  }
-
-  /** Hub-safe log-space iteration: same flat-edge scatter as
-    * [[pageRankEdgeScatter]] with the arithmetic of [[pageRankLogSpace]] —
-    * per-edge mass is `rank - log(outdeg)` computed on the narrow rank⋈deg
-    * join, fanned out by the persisted edge relation; the gather is the
-    * grouped log-sum-exp. Downstream (sentinel, driver-scalar missing
-    * mass in log space, teleport update) matches the adjacency variant
-    * term for term, so ranks agree bit-for-bit.
-    */
-  private def pageRankLogSpaceEdgeScatter(edges: DataFrame, iterations: Int,
-                                          alpha: Double, vertices: Option[DataFrame],
-                                          numPartitions: Int,
-                                          rangePartition: Boolean,
-                                          checkpointDir: Option[String] = None): DataFrame = {
-    import graft.functions.LogSpace
-    val cut = new LineageCutter(checkpointDir)
-    val (verts, n, e, deg) = buildEdgeGraph(edges, vertices, numPartitions,
-      dedupeEdges = true, rangePartition)
-    if (n < localizedCutoff)
-      return try withIterationAqe(edges, n) {
-        val g = collectDriverGraph(verts, deg)
-        val scatter = (mm: graft.functions.LongDoubleMap) =>
-          e.select(col("dst"), graft.functions.MapLookup.lookup(mm, col("src")).as("m"))
-        localizedPageRankLogSpace(scatter, verts, g, n, iterations, alpha,
-          cut, "pagerank_log_edge.gathered")
-      } finally { e.unpersist(); deg.unpersist(); verts.unpersist() }
-    val small = n < aqeIterationCutoff
-    def maybeBroadcast(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val negInf = lit(Double.NegativeInfinity)
-
-    var ranks = verts.withColumn("rank", lit(-math.log(n.toDouble)))
-    try withIterationAqe(edges, n) { for (_ <- 1 to iterations) {
-      val rd = ranks.as("r").join(maybeBroadcast(deg.as("dg")),
-        col("r.nodeid") === col("dg.src"), "left_outer")
-      val linked = rd.where(col("dg.outdeg").isNotNull)
-        .select(col("r.nodeid").as("esrc"),
-          (col("r.rank") - log(col("dg.outdeg").cast("double"))).as("m"))
-        .join(e.as("eg"), col("esrc") === col("eg.src"))
-        .select(col("eg.dst").as("dst"), col("m"))
-      val dangling = rd.where(col("dg.outdeg").isNull)
-        .select(lit(null).cast("long").as("dst"), col("r.rank").as("m"))
-      val gathered = linked.union(dangling)
-        .groupBy("dst").agg(LogSpace.logSumExp(col("m")).as("in_mass"))
-        .transform(cut)
-      val missingLog = gathered.where(col("dst").isNull)
-        .select(col("in_mass")).collect().headOption
-        .flatMap(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
-        .getOrElse(Double.NegativeInfinity)
-      val in = coalesce(col("in_mass"), negInf)
-      val linkAndMissing = LogSpace.logAdd(in, lit(missingLog - math.log(n.toDouble)))
-      ranks = verts.join(maybeBroadcast(gathered.where(col("dst").isNotNull)),
-          verts("nodeid") === col("dst"), "left_outer")
-        .select(verts("nodeid"),
-          LogSpace.logAdd(lit(math.log(alpha / n)),
-            lit(math.log(1 - alpha)) + linkAndMissing).as("rank"))
-      }
-      ranks = cut(ranks)
-    }
-    finally { e.unpersist(); deg.unpersist(); verts.unpersist() }
-    ranks
-  }
+                       checkpointDir: Option[String] = None): DataFrame =
+    walk(edges, vertices, numPartitions, dedupeEdges = true, rangePartition,
+      hubDegreeThreshold, checkpointDir, new LogLinear(alpha), Stop(iterations))._1
 
   /** PageRank iterated to convergence: stops when the max per-node rank
     * change drops below `tol` (L∞), or at `maxIterations`. The reference
     * runs a fixed iteration count chosen by hand (RunPageRankBasic takes
     * -start/-end); a convergence criterion is what an engine should offer.
-    * Costs one extra max-delta aggregation per iteration.
     *
     * @return (ranks, iterationsRun)
     */
@@ -1080,139 +616,18 @@ object GraphOps {
                         vertices: Option[DataFrame] = None,
                         numPartitions: Int = 0,
                         hubDegreeThreshold: Long = 4000000L,
-                        checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    val cut = new LineageCutter(checkpointDir)
-    // same hub guard as [[pageRank]]: convergence mode works on mega-hub
-    // graphs too, via the flat-edge scatter (VERDICT r3 missing-1)
-    val (maxDeg, totalEdges) = degreeStats(edges)
-    val parts = resolveParts(edges.sparkSession, numPartitions, totalEdges)
-    if (maxDeg > hubDegreeThreshold)
-      return pageRankConvergedEdgeScatter(edges, tol, maxIterations, alpha,
-        vertices, parts, checkpointDir)
-    // r12: setup unified onto buildGraph (one aggregation shuffle builds
-    // the deduped adjacency; the old adjacencyOf path paid a standalone
-    // edges.distinct() shuffle first). Adjacency array ORDER can differ
-    // from the old build, which reorders per-key float sums — within the
-    // oracle's 9-decimal tolerance, like every regime note below.
-    val (verts, n, adj) = buildGraph(edges, vertices, parts,
-      dedupeEdges = true, rangePartition = false)
-    if (n < localizedCutoff)
-      return try withIterationAqe(edges, n) {
-        val g = collectDriverGraph(verts, adj.select(col("src"), col("outdeg")))
-        val scatter = (mm: graft.functions.LongDoubleMap) =>
-          adj.select(explode(col("adj")).as("dst"),
-            graft.functions.MapLookup.lookup(mm, col("src")).as("m"))
-        localizedPageRankConverged(scatter, verts, g, n, tol, maxIterations,
-          alpha, cut, "pagerank_conv.gathered")
-      } finally { adj.unpersist(); verts.unpersist() }
-    // join regime (r11 shape): AQE toggle via withIterationAqe, explicit
-    // broadcast hints — ranks and iteration count agree with the oracle
-    // within its tolerance (map-task boundaries can reorder float partial
-    // sums, so bit-identity across regimes is NOT claimed — ADVICE r11)
-    val small = n < aqeIterationCutoff
-    def maybeBroadcast(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-
-    var ranks = cut(verts.withColumn("rank", lit(1.0 / n)))
-    var iters = 0
-    var delta = Double.MaxValue
-    try withIterationAqe(edges, n) { while (delta > tol && iters < maxIterations) {
-      val withAdj = ranks.join(maybeBroadcast(adj),
-        ranks("nodeid") === adj("src"), "left_outer")
-      val missing = withAdj.where(col("adj").isNull)
-        .agg(coalesce(sum(col("rank")), lit(0.0))).head().getDouble(0)
-      val gathered = withAdj.where(col("adj").isNotNull)
-        .select(explode(col("adj")).as("dst"), (col("rank") / col("outdeg")).as("m"))
-        .groupBy("dst").agg(sum(col("m")).as("in_mass"))
-      explainIterOnce("pagerank_conv.gathered", gathered, iters + 1)
-      val next = verts.join(maybeBroadcast(gathered),
-          verts("nodeid") === gathered("dst"), "left_outer")
-        .select(verts("nodeid"),
-          (lit(alpha / n) +
-            lit(1 - alpha) * (coalesce(col("in_mass"), lit(0.0)) + lit(missing / n)))
-            .as("rank"))
-        .transform(cut)
-      delta = next.join(ranks.withColumnRenamed("rank", "prev"), "nodeid")
-        .agg(max(abs(col("rank") - col("prev")))).head().getDouble(0)
-      ranks = next
-      iters += 1
-    } }
-    finally { adj.unpersist(); verts.unpersist() }
-    (ranks, iters)
-  }
-
-  /** Hub-safe convergence loop: [[pageRankEdgeScatter]]'s per-iteration
-    * step (flat-edge fan-out, sentinel gather, driver-scalar dangling
-    * mass) plus the L∞ delta check. A mega-hub graph — the one case the
-    * adjacency-based loop refuses — gets convergence mode with no giant
-    * array rows; the update arithmetic matches [[pageRankConverged]]'s
-    * adjacency path exactly, so both converge to the same ranks.
-    */
-  private def pageRankConvergedEdgeScatter(edges: DataFrame, tol: Double,
-                                           maxIterations: Int, alpha: Double,
-                                           vertices: Option[DataFrame],
-                                           numPartitions: Int,
-                                           checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    val cut = new LineageCutter(checkpointDir)
-    val (verts, n, e, deg) = buildEdgeGraph(edges, vertices, numPartitions,
-      dedupeEdges = true, rangePartition = false)
-    if (n < localizedCutoff)
-      return try withIterationAqe(edges, n) {
-        val g = collectDriverGraph(verts, deg)
-        val scatter = (mm: graft.functions.LongDoubleMap) =>
-          e.select(col("dst"), graft.functions.MapLookup.lookup(mm, col("src")).as("m"))
-        localizedPageRankConverged(scatter, verts, g, n, tol, maxIterations,
-          alpha, cut, "pagerank_conv_edge.gathered")
-      } finally { e.unpersist(); deg.unpersist(); verts.unpersist() }
-    val small = n < aqeIterationCutoff
-    def maybeBroadcast(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-
-    var ranks = cut(verts.withColumn("rank", lit(1.0 / n)))
-    var iters = 0
-    var delta = Double.MaxValue
-    try withIterationAqe(edges, n) {
-      while (delta > tol && iters < maxIterations) {
-        val rd = ranks.as("r").join(maybeBroadcast(deg.as("dg")),
-          col("r.nodeid") === col("dg.src"), "left_outer")
-        val linked = rd.where(col("dg.outdeg").isNotNull)
-          .select(col("r.nodeid").as("esrc"), (col("r.rank") / col("dg.outdeg")).as("m"))
-          .join(e.as("eg"), col("esrc") === col("eg.src"))
-          .select(col("eg.dst").as("dst"), col("m"))
-        val dangling = rd.where(col("dg.outdeg").isNull)
-          .select(lit(null).cast("long").as("dst"), col("r.rank").as("m"))
-        val gathered = linked.union(dangling)
-          .groupBy("dst").agg(sum(col("m")).as("in_mass"))
-          .transform(cut)
-        val missing = gathered.where(col("dst").isNull)
-          .agg(coalesce(sum(col("in_mass")), lit(0.0))).head().getDouble(0)
-        val next = verts.join(maybeBroadcast(gathered.where(col("dst").isNotNull)),
-            verts("nodeid") === col("dst"), "left_outer")
-          .select(verts("nodeid"),
-            (lit(alpha / n) +
-              lit(1 - alpha) * (coalesce(col("in_mass"), lit(0.0)) + lit(missing / n)))
-              .as("rank"))
-          .transform(cut)
-        delta = next.join(ranks.withColumnRenamed("rank", "prev"), "nodeid")
-          .agg(max(abs(col("rank") - col("prev")))).head().getDouble(0)
-        ranks = next
-        iters += 1
-      }
-    }
-    finally { e.unpersist(); deg.unpersist(); verts.unpersist() }
-    (ranks, iters)
-  }
+                        checkpointDir: Option[String] = None): (DataFrame, Int) =
+    walk(edges, vertices, numPartitions, dedupeEdges = true, rangePartition = false,
+      hubDegreeThreshold, checkpointDir, new Linear(alpha), Stop(maxIterations, Some(tol)))
 
   /** Graph summary counters — A8 (the reference's job counters:
     * BuildPageRankRecords.java:97-102 NODES/EDGES, RunPageRankBasic
     * massMessages).
     *
-    * r12: the derived-vertices case runs ONE job (two-level aggregation)
-    * instead of three counting actions (edges.count, distinct-union count,
-    * anti-join count — 11 jobs/run with AQE at sf0.1): each edge emits its
-    * endpoints tagged (isSrc, edge-weight-on-src), the per-id level folds
-    * duplicates, the global level counts nodes / sums edges / counts ids
-    * that never appear as a source. Same three counters, one pass
-    * (guide §2.4 — the union+distinct+anti were three shuffles over the
-    * same relation). */
+    * The derived-vertices case runs ONE job (two-level aggregation): each
+    * edge emits its endpoints tagged (isSrc, edge-weight-on-src), the
+    * per-id level folds duplicates, the global level counts nodes / sums
+    * edges / counts ids that never appear as a source. */
   def graphStats(edges: DataFrame, vertices: Option[DataFrame] = None): Map[String, Long] =
     vertices match {
       case None =>

@@ -153,6 +153,120 @@ class GraphOpsSpec extends SparkSpec {
     }
   }
 
+  /** Runs `body` once per regime: the driver-localized default, then the
+    * distributed join regime forced by a zero cutoff. */
+  private def inBothRegimes[T](body: => T): (T, T) = {
+    val localized = body
+    (localized, withCutoff(0)(body))
+  }
+
+  private def withCutoff[T](cutoff: Long)(body: => T): T = {
+    sys.props("graft.graph.localizedCutoff") = cutoff.toString
+    try body finally sys.props.remove("graft.graph.localizedCutoff")
+  }
+
+  test("iterations = 0: every walk returns the same schema and rows in both regimes") {
+    def runAll() = Seq(
+      GraphOps.pageRank(smallEdges, iterations = 0, vertices = Some(smallVerts)),
+      GraphOps.pageRankLogSpace(smallEdges, iterations = 0, vertices = Some(smallVerts)),
+      GraphOps.pageRankConverged(smallEdges, maxIterations = 0,
+        vertices = Some(smallVerts))._1,
+      GraphOps.personalizedPageRank(smallEdges, Seq(1L, 4L), iterations = 0,
+        vertices = Some(smallVerts)))
+      .map(df => (df.schema, df.collect().map(_.toString).sorted.toSeq))
+    val (localized, join) = inBothRegimes(runAll())
+    for (((l, j), walk) <- localized.zip(join)
+        .zip(Seq("pageRank", "logSpace", "converged", "ppr"))) {
+      assert(l._1 === j._1, s"$walk schema")
+      assert(l._2 === j._2, s"$walk rows")
+    }
+    assert(localized(3)._1.fieldNames.toSeq === Seq("source", "nodeid", "rank"))
+  }
+
+  test("duplicate sources are walked once: ranks match the oracle, one row per (source, node)") {
+    val (localized, join) = inBothRegimes(
+      GraphOps.personalizedPageRank(smallEdges, Seq(4L, 1L, 4L), iterations = 5,
+        vertices = Some(smallVerts), numPartitions = 2).collect())
+    for ((rows, regime) <- Seq(localized -> "localized", join -> "join")) {
+      assert(rows.length === 2 * smallAdj.size, s"$regime row count")
+      val got = rows.map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      for (src <- Seq(1L, 4L); (k, v) <- seqPpr(smallAdj, src, 5))
+        assert(math.abs(got((src, k)) - v) < 1e-12, s"$regime source $src node $k")
+    }
+  }
+
+  /** Jobs per call on the small fixture (3 iterations; the converged walk
+    * runs its 3-iteration cap), counted with the result collected, before
+    * the walks shared one iteration skeleton. A count may only go down. */
+  private val jobBudget: Map[(String, String, String), Int] = {
+    val walks = Seq("pageRank", "logSpace", "converged", "ppr")
+    def row(layout: String, regime: String, counts: Int*) =
+      walks.zip(counts).map { case (w, n) => (w, layout, regime) -> n }
+    (row("adjacency", "localized", 17, 17, 17, 17) ++
+      row("edges", "localized", 21, 21, 21, 21) ++
+      row("adjacency", "join", 24, 24, 33, 31) ++
+      row("edges", "join", 33, 33, 39, 40)).toMap
+  }
+
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.ListenerBusDrain(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("jobs per call stay within the committed budget for every walk, layout and regime") {
+    def walks(hub: Long): Seq[(String, () => Unit)] = Seq(
+      "pageRank" -> (() => GraphOps.pageRank(smallEdges, iterations = 3,
+        vertices = Some(smallVerts), numPartitions = 4,
+        hubDegreeThreshold = hub).collect()),
+      "logSpace" -> (() => GraphOps.pageRankLogSpace(smallEdges, iterations = 3,
+        vertices = Some(smallVerts), numPartitions = 4,
+        hubDegreeThreshold = hub).collect()),
+      "converged" -> (() => GraphOps.pageRankConverged(smallEdges, tol = 0.0,
+        maxIterations = 3, vertices = Some(smallVerts), numPartitions = 4,
+        hubDegreeThreshold = hub)._1.collect()),
+      "ppr" -> (() => GraphOps.personalizedPageRank(smallEdges, Seq(1L, 4L),
+        iterations = 3, vertices = Some(smallVerts), numPartitions = 4,
+        hubDegreeThreshold = hub).collect()))
+    def countAll() =
+      for ((layout, hub) <- Seq("adjacency" -> Long.MaxValue, "edges" -> 1L);
+           (walk, run) <- walks(hub))
+        yield (walk, layout) -> jobsOf(run())
+    val (localized, join) = inBothRegimes(countAll())
+    val counts = Seq("localized" -> localized, "join" -> join).flatMap {
+      case (regime, cs) => cs.map { case ((w, l), n) => (w, l, regime) -> n }
+    }
+    info(counts.map { case ((w, l, r), n) => s"$w/$l/$r=$n" }.mkString(" "))
+    for ((key, n) <- counts)
+      assert(n <= jobBudget.getOrElse(key, -1), s"$key submitted $n jobs")
+  }
+
+  test("regime gate weighs |sources| x n: a many-sources call lands in the join regime") {
+    def ppr() = GraphOps.personalizedPageRank(smallEdges, Seq(1L, 2L, 4L),
+      iterations = 3, vertices = Some(smallVerts), numPartitions = 2).collect()
+    val localizedJobs = jobsOf(ppr())
+    val joinJobs = withCutoff(0)(jobsOf(ppr()))
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val gatedJobs = withCutoff(10) {
+      assert(GraphOps.localizes(n = 5, walks = 1), "5 x 1 < 10 stays localized")
+      assert(!GraphOps.localizes(n = 5, walks = 3), "5 x 3 >= 10 goes to the join regime")
+      jobsOf { rows = ppr() }
+    }
+    assert(gatedJobs === joinJobs, "the gated call runs the join regime's jobs")
+    assert(gatedJobs !== localizedJobs, "the regimes are told apart by their jobs")
+    val got = rows.map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(got.size === 3 * smallAdj.size)
+    for (src <- Seq(1L, 2L, 4L); (k, v) <- seqPpr(smallAdj, src, 3))
+      assert(math.abs(got((src, k)) - v) < 1e-12, s"source $src node $k")
+  }
+
   test("reliable checkpointing (checkpointDir) yields BIT-IDENTICAL ranks " +
       "across the whole iterative family, on both scatter paths") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString

@@ -138,10 +138,11 @@ class PlanSpec extends SparkSpec {
     import graft.operators.GraphOps
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    val ranged = GraphOps.adjacencyOf(edges, parts = 4, dedupe = true, byRange = true)
+    // the adjacency build every walk runs on its default layout
+    val ranged = GraphOps.adjacency(edges, parts = 4, dedupe = true, byRange = true)
       .queryExecution.executedPlan.toString
     assert(ranged.toLowerCase.contains("rangepartitioning"), ranged)
-    val hashed = GraphOps.adjacencyOf(edges, parts = 4, dedupe = true)
+    val hashed = GraphOps.adjacency(edges, parts = 4, dedupe = true, byRange = false)
       .queryExecution.executedPlan.toString
     assert(!hashed.toLowerCase.contains("rangepartitioning"), hashed)
   }
