@@ -38,14 +38,14 @@ object LongDoubleMap {
   * driver-built [[LongDoubleMap]]; NULL when the key is absent (exactly the
   * unmatched side of the left-outer join it replaces).
   *
-  * This is the re-entry half of the localized iterative-graph regime
-  * (GraphOps): per-iteration rank state, computed on the driver from the
-  * previous gather, re-enters the plan as a lookup table instead of a
-  * joined relation — removing the per-iteration broadcast-exchange build
-  * job and its collect. The table is a constructor constant, the same
-  * driver-held-model shape as [[SegmentCount]]'s piece vocabulary and the
-  * ANN centroid literals; it cannot be spelled in SQL, so this expression
-  * enters plans through ColumnBridge rather than the FunctionRegistry.
+  * GraphOps' join regime uses it for personalized walks: each source's
+  * dangling mass, gathered in the previous round, re-enters the update as
+  * a lookup over `source` instead of a joined relation — removing a
+  * per-round broadcast-exchange build job. The table is a constructor
+  * constant, the same driver-held-model shape as [[SegmentCount]]'s piece
+  * vocabulary and the ANN centroid literals; it cannot be spelled in SQL,
+  * so this expression enters plans through ColumnBridge rather than the
+  * FunctionRegistry.
   */
 case class MapLookup(child: Expression, table: LongDoubleMap)
     extends UnaryExpression {

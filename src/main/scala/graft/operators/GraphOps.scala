@@ -1,10 +1,15 @@
 package graft.operators
 
 import graft.functions.{LogSpace, LongDoubleMap, MapLookup}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 
 /** Graph / iterative operators: the assignment-4 family of the reference
   * (PageRank, personalized multi-source PageRank, top-k extraction).
@@ -29,37 +34,36 @@ import org.apache.spark.storage.StorageLevel
   *  - a [[Walk]] rule — initial rank, per-edge mass (`r/d`, or `r - log d`
   *    in log space), gather aggregate (`sum` or `LogSpace.logSumExp`) and
   *    update — with linear, log-space and personalized instances. Rules
-  *    are written once over [[Arith]], so the driver's doubles and the
-  *    join regime's Columns run the same IEEE operations;
+  *    are written once over [[Arith]], so the in-task regime's doubles
+  *    and the join regime's Columns run the same IEEE operations;
   *  - a [[Stop]] rule: a fixed round count, or L∞ change < tol;
-  *  - a [[Scatter]] layout built once by [[prepare]]: adjacency arrays
-  *    (`explode(adj)`), or — when the hub guard trips — the persisted flat
-  *    (src, dst) relation joined per round, so a 100M-out-degree hub never
-  *    becomes one giant array row.
+  *  - in the join regime, a [[Scatter]] layout built once by [[prepare]]:
+  *    adjacency arrays (`explode(adj)`), or — when the hub guard trips —
+  *    the persisted flat (src, dst) relation joined per round, so a
+  *    100M-out-degree hub never becomes one giant array row.
   *
-  * Each walk runs in one of two regimes, chosen by [[localizes]]:
-  *  - localized (|walks| x n under the cutoff): rank state lives on the
-  *    driver and re-enters each scatter as a [[MapLookup]] table; a round
-  *    is ONE job, its gather collected to the driver. Dangling mass, the
-  *    update and the L∞ change are driver arithmetic — the reduction the
-  *    reference does through reducer side-files (RunPageRankBasic.java:
-  *    515-523). The final ranks leave through one lookup per walk.
+  * Each walk runs in one of two regimes, chosen by [[inTask]] after one
+  * stats pass (vertex count n, raw edge count, max raw out-degree):
+  *  - in-task (|walks| x n + raw edges under the cutoff): edges and vertex
+  *    set travel to ONE partition, whose task builds CSR arrays and runs
+  *    every round over [[Scalar]] doubles, `Walk.add` folding the gather —
+  *    the single-machine loop the reference ships as its oracle
+  *    (SequentialPageRank.java). The walk is one job (the output's cut);
+  *    only the round count reaches the driver, through an accumulator.
   *  - join (above it): state is a relation joined against the graph each
   *    round. Dangling rank flows to a NULL `dst` sentinel inside the same
   *    gather and comes back as a driver scalar per walk, so each round's
   *    plan reads the checkpointed gather once (two references would square
   *    Catalyst's size estimate every round). The per-round lineage cut
   *    ([[LineageCutter]]) keeps the plan O(1) where the reference writes
-  *    iterXXXX dirs to HDFS.
-  * The graph side never moves to the driver: its relations are built and
-  * persisted once, partitioned on `src`.
+  *    iterXXXX dirs to HDFS. The graph side never moves to the driver: its
+  *    relations are built and persisted once, partitioned on `src`.
   */
 object GraphOps {
 
   /** Parse reference-format adjacency lines (`node WS out1 WS out2 ...`)
     * into an edge relation (src, dst) plus an all-vertices relation that
-    * includes dangling nodes (they have a line but no out-edges).
-    */
+    * includes dangling nodes (they have a line but no out-edges). */
   def edgesFromAdjacencyText(lines: DataFrame): (DataFrame, DataFrame) = {
     val toks = lines
       .select(split(trim(col(lines.columns.head)), "\\s+").as("toks"))
@@ -78,8 +82,7 @@ object GraphOps {
     * (reference/assignment4/src/main/basic/RangePartitioner.java:37-40),
     * useful when node ids encode locality (e.g. crawl order). Both
     * partitionings satisfy the downstream groupBy("src")'s clustered
-    * distribution, so the adjacency build adds no second exchange.
-    */
+    * distribution, so the adjacency build adds no second exchange. */
   def partitionEdges(edges: DataFrame, parts: Int, byRange: Boolean = false): DataFrame =
     if (byRange) edges.repartitionByRange(parts, col("src"))
     else edges.repartition(parts, col("src"))
@@ -95,19 +98,13 @@ object GraphOps {
       .agg((if (dedupe) collect_set(col("dst")) else collect_list(col("dst"))).as("adj"))
       .withColumn("outdeg", size(col("adj")).cast("long"))
 
-  /** Iterative PageRank on a SMALL graph is latency-bound: per-iteration
-    * AQE re-planning + extra stages cost more than they save (measured ~2x
-    * per iteration at 2e4 nodes), while on a big graph AQE's skew-join and
-    * coalescing matter. Below this vertex count the iteration loop runs
-    * with AQE off and 8 shuffle partitions; the graph build runs before
-    * the switch and keeps AQE either way. The same count is the default
-    * [[localizedCutoff]].
-    *
-    * The toggle saves and restores the SESSION conf (finally-guarded):
-    * unrelated queries issued on the same session concurrently with a
-    * small-graph iteration loop would plan without AQE for that window —
-    * callers interleaving heavy concurrent work can pass a dedicated
-    * `SparkSession.newSession()` to isolate. */
+  /** Below this vertex count the join regime's loop runs with AQE off and
+    * 8 shuffle partitions: per-round AQE re-planning costs more than it
+    * saves on a small graph (~2x per round at 2e4 nodes). The graph build
+    * keeps AQE. The toggle saves and restores the SESSION conf, so queries
+    * run concurrently on the same session plan without AQE for that
+    * window; pass a `newSession()` to isolate. Also the default
+    * [[inTaskCutoff]]. */
   private val aqeIterationCutoff = 1000000L
 
   private def withIterationAqe[T](spark: SparkSession, n: Long)(body: => T): T = {
@@ -125,33 +122,52 @@ object GraphOps {
     }
   }
 
-  /** System-property override for the localized-regime cutoff (default
+  /** System-property override for the in-task regime's cutoff (default
     * [[aqeIterationCutoff]]). Tests force the distributed join regime onto
     * small graphs with -Dgraft.graph.localizedCutoff=0. */
-  private def localizedCutoff: Long =
+  private def inTaskCutoff: Long =
     sys.props.get("graft.graph.localizedCutoff").map(_.toLong)
       .getOrElse(aqeIterationCutoff)
 
-  /** Regime gate: the localized regime holds one rank array of n doubles
-    * per walk on the driver and collects up to |walks| x n gathered rows a
-    * round, so it runs only while that product is under the cutoff. */
-  private[graft] def localizes(n: Long, walks: Int): Boolean =
-    n * walks < localizedCutoff
+  /** Regime gate: the in-task regime holds the raw edges, then CSR arrays
+    * and one rank array of n doubles per walk, in one task, so it runs
+    * only while |walks| x n + raw edges is under the cutoff. */
+  private[graft] def inTask(n: Long, walks: Int, rawEdges: Long): Boolean =
+    n * walks + rawEdges < inTaskCutoff
 
-  /** Max raw out-degree AND total raw edge count in one partially-aggregated
-    * count pass — the max is an upper bound on the deduped out-degree, so the
-    * hub guard triggers conservatively without paying a distinct; the total
-    * drives the data-derived partition clamp in [[resolveParts]]. */
-  private def degreeStats(edges: DataFrame): (Long, Long) = {
-    val r = edges.groupBy("src").agg(count(lit(1)).as("d"))
-      .agg(max(col("d")), sum(col("d"))).head()
-    if (r.isNullAt(0)) (0L, 0L) else (r.getLong(0), r.getLong(1))
+  /** What the regime gate, the hub guard, the partition clamp and
+    * [[graphStats]] need: the vertex count, the raw edge count, the max raw
+    * out-degree (an upper bound on the deduped one, so the hub guard
+    * triggers conservatively without paying a distinct) and the vertices
+    * without an out-edge. */
+  private final case class Stats(n: Long, rawEdges: Long, maxDeg: Long, dangling: Long) {
+    def +(o: Stats): Stats = Stats(n + o.n, rawEdges + o.rawEdges,
+      maxDeg max o.maxDeg, dangling + o.dangling)
   }
 
-  /** Raw edges a graph partition should carry when the caller does not pin
-    * the count: small enough that the cluster cap (not this constant) rules
-    * at any real scale, large enough that a bench-scale graph is not sliced
-    * into per-iteration scheduling confetti. */
+  /** [[Stats]] in one aggregation: per id, its raw out-degree and whether
+    * it is a vertex (of the explicit set, or of src ∪ dst). The per-id
+    * partitions fold to partial stats that merge on the driver, so no
+    * single-partition exchange (a second stage) runs. */
+  private def stats(edges: DataFrame, vertices: Option[DataFrame]): Stats = {
+    def tagged(id: Column, w: Long, v: Long) =
+      struct(id.cast("long").as("id"), lit(w).as("w"), lit(v).as("v")).as("t")
+    val ids = vertices match {
+      case None => edges.select(explode(array(
+        tagged(col("src"), 1L, 1L), tagged(col("dst"), 0L, 1L))).as("t"))
+      case Some(v) => edges.select(tagged(col("src"), 1L, 0L))
+        .union(v.select(tagged(col("nodeid"), 0L, 1L)))
+    }
+    ids.groupBy(col("t.id")).agg(sum(col("t.w")), max(col("t.v")))
+      .queryExecution.toRdd
+      .aggregate(Stats(0L, 0L, 0L, 0L))({ (s, r: InternalRow) =>
+        val (deg, vertex) = (r.getLong(1), r.getLong(2))
+        s + Stats(vertex, deg, deg, if (deg == 0L) vertex else 0L)
+      }, _ + _)
+  }
+
+  /** Raw edges a graph partition carries when the caller does not pin the
+    * count (the cluster cap rules at any real scale). */
   private val edgesPerPartition = 262144L
 
   /** Graph partition count: scales with BOTH the deployment and the data.
@@ -160,13 +176,14 @@ object GraphOps {
     * defaultParallelism alone can be tiny on a dynamic-allocation cluster
     * before executors register — clamped so each partition carries at
     * least [[edgesPerPartition]] raw edges (a 2e4-node graph cut into 32
-    * partitions spends its rounds scheduling tasks). */
+    * partitions spends its rounds scheduling tasks). The shuffle count is
+    * read as the typed conf value, never parsed from its string. */
   private def resolveParts(spark: SparkSession, numPartitions: Int,
                            totalRawEdges: Long): Int =
     if (numPartitions > 0) numPartitions
     else {
       val cap = math.max(spark.sparkContext.defaultParallelism,
-        spark.conf.get("spark.sql.shuffle.partitions", "200").toInt).toLong
+        spark.sessionState.conf.getConf(SQLConf.SHUFFLE_PARTITIONS)).toLong
       math.max(1L, math.min(cap,
         (totalRawEdges + edgesPerPartition - 1) / edgesPerPartition)).toInt
     }
@@ -178,12 +195,7 @@ object GraphOps {
     /** each source's out-neighbours, one row per out-edge */
     def dst: Column = if (exploded) explode(col("adj")) else col("dst")
 
-    /** Localized regime: (tags, dst, m) per out-edge, `m` a column over
-      * `src`. */
-    def fanOut(m: Column, tags: Seq[Column]): DataFrame =
-      graph.select(tags ++ Seq(dst.as("dst"), m.as("m")): _*)
-
-    /** Join regime: (keys, dst, m) from a (keys, nodeid, rank) state. A
+    /** (keys, dst, m) from a (keys, nodeid, rank) state. A
       * vertex without out-edges sends its whole rank to the NULL `dst`
       * sentinel, so the gather yields the dangling mass in the same pass. */
     def fromState(state: DataFrame, keys: Seq[Column],
@@ -207,21 +219,20 @@ object GraphOps {
       Seq(verts, scatter.graph, scatter.deg).foreach(_.unpersist())
   }
 
-  /** Shared setup of every walk: one degree pass sizes the partitioning and
-    * runs the hub guard (a raw out-degree above `hubDegreeThreshold`,
-    * default 4M ≈ a 32 MB array row, selects flat edges); then the layout's
-    * relations and the vertex set (explicit, or src ∪ dst) are built,
-    * persisted and materialized. */
-  private def prepare(edges: DataFrame, vertices: Option[DataFrame],
+  /** The join regime's setup: the [[Stats]] size the partitioning and run
+    * the hub guard (a raw out-degree above `hubDegreeThreshold`, default
+    * 4M ≈ a 32 MB array row, selects flat edges); then the layout's
+    * relations are built, persisted and materialized, and the vertex set
+    * (explicit, or src ∪ dst) is persisted. */
+  private def prepare(edges: DataFrame, vertices: Option[DataFrame], s: Stats,
                       numPartitions: Int, dedupeEdges: Boolean,
                       rangePartition: Boolean, hubDegreeThreshold: Long): Graph = {
-    val (maxDeg, totalEdges) = degreeStats(edges)
-    val parts = resolveParts(edges.sparkSession, numPartitions, totalEdges)
+    val parts = resolveParts(edges.sparkSession, numPartitions, s.rawEdges)
     def persisted(df: DataFrame) = {
       val p = df.persist(StorageLevel.MEMORY_AND_DISK); p.count(); p
     }
     val scatter =
-      if (maxDeg > hubDegreeThreshold) {
+      if (s.maxDeg > hubDegreeThreshold) {
         val e = persisted(partitionEdges(if (dedupeEdges) edges.distinct() else edges,
           parts, rangePartition))
         // reuses e's partitioning (clustered on src) — no extra exchange
@@ -236,13 +247,13 @@ object GraphOps {
           .union(scatter.graph.select(scatter.dst.as("nodeid")))
           .distinct())
       .persist(StorageLevel.MEMORY_AND_DISK)
-    Graph(verts, verts.count(), scatter)
+    Graph(verts, s.n, scatter)
   }
 
-  /** The arithmetic walk rules are written in: driver doubles (localized
-    * regime) or Columns (join regime). Stating each rule once makes both
+  /** The arithmetic walk rules are written in: doubles (in-task regime)
+    * or Columns (join regime). Stating each rule once makes both
     * regimes run the same IEEE operations in the same order (JVM >= 17
-    * doubles are strictfp; driver-side literals fold to the same double),
+    * doubles are strictfp; Scala-side literals fold to the same double),
     * so their ranks agree to the ulp. */
   private sealed trait Arith[T] {
     def num(d: Double): T
@@ -276,7 +287,7 @@ object GraphOps {
 
   /** A walk rule. `delta` is 1.0 at a personalized walk's source vertex
     * and 0.0 elsewhere; global walks ignore it. */
-  private sealed abstract class Walk {
+  private sealed abstract class Walk extends Serializable {
     /** one walk per source; empty for the single global walk */
     def sources: Seq[Long] = Nil
     /** key columns of a rank row besides `nodeid` */
@@ -287,7 +298,8 @@ object GraphOps {
     def gather(m: Column): Column
     /** the gather's identity: no incoming (or dangling) mass */
     def none: Double
-    /** the driver's fold of dangling ranks, the scalar twin of `gather` */
+    /** the scalar twin of `gather`: the in-task regime's fold of incoming
+      * mass, and both regimes' fold of dangling ranks */
     def add(x: Double, y: Double): Double
     /** teleport + dangling update of one vertex */
     def update[T](a: Arith[T], n: Long, in: T, missing: T, delta: T): T
@@ -335,88 +347,158 @@ object GraphOps {
       done < rounds && tol.forall(change > _)
   }
 
-  /** The skeleton: prepare the graph, run the walk in the regime the gate
-    * picks, release the graph relations. Returns (ranks, rounds run). */
+  /** The skeleton: one stats pass, then the walk in the regime the gate
+    * picks. Returns (ranks, rounds run). */
   private def walk(edges: DataFrame, vertices: Option[DataFrame], numPartitions: Int,
                    dedupeEdges: Boolean, rangePartition: Boolean,
                    hubDegreeThreshold: Long, checkpointDir: Option[String],
                    rule: Walk, stop: Stop): (DataFrame, Int) = {
-    val g = prepare(edges, vertices, numPartitions, dedupeEdges, rangePartition,
-      hubDegreeThreshold)
+    val s = stats(edges, vertices)
     val cut = new LineageCutter(checkpointDir)
-    try withIterationAqe(edges.sparkSession, g.n) {
-      if (localizes(g.n, rule.sources.size max 1)) localizedWalk(g, rule, stop, cut)
-      else joinWalk(g, rule, stop, cut)
-    } finally g.unpersist()
+    if (inTask(s.n, rule.sources.size max 1, s.rawEdges))
+      inTaskWalk(edges, vertices, dedupeEdges, rule, stop, cut)
+    else {
+      val g = prepare(edges, vertices, s, numPartitions, dedupeEdges, rangePartition,
+        hubDegreeThreshold)
+      try withIterationAqe(edges.sparkSession, g.n)(joinWalk(g, rule, stop, cut))
+      finally g.unpersist()
+    }
   }
 
-  /** Localized regime: rank arrays on the driver, one gather job a round.
-    * Phantom sources (an edge src outside an explicit vertex set) have no
-    * rank and send no mass; mass to a phantom dst is never read back. */
-  private def localizedWalk(g: Graph, rule: Walk, stop: Stop,
-                            cut: DataFrame => DataFrame): (DataFrame, Int) = {
-    val ids = g.verts.select(col("nodeid")).collect().map(_.getLong(0)).sorted
-    val (srcIds, outdegs) = g.scatter.deg.collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).unzip
-    val srcPos = srcIds.map(s => java.util.Arrays.binarySearch(ids, s))
-    val dangling = ids.indices
-      .filter(i => java.util.Arrays.binarySearch(srcIds, ids(i)) < 0).toArray
-    val roots = if (rule.sources.isEmpty) Seq(None) else rule.sources.map(Some(_))
-    val walks = roots.size
-    val tags = roots.map(_.map(s => lit(s).as("source")).toSeq)
-    val srcAt = roots.map(_.fold(-1)(s => java.util.Arrays.binarySearch(ids, s)))
-    def delta(k: Int, i: Int) = if (i == srcAt(k)) 1.0 else 0.0
-    val walkOf = rule.sources.zipWithIndex.toMap
-    val keyCols = rule.keys.size
+  /** One input partition packed into primitive arrays: edge (src, dst)
+    * pairs, or vertex ids in `src`. A row with a NULL id is dropped. */
+  private final case class Block(vertices: Boolean, src: Array[Long], dst: Array[Long])
 
-    var ranks = Array.tabulate(walks, ids.length)((k, i) =>
-      rule.start(Scalar, g.n, delta(k, i)))
+  private def blocks(ids: DataFrame, vertices: Boolean): RDD[Block] =
+    ids.queryExecution.toRdd.mapPartitions { rows =>
+      val src, dst = new mutable.ArrayBuilder.ofLong
+      rows.foreach { r =>
+        if (!r.anyNull) { src += r.getLong(0); if (!vertices) dst += r.getLong(1) }
+      }
+      Iterator(Block(vertices, src.result(), dst.result()))
+    }
+
+  /** In-task regime: every block shuffles to ONE partition, whose task
+    * builds the [[Csr]] graph and runs the walk to its stop rule
+    * ([[walkInTask]]). Cutting the output runs that task — the walk's one
+    * job — and the round count returns through an accumulator. */
+  private def inTaskWalk(edges: DataFrame, vertices: Option[DataFrame], dedupe: Boolean,
+                         rule: Walk, stop: Stop,
+                         cut: DataFrame => DataFrame): (DataFrame, Int) = {
+    val spark = edges.sparkSession
+    val explicit = vertices.isDefined
+    val input = blocks(edges.select(col("src").cast("long"), col("dst").cast("long")),
+      vertices = false) +: vertices.map(v =>
+        blocks(v.select(col("nodeid").cast("long")), vertices = true)).toSeq
+    val rounds = spark.sparkContext.longAccumulator("graft.graph.rounds")
+    val ranks = spark.sparkContext.union(input).coalesce(1, shuffle = true).mapPartitions { bs =>
+      val g = Csr(bs, explicit, dedupe)
+      val (r, done) = walkInTask(g, rule, stop)
+      rounds.add(done)
+      val keyed = rule.sources.nonEmpty
+      for (k <- r.indices.iterator; i <- g.ids.indices.iterator) yield
+        if (keyed) Row(rule.sources(k), g.ids(i), r(k)(i)) else Row(g.ids(i), r(k)(i))
+    }
+    val idNullable = vertices.fold(Seq("src", "dst").exists(edges.schema(_).nullable))(
+      _.schema("nodeid").nullable)
+    val schema = StructType(rule.keys.map(StructField(_, LongType, nullable = false)) ++
+      Seq(StructField("nodeid", LongType, idNullable),
+        StructField("rank", DoubleType, nullable = false)))
+    val out = cut(spark.createDataFrame(ranks, schema))
+    (out, rounds.value.toInt)
+  }
+
+  /** The in-task regime's graph in compressed sparse rows: sorted vertex
+    * ids; per vertex, its out-degree (every out-edge, deduplicated when
+    * asked, phantom destinations included) and, at `adj(start(i) until
+    * start(i + 1))`, the indices of its destinations that are vertices.
+    * Edges of a phantom source (outside an explicit vertex set) are
+    * dropped: it has no rank and sends no mass. */
+  private final class Csr(val ids: Array[Long], val outdeg: Array[Int],
+                          val start: Array[Int], val adj: Array[Int])
+
+  private object Csr {
+    def apply(blocks: Iterator[Block], explicit: Boolean, dedupe: Boolean): Csr = {
+      val (vs, es) = blocks.toArray.partition(_.vertices)
+      val src = Array.concat(es.map(_.src).toIndexedSeq: _*)
+      val dst = Array.concat(es.map(_.dst).toIndexedSeq: _*)
+      val ids = distinctSorted(
+        if (explicit) Array.concat(vs.map(_.src).toIndexedSeq: _*) else Array.concat(src, dst))
+      val n = ids.length
+      // counting sort of the edges by source index
+      val at = src.map(java.util.Arrays.binarySearch(ids, _))
+      val rowStart = new Array[Int](n + 1)
+      at.foreach(i => if (i >= 0) rowStart(i + 1) += 1)
+      for (i <- 0 until n) rowStart(i + 1) += rowStart(i)
+      val fill = rowStart.clone()
+      val byRow = new Array[Long](rowStart(n))
+      for (e <- at.indices if at(e) >= 0) { byRow(fill(at(e))) = dst(e); fill(at(e)) += 1 }
+      // each row's destinations in id order, repeats dropped when deduping
+      val outdeg = new Array[Int](n)
+      val start = new Array[Int](n + 1)
+      val adj = new mutable.ArrayBuilder.ofInt
+      var len = 0
+      for (i <- 0 until n) {
+        java.util.Arrays.sort(byRow, rowStart(i), rowStart(i + 1))
+        for (p <- rowStart(i) until rowStart(i + 1)
+             if !dedupe || p == rowStart(i) || byRow(p) != byRow(p - 1)) {
+          outdeg(i) += 1
+          val j = java.util.Arrays.binarySearch(ids, byRow(p))
+          if (j >= 0) { adj += j; len += 1 }
+        }
+        start(i + 1) = len
+      }
+      new Csr(ids, outdeg, start, adj.result())
+    }
+
+    private def distinctSorted(a: Array[Long]): Array[Long] = {
+      val s = a.sorted // java.util.Arrays.sort, unboxed
+      val out = new mutable.ArrayBuilder.ofLong
+      for (i <- s.indices if i == 0 || s(i) != s(i - 1)) out += s(i)
+      out.result()
+    }
+  }
+
+  /** Runs `rule` over `g` to `stop`, one rank array per walk. A round
+    * folds each vertex's mass into its destinations with `rule.add` (the
+    * join regime's gather), folds dangling ranks into the missing mass and
+    * applies the update. Returns the final ranks and the rounds run; an
+    * empty graph runs no round, as in the join regime. */
+  private def walkInTask(g: Csr, rule: Walk, stop: Stop): (Array[Array[Double]], Int) = {
+    val n = g.ids.length
+    val roots = if (rule.sources.isEmpty) Array(-1)
+      else rule.sources.map(java.util.Arrays.binarySearch(g.ids, _)).toArray
+    def delta(k: Int, i: Int) = if (i == roots(k)) 1.0 else 0.0
+    var ranks = Array.tabulate(roots.length, n)((k, i) => rule.start(Scalar, n, delta(k, i)))
     var rounds = 0
     var change = Double.MaxValue
-    while (stop.continues(rounds, change)) {
-      val scattered = (0 until walks).map { k =>
-        val ks = Array.newBuilder[Long]
-        val ms = Array.newBuilder[Double]
-        for (j <- srcIds.indices if srcPos(j) >= 0) {
-          ks += srcIds(j)
-          ms += rule.mass(Scalar, ranks(k)(srcPos(j)), outdegs(j).toDouble)
+    while (n > 0 && stop.continues(rounds, change)) {
+      change = 0.0
+      ranks = Array.tabulate(roots.length) { k =>
+        val r = ranks(k)
+        val in = Array.fill(n)(rule.none)
+        var missing = rule.none
+        for (i <- 0 until n) {
+          if (g.outdeg(i) == 0) missing = rule.add(missing, r(i))
+          else {
+            val m = rule.mass(Scalar, r(i), g.outdeg(i).toDouble)
+            for (p <- g.start(i) until g.start(i + 1)) in(g.adj(p)) = rule.add(in(g.adj(p)), m)
+          }
         }
-        g.scatter.fanOut(
-          MapLookup.lookup(new LongDoubleMap(ks.result(), ms.result()), col("src")),
-          tags(k))
+        Array.tabulate(n) { i =>
+          val next = rule.update(Scalar, n, in(i), missing, delta(k, i))
+          change = math.max(change, math.abs(next - r(i)))
+          next
+        }
       }
-      val gathered = scattered.reduce(_.union(_))
-        .groupBy((rule.keys :+ "dst").map(col): _*)
-        .agg(rule.gather(col("m")).as("in_mass"))
-      // one pass buckets the |walks| x n rows per walk; a NULL in_mass (all
-      // contributors phantom) is "no mass"
-      val in = Array.fill(walks)(Array.newBuilder[(Long, Double)])
-      gathered.collect().foreach { r =>
-        if (!r.isNullAt(keyCols) && !r.isNullAt(keyCols + 1))
-          in(if (keyCols > 0) walkOf(r.getLong(0)) else 0) +=
-            (r.getLong(keyCols) -> r.getDouble(keyCols + 1))
-      }
-      val inMass = in.map(b => LongDoubleMap.fromPairs(b.result()))
-      val next = Array.tabulate(walks) { k =>
-        val missing = dangling.foldLeft(rule.none)((s, i) => rule.add(s, ranks(k)(i)))
-        Array.tabulate(ids.length)(i => rule.update(Scalar, g.n,
-          inMass(k).getOrElse(ids(i), rule.none), missing, delta(k, i)))
-      }
-      change = next.indices.iterator.flatMap(k => ids.indices.iterator
-        .map(i => math.abs(next(k)(i) - ranks(k)(i)))).foldLeft(0.0)((a, b) => math.max(a, b))
-      ranks = next
       rounds += 1
     }
-    // the lookup always hits (every vertex is a table key); the coalesce
-    // only keeps `rank` non-nullable, as in the join regime
-    val out = (0 until walks).map(k => g.verts.select(tags(k) ++ Seq(col("nodeid"),
-      coalesce(MapLookup.lookup(new LongDoubleMap(ids, ranks(k)), col("nodeid")),
-        lit(Double.NaN)).as("rank")): _*))
-    (cut(out.reduce(_.union(_))), rounds)
+    (ranks, rounds)
   }
 
   /** Join regime: (keys, nodeid, rank) state joined against the graph each
-    * round; the gather and, when converging, the new ranks are cut. */
+    * round; the gather and, when converging, the new ranks are cut. An
+    * empty graph runs no round (its update would fold x / 0 constants). */
   private def joinWalk(g: Graph, rule: Walk, stop: Stop,
                        cut: DataFrame => DataFrame): (DataFrame, Int) = {
     val spark = g.verts.sparkSession
@@ -431,7 +513,7 @@ object GraphOps {
     var state = ranked(base, rule.start(Columns, g.n, delta))
     var rounds = 0
     var change = Double.MaxValue
-    while (stop.continues(rounds, change)) {
+    while (g.n > 0 && stop.continues(rounds, change)) {
       val gathered = g.scatter
         .fromState(state, keys.map(col), rule.mass(Columns, _, _))
         .groupBy((keys :+ "dst").map(col): _*).agg(rule.gather(col("m")).as("in_mass"))
@@ -451,7 +533,7 @@ object GraphOps {
       state = if (stop.tol.isEmpty) next else {
         val kept = cut(next)
         change = kept.join(state.withColumnRenamed("rank", "prev"), keys :+ "nodeid")
-          .agg(max(abs(col("rank") - col("prev")))).head().getDouble(0)
+          .agg(coalesce(max(abs(col("rank") - col("prev"))), lit(0.0))).head().getDouble(0)
         kept
       }
       rounds += 1
@@ -459,15 +541,11 @@ object GraphOps {
     (if (stop.tol.nonEmpty && rounds > 0) state else cut(state), rounds)
   }
 
-  /** Per-iteration lineage cut for the iterative family (G9). The default
-    * `localCheckpoint()` stores cut blocks on executors — fastest, and the
-    * SURVEY §3.3 parity choice — but on a preemptible cluster an executor
-    * loss mid-loop kills the job (the blocks are unrecoverable). Passing
-    * `checkpointDir` swaps in RELIABLE `checkpoint()` to that
-    * HDFS-compatible directory: cut state survives executor loss, the
-    * production-grade option for long loops at the 100x cluster scale.
-    * Ranks are bit-identical either way — only where the cut's blocks
-    * live changes (GraphOpsSpec proves equality). */
+  /** Lineage cut for the iterative family (G9). The default
+    * `localCheckpoint()` keeps cut blocks on executors (fastest; an
+    * executor loss mid-loop kills the job); `checkpointDir` swaps in a
+    * RELIABLE `checkpoint()` there, which survives executor loss. Results
+    * are bit-identical either way (GraphOpsSpec). */
   private[graft] def cutLineage(df: DataFrame,
       checkpointDir: Option[String]): DataFrame =
     checkpointDir match {
@@ -479,11 +557,9 @@ object GraphOps {
     }
 
   /** Point the context's checkpoint location at `dir` unless it already
-    * lives there. Spark's setCheckpointDir appends a random UUID child, so
-    * "already there" means the current location's PARENT path equals the
-    * requested base — compared as fully-qualified paths, not substrings (a
-    * containment check would skip setting e.g. `/tmp/ck` while the current
-    * dir is `/tmp/ck-old/...`). */
+    * lives there: setCheckpointDir appends a random UUID child, so the
+    * current location's PARENT is compared to `dir`, both fully qualified
+    * (a substring test would take `/tmp/ck-old/...` for `/tmp/ck`). */
   private def setCheckpointBase(sc: org.apache.spark.SparkContext,
       dir: String): Unit = {
     val base = new org.apache.hadoop.fs.Path(dir)
@@ -496,26 +572,16 @@ object GraphOps {
     if (!already) sc.setCheckpointDir(dir)
   }
 
-  /** Per-LOOP lineage cutter: [[cutLineage]] semantics plus cleanup of the
-    * checkpoints this loop no longer needs. Spark never deletes reliable
-    * checkpoint files on its own here (`spark.cleaner.referenceTracking.
-    * cleanCheckpoints` defaults to false and is only read at context
-    * start), so a long converging loop would otherwise accumulate one
-    * `rdd-*` directory per cut for the whole job's lifetime.
-    *
-    * Deletion lags by [[LineageCutter.retainedCuts]] generations, not one:
-    * the join regime cuts up to TWO relations per round (the gather and,
-    * when converging, the new ranks) and reads at most ONE round back (the
-    * L∞ change joins the previous ranks AFTER the new ranks' cut), so a
-    * window of 4 cuts keeps everything within two full rounds alive and
-    * deletes strictly older files, which no round reads again (proven by
-    * the bit-identical reliable-checkpoint spec running every walk through
-    * this cutter). The created-set is detected by listing the checkpoint
-    * location around the cut, which assumes no OTHER reliable-checkpoint
-    * loop runs concurrently on the same SparkContext — the loops here are
-    * driver-sequential; callers wanting concurrent loops should pass
-    * distinct `checkpointDir`s. One-off cuts (nothing superseded) keep
-    * using [[cutLineage]]. */
+  /** Per-LOOP lineage cutter: [[cutLineage]] plus deletion of the reliable
+    * checkpoints the loop no longer reads (Spark keeps them for the
+    * context's lifetime: `spark.cleaner.referenceTracking.cleanCheckpoints`
+    * is off by default). Deletion lags [[LineageCutter.retainedCuts]]
+    * generations: the join regime cuts up to TWO relations a round (the
+    * gather and, when converging, the new ranks) and reads at most ONE round
+    * back, so a window of 4 keeps two full rounds alive. New `rdd-*` dirs
+    * are found by listing the location around the cut, which assumes no
+    * OTHER reliable-checkpoint loop runs on the same SparkContext at once;
+    * concurrent loops should pass distinct `checkpointDir`s. */
   private[graft] final class LineageCutter(checkpointDir: Option[String])
       extends (DataFrame => DataFrame) {
     private val history =
@@ -550,14 +616,14 @@ object GraphOps {
   }
 
   /** PageRank over a directed edge relation — G1/G3-G7/G9.
-    *
+    * `numPartitions`, `rangePartition` and `hubDegreeThreshold` shape the
+    * join regime only.
     * @param edges    (src, dst); duplicates are collapsed
     * @param vertices optional explicit vertex set (needed when dangling
     *                 nodes never appear as src/dst); defaults to src∪dst
     * @param checkpointDir optional reliable-checkpoint directory for the
-    *                 per-iteration lineage cut (see [[cutLineage]])
-    * @return (nodeid, rank) with sum(rank) == 1
-    */
+    *                 lineage cuts (see [[cutLineage]])
+    * @return (nodeid, rank) with sum(rank) == 1 */
   def pageRank(edges: DataFrame, iterations: Int, alpha: Double = 0.15,
                vertices: Option[DataFrame] = None, numPartitions: Int = 0,
                dedupeEdges: Boolean = true, rangePartition: Boolean = false,
@@ -566,15 +632,13 @@ object GraphOps {
     walk(edges, vertices, numPartitions, dedupeEdges, rangePartition,
       hubDegreeThreshold, checkpointDir, new Linear(alpha), Stop(iterations))._1
 
-  /** Personalized (multi-source) PageRank — G2/G8. All sources iterate in
-    * ONE job per round, grouped by (source, dst) — the relational analogue
-    * of the reference widening rank to a per-source float vector
-    * (PersonalizedPageRankNode.java:36-37). Teleport and dangling mass go
-    * only to each walk's own source (RunPersonalizedPageRankBasic.java:
-    * 312-340). A source listed twice is walked once.
-    *
-    * @return (source, nodeid, rank); per source, sum(rank) == 1
-    */
+  /** Personalized (multi-source) PageRank — G2/G8. All sources walk
+    * together (one rank array each in one task, or one (source, dst)
+    * grouping a round), as the reference widens rank to a per-source float
+    * vector (PersonalizedPageRankNode.java:36-37). Teleport and dangling
+    * mass go only to each walk's own source (RunPersonalizedPageRankBasic.
+    * java:312-340). A source listed twice is walked once.
+    * @return (source, nodeid, rank); per source, sum(rank) == 1 */
   def personalizedPageRank(edges: DataFrame, sources: Seq[Long], iterations: Int,
                            alpha: Double = 0.15, vertices: Option[DataFrame] = None,
                            numPartitions: Int = 0, dedupeEdges: Boolean = true,
@@ -587,14 +651,10 @@ object GraphOps {
       Stop(iterations))._1
   }
 
-  /** PageRank with ranks carried in LOG space — the reference's exact
-    * numeric regime (float32 log-space there; float64 log-space here):
-    * scatter is `rank - log(outdeg)`, gather is a grouped log-sum-exp
-    * (graft.functions.LogSpace.LogSumExpAgg — its merge is the combiner).
-    * Linear-space [[pageRank]] is the production path (double never
-    * underflows at realistic N); this variant exists for numeric parity
-    * and as the engine's typed-Aggregator showcase.
-    */
+  /** PageRank with ranks carried in LOG space — the reference's numeric
+    * regime (float32 there, float64 here): scatter `rank - log(outdeg)`,
+    * gather a log-sum-exp (LogSpace.LogSumExpAgg, whose merge is the
+    * combiner). Linear [[pageRank]] is the production path. */
   def pageRankLogSpace(edges: DataFrame, iterations: Int, alpha: Double = 0.15,
                        vertices: Option[DataFrame] = None,
                        numPartitions: Int = 0,
@@ -604,13 +664,10 @@ object GraphOps {
     walk(edges, vertices, numPartitions, dedupeEdges = true, rangePartition,
       hubDegreeThreshold, checkpointDir, new LogLinear(alpha), Stop(iterations))._1
 
-  /** PageRank iterated to convergence: stops when the max per-node rank
-    * change drops below `tol` (L∞), or at `maxIterations`. The reference
-    * runs a fixed iteration count chosen by hand (RunPageRankBasic takes
-    * -start/-end); a convergence criterion is what an engine should offer.
-    *
-    * @return (ranks, iterationsRun)
-    */
+  /** PageRank iterated until the L∞ rank change is at most `tol`, or for
+    * `maxIterations` rounds (the reference's RunPageRankBasic takes a
+    * hand-picked -start/-end instead).
+    * @return (ranks, iterationsRun) */
   def pageRankConverged(edges: DataFrame, tol: Double = 1e-7,
                         maxIterations: Int = 100, alpha: Double = 0.15,
                         vertices: Option[DataFrame] = None,
@@ -622,41 +679,12 @@ object GraphOps {
 
   /** Graph summary counters — A8 (the reference's job counters:
     * BuildPageRankRecords.java:97-102 NODES/EDGES, RunPageRankBasic
-    * massMessages).
-    *
-    * The derived-vertices case runs ONE job (two-level aggregation): each
-    * edge emits its endpoints tagged (isSrc, edge-weight-on-src), the
-    * per-id level folds duplicates, the global level counts nodes / sums
-    * edges / counts ids that never appear as a source. */
-  def graphStats(edges: DataFrame, vertices: Option[DataFrame] = None): Map[String, Long] =
-    vertices match {
-      case None =>
-        val r = edges.select(explode(array(
-            struct(col("src").as("id"), lit(1).as("isSrc"), lit(1L).as("w")),
-            struct(col("dst").as("id"), lit(0).as("isSrc"), lit(0L).as("w"))))
-            .as("e"))
-          .select(col("e.id").as("id"), col("e.isSrc").as("isSrc"),
-            col("e.w").as("w"))
-          .groupBy("id")
-          .agg(max(col("isSrc")).as("hasOut"), sum(col("w")).as("cnt"))
-          .agg(count(lit(1)).as("nodes"),
-            coalesce(sum(col("cnt")), lit(0L)).as("edges"),
-            count(when(col("hasOut") === 0, 1)).as("dangling"))
-          .head()
-        Map("nodes" -> r.getLong(0), "edges" -> r.getLong(1),
-          "dangling" -> r.getLong(2))
-      case Some(v) =>
-        // explicit vertex set: edges.count plus ONE outer-join aggregation
-        // (nodes + dangling together) instead of count + anti-join count
-        val nEdges = edges.count()
-        val srcs = edges.select(col("src")).distinct()
-        val r = v.join(srcs, v("nodeid") === col("src"), "left_outer")
-          .agg(count(lit(1)).as("nodes"),
-            count(when(col("src").isNull, 1)).as("dangling"))
-          .head()
-        Map("nodes" -> r.getLong(0), "edges" -> nEdges,
-          "dangling" -> r.getLong(1))
-    }
+    * massMessages): distinct vertices, raw edges and vertices without an
+    * out-edge, from the walks' one stats aggregation ([[stats]]). */
+  def graphStats(edges: DataFrame, vertices: Option[DataFrame] = None): Map[String, Long] = {
+    val s = stats(edges, vertices)
+    Map("nodes" -> s.n, "edges" -> s.rawEdges, "dangling" -> s.dangling)
+  }
 
   /** Global top-k by rank — T3 (plans as TakeOrderedAndProject). */
   def topK(ranks: DataFrame, k: Int): DataFrame =

@@ -9,8 +9,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * Most graft kernels enter plans through the session FunctionRegistry
   * (graft.functions.GraftFunctions), which is the right door for
   * expressions whose constructor arguments are literals. Expressions that
-  * carry a DRIVER-BUILT object (e.g. the per-iteration rank table of the
-  * localized PageRank regime, graft.functions.MapLookup) cannot be spelled
+  * carry a DRIVER-BUILT object (e.g. the per-source dangling-mass table of
+  * the PageRank join regime, graft.functions.MapLookup) cannot be spelled
   * as SQL literals; they need direct Expression -> Column construction,
   * which Spark 4 keeps `private[sql]` (classic.ExpressionUtils). This
   * one-file subpackage of org.apache.spark.sql re-exports exactly the two

@@ -79,47 +79,39 @@ class GraphOpsSpec extends SparkSpec {
     assert(math.abs(got.values.sum - 1.0) < 1e-9, "rank mass conserved")
   }
 
-  test("localized regime == distributed join regime across the whole " +
-      "iterative family, both scatter paths (r12)") {
+  test("in-task regime == join regime for all four walks on both scatter layouts") {
     // graft.graph.localizedCutoff=0 forces the big-graph JOIN regime onto
-    // the small fixture; the default runs the localized driver-state
-    // regime. Both must land on the same ranks AND the same convergence
-    // iteration count — this is the regime-equivalence gate for the r12
-    // restructure, and it keeps the join regime test-covered now that
-    // every small-graph test exercises the localized path.
-    def runAll() = (
-      GraphOps.pageRank(smallEdges, iterations = 10,
-        vertices = Some(smallVerts), numPartitions = 4)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap,
-      GraphOps.pageRank(smallEdges, iterations = 10,
-        vertices = Some(smallVerts), numPartitions = 4,
-        hubDegreeThreshold = 1L)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap,
-      GraphOps.pageRankLogSpace(smallEdges, iterations = 10,
-        vertices = Some(smallVerts), numPartitions = 4)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap,
-      GraphOps.personalizedPageRank(smallEdges, Seq(1L, 4L), iterations = 10,
-        vertices = Some(smallVerts), numPartitions = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap,
-      GraphOps.pageRankConverged(smallEdges, tol = 1e-10, maxIterations = 200,
-        vertices = Some(smallVerts), numPartitions = 4))
-    val (prL, prEdgeL, logL, pprL, (convL, itersL)) = runAll()
-    sys.props("graft.graph.localizedCutoff") = "0"
-    try {
-      val (prJ, prEdgeJ, logJ, pprJ, (convJ, itersJ)) = runAll()
-      def cmp[K](name: String, a: Map[K, Double], b: Map[K, Double]): Unit = {
-        assert(a.keySet === b.keySet, name)
-        for ((k, v) <- a) assert(math.abs(b(k) - v) < 1e-12, s"$name $k")
+    // the small fixture, where the default runs the in-task regime. Both
+    // must land on the same ranks AND the same convergence round count;
+    // the join regime runs each walk on both scatter layouts (adjacency
+    // arrays, and flat edges forced by hubDegreeThreshold = 1), which the
+    // in-task regime does not use.
+    def runAll(hub: Long) = Seq(
+      "pageRank" -> GraphOps.pageRank(smallEdges, iterations = 10,
+        vertices = Some(smallVerts), numPartitions = 4, hubDegreeThreshold = hub),
+      "logSpace" -> GraphOps.pageRankLogSpace(smallEdges, iterations = 10,
+        vertices = Some(smallVerts), numPartitions = 4, hubDegreeThreshold = hub),
+      "ppr" -> GraphOps.personalizedPageRank(smallEdges, Seq(1L, 4L), iterations = 10,
+        vertices = Some(smallVerts), numPartitions = 4, hubDegreeThreshold = hub),
+      "converged" -> {
+        val (ranks, rounds) = GraphOps.pageRankConverged(smallEdges, tol = 1e-10,
+          maxIterations = 200, vertices = Some(smallVerts), numPartitions = 4,
+          hubDegreeThreshold = hub)
+        ranks.withColumn("rounds", lit(rounds))
+      }).map { case (walk, df) =>
+        // keyed by every column but rank: (source,) nodeid (, rounds)
+        val keys = df.columns.filter(_ != "rank")
+        walk -> df.collect().map(r => keys.map(r.getAs[Any](_)).mkString(",") ->
+          r.getAs[Double]("rank")).toMap
       }
-      cmp("pageRank", prL, prJ)
-      cmp("pageRank edge-scatter", prEdgeL, prEdgeJ)
-      cmp("logSpace", logL, logJ)
-      cmp("ppr", pprL, pprJ)
-      assert(itersL === itersJ, "convergence iteration count")
-      val cL = convL.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val cJ = convJ.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      cmp("converged", cL, cJ)
-    } finally sys.props.remove("graft.graph.localizedCutoff")
+    val inTask = runAll(Long.MaxValue)
+    for (hub <- Seq(Long.MaxValue, 1L)) {
+      val join = withCutoff(0)(runAll(hub))
+      for (((walk, a), (_, b)) <- inTask.zip(join)) {
+        assert(a.keySet === b.keySet, s"$walk hub=$hub keys (and round count)")
+        for ((k, v) <- a) assert(math.abs(b(k) - v) < 1e-12, s"$walk hub=$hub $k")
+      }
+    }
   }
 
   test("MapLookup kernel: eval and codegen agree, misses are NULL (r12)") {
@@ -153,11 +145,11 @@ class GraphOpsSpec extends SparkSpec {
     }
   }
 
-  /** Runs `body` once per regime: the driver-localized default, then the
+  /** Runs `body` once per regime: the in-task default, then the
     * distributed join regime forced by a zero cutoff. */
-  private def inBothRegimes[T](body: => T): (T, T) = {
-    val localized = body
-    (localized, withCutoff(0)(body))
+  private def inTaskAndJoin[T](body: => T): (T, T) = {
+    val inTask = body
+    (inTask, withCutoff(0)(body))
   }
 
   private def withCutoff[T](cutoff: Long)(body: => T): T = {
@@ -174,20 +166,20 @@ class GraphOpsSpec extends SparkSpec {
       GraphOps.personalizedPageRank(smallEdges, Seq(1L, 4L), iterations = 0,
         vertices = Some(smallVerts)))
       .map(df => (df.schema, df.collect().map(_.toString).sorted.toSeq))
-    val (localized, join) = inBothRegimes(runAll())
-    for (((l, j), walk) <- localized.zip(join)
+    val (inTask, join) = inTaskAndJoin(runAll())
+    for (((l, j), walk) <- inTask.zip(join)
         .zip(Seq("pageRank", "logSpace", "converged", "ppr"))) {
       assert(l._1 === j._1, s"$walk schema")
       assert(l._2 === j._2, s"$walk rows")
     }
-    assert(localized(3)._1.fieldNames.toSeq === Seq("source", "nodeid", "rank"))
+    assert(inTask(3)._1.fieldNames.toSeq === Seq("source", "nodeid", "rank"))
   }
 
   test("duplicate sources are walked once: ranks match the oracle, one row per (source, node)") {
-    val (localized, join) = inBothRegimes(
+    val (inTask, join) = inTaskAndJoin(
       GraphOps.personalizedPageRank(smallEdges, Seq(4L, 1L, 4L), iterations = 5,
         vertices = Some(smallVerts), numPartitions = 2).collect())
-    for ((rows, regime) <- Seq(localized -> "localized", join -> "join")) {
+    for ((rows, regime) <- Seq(inTask -> "in-task", join -> "join")) {
       assert(rows.length === 2 * smallAdj.size, s"$regime row count")
       val got = rows.map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
       for (src <- Seq(1L, 4L); (k, v) <- seqPpr(smallAdj, src, 5))
@@ -195,17 +187,69 @@ class GraphOpsSpec extends SparkSpec {
     }
   }
 
+  test("duplicate out-edges kept (dedupeEdges = false) divide rank by the raw list length") {
+    // 1 lists 2 twice and 3 once, 4 lists 1 three times: a kept duplicate
+    // is a second message, as in the reference's adjacency lines
+    val dupAdj: Map[Long, Seq[Long]] = Map(1L -> Seq(2L, 2L, 3L), 2L -> Seq(3L, 3L),
+      3L -> Seq(1L), 4L -> Seq(1L, 1L, 1L, 2L), 5L -> Seq.empty)
+    val edges = dupAdj.toSeq.flatMap { case (s, ds) => ds.map(d => (s, d)) }.toDF("src", "dst")
+    val verts = dupAdj.keys.toSeq.toDF("nodeid")
+    def run() = (
+      GraphOps.pageRank(edges, iterations = 6, vertices = Some(verts),
+        numPartitions = 2, dedupeEdges = false)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap,
+      GraphOps.personalizedPageRank(edges, Seq(1L, 4L), iterations = 6,
+        vertices = Some(verts), numPartitions = 2, dedupeEdges = false)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap)
+    val (inTask, join) = inTaskAndJoin(run())
+    for (((pr, ppr), regime) <- Seq(inTask -> "in-task", join -> "join")) {
+      for ((k, v) <- seqPageRank(dupAdj, 6))
+        assert(math.abs(pr(k) - v) < 1e-12, s"$regime pageRank node $k")
+      for (src <- Seq(1L, 4L); (k, v) <- seqPpr(dupAdj, src, 6))
+        assert(math.abs(ppr((src, k)) - v) < 1e-12, s"$regime ppr source $src node $k")
+    }
+    // deduplicating changes the ranks: the duplicates really were walked
+    val deduped = GraphOps.pageRank(edges, iterations = 6, vertices = Some(verts))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(math.abs(deduped(2L) - inTask._1(2L)) > 1e-6)
+  }
+
+  test("empty edges: an explicit vertex set stays uniform, a derived one is empty") {
+    val none = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val three = Seq(7L, 8L, 9L).toDF("nodeid")
+    def run() = (
+      GraphOps.pageRank(none, iterations = 3, vertices = Some(three)).collect(),
+      GraphOps.pageRankConverged(none, vertices = Some(three))._1.collect(),
+      Seq(GraphOps.pageRank(none, iterations = 3),
+        GraphOps.pageRankLogSpace(none, iterations = 3),
+        GraphOps.pageRankConverged(none)._1,
+        GraphOps.personalizedPageRank(none, Seq(1L), iterations = 3))
+        .map(df => (df.columns.toSeq, df.collect().length)))
+    val (inTask, join) = inTaskAndJoin(run())
+    for (((pr, conv, derived), regime) <- Seq(inTask -> "in-task", join -> "join")) {
+      for ((rows, walk) <- Seq(pr -> "pageRank", conv -> "converged")) {
+        assert(rows.map(_.getLong(0)).sorted.toSeq === Seq(7L, 8L, 9L), s"$regime $walk")
+        for (r <- rows)
+          assert(math.abs(r.getDouble(1) - 1.0 / 3) < 1e-15, s"$regime $walk ${r.getLong(0)}")
+      }
+      assert(derived === Seq(Seq("nodeid", "rank"), Seq("nodeid", "rank"),
+        Seq("nodeid", "rank"), Seq("source", "nodeid", "rank")).map(_ -> 0), regime)
+    }
+  }
+
   /** Jobs per call on the small fixture (3 iterations; the converged walk
-    * runs its 3-iteration cap), counted with the result collected, before
-    * the walks shared one iteration skeleton. A count may only go down. */
+    * runs its 3-iteration cap), counted with the result collected: the
+    * stats pass (its exchange stage, then the fold of its partitions), the
+    * walk, and the caller's read. The in-task regime ignores the scatter
+    * layout. A count may only go down. */
   private val jobBudget: Map[(String, String, String), Int] = {
     val walks = Seq("pageRank", "logSpace", "converged", "ppr")
     def row(layout: String, regime: String, counts: Int*) =
       walks.zip(counts).map { case (w, n) => (w, layout, regime) -> n }
-    (row("adjacency", "localized", 17, 17, 17, 17) ++
-      row("edges", "localized", 21, 21, 21, 21) ++
-      row("adjacency", "join", 24, 24, 33, 31) ++
-      row("edges", "join", 33, 33, 39, 40)).toMap
+    (row("adjacency", "inTask", 4, 4, 4, 4) ++
+      row("edges", "inTask", 4, 4, 4, 4) ++
+      row("adjacency", "join", 18, 18, 25, 22) ++
+      row("edges", "join", 25, 25, 32, 28)).toMap
   }
 
   private def jobsOf(body: => Unit): Int = {
@@ -239,32 +283,60 @@ class GraphOpsSpec extends SparkSpec {
       for ((layout, hub) <- Seq("adjacency" -> Long.MaxValue, "edges" -> 1L);
            (walk, run) <- walks(hub))
         yield (walk, layout) -> jobsOf(run())
-    val (localized, join) = inBothRegimes(countAll())
-    val counts = Seq("localized" -> localized, "join" -> join).flatMap {
+    val (inTask, join) = inTaskAndJoin(countAll())
+    val counts = Seq("inTask" -> inTask, "join" -> join).flatMap {
       case (regime, cs) => cs.map { case ((w, l), n) => (w, l, regime) -> n }
     }
     info(counts.map { case ((w, l, r), n) => s"$w/$l/$r=$n" }.mkString(" "))
     for ((key, n) <- counts)
       assert(n <= jobBudget.getOrElse(key, -1), s"$key submitted $n jobs")
+    // the converged walk's round count rides an accumulator out of the
+    // walk's task: no job beyond those of the fixed-round walk
+    val fixed = jobsOf(GraphOps.pageRank(smallEdges, iterations = 3,
+      vertices = Some(smallVerts)))
+    var rounds = -1
+    val converged = jobsOf { rounds = GraphOps.pageRankConverged(smallEdges, tol = 0.0,
+      maxIterations = 3, vertices = Some(smallVerts))._2 }
+    assert(rounds === 3)
+    assert(converged === fixed, "pageRankConverged's round count costs no job")
   }
 
   test("regime gate weighs |sources| x n: a many-sources call lands in the join regime") {
     def ppr() = GraphOps.personalizedPageRank(smallEdges, Seq(1L, 2L, 4L),
       iterations = 3, vertices = Some(smallVerts), numPartitions = 2).collect()
-    val localizedJobs = jobsOf(ppr())
+    val inTaskJobs = jobsOf(ppr())
     val joinJobs = withCutoff(0)(jobsOf(ppr()))
     var rows = Array.empty[org.apache.spark.sql.Row]
-    val gatedJobs = withCutoff(10) {
-      assert(GraphOps.localizes(n = 5, walks = 1), "5 x 1 < 10 stays localized")
-      assert(!GraphOps.localizes(n = 5, walks = 3), "5 x 3 >= 10 goes to the join regime")
+    // the fixture's 7 raw edges count too: 5 x 1 + 7 < 20 <= 5 x 3 + 7
+    val gatedJobs = withCutoff(20) {
+      assert(GraphOps.inTask(n = 5, walks = 1, rawEdges = 7), "5 x 1 + 7 < 20 stays in-task")
+      assert(!GraphOps.inTask(n = 5, walks = 3, rawEdges = 7),
+        "5 x 3 + 7 >= 20 goes to the join regime")
       jobsOf { rows = ppr() }
     }
     assert(gatedJobs === joinJobs, "the gated call runs the join regime's jobs")
-    assert(gatedJobs !== localizedJobs, "the regimes are told apart by their jobs")
+    assert(gatedJobs !== inTaskJobs, "the regimes are told apart by their jobs")
     val got = rows.map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(got.size === 3 * smallAdj.size)
     for (src <- Seq(1L, 2L, 4L); (k, v) <- seqPpr(smallAdj, src, 3))
       assert(math.abs(got((src, k)) - v) < 1e-12, s"source $src node $k")
+
+    // few vertices, many raw edges: 3 x 1 vertices would pass the cutoff,
+    // the 120 raw (duplicate) edges do not
+    val manyAdj: Map[Long, Seq[Long]] = Map(1L -> Seq(2L, 3L), 2L -> Seq(3L), 3L -> Seq(1L))
+    val manyEdges = (manyAdj.toSeq.flatMap { case (s, ds) => ds.map(d => (s, d)) } ++
+      Seq.fill(40)(Seq((1L, 2L), (2L, 3L), (3L, 1L))).flatten).toDF("src", "dst")
+    def pr() = GraphOps.pageRank(manyEdges, iterations = 5, numPartitions = 2).collect()
+    val prJoinJobs = withCutoff(0)(jobsOf(pr()))
+    var prRows = Array.empty[org.apache.spark.sql.Row]
+    val prGatedJobs = withCutoff(100) {
+      assert(GraphOps.inTask(n = 3, walks = 1, rawEdges = 0), "3 vertices alone stay in-task")
+      assert(!GraphOps.inTask(n = 3, walks = 1, rawEdges = 124), "124 raw edges do not")
+      jobsOf { prRows = pr() }
+    }
+    assert(prGatedJobs === prJoinJobs, "the edge-heavy call runs the join regime's jobs")
+    val prGot = prRows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    for ((k, v) <- seqPageRank(manyAdj, 5)) assert(math.abs(prGot(k) - v) < 1e-12, s"node $k")
   }
 
   test("reliable checkpointing (checkpointDir) yields BIT-IDENTICAL ranks " +
@@ -291,14 +363,19 @@ class GraphOpsSpec extends SparkSpec {
           hubDegreeThreshold = hub, checkpointDir = ckpt).collect(),
         GraphOps.pageRankConverged(smallEdges, tol = 1e-10,
           maxIterations = 50, vertices = Some(smallVerts), numPartitions = 4,
-          hubDegreeThreshold = hub, checkpointDir = ckpt)._1.collect())
-      for (hub <- Seq(Long.MaxValue, 1L)) { // adjacency AND edge-scatter
-        val (pr0, ppr0, log0, conv0) = run(None, hub)
-        val (pr1, ppr1, log1, conv1) = run(Some(dir), hub)
-        cmp(s"pageRank hub=$hub", pr0, pr1)
-        cmp(s"ppr hub=$hub", ppr0, ppr1)
-        cmp(s"logspace hub=$hub", log0, log1)
-        cmp(s"converged hub=$hub", conv0, conv1)
+          hubDegreeThreshold = hub, checkpointDir = ckpt))
+      // the in-task regime, then the join regime on adjacency AND edge-scatter
+      for ((cutoff, hub) <- Seq(None -> Long.MaxValue, Some(0L) -> Long.MaxValue,
+                                Some(0L) -> 1L)) {
+        def regime[T](body: => T): T = cutoff.fold(body)(withCutoff(_)(body))
+        val (pr0, ppr0, log0, (conv0, rounds0)) = regime(run(None, hub))
+        val (pr1, ppr1, log1, (conv1, rounds1)) = regime(run(Some(dir), hub))
+        val name = s"cutoff=$cutoff hub=$hub"
+        cmp(s"pageRank $name", pr0, pr1)
+        cmp(s"ppr $name", ppr0, ppr1)
+        cmp(s"logspace $name", log0, log1)
+        cmp(s"converged $name", conv0.collect(), conv1.collect())
+        assert(rounds0 === rounds1, s"converged rounds $name")
       }
       // the classifier GD materializations take the same option
       val docs = Seq((0L, "good clean text", 1.0), (1L, "spam spam", 0.0),
@@ -319,9 +396,10 @@ class GraphOpsSpec extends SparkSpec {
   test("LineageCutter keeps at most the newest cut's rdd-* dirs on disk") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-gc").toString
     try {
-      GraphOps.pageRank(smallEdges, iterations = 10,
+      // the join regime cuts every round; the in-task regime cuts once
+      withCutoff(0)(GraphOps.pageRank(smallEdges, iterations = 10,
         vertices = Some(smallVerts), numPartitions = 4,
-        checkpointDir = Some(dir)).collect()
+        checkpointDir = Some(dir)).collect())
       // Spark nests checkpoints under <dir>/<uuid>/rdd-N; without the
       // cutter's lagged delete, this 10-iteration run leaves one rdd-*
       // dir per cut (11 here). The cutter retains at most the last
