@@ -318,7 +318,7 @@ object LayoutOps {
         .map(g => (g, s.getPath, s.getModificationTime)))
       .sortBy(_._1)
       .map { case (g, p, mtime) =>
-        runMax = math.max(runMax, manifestCommitMillis(fs, p).getOrElse(mtime))
+        runMax = math.max(runMax, readHeader(fs, p).ts.getOrElse(mtime))
         (g, runMax)
       }
     gens.filter(_._2 <= epochMillis).map(_._1).lastOption.getOrElse(
@@ -384,13 +384,71 @@ object LayoutOps {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Raw manifest entry lines (header/comment lines skipped). An entry is
-    * `relative/path` or `relative/path<TAB>{stats json}` — both forms are
-    * valid in one manifest, so tables written before stats existed (or
-    * appended without `statsCols`) keep working. */
+  /** One manifest object: the `#key=` header a commit records plus its
+    * entry lines. An entry is `relative/path` or `relative/path<TAB>{stats
+    * json}` — both forms are valid in one manifest, so tables written
+    * before stats existed (or appended without `statsCols`) keep working.
+    * Header keys:
+    *  - `token`: the idempotence token the commit carried;
+    *  - `ts`: the commit instant in epoch millis — the authoritative
+    *    timestamp for as-of time travel and history (rename-based commits
+    *    preserve the tmp object's mtime and writer clocks skew, so mtime
+    *    is only the fallback for manifests that predate the key);
+    *  - `schema`: the table schema as DDL — reads plan with it and skip
+    *    footer inference, and appends evolve it additively;
+    *  - `cluster` / `zorder`: the declared layout (linear range clustering
+    *    or a 2-D Morton curve), which every rewrite and appended batch
+    *    re-applies so per-file min/max ranges stay selective;
+    *  - `op`: `write|append|compact|delete|upsert|rollback:<gen>`, the
+    *    commit's provenance for history and `describeManifest`.
+    * [[Manifest.parse]] is the one reader and [[lines]] the one writer of
+    * the format. */
+  private case class Manifest(
+      gen: Long,
+      entries: Seq[String] = Nil,
+      token: Option[String] = None,
+      ts: Option[Long] = None,
+      schemaDdl: Option[String] = None,
+      clusterCols: Seq[String] = Nil,
+      zOrderCols: Seq[String] = Nil,
+      op: Option[String] = None) {
+
+    /** The same table layout committed as generation `g` by `operation`:
+      * schema and layout carry over, token and instant do not. */
+    def successor(g: Long, operation: String): Manifest =
+      copy(gen = g, token = None, ts = None, op = Some(operation))
+
+    def lines: Seq[String] = {
+      def cols(key: String, cs: Seq[String]) =
+        Option.when(cs.nonEmpty)(s"#$key=${cs.mkString(",")}")
+      (manifestVersionLine +: (token.map("#token=" + _) ++
+        ts.map("#ts=" + _) ++ schemaDdl.map("#schema=" + _) ++
+        cols("cluster", clusterCols) ++ cols("zorder", zOrderCols) ++
+        op.map("#op=" + _)).toSeq) ++ entries :+ manifestEof
+    }
+  }
+
+  private object Manifest {
+    def parse(gen: Long, lines: Seq[String]): Manifest = {
+      def key(k: String) = lines.collectFirst {
+        case l if l.startsWith(s"#$k=") => l.stripPrefix(s"#$k=") }
+      def cols(k: String) =
+        key(k).map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+      Manifest(gen, lines.filterNot(_.startsWith("#")), key("token"),
+        key("ts").flatMap(_.toLongOption), key("schema"), cols("cluster"),
+        cols("zorder"), key("op"))
+    }
+  }
+
+  /** The whole manifest at `p` — header and entries — from one read. */
+  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Manifest =
+    Manifest.parse(manifestGen(p.getName).getOrElse(-1L),
+      readManifestLines(fs, p))
+
+  /** Raw manifest entry lines (header/comment lines skipped). */
   private[graft] def readManifestEntries(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Seq[String] =
-    readManifestLines(fs, p).filterNot(_.startsWith("#"))
+      p: org.apache.hadoop.fs.Path): Seq[String] = readManifest(fs, p).entries
 
   private[graft] def entryPath(line: String): String = line.split('\t').head
 
@@ -398,11 +456,6 @@ object LayoutOps {
     val i = line.indexOf('\t')
     if (i < 0) None else Some(line.substring(i + 1))
   }
-
-  /** Data files listed by a manifest (stats suffixes stripped). */
-  private def readManifestFiles(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Seq[String] =
-    readManifestEntries(fs, p).map(entryPath)
 
   /** Header lines only (the leading `#`-prefixed block): stops at the
     * first entry line, so probing a manifest's token/schema/cluster costs
@@ -425,63 +478,11 @@ object LayoutOps {
     } finally in.close()
   }
 
-  /** The idempotence token a manifest was committed with, if any. */
-  private def manifestToken(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[String] =
-    readHeaderLines(fs, p).collectFirst {
-      case l if l.startsWith("#token=") => l.stripPrefix("#token=") }
-
-  /** The table schema (DDL) a manifest records, if any. Recorded at every
-    * commit so reads plan with `spark.read.schema(...)` — zero footer
-    * inference (a real cost when a generation lists 100k files) — and so
-    * appends can evolve the schema additively. */
-  private def manifestSchemaDdl(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[String] =
-    readHeaderLines(fs, p).collectFirst {
-      case l if l.startsWith("#schema=") => l.stripPrefix("#schema=") }
-
-  /** The cluster columns a manifest records (`#cluster=a,b`), if any —
-    * the table's declared sort layout, which every rewrite (compaction,
-    * CoW delete/upsert, appended batches) re-applies so per-file min/max
-    * ranges stay disjoint across maintenance instead of degrading to the
-    * full key span after the first rewrite. */
-  private def manifestClusterCols(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Seq[String] =
-    readHeaderLines(fs, p).collectFirst {
-      case l if l.startsWith("#cluster=") =>
-        l.stripPrefix("#cluster=").split(",").toSeq.filter(_.nonEmpty)
-    }.getOrElse(Nil)
-
-  /** The z-order columns a manifest records (`#zorder=x,y`), if any —
-    * the 2-D sibling of `#cluster=`: rewrites restore a Morton-curve
-    * layout so every file covers a compact RECTANGLE of (x, y) space and
-    * min/max stats prune range predicates on EITHER dimension. */
-  private def manifestZOrderCols(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Seq[String] =
-    readHeaderLines(fs, p).collectFirst {
-      case l if l.startsWith("#zorder=") =>
-        l.stripPrefix("#zorder=").split(",").toSeq.filter(_.nonEmpty)
-    }.getOrElse(Nil)
-
-  /** The commit instant a manifest records (`#ts=<epochMillis>`, written
-    * at commit), if any. The authoritative timestamp for as-of time
-    * travel and history: object modification times are NOT reliable —
-    * rename-based commits preserve the tmp object's mtime on posix/HDFS,
-    * and writer clocks can skew — so mtime is only the fallback for
-    * manifests committed before this header existed. */
-  private def manifestCommitMillis(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[Long] =
-    readHeaderLines(fs, p).collectFirst {
-      case l if l.startsWith("#ts=") => l.stripPrefix("#ts=") }
-      .flatMap(_.toLongOption)
-
-  /** The operation a manifest records (`#op=write|append|compact|delete|
-    * upsert|rollback:<gen>`), if any — commit provenance for
-    * [[historyManifested]] and `describeManifest`. */
-  private def manifestOp(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[String] =
-    readHeaderLines(fs, p).collectFirst {
-      case l if l.startsWith("#op=") => l.stripPrefix("#op=") }
+  /** A manifest's header (no entries) from [[readHeaderLines]]. */
+  private def readHeader(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Manifest =
+    Manifest.parse(manifestGen(p.getName).getOrElse(-1L),
+      readHeaderLines(fs, p))
 
   // ---- token/generation checkpoints ----------------------------------
   //
@@ -537,7 +538,7 @@ object LayoutOps {
     val fresh = fs.listStatus(md).toSeq.flatMap { s =>
       manifestGen(s.getPath.getName)
         .filter(g => g > prevGen && g <= gen)
-        .flatMap(_ => manifestToken(fs, s.getPath))
+        .flatMap(_ => readHeader(fs, s.getPath).token)
     }
     val payload = ((manifestVersionLine +:
       ((prevTokens ++ fresh).toSeq.sorted :+ manifestEof))
@@ -576,40 +577,25 @@ object LayoutOps {
     ckpt.exists(c => readCheckpointTokens(fs, c._2).contains(token)) ||
       stats.exists { s =>
         manifestGen(s.getPath.getName).exists(_ > ckptGen) &&
-          manifestToken(fs, s.getPath).contains(token)
+          readHeader(fs, s.getPath).token.contains(token)
       }
   }
 
-  /** Commit `files` (entry lines: a relative path, optionally followed by
-    * TAB + per-file stats JSON) as generation `gen`, through the active
-    * [[commitArbiter]]. Fails if the generation was committed
-    * concurrently (the caller's retry loop re-reads and re-commits). */
+  /** Commit `m` as generation `m.gen`, stamped with the commit instant,
+    * through the active [[commitArbiter]]. Fails if the generation was
+    * committed concurrently (the caller's retry re-reads and re-commits). */
   private def commitManifest(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, gen: Long, files: Seq[String],
-      token: Option[String] = None,
-      schemaDdl: Option[String] = None,
-      clusterCols: Seq[String] = Nil,
-      op: String = "",
-      zOrderCols: Seq[String] = Nil): Unit = {
+      root: org.apache.hadoop.fs.Path, m: Manifest): Unit = {
     val md = new org.apache.hadoop.fs.Path(root, manifestsDirName)
     fs.mkdirs(md)
-    val header = s"$manifestVersionLine\n" +
-      token.map(t => s"#token=$t\n").getOrElse("") +
-      s"#ts=${System.currentTimeMillis()}\n" +
-      schemaDdl.map(s => s"#schema=$s\n").getOrElse("") +
-      (if (clusterCols.nonEmpty) s"#cluster=${clusterCols.mkString(",")}\n"
-       else "") +
-      (if (zOrderCols.nonEmpty) s"#zorder=${zOrderCols.mkString(",")}\n"
-       else "") +
-      (if (op.nonEmpty) s"#op=$op\n" else "")
-    val payload = (header + (files :+ manifestEof).mkString("\n") + "\n")
-      .getBytes("UTF-8")
-    val target = new org.apache.hadoop.fs.Path(md, f"$gen%020d$manifestSuffix")
+    val payload = (m.copy(ts = Some(System.currentTimeMillis())).lines
+      .mkString("\n") + "\n").getBytes("UTF-8")
+    val target = new org.apache.hadoop.fs.Path(md, f"${m.gen}%020d$manifestSuffix")
     if (!commitArbiter.tryCommit(fs, target, payload))
       throw new java.io.IOException(
-        s"manifest generation $gen was committed concurrently at $target — " +
+        s"manifest generation ${m.gen} was committed concurrently at $target — " +
           "re-read the table and retry")
-    maybeCheckpoint(fs, root, gen)
+    maybeCheckpoint(fs, root, m.gen)
   }
 
   private def newDataDir(gen: Long): String =
@@ -620,13 +606,16 @@ object LayoutOps {
     * commit into the exact race window. No-op in production. */
   @volatile private[graft] var beforeMaintenanceCommitHook: () => Unit = () => ()
 
-  /** Re-run `body` when a commit race steals the generation. Maintenance
-    * ops (compact/delete/upsert) planned their rewrite against a base
-    * manifest that no longer is the latest — carrying any of that plan
-    * forward could drop an interleaved append's files or resurrect
-    * deleted rows, so a from-scratch re-run against the NEW latest is the
-    * only honest retry. The lost attempt's data directory is orphaned
-    * (never referenced by any manifest) and the next [[vacuumManifested]]
+  /** Re-run `body` when a commit race steals the generation, up to
+    * `maxRetries` times. Write, append and rollback put only their commit
+    * in `body`: it re-targets the next generation with the files already
+    * written. Maintenance ops (compact/delete/upsert) put the whole op in
+    * it: their rewrite was planned against a base manifest that no longer
+    * is the latest — carrying any of that plan forward could drop an
+    * interleaved append's files or resurrect deleted rows, so a
+    * from-scratch re-run against the NEW latest is the only honest
+    * retry. The lost attempt's data directory is orphaned (never
+    * referenced by any manifest) and the next [[vacuumManifested]]
     * removes it — same lifecycle as a lost append. */
   private def retryOnCommitRace[T](maxRetries: Int)(body: => T): T = {
     var attempt = 0
@@ -944,9 +933,9 @@ object LayoutOps {
     * across commits; no operation ever re-reads all live footers — that
     * is exactly what the manifest exists to avoid. */
   private def entryLineFor(conf: org.apache.hadoop.conf.Configuration,
-      root: org.apache.hadoop.fs.Path, relPath: String,
+      root: org.apache.hadoop.fs.Path, relPath: String, bytes: Long,
       statsCols: Seq[String],
-      blooms: Map[String, Map[String, Array[Long]]] = Map.empty): String = {
+      blooms: Map[String, Map[String, Array[Long]]]): String = {
     val abs = new org.apache.hadoop.fs.Path(root, relPath)
     val m = if (statsCols.isEmpty)
       Map.empty[String, (String, Option[String], Option[String], Long)]
@@ -954,7 +943,7 @@ object LayoutOps {
     val b = blooms.getOrElse(abs.getName, Map.empty)
     if (m.isEmpty && b.isEmpty) relPath
     else s"$relPath\t${statsJson(m, b, Some(parquetRowCount(conf, abs)),
-      Some(abs.getFileSystem(conf).getFileStatus(abs).getLen))}"
+      Some(bytes))}"
   }
 
   /** The byte length recorded for an entry's data file, if any — lets a
@@ -1110,37 +1099,65 @@ object LayoutOps {
     }
   }
 
-  /** Empty DataFrame with the manifest's recorded schema — what an empty
-    * table/generation reads as. Only a schema-less empty manifest (a
-    * pre-schema layout artifact) is an error. */
-  private def emptyManifested(spark: org.apache.spark.sql.SparkSession,
-      ddl: Option[String], mp: org.apache.hadoop.fs.Path): DataFrame =
-    ddl match {
-      case Some(d) => spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(d))
-      case None => throw new java.io.IOException(
-        s"manifest $mp lists no data files and records no schema")
-    }
+  /** The newest committed manifest, read whole, if the table has one. */
+  private def readLatest(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Option[Manifest] =
+    latestManifest(fs, root).map(m => readManifest(fs, m._2))
 
-  /** Resolve the manifest path for `generation` (default: newest). */
+  /** Read the manifest of `generation` (default: newest) — the one
+    * manifest open a read, describe or rollback pays. */
   private def resolveManifest(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, generation: Option[Long],
-      path: String): org.apache.hadoop.fs.Path = generation match {
+      path: String): Manifest = generation match {
     case Some(g) =>
       val p = new org.apache.hadoop.fs.Path(
         new org.apache.hadoop.fs.Path(root, manifestsDirName),
         f"$g%020d$manifestSuffix")
       if (!fs.exists(p)) throw new java.io.IOException(
         s"$path has no manifest generation $g (vacuumed or never committed)")
-      p
-    case None => latestManifest(fs, root).map(_._2)
+      readManifest(fs, p)
+    case None => readLatest(fs, root)
       .getOrElse(throw new java.io.IOException(
         s"$path has no committed manifest — not a manifested table"))
   }
 
+  /** The table schema `m` records. A pre-`#schema=` manifest infers it
+    * from its listed files exactly as `spark.read.parquet(files: _*)`
+    * does, so legacy tables scan through the same index; only a
+    * schema-less manifest listing no files is an error. */
+  private def tableSchema(spark: org.apache.spark.sql.SparkSession,
+      root: org.apache.hadoop.fs.Path,
+      m: Manifest): org.apache.spark.sql.types.StructType =
+    m.schemaDdl.map(org.apache.spark.sql.types.StructType.fromDDL).getOrElse {
+      if (m.entries.isEmpty) throw new java.io.IOException(
+        s"manifest generation ${m.gen} of $root lists no data files and " +
+          "records no schema")
+      spark.read.parquet(m.entries.map(l =>
+        new org.apache.hadoop.fs.Path(root, entryPath(l)).toString): _*).schema
+    }
+
+  /** The scan of `entries` (some of `m`'s) under `m`'s table schema:
+    * every read of listed files goes through [[graft.plans.
+    * ManifestFileIndex]], which prunes files from the query's own filters
+    * and takes each `FileStatus` from the recorded `__bytes`. */
+  private def scan(spark: org.apache.spark.sql.SparkSession,
+      root: org.apache.hadoop.fs.Path, m: Manifest,
+      entries: Seq[String]): DataFrame =
+    graft.plans.ManifestFileIndex.dataFrame(spark, root, entries,
+      tableSchema(spark, root, m))
+
+  /** `bounds` as the row predicate they select: inclusive ranges, and
+    * `column === v` for a point (lower == upper) so the scan's pruning
+    * also consults per-file blooms. No bounds selects every row. */
+  private def boundsPredicate(bounds: Seq[ColBounds]): Column =
+    bounds.flatMap {
+      case ColBounds(c, Some(lo), Some(hi)) if lo == hi => Seq(col(c) === lit(lo))
+      case ColBounds(c, lo, hi) =>
+        lo.map(v => col(c) >= lit(v)) ++ hi.map(v => col(c) <= lit(v))
+    }.reduceOption(_ && _).getOrElse(lit(true))
+
   /** Entry-count threshold above which pruning decisions are evaluated
-    * DISTRIBUTED (the entry lines become a Dataset and [[mayMatch]] runs
+    * DISTRIBUTED (the entry stats become a Dataset and the predicate runs
     * as a filter on executors) instead of in a driver loop. Driver-side
     * planning is O(files) and fine to ~10^5 entries (a 100 TB table at
     * 1 GB/file); past that — or under small-file ingest before compaction
@@ -1149,24 +1166,6 @@ object LayoutOps {
     * the threshold is purely a planning-cost knob. */
   @volatile var distributedPruneThreshold: Int = 100000
 
-  /** Entry lines surviving `bounds`, original order preserved. Below the
-    * threshold (or with no effective bounds) this is a driver loop; above
-    * it the same [[mayMatch]] runs distributed and only survivors come
-    * back to the driver (the scan needs their paths anyway). */
-  private def pruneEntries(spark: org.apache.spark.sql.SparkSession,
-      entries: Seq[String], bounds: Seq[ColBounds]): Seq[String] = {
-    val effective = bounds.filter(b => b.lower.nonEmpty || b.upper.nonEmpty)
-    if (effective.isEmpty) entries
-    else if (entries.size < distributedPruneThreshold)
-      entries.filter(l => mayMatch(entryStatsJson(l), effective))
-    else {
-      import spark.implicits._
-      spark.createDataset(entries.zipWithIndex)
-        .filter(p => mayMatch(entryStatsJson(p._1), effective))
-        .collect().sortBy(_._2).map(_._1).toSeq
-    }
-  }
-
   /** The manifest-stats file pruning decision, exposed for inspection:
     * (files kept after applying `bounds`, total files listed). */
   def manifestSkipFiles(spark: org.apache.spark.sql.SparkSession,
@@ -1174,9 +1173,12 @@ object LayoutOps {
       generation: Option[Long] = None): (Seq[String], Int) = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = readManifestEntries(fs,
-      resolveManifest(fs, root, generation, path))
-    (pruneEntries(spark, entries, bounds).map(entryPath), entries.size)
+    val entries = resolveManifest(fs, root, generation, path).entries
+    val effective = bounds.filter(b => b.lower.nonEmpty || b.upper.nonEmpty)
+    val keeps = if (effective.isEmpty) Nil
+                else Seq((s: Option[String]) => mayMatch(s, effective))
+    (graft.plans.ManifestFileIndex.prune(spark,
+      entries.map(l => entryStatsJson(l) -> entryPath(l)), keeps), entries.size)
   }
 
   /** Human-readable description of a manifest: generation, token, schema,
@@ -1185,58 +1187,29 @@ object LayoutOps {
       path: String, generation: Option[Long] = None): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mp = resolveManifest(fs, root, generation, path)
-    Seq(s"generation: ${manifestGen(mp.getName).getOrElse(-1L)}") ++
-      manifestOp(fs, mp).map(o => s"op: $o") ++
-      manifestToken(fs, mp).map(t => s"token: $t") ++
-      manifestSchemaDdl(fs, mp).map(s => s"schema: $s") ++
-      (manifestClusterCols(fs, mp) match {
-        case Nil => Nil
-        case cs  => Seq(s"cluster: ${cs.mkString(",")}")
-      }) ++
-      (manifestZOrderCols(fs, mp) match {
-        case Nil => Nil
-        case cs  => Seq(s"zorder: ${cs.mkString(",")}")
-      }) ++
-      readManifestEntries(fs, mp).map { l =>
+    val m = resolveManifest(fs, root, generation, path)
+    Seq(s"generation: ${m.gen}") ++
+      m.op.map(o => s"op: $o") ++
+      m.token.map(t => s"token: $t") ++
+      m.schemaDdl.map(s => s"schema: $s") ++
+      Option.when(m.clusterCols.nonEmpty)(s"cluster: ${m.clusterCols.mkString(",")}") ++
+      Option.when(m.zOrderCols.nonEmpty)(s"zorder: ${m.zOrderCols.mkString(",")}") ++
+      m.entries.map { l =>
         entryStatsJson(l).map(j => s"  ${entryPath(l)}  $j")
           .getOrElse(s"  ${entryPath(l)}")
       }
   }
 
-  /** Filtered read of a manifest-committed table: files whose stats prove
-    * they cannot satisfy `bounds` are skipped WITHOUT being opened, then
-    * the exact inclusive-range predicates are applied to the survivors —
-    * the result is always exactly `readManifested(...).where(bounds)`,
-    * stats or no stats. */
+  /** Filtered read of a manifest-committed table: exactly
+    * `readManifested(...).where(bounds)`. Files whose stats prove they
+    * cannot satisfy `bounds` are skipped WITHOUT being opened — the
+    * manifest-backed scan prunes them at planning from the bounds'
+    * predicate — and the exact inclusive-range predicate filters the
+    * survivors' rows. */
   def readManifestedWhere(spark: org.apache.spark.sql.SparkSession,
       path: String, bounds: Seq[ColBounds],
-      generation: Option[Long] = None): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mp = resolveManifest(fs, root, generation, path)
-    val entries = readManifestEntries(fs, mp)
-    val ddl = manifestSchemaDdl(fs, mp)
-    if (entries.isEmpty) return emptyManifested(spark, ddl, mp)
-    val kept = pruneEntries(spark, entries, bounds).map(entryPath)
-    val reader = ddl match {
-      case Some(d) => spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(d))
-      case None => spark.read
-    }
-    val residual = bounds.flatMap { b =>
-      b.lower.map(v => col(b.column) >= lit(v)) ++
-        b.upper.map(v => col(b.column) <= lit(v))
-    }.reduceOption(_ && _).getOrElse(lit(true))
-    if (kept.isEmpty) {
-      // every file pruned: empty result with the table's real schema (one
-      // file read under an always-false filter costs a footer, not a scan)
-      val any = new org.apache.hadoop.fs.Path(root, entryPath(entries.head))
-      reader.parquet(any.toString).where(lit(false))
-    } else
-      reader.parquet(kept.map(f =>
-        new org.apache.hadoop.fs.Path(root, f).toString): _*).where(residual)
-  }
+      generation: Option[Long] = None): DataFrame =
+    readManifested(spark, path, generation).where(boundsPredicate(bounds))
 
   /** Additive schema evolution: the appended batch may ADD columns (old
     * files read them back as null via the explicit read schema) but can
@@ -1294,6 +1267,38 @@ object LayoutOps {
       p.sortWithinPartitions(col("__z")).drop("__z")
     } else clustered(df, numFiles, clusterBy)
 
+  /** The write tail every committer shares: lay `df` out, write it into a
+    * fresh data directory for generation `gen`, list the new files and
+    * return their entry lines — footer stats for `statsCols`, blooms for
+    * `bloomCols` (one job over the new directory), and each file's length
+    * from the listing. */
+  private def writeFiles(df: DataFrame, root: org.apache.hadoop.fs.Path,
+      gen: Long, numFiles: Int, clusterBy: Seq[String], zOrderBy: Seq[String],
+      statsCols: Seq[String], bloomCols: Seq[String],
+      bloomBits: Int): Seq[String] = {
+    val spark = df.sparkSession
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dataDir = newDataDir(gen)
+    val dir = new org.apache.hadoop.fs.Path(root, dataDir)
+    layout(df, numFiles, clusterBy, zOrderBy).write.parquet(dir.toString)
+    val files = dir.getFileSystem(conf).listStatus(dir)
+      .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
+    val blooms = collectBlooms(spark, dir.toString, bloomCols, bloomBits)
+    files.toSeq.map(f => entryLineFor(conf, root,
+      s"$dataDir/${f.getPath.getName}", f.getLen, statsCols, blooms))
+  }
+
+  /** [[writeFiles]] for a maintenance rewrite of `base` in `next`'s
+    * layout: blooms are re-collected for every column a live entry
+    * carries one for, so equality skipping survives maintenance. */
+  private def rewriteFiles(df: DataFrame, root: org.apache.hadoop.fs.Path,
+      base: Manifest, next: Manifest, numFiles: Int,
+      statsCols: Seq[String]): Seq[String] = {
+    val (bCols, bBits) = inheritedBloomCols(base.entries)
+    writeFiles(df, root, next.gen, numFiles, next.clusterCols,
+      next.zOrderCols, statsCols, bCols, math.max(bBits, 64))
+  }
+
   /** Create (or advance) a manifest-committed table at `path` with the
     * contents of `df`. Data lands in a fresh immutable directory; the
     * table flips to it atomically via the manifest commit. Previous
@@ -1313,30 +1318,21 @@ object LayoutOps {
                       zOrderBy: Seq[String] = Nil): Unit = {
     require(clusterBy.isEmpty || zOrderBy.isEmpty,
       "clusterBy and zOrderBy are alternative layouts — declare one")
-    val spark = df.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val dataDir = newDataDir(
-      latestManifest(fs, root).map(_._1 + 1).getOrElse(0L))
-    val out = layout(df, numFiles, clusterBy, zOrderBy)
-    val dataDirAbs = new org.apache.hadoop.fs.Path(root, dataDir).toString
-    out.write.parquet(dataDirAbs)
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(root, dataDir))
-      .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted
-      .map(n => s"$dataDir/$n").toSeq
-    val blooms = collectBlooms(spark, dataDirAbs, bloomCols, bloomBits)
-    val entryLines = files.map(entryLineFor(conf, root, _, statsCols, blooms))
+    val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    def nextGen() = latestManifest(fs, root).map(_._1 + 1).getOrElse(0L)
+    val entries = writeFiles(df, root, nextGen(), numFiles, clusterBy,
+      zOrderBy, statsCols, bloomCols, bloomBits)
     // a full write REPLACES the table: the new schema is df's, verbatim;
     // the declared layout (clusterBy or zOrderBy) is recorded in the
     // header so every later rewrite (compaction, CoW delete/upsert)
     // restores the same layout
     retryOnCommitRace(maxCommitRetries) {
-      val gen = latestManifest(fs, root).map(_._1 + 1).getOrElse(0L)
+      val gen = nextGen()
       beforeMaintenanceCommitHook()
-      commitManifest(fs, root, gen, entryLines,
+      commitManifest(fs, root, Manifest(gen, entries,
         schemaDdl = Some(df.schema.toDDL), clusterCols = clusterBy,
-        op = "write", zOrderCols = zOrderBy)
+        zOrderCols = zOrderBy, op = Some("write")))
     }
   }
 
@@ -1378,104 +1374,83 @@ object LayoutOps {
                        bloomCols: Seq[String] = Nil,
                        bloomBits: Int = 1 << 13,
                        clusterBy: Seq[String] = Nil): Unit = {
-    val spark = df.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    // old entries are carried over VERBATIM (their stats suffixes included)
-    def state(): Option[(Long, Seq[String], Option[String], Seq[String], Seq[String])] = {
-      // token scan covers every retained generation, not just the newest:
-      // an interleaved appender advancing the table must not make a
-      // replayed batch look uncommitted (that would double-append it)
-      if (token.exists(t => tokenCommitted(fs, root, t)))
-        None // this batch already committed — replay is a no-op
-      else Some(latestManifest(fs, root) match {
-        case Some((g, mp)) =>
-          (g + 1, readManifestEntries(fs, mp), manifestSchemaDdl(fs, mp),
-            manifestClusterCols(fs, mp), manifestZOrderCols(fs, mp))
-        case None => (0L, Seq.empty[String], None, Nil, Nil)
-      })
-    }
-    var st = state().getOrElse(return)
+    val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    // the manifest the commit builds on (generation -1 for a new table),
+    // or None when this batch already committed — a replay is a no-op.
+    // The token scan covers every retained generation, not just the
+    // newest: an interleaved appender advancing the table must not make a
+    // replayed batch look uncommitted (that would double-append it)
+    def state(): Option[Manifest] =
+      if (token.exists(t => tokenCommitted(fs, root, t))) None
+      else Some(readLatest(fs, root).getOrElse(Manifest(-1L)))
+    val first = state().getOrElse(return)
     // a z-ordered table rejects a caller clusterBy outright (same
     // exclusivity writeManifested and compactManifest require) — silently
     // recording BOTH #cluster= and #zorder= would leave later maintenance
     // to resolve the conflict on its own
-    require(st._5.isEmpty || clusterBy.isEmpty,
+    require(first.zOrderCols.isEmpty || clusterBy.isEmpty,
       "clusterBy and zOrderBy are alternative layouts — declare one " +
-        s"(table already declares #zorder=${st._5.mkString(",")})")
-    evolveSchemaDdl(st._3, df) // fails fast, BEFORE writing
-    val dataDir = newDataDir(st._1)
+        s"(table already declares #zorder=${first.zOrderCols.mkString(",")})")
+    evolveSchemaDdl(first.schemaDdl, df) // fails fast, BEFORE writing
     // a batch carrying all of the declared layout columns (the table's
     // recorded ones, or `clusterBy` when the table declares none — e.g. a
     // streaming sink CREATING the table) lands laid out: disjoint
     // per-file ranges (or z-rectangles) within the batch; otherwise plain
-    val declared = if (st._4.nonEmpty) st._4 else clusterBy
-    val clusterCols = declared.filter(_ => declared.forall(df.columns.contains))
-    val zCols = st._5.filter(_ => st._5.forall(df.columns.contains))
-    val out = layout(df, numFiles, clusterCols, zCols)
-    val dataDirAbs = new org.apache.hadoop.fs.Path(root, dataDir).toString
-    out.write.parquet(dataDirAbs)
-    val added = fs.listStatus(new org.apache.hadoop.fs.Path(root, dataDir))
-      .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted
-      .map(n => s"$dataDir/$n").toSeq
-    val blooms = collectBlooms(spark, dataDirAbs, bloomCols, bloomBits)
-    var attempt = 0
-    while (true) {
-      val (gen, old, oldDdl, oldCluster, oldZ) = st
-      beforeAppendCommitHook()
-      try {
-        commitManifest(fs, root, gen,
-          old ++ added.map(entryLineFor(conf, root, _, statsCols, blooms)),
-          token, schemaDdl = Some(evolveSchemaDdl(oldDdl, df)),
+    def ifCarried(cols: Seq[String]) =
+      cols.filter(_ => cols.forall(df.columns.contains))
+    val added = writeFiles(df, root, first.gen + 1, numFiles,
+      ifCarried(if (first.clusterCols.nonEmpty) first.clusterCols else clusterBy),
+      ifCarried(first.zOrderCols), statsCols, bloomCols, bloomBits)
+    // old entries carry over VERBATIM (their stats suffixes included); the
+    // first attempt commits on the state read before the write, and only
+    // a lost race re-reads it
+    var pending = Option(first)
+    retryOnCommitRace(maxCommitRetries) {
+      val base = pending.orElse(state())
+      pending = None
+      base.foreach { b =>
+        beforeAppendCommitHook()
+        commitManifest(fs, root, Manifest(b.gen + 1, b.entries ++ added, token,
+          schemaDdl = Some(evolveSchemaDdl(b.schemaDdl, df)),
           // an existing declaration wins; a table CREATED by this append
           // adopts `clusterBy` so maintenance preserves the sink's layout.
           // A z-ordered base (possibly turned so by a racing writer after
           // the upfront require) never also records #cluster=
-          clusterCols = if (oldCluster.nonEmpty) oldCluster
-                        else if (oldZ.nonEmpty) Nil else clusterBy,
-          op = "append", zOrderCols = oldZ)
-        return
-      } catch {
-        case e: java.io.IOException
-            if Option(e.getMessage).exists(_.contains("committed concurrently"))
-              && attempt < maxCommitRetries =>
-          attempt += 1
-          st = state().getOrElse(return)
+          clusterCols = if (b.clusterCols.nonEmpty) b.clusterCols
+                        else if (b.zOrderCols.nonEmpty) Nil else clusterBy,
+          zOrderCols = b.zOrderCols, op = Some("append")))
       }
     }
+  }
+
+  /** The manifest-backed relation of one resolved generation (default
+    * newest): what [[readManifested]] and the `graft-manifest` batch
+    * DataSource scan. */
+  private[graft] def manifestedRelation(spark: org.apache.spark.sql.SparkSession,
+      path: String, generation: Option[Long])
+      : org.apache.spark.sql.execution.datasources.HadoopFsRelation = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val m = resolveManifest(fs, root, generation, path)
+    graft.plans.ManifestFileIndex.relation(spark, root, m.entries,
+      tableSchema(spark, root, m))
   }
 
   /** Read a manifest-committed table: resolve the newest manifest (or a
     * pinned `generation` — time travel across un-vacuumed history) and
     * load exactly the files it lists — in-flight or superseded data
-    * directories are invisible. */
+    * directories are invisible. The scan goes through a manifest-backed
+    * FileIndex: the query's OWN filter predicates reach `listFiles`
+    * during physical planning and prune files via the recorded min/max
+    * and bloom stats — `readManifested(...).where(...)` skips files
+    * without the caller ever passing bounds. The recorded schema plans
+    * the read with ZERO footer inference and null-fills columns added
+    * after a file was written; an empty generation (e.g. a table created
+    * from an empty batch) reads as an empty table with that schema. */
   def readManifested(spark: org.apache.spark.sql.SparkSession,
-                     path: String, generation: Option[Long] = None): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mp = resolveManifest(fs, root, generation, path)
-    val entries = readManifestEntries(fs, mp)
-    val ddl = manifestSchemaDdl(fs, mp)
-    // an empty generation (e.g. a table created from an empty batch)
-    // reads as an empty table with the recorded schema
-    if (entries.isEmpty) return emptyManifested(spark, ddl, mp)
-    ddl match {
-      case Some(d) =>
-        // schema-recorded tables scan through a manifest-backed FileIndex:
-        // the query's OWN filter predicates reach `listFiles` during
-        // physical planning and prune files via the recorded min/max and
-        // bloom stats — `readManifested(...).where(...)` skips files
-        // without the caller ever passing bounds. The recorded schema
-        // plans the read with ZERO footer inference and null-fills
-        // columns added after a file was written.
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(d)
-        graft.plans.ManifestFileIndex.dataFrame(spark, root, entries, schema)
-      // pre-schema manifests fall back to an eager listing + inference
-      case None => spark.read.parquet(entries.map(l =>
-        new org.apache.hadoop.fs.Path(root, entryPath(l)).toString): _*)
-    }
-  }
+                     path: String, generation: Option[Long] = None): DataFrame =
+    spark.baseRelationToDataFrame(manifestedRelation(spark, path, generation))
 
   /** Compact a manifest-committed table to ~`targetFileBytes` files —
     * the object-store-safe sibling of [[compact]]. New files are written
@@ -1483,10 +1458,10 @@ object LayoutOps {
     * no table-directory rename ever happens, so readers on any scheme
     * (including copy+delete-rename object stores) always resolve a fully
     * present generation. Superseded files survive until
-    * [[vacuumManifested]].
-    * @return number of data files in the new generation
-    */
-  /** `onlyFilesSmallerThan` makes the compaction INCREMENTAL: only files
+    * [[vacuumManifested]]. File sizes come from the recorded `__bytes`;
+    * only entries that predate it cost a `getFileStatus`.
+    *
+    * `onlyFilesSmallerThan` makes the compaction INCREMENTAL: only files
     * below the threshold are rewritten; bigger files' manifest entries
     * (stats included) are carried into the new generation verbatim. That
     * is the steady-state maintenance shape for a streamed-into table —
@@ -1509,66 +1484,40 @@ object LayoutOps {
     require(targetFileBytes > 0)
     require(clusterBy.isEmpty || zOrderBy.isEmpty,
       "clusterBy and zOrderBy are alternative layouts — declare one")
-    val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val (gen, mp) = latestManifest(fs, root).getOrElse(throw new java.io.IOException(
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val base = readLatest(fs, root).getOrElse(throw new java.io.IOException(
       s"$path has no committed manifest — writeManifested() it first"))
-    val entries = readManifestEntries(fs, mp)
-    val (smallE, largeE) = entries.map(l => (l,
-        fs.getFileStatus(new org.apache.hadoop.fs.Path(root, entryPath(l))).getLen))
+    val (smallE, largeE) = base.entries.map(l => (l, entryBytes(l).getOrElse(
+        fs.getFileStatus(new org.apache.hadoop.fs.Path(root, entryPath(l))).getLen)))
       .partition(_._2 < onlyFilesSmallerThan)
-    if (smallE.size < 2) return entries.size // nothing worth folding
+    if (smallE.size < 2) return base.entries.size // nothing worth folding
     // stats survive compaction: default to every column any live entry
     // carries RANGE stats for (recollected from the NEW files' footers)
-    val keepStats = statsCols.getOrElse(inheritedStatsCols(entries))
-    // the cluster layout survives too: an explicit clusterBy overrides
-    // (and re-declares) the table's recorded columns; the default is
-    // whatever the manifest header declares, so callers no longer have
-    // to remember the write-time clustering at every maintenance pass
+    val keepStats = statsCols.getOrElse(inheritedStatsCols(base.entries))
     // layout: an explicit zOrderBy CONVERTS the table to (or re-declares)
     // a z-order layout; an explicit clusterBy converts to linear; neither
-    // → whatever the manifest header declares
-    val effCluster =
-      if (zOrderBy.nonEmpty) Nil
-      else if (clusterBy.nonEmpty) clusterBy
-      else manifestClusterCols(fs, mp)
-    val zCols =
-      if (zOrderBy.nonEmpty) zOrderBy
-      else if (clusterBy.nonEmpty) Nil
-      else manifestZOrderCols(fs, mp)
+    // → whatever the manifest header declares. Clustering restores the
+    // file-range disjointness that interleaved appends erode
+    val next = base.successor(base.gen + 1, "compact").copy(
+      clusterCols =
+        if (zOrderBy.nonEmpty) Nil
+        else if (clusterBy.nonEmpty) clusterBy
+        else base.clusterCols,
+      zOrderCols =
+        if (zOrderBy.nonEmpty) zOrderBy
+        else if (clusterBy.nonEmpty) Nil
+        else base.zOrderCols)
     val nFiles = math.max(1,
       math.ceil(smallE.map(_._2).sum.toDouble / targetFileBytes).toInt)
-    val dataDir = newDataDir(gen + 1)
     // read through the recorded schema: an evolved table's older files
     // lack the added columns, and footer inference off one of THOSE would
     // silently drop data from the compacted generation
-    val ddl = manifestSchemaDdl(fs, mp)
-    val reader = ddl match {
-      case Some(d) => spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(d))
-      case None => spark.read
-    }
-    // clustering restores file-range disjointness that interleaved appends
-    // erode — without it a compaction keeps rows where they land
-    val dataDirAbs = new org.apache.hadoop.fs.Path(root, dataDir).toString
-    layout(reader
-        .parquet(smallE.map(e =>
-          new org.apache.hadoop.fs.Path(root, entryPath(e._1)).toString): _*),
-        nFiles, effCluster, zCols)
-      .write.parquet(dataDirAbs)
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(root, dataDir))
-      .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted
-      .map(n => s"$dataDir/$n").toSeq
-    val (bCols, bBits) = inheritedBloomCols(entries)
-    val blooms = collectBlooms(spark, dataDirAbs, bCols, math.max(bBits, 64))
+    val written = rewriteFiles(scan(spark, root, base, smallE.map(_._1)),
+      root, base, next, nFiles, keepStats)
     beforeMaintenanceCommitHook()
-    commitManifest(fs, root, gen + 1,
-      largeE.map(_._1) ++
-        files.map(entryLineFor(conf, root, _, keepStats, blooms)),
-      schemaDdl = ddl, clusterCols = effCluster, op = "compact",
-      zOrderCols = zCols)
-    largeE.size + files.size
+    commitManifest(fs, root, next.copy(entries = largeE.map(_._1) ++ written))
+    largeE.size + written.size
   }
 
   /** Can the bound be satisfied by EVERY row of a file with these stats?
@@ -1606,11 +1555,10 @@ object LayoutOps {
       generation: Option[Long] = None): (Long, Int) = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mp = resolveManifest(fs, root, generation, path)
-    val entries = readManifestEntries(fs, mp)
+    val m = resolveManifest(fs, root, generation, path)
     var metaRows = 0L
-    val scan = scala.collection.mutable.ArrayBuffer.empty[String]
-    entries.foreach { l =>
+    val undecided = scala.collection.mutable.ArrayBuffer.empty[String]
+    m.entries.foreach { l =>
       val js = entryStatsJson(l)
       if (mayMatch(js, bounds)) {
         val node = js.map(jsonMapper.readTree)
@@ -1620,45 +1568,13 @@ object LayoutOps {
             node.flatMap(n => Option(n.get(b.column)))
               .exists(cn => fullyCovers(cn, b))
         }
-        if (covered) metaRows += rows.get else scan += entryPath(l)
+        if (covered) metaRows += rows.get else undecided += l
       } // else: provably zero matching rows
     }
-    if (scan.isEmpty) return (metaRows, 0)
-    val reader = manifestSchemaDdl(fs, mp) match {
-      case Some(d) => spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(d))
-      case None => spark.read
-    }
-    val residual = bounds.flatMap { b =>
-      b.lower.map(v => col(b.column) >= lit(v)) ++
-        b.upper.map(v => col(b.column) <= lit(v))
-    }.reduceOption(_ && _).getOrElse(lit(true))
-    val scanned = reader.parquet(scan.map(f =>
-      new org.apache.hadoop.fs.Path(root, f).toString).toSeq: _*)
-      .where(residual).count()
-    (metaRows + scanned, scan.size)
-  }
-
-  /** Append-only change feed: the rows added after `sinceGeneration`, as
-    * one DataFrame, plus the generation to checkpoint for the next poll.
-    * Works because data files are immutable — an append generation's
-    * delta is exactly the files it newly lists. A generation that REMOVED
-    * files the base listed (compaction / delete / upsert rewrote history)
-    * makes per-file deltas meaningless: that raises, and the consumer
-    * must re-read the full table and re-checkpoint. Drive it from a poll
-    * loop or a `foreachBatch`-style scheduler; the generation number is
-    * the only consumer state. */
-  /** (table root, entry lines, schema DDL) of one resolved generation
-    * (default newest) — what a DataSource provider needs to build the
-    * lazy scan relation. */
-  private[graft] def resolvedEntriesAndSchema(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      generation: Option[Long])
-      : (org.apache.hadoop.fs.Path, Seq[String], Option[String]) = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mp = resolveManifest(fs, root, generation, path)
-    (root, readManifestEntries(fs, mp), manifestSchemaDdl(fs, mp))
+    if (undecided.isEmpty) return (metaRows, 0)
+    val scanned = scan(spark, root, m, undecided.toSeq)
+      .where(boundsPredicate(bounds)).count()
+    (metaRows + scanned, undecided.size)
   }
 
   /** (newest generation, recorded schema DDL) — the streaming change
@@ -1671,15 +1587,17 @@ object LayoutOps {
     val (g, mp) = latestManifest(fs, root).getOrElse(
       throw new java.io.IOException(
         s"$path has no committed manifest — not a manifested table"))
-    (g, manifestSchemaDdl(fs, mp))
+    (g, readHeader(fs, mp).schemaDdl)
   }
 
-  /** The data files a generation window (fromGeneration, toGeneration]
-    * ADDED, for a streaming change feed pinned to exact offsets (replay
-    * must see the same batch, so this never floats to "latest").
-    * `fromGeneration = None` is the initial snapshot: every file live at
-    * `toGeneration`. A window that REMOVED files rewrote history
-    * (compaction/delete/upsert/rollback) and throws unless
+  /** The rows a generation window (fromGeneration, toGeneration] ADDED —
+    * the change feed under both [[readManifestedChanges]] and the
+    * streaming change source. Works because data files are immutable: a
+    * window's delta is exactly the files it newly lists, and offsets are
+    * pinned (replay must see the same batch, so this never floats to
+    * "latest"). `fromGeneration = None` is the initial snapshot: every
+    * file live at `toGeneration`. A window that REMOVED files rewrote
+    * history (compaction/delete/upsert/rollback) and throws unless
     * `ignoreRewrites` — with it, the window's added files are forwarded
     * anyway, which (exactly like Delta's ignoreChanges) can re-emit
     * surviving rows of rewritten files; downstream must dedup by key.
@@ -1692,62 +1610,40 @@ object LayoutOps {
       ignoreRewrites: Boolean = false): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val to = readManifestFiles(fs,
-      resolveManifest(fs, root, Some(toGeneration), path))
-    val base = fromGeneration.map(g => readManifestFiles(fs,
-      resolveManifest(fs, root, Some(g), path)).toSet).getOrElse(Set.empty)
-    val removed = base -- to.toSet
+    val to = resolveManifest(fs, root, Some(toGeneration), path).entries
+    val base = fromGeneration.map(g => resolveManifest(fs, root, Some(g), path)
+      .entries.map(entryPath).toSet).getOrElse(Set.empty[String])
+    val removed = base -- to.map(entryPath)
     if (removed.nonEmpty && !ignoreRewrites) throw new java.io.IOException(
       s"generations ${fromGeneration.getOrElse(-1L) + 1}..$toGeneration " +
-        s"rewrote history (removed ${removed.size} files) — restart the " +
-        "stream from a fresh checkpoint, or set ignore-rewrites=true " +
-        "(surviving rows of rewritten files may be re-emitted)")
-    val delta = to.filterNot(base)
-    if (delta.isEmpty) spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    else spark.read.schema(schema).parquet(delta.map(f =>
-      new org.apache.hadoop.fs.Path(root, f).toString): _*)
+        s"rewrote history (compaction/delete/upsert/rollback removed " +
+        s"${removed.size} files) — re-read the full table and checkpoint " +
+        "the new generation; a stream restarts from a fresh checkpoint, or " +
+        "sets ignore-rewrites=true (surviving rows of rewritten files may " +
+        "be re-emitted)")
+    graft.plans.ManifestFileIndex.dataFrame(spark, root,
+      to.filterNot(l => base(entryPath(l))), schema)
   }
 
+  /** Append-only change feed: the rows added after `sinceGeneration`, as
+    * one DataFrame, plus the generation to checkpoint for the next poll —
+    * [[manifestChangesBetween]] up to the newest generation, under its
+    * schema. A generation that REMOVED files the base listed (compaction
+    * / delete / upsert rewrote history) makes per-file deltas
+    * meaningless: that raises, and the consumer must re-read the full
+    * table and re-checkpoint. Drive it from a poll loop or a
+    * `foreachBatch`-style scheduler; the generation number is the only
+    * consumer state. */
   def readManifestedChanges(spark: org.apache.spark.sql.SparkSession,
       path: String, sinceGeneration: Long): (DataFrame, Long) = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (latestGen, latestMp) = latestManifest(fs, root).getOrElse(
-      throw new java.io.IOException(
-        s"$path has no committed manifest — not a manifested table"))
-    val ddl = manifestSchemaDdl(fs, latestMp)
-    def withSchema(r: org.apache.spark.sql.DataFrameReader) = ddl match {
-      case Some(d) => r.schema(org.apache.spark.sql.types.StructType.fromDDL(d))
-      case None    => r
-    }
-    if (latestGen <= sinceGeneration) {
-      return (readManifestFiles(fs, latestMp).headOption match {
-        case Some(any) => withSchema(spark.read)
-          .parquet(new org.apache.hadoop.fs.Path(root, any).toString)
-          .where(lit(false))
-        case None => emptyManifested(spark, ddl, latestMp)
-      }, latestGen)
-    }
-    val baseMp = resolveManifest(fs, root, Some(sinceGeneration), path)
-    val base = readManifestFiles(fs, baseMp).toSet
-    val latest = readManifestFiles(fs, latestMp)
-    val removed = base -- latest.toSet
-    if (removed.nonEmpty) throw new java.io.IOException(
-      s"generations ${sinceGeneration + 1}..$latestGen rewrote history " +
-        s"(compaction/delete/upsert removed ${removed.size} files) — " +
-        "re-read the full table and checkpoint the new generation")
-    val delta = latest.filterNot(base)
-    if (delta.isEmpty) { // e.g. an empty appended batch still advances gen
-      return (latest.headOption match {
-        case Some(any) => withSchema(spark.read)
-          .parquet(new org.apache.hadoop.fs.Path(root, any).toString)
-          .where(lit(false))
-        case None => emptyManifested(spark, ddl, latestMp)
-      }, latestGen)
-    }
-    (withSchema(spark.read).parquet(delta.map(f =>
-      new org.apache.hadoop.fs.Path(root, f).toString): _*), latestGen)
+    val latest = resolveManifest(fs, root, None, path)
+    val schema = tableSchema(spark, root, latest)
+    (if (latest.gen <= sinceGeneration)
+       graft.plans.ManifestFileIndex.dataFrame(spark, root, Nil, schema)
+     else manifestChangesBetween(spark, path, Some(sinceGeneration),
+       latest.gen, schema), latest.gen)
   }
 
   /** Copy-on-write DELETE: remove every row satisfying all `bounds` (the
@@ -1771,52 +1667,26 @@ object LayoutOps {
     require(bounds.nonEmpty && bounds.exists(b =>
       b.lower.nonEmpty || b.upper.nonEmpty),
       "refusing an unbounded delete — use a new writeManifested() to replace a table")
-    val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val (gen, mp) = latestManifest(fs, root).getOrElse(throw new java.io.IOException(
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val base = readLatest(fs, root).getOrElse(throw new java.io.IOException(
       s"$path has no committed manifest — nothing to delete from"))
-    val entries = readManifestEntries(fs, mp)
-    val (touched, carried) = entries.partition(l =>
+    val (touched, carried) = base.entries.partition(l =>
       mayMatch(entryStatsJson(l), bounds))
     if (touched.isEmpty) return (0, carried.size)
-    val keepStats = inheritedStatsCols(entries)
-    val clusterCols = manifestClusterCols(fs, mp)
-    val zCols = manifestZOrderCols(fs, mp)
-    val ddl = manifestSchemaDdl(fs, mp)
-    val reader = ddl match {
-      case Some(d) => spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(d))
-      case None => spark.read
-    }
-    val matches = bounds.flatMap { b =>
-      b.lower.map(v => col(b.column) >= lit(v)) ++
-        b.upper.map(v => col(b.column) <= lit(v))
-    }.reduce(_ && _)
-    val dataDir = newDataDir(gen + 1)
-    val dataDirAbs = new org.apache.hadoop.fs.Path(root, dataDir).toString
+    val next = base.successor(base.gen + 1, "delete")
     // survivors are rewritten through the table's recorded cluster layout
     // (range-repartition + sort, not a hash scatter): each rewritten file
     // keeps a narrow key slice, so the stats that targeted THIS delete
     // still prune the next one — without it a clustered table degrades to
     // unclustered after the first maintenance pass
-    layout(reader.parquet(touched.map(e =>
-        new org.apache.hadoop.fs.Path(root, entryPath(e)).toString): _*)
-      // NULL in a bound column -> predicate NULL -> not a match -> keep
-      .where(!coalesce(matches, lit(false))),
-        touched.size, clusterCols, zCols)
-      .write.parquet(dataDirAbs)
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(root, dataDir))
-      .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted
-      .map(n => s"$dataDir/$n").toSeq
-    val (bCols, bBits) = inheritedBloomCols(entries)
-    val blooms = collectBlooms(spark, dataDirAbs, bCols, math.max(bBits, 64))
+    val written = rewriteFiles(scan(spark, root, base, touched)
+        // NULL in a bound column -> predicate NULL -> not a match -> keep
+        .where(!coalesce(boundsPredicate(bounds), lit(false))),
+      root, base, next, touched.size, inheritedStatsCols(base.entries))
     beforeMaintenanceCommitHook()
-    commitManifest(fs, root, gen + 1,
-      carried ++ files.map(entryLineFor(conf, root, _, keepStats, blooms)),
-      schemaDdl = ddl, clusterCols = clusterCols, op = "delete",
-      zOrderCols = zCols)
-    (files.size, carried.size)
+    commitManifest(fs, root, next.copy(entries = carried ++ written))
+    (written.size, carried.size)
   }
 
   /** Copy-on-write UPSERT: rows of `updates` replace existing rows with
@@ -1840,60 +1710,39 @@ object LayoutOps {
                        maxCommitRetries: Int = 5): (Int, Int) =
       retryOnCommitRace(maxCommitRetries) {
     val spark = updates.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val (gen, mp) = latestManifest(fs, root).getOrElse(throw new java.io.IOException(
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val base = readLatest(fs, root).getOrElse(throw new java.io.IOException(
       s"$path has no committed manifest — writeManifested() it first"))
-    val entries = readManifestEntries(fs, mp)
-    val ddl = manifestSchemaDdl(fs, mp)
-    val evolved = evolveSchemaDdl(ddl, updates) // fail fast, BEFORE writing
+    // fail fast, BEFORE writing
+    val next = base.successor(base.gen + 1, "upsert")
+      .copy(schemaDdl = Some(evolveSchemaDdl(base.schemaDdl, updates)))
     val span = updates.agg(min(col(keyCol)), max(col(keyCol))).head()
-    if (span.isNullAt(0)) return (0, entries.size) // no non-null update keys
+    if (span.isNullAt(0)) return (0, base.entries.size) // no non-null update keys
     val bounds = Seq(ColBounds(keyCol, Some(span.get(0)), Some(span.get(1))))
-    val (touched, carried) = entries.partition(l =>
+    val (touched, carried) = base.entries.partition(l =>
       mayMatch(entryStatsJson(l), bounds))
-    val keepStats = inheritedStatsCols(entries)
-    val clusterCols = manifestClusterCols(fs, mp)
-    val zCols = manifestZOrderCols(fs, mp)
-    val reader = ddl match {
-      case Some(d) => spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(d))
-      case None => spark.read
-    }
     // survivors of the touched files (keys NOT being updated) + the updates
     val kept =
       if (touched.isEmpty) updates
-      else reader.parquet(touched.map(e =>
-          new org.apache.hadoop.fs.Path(root, entryPath(e)).toString): _*)
+      else scan(spark, root, base, touched)
         .join(broadcast(updates.select(col(keyCol)).distinct()),
           Seq(keyCol), "left_anti")
         .unionByName(updates, allowMissingColumns = true)
-    val dataDir = newDataDir(gen + 1)
-    val dataDirAbs = new org.apache.hadoop.fs.Path(root, dataDir).toString
     // rewrite through the recorded cluster layout (see the delete path):
     // upserted key ranges stay disjoint across files, so repeated upserts
     // do not erode the skipping that targets them
-    layout(kept, math.max(1, touched.size), clusterCols, zCols)
-      .write.parquet(dataDirAbs)
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(root, dataDir))
-      .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted
-      .map(n => s"$dataDir/$n").toSeq
-    val (bCols, bBits) = inheritedBloomCols(entries)
-    val blooms = collectBlooms(spark, dataDirAbs, bCols, math.max(bBits, 64))
+    val written = rewriteFiles(kept, root, base, next,
+      math.max(1, touched.size), inheritedStatsCols(base.entries))
     beforeMaintenanceCommitHook()
-    commitManifest(fs, root, gen + 1,
-      carried ++ files.map(entryLineFor(conf, root, _, keepStats, blooms)),
-      schemaDdl = Some(evolved), clusterCols = clusterCols, op = "upsert",
-      zOrderCols = zCols)
-    (files.size, carried.size)
+    commitManifest(fs, root, next.copy(entries = carried ++ written))
+    (written.size, carried.size)
   }
 
   /** Commit log of the RETAINED generations, oldest first: one line per
-    * manifest with its recorded operation, file count, token, and the
-    * manifest object's filesystem timestamp — the table's `DESCRIBE
-    * HISTORY`. Header-only reads plus one listStatus; file counts read
-    * the entry bodies (still metadata, one small object per generation).
+    * manifest with its recorded operation, file count, token, and commit
+    * instant — the table's `DESCRIBE HISTORY`. One listStatus plus one
+    * read of each manifest (metadata, one small object per generation).
     */
   def historyManifested(spark: org.apache.spark.sql.SparkSession,
                         path: String): Seq[String] = {
@@ -1906,13 +1755,11 @@ object LayoutOps {
       .flatMap(s => manifestGen(s.getPath.getName).map(g => (g, s)))
       .sortBy(_._1)
       .map { case (g, s) =>
-        val op = manifestOp(fs, s.getPath).getOrElse("?")
-        val tok = manifestToken(fs, s.getPath).map(t => s"  token=$t")
-          .getOrElse("")
-        val files = readManifestEntries(fs, s.getPath).size
+        val m = readManifest(fs, s.getPath)
+        val tok = m.token.map(t => s"  token=$t").getOrElse("")
         val ts = java.time.Instant.ofEpochMilli(
-          manifestCommitMillis(fs, s.getPath).getOrElse(s.getModificationTime))
-        s"gen $g  op=$op  files=$files$tok  committed=$ts"
+          m.ts.getOrElse(s.getModificationTime))
+        s"gen $g  op=${m.op.getOrElse("?")}  files=${m.entries.size}$tok  committed=$ts"
       }
   }
 
@@ -1931,16 +1778,10 @@ object LayoutOps {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val src = resolveManifest(fs, root, Some(toGeneration), path)
-    val entries = readManifestEntries(fs, src)
-    val ddl = manifestSchemaDdl(fs, src)
-    val cluster = manifestClusterCols(fs, src)
-    val zCols = manifestZOrderCols(fs, src)
     retryOnCommitRace(maxCommitRetries) {
       val gen = latestManifest(fs, root).map(_._1 + 1).getOrElse(0L)
       beforeMaintenanceCommitHook()
-      commitManifest(fs, root, gen, entries, schemaDdl = ddl,
-        clusterCols = cluster, op = s"rollback:$toGeneration",
-        zOrderCols = zCols)
+      commitManifest(fs, root, src.successor(gen, s"rollback:$toGeneration"))
       gen
     }
   }
@@ -1971,7 +1812,7 @@ object LayoutOps {
     val live = fs.listStatus(md).toSeq
       .flatMap(s => manifestGen(s.getPath.getName).map(_ -> s.getPath))
       .filter(_._1 >= cutoff)
-      .flatMap(m => readManifestFiles(fs, m._2)).toSet
+      .flatMap(m => readManifestEntries(fs, m._2).map(entryPath)).toSet
     var removed = 0
     fs.listStatus(root).filter(s => s.isDirectory &&
         s.getPath.getName.startsWith("data-g")).foreach { d =>

@@ -61,25 +61,9 @@ class ManifestFileIndex(
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val keeps = dataFilters.flatMap(ManifestFileIndex.filePredicate)
-    val kept =
-      if (keeps.isEmpty) files.map(f => FileStatusWithMetadata(f._2, Map.empty))
-      else if (files.size < LayoutOps.distributedPruneThreshold)
-        files.collect { case (stats, st) if keeps.forall(_(stats)) =>
-          FileStatusWithMetadata(st, Map.empty) }
-      else {
-        // past the planning-cost threshold the same decisions run
-        // DISTRIBUTED over the stats strings (the translated predicates
-        // capture only plain data), mirroring the eager path's
-        // pruneEntries — only surviving indices come back to the driver
-        import spark.implicits._
-        val stats = files.map(_._1).zipWithIndex
-        val keep = spark.createDataset(stats)
-          .filter(p => keeps.forall(_(p._1)))
-          .collect().map(_._2).toSet
-        files.zipWithIndex.collect { case ((_, st), i) if keep(i) =>
-          FileStatusWithMetadata(st, Map.empty) }
-      }
-    Seq(PartitionDirectory(InternalRow.empty, kept))
+    Seq(PartitionDirectory(InternalRow.empty,
+      ManifestFileIndex.prune(spark, files, keeps)
+        .map(FileStatusWithMetadata(_, Map.empty))))
   }
 }
 
@@ -117,10 +101,32 @@ object ManifestFileIndex {
       options = Map.empty)(spark)
   }
 
-  /** [[relation]] as a DataFrame — `readManifested`'s scan. */
+  /** [[relation]] as a DataFrame — the scan of every read of a
+    * manifested table's listed files. */
   def dataFrame(spark: SparkSession, root: Path, entries: Seq[String],
       schema: StructType): DataFrame =
     spark.baseRelationToDataFrame(relation(spark, root, entries, schema))
+
+  /** The files whose stats every `keeps` predicate admits, in order —
+    * the one pruner behind both the index's `listFiles` and
+    * `LayoutOps.manifestSkipFiles`. Below
+    * `LayoutOps.distributedPruneThreshold` files it is a driver loop;
+    * above it the same predicates run DISTRIBUTED over the stats strings
+    * (they capture only plain data) and only the surviving indices come
+    * back to the driver. */
+  private[graft] def prune[T](spark: SparkSession,
+      files: Seq[(Option[String], T)],
+      keeps: Seq[Option[String] => Boolean]): Seq[T] =
+    if (keeps.isEmpty) files.map(_._2)
+    else if (files.size < LayoutOps.distributedPruneThreshold)
+      files.collect { case (stats, f) if keeps.forall(_(stats)) => f }
+    else {
+      import spark.implicits._
+      val keep = spark.createDataset(files.map(_._1).zipWithIndex)
+        .filter(p => keeps.forall(_(p._1)))
+        .collect().map(_._2).toSet
+      files.zipWithIndex.collect { case ((_, f), i) if keep(i) => f }
+    }
 
   /** A Catalyst literal as the JVM value the stats comparator
     * understands; None = a type stats cannot prune (→ keep files). */

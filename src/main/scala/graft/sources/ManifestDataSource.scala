@@ -2,10 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.SQLContext
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider}
-import org.apache.spark.sql.types.StructType
 
 import graft.operators.LayoutOps
-import graft.plans.ManifestFileIndex
 
 /** Batch DataSource over a manifest-committed table, so the table is a
   * first-class citizen of every Spark entry point — not just the
@@ -18,11 +16,12 @@ import graft.plans.ManifestFileIndex
   *
   * Options: `path` (required), `generation` (pin a retained generation —
   * time travel), `as-of` (ISO-8601 instant, resolved via
-  * [[LayoutOps.generationAsOf]]). The returned relation scans through
-  * [[ManifestFileIndex]], so WHERE clauses prune data files at physical
+  * [[LayoutOps.generationAsOf]]). The returned relation is
+  * `readManifested`'s own, so WHERE clauses prune data files at physical
   * planning from recorded range stats and blooms, exactly like the API
-  * path. The short name resolves through the standard
-  * `META-INF/services` registration.
+  * path, and pre-schema manifests read with the schema their files carry.
+  * The short name resolves through the standard `META-INF/services`
+  * registration.
   */
 class ManifestDataSource extends RelationProvider with DataSourceRegister {
 
@@ -39,12 +38,6 @@ class ManifestDataSource extends RelationProvider with DataSourceRegister {
     val gen = parameters.get("generation").map(_.toLong)
       .orElse(parameters.get("as-of").map(ts => LayoutOps.generationAsOf(
         spark, path, java.time.Instant.parse(ts).toEpochMilli)))
-    val (root, entries, ddl) = LayoutOps.resolvedEntriesAndSchema(
-      spark, path, gen)
-    val schema = ddl.map(StructType.fromDDL).getOrElse(
-      throw new java.io.IOException(
-        s"$path records no schema — pre-schema manifests are readable " +
-          "only via LayoutOps.readManifested"))
-    ManifestFileIndex.relation(spark, root, entries, schema)
+    LayoutOps.manifestedRelation(spark, path, gen)
   }
 }

@@ -252,19 +252,6 @@ class GraphOpsSpec extends SparkSpec {
       row("edges", "join", 25, 25, 32, 28)).toMap
   }
 
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try { body; org.apache.spark.ListenerBusDrain(sc); jobs.get }
-    finally sc.removeSparkListener(listener)
-  }
-
   test("jobs per call stay within the committed budget for every walk, layout and regime") {
     def walks(hub: Long): Seq[(String, () => Unit)] = Seq(
       "pageRank" -> (() => GraphOps.pageRank(smallEdges, iterations = 3,

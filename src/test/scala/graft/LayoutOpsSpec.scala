@@ -1760,4 +1760,89 @@ class LayoutOpsSpec extends SparkSpec {
       "b.parquet")
     assert(LayoutOps.inheritedStatsCols(entries) === Seq("id"))
   }
+
+  test("every manifested read, maintenance and describe op opens its " +
+      "resolved manifest exactly once") {
+    import graft.operators.LayoutOps.ColBounds
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.fauxcnt.impl", classOf[FauxOpenCountFileSystem].getName)
+    val base = java.nio.file.Files.createTempDirectory("graft-opens").toString
+    val mt = s"fauxcnt://$base/t"
+    try {
+      LayoutOps.writeManifested(spark.range(400)
+          .select(col("id"), (col("id") % 7).as("v")), mt,
+        numFiles = 4, statsCols = Seq("id"), clusterBy = Seq("id"))
+      def opens(body: => Any): Int = {
+        FauxOpenCountFileSystem.manifestOpens.set(0)
+        body
+        FauxOpenCountFileSystem.manifestOpens.get()
+      }
+      val bounds = Seq(ColBounds("id", Some(10L), Some(150L)))
+      val counts = Seq(
+        "readManifested" -> opens(LayoutOps.readManifested(spark, mt).collect()),
+        "readManifestedWhere" ->
+          opens(LayoutOps.readManifestedWhere(spark, mt, bounds).collect()),
+        "countManifestedWhere" ->
+          opens(LayoutOps.countManifestedWhere(spark, mt, bounds)),
+        "describeManifest" -> opens(LayoutOps.describeManifest(spark, mt)),
+        "deleteManifestedWhere" -> opens(LayoutOps.deleteManifestedWhere(
+          spark, mt, Seq(ColBounds("id", Some(0L), Some(9L))))),
+        "upsertManifested" -> opens(LayoutOps.upsertManifested(
+          Seq((20L, 99L)).toDF("id", "v"), mt, "id")),
+        "compactManifest" -> opens(LayoutOps.compactManifest(spark, mt)),
+        "rollbackManifested" -> opens(LayoutOps.rollbackManifested(spark, mt, 2L)))
+      info(counts.map { case (op, n) => s"$op=$n" }.mkString(" "))
+      for ((op, n) <- counts)
+        assert(n === 1, s"$op opened its manifest $n times")
+      // the ops did their work: gen 1 deleted ids 0..9, gen 2 upserted id
+      // 20, gen 3 compacted, gen 4 rolled back to gen 2's listing
+      val t = LayoutOps.readManifested(spark, mt)
+      assert(t.count() === 390)
+      assert(t.where(col("id") === 20).head().getLong(1) === 99L)
+      assert(LayoutOps.historyManifested(spark, mt).last.contains("op=rollback:2"))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+  }
+
+  /** Jobs per call on a small clustered table with blooms, counted with
+    * reads collected. Seeded from measured counts; a count may only go
+    * down. */
+  private val layoutJobBudget: Map[String, Int] = Map(
+    "writeManifested" -> 6,
+    "appendManifested" -> 3,
+    "readManifestedWhere" -> 1,
+    "countManifestedWhere" -> 2,
+    "upsertManifested" -> 8,
+    "deleteManifestedWhere" -> 6,
+    "compactManifest" -> 5)
+
+  test("jobs per call stay within the committed budget for the manifested " +
+      "write, maintenance and read ops") {
+    import graft.operators.LayoutOps.ColBounds
+    val base = java.nio.file.Files.createTempDirectory("graft-ljobs").toString
+    val mt = s"$base/t"
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi)
+      .select(col("id"), (col("id") % 97).as("c"), (col("id") * 0.5).as("p"))
+    val bounds = Seq(ColBounds("id", Some(500L), Some(1500L)))
+    try {
+      val counts = Seq(
+        "writeManifested" -> jobsOf(LayoutOps.writeManifested(rows(0, 4000),
+          mt, numFiles = 4, statsCols = Seq("id"), clusterBy = Seq("id"),
+          bloomCols = Seq("c"))),
+        "appendManifested" -> jobsOf(LayoutOps.appendManifested(
+          rows(4000, 4400), mt, statsCols = Seq("id"))),
+        "readManifestedWhere" ->
+          jobsOf(LayoutOps.readManifestedWhere(spark, mt, bounds).collect()),
+        "countManifestedWhere" ->
+          jobsOf(LayoutOps.countManifestedWhere(spark, mt, bounds)),
+        "upsertManifested" -> jobsOf(LayoutOps.upsertManifested(
+          rows(1000, 1100).withColumn("p", lit(1.0)), mt, "id")),
+        "deleteManifestedWhere" ->
+          jobsOf(LayoutOps.deleteManifestedWhere(spark, mt, bounds)),
+        "compactManifest" -> jobsOf(LayoutOps.compactManifest(spark, mt)))
+      info(counts.map { case (op, n) => s"$op=$n" }.mkString(" "))
+      for ((op, n) <- counts)
+        assert(n <= layoutJobBudget.getOrElse(op, -1), s"$op submitted $n jobs")
+      assert(LayoutOps.readManifested(spark, mt).count() === 4400 - 1001)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+  }
 }

@@ -90,22 +90,50 @@ class ManifestFileIndexSpec extends SparkSpec {
   test("lazy pruning decisions agree with the eager readManifestedWhere " +
       "API on randomized bounds") {
     withTable { t =>
-      LayoutOps.writeManifested(spark.range(2000)
-          .select(col("id"), (col("id") % 7).as("m")), t,
-        numFiles = 8, statsCols = Seq("id"), clusterBy = Seq("id"))
+      // b = 3 * id is bloom-only (no range stats); ts is one minute per id
+      // from 2020-01-01T00:00Z, with TIMESTAMP_MICROS footer stats
+      val epoch = java.time.Instant.parse("2020-01-01T00:00:00Z")
+      val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
+      spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      try LayoutOps.writeManifested(spark.range(2000)
+          .select(col("id"), (col("id") % 7).as("m"), (col("id") * 3).as("b"),
+            timestamp_micros(lit(epoch.toEpochMilli * 1000L) +
+              col("id") * 60000000L).as("ts")), t,
+        numFiles = 8, statsCols = Seq("id", "ts"), clusterBy = Seq("id"),
+        bloomCols = Seq("b"))
+      finally prev match {
+        case Some(v) => spark.conf.set("spark.sql.parquet.outputTimestampType", v)
+        case None => spark.conf.unset("spark.sql.parquet.outputTimestampType")
+      }
       val rnd = new scala.util.Random(31)
-      for (_ <- 1 to 20) {
+      val ranges = (1 to 20).map { _ =>
         val lo = rnd.nextInt(2200).toLong
         val hi = lo + rnd.nextInt(500)
-        val eager = LayoutOps.readManifestedWhere(spark, t,
-          Seq(ColBounds("id", Some(lo), Some(hi))))
-        val lazyDf = LayoutOps.readManifested(spark, t)
-          .where(col("id") >= lo && col("id") <= hi)
-        assert(lazyDf.count() === eager.count(), s"[$lo, $hi]")
+        (s"[$lo, $hi]", ColBounds("id", Some(lo), Some(hi)),
+          col("id") >= lo && col("id") <= hi)
+      }
+      // equality on the bloom column: present and absent values
+      val points = Seq(0L, 1500L, 5997L, 301L, 9000L).map(v =>
+        (s"b = $v", ColBounds("b", Some(v), Some(v)), col("b") === v))
+      // timestamp ranges in minutes from the epoch: inside one file,
+      // across a file boundary, over the data's end, and before it
+      val times = Seq((100L, 130L), (240L, 260L), (1990L, 2100L),
+          (-600L, -10L)).map { case (lo, hi) =>
+        val (tLo, tHi) = (java.sql.Timestamp.from(epoch.plusSeconds(lo * 60)),
+          java.sql.Timestamp.from(epoch.plusSeconds(hi * 60)))
+        (s"ts minutes [$lo, $hi]", ColBounds("ts", Some(tLo), Some(tHi)),
+          col("ts") >= lit(tLo) && col("ts") <= lit(tHi))
+      }
+      for ((label, bound, predicate) <- ranges ++ points ++ times) {
+        val eager = LayoutOps.readManifestedWhere(spark, t, Seq(bound))
+        val lazyDf = LayoutOps.readManifested(spark, t).where(predicate)
+        assert(lazyDf.count() === eager.count(), label)
         val (keptEager, total) = LayoutOps.manifestSkipFiles(spark, t,
-          Seq(ColBounds("id", Some(lo), Some(hi))))
+          Seq(bound))
         assert(scannedFiles(lazyDf) === keptEager.size.toLong,
-          s"[$lo, $hi] of $total files")
+          s"$label of $total files")
+        assert(scannedFiles(eager) === keptEager.size.toLong,
+          s"$label of $total files (readManifestedWhere)")
       }
     }
   }
@@ -244,6 +272,43 @@ class ManifestFileIndexSpec extends SparkSpec {
         org.apache.spark.sql.types.StructType.fromDDL("id BIGINT"))
       assert(idx.sizeInBytes === entries.flatMap(LayoutOps.entryBytes).sum)
       assert(idx.inputFiles.length === 2)
+    }
+  }
+
+  test("schema-less (pre-#schema=) manifests infer their schema from the " +
+      "listed files and scan through the same pruning index") {
+    withTable { t =>
+      LayoutOps.writeManifested(spark.range(1000)
+          .select(col("id"), (col("id") % 7).as("v")), t,
+        numFiles = 4, statsCols = Seq("id"), clusterBy = Seq("id"))
+      LayoutOps.appendManifested(spark.range(1000, 1200)
+          .select(col("id"), (col("id") % 7).as("v")), t,
+        numFiles = 1, statsCols = Seq("id"))
+      // strip the #schema= header from every manifest — the shape of a
+      // table committed before manifests recorded schemas
+      val md = new java.io.File(s"$t/_manifests")
+      md.listFiles().filter(_.getName.endsWith("manifest")).foreach { f =>
+        val lines = new String(
+          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+          .split("\n").filterNot(_.startsWith("#schema="))
+        java.nio.file.Files.write(f.toPath,
+          (lines.mkString("\n") + "\n").getBytes("UTF-8"))
+        val crc = new java.io.File(md, s".${f.getName}.crc")
+        if (crc.exists()) crc.delete(): Unit
+      }
+      assert(!LayoutOps.describeManifest(spark, t).exists(_.startsWith("schema:")))
+      val all = LayoutOps.readManifested(spark, t)
+      assert(all.columns.toSeq === Seq("id", "v"))
+      assert(all.count() === 1200)
+      val bounds = Seq(ColBounds("id", Some(100L), Some(300L)))
+      assert(LayoutOps.readManifestedWhere(spark, t, bounds).collect()
+          .map(_.getLong(0)).sorted.toSeq ===
+        all.where(col("id").between(100L, 300L)).collect()
+          .map(_.getLong(0)).sorted.toSeq)
+      val (kept, total) = LayoutOps.manifestSkipFiles(spark, t, bounds)
+      assert(total === 5 && kept.size < total)
+      assert(scannedFiles(LayoutOps.readManifestedWhere(spark, t, bounds)) ===
+        kept.size.toLong, "the bounded read must still prune files")
     }
   }
 }

@@ -9,6 +9,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = super.afterAll() // session shared across suites
+
+  /** Spark jobs `body` submits: a listener counts job starts, and the
+    * listener bus is drained before and after so no other job's events
+    * leak in or go missing. */
+  def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.ListenerBusDrain(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
