@@ -53,9 +53,6 @@ object ClassifierOps {
         lit(1.0).as("x")))
   }
 
-  private def round6(v: Double): Double =
-    BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   private def marginOf(feats: DataFrame, w: Array[Double]): DataFrame = {
     val wLit = array(w.toIndexedSeq.map(lit): _*)
     feats.groupBy("id")
@@ -94,7 +91,7 @@ object ClassifierOps {
         .groupBy("bucket").agg(sum(col("x") * col("r")).as("g"))
         .collect().map(r => r.getLong(0).toInt -> r.getDouble(1)).toMap
       w = w.zipWithIndex.map { case (wv, b) =>
-        round6(wv - lr * grad.getOrElse(b, 0.0) / n)
+        SimilarityOps.roundHalfUp(wv - lr * grad.getOrElse(b, 0.0) / n, 6)
       }
     }
     w

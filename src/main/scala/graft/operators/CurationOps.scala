@@ -235,23 +235,6 @@ object CurationOps {
       .select(col(idCol), col(groupCol), col("rk"))
   }
 
-  /** Concat-and-chunk sequence packing: assign every document a position in
-    * a fixed-token-budget training-sequence stream. Documents are ordered
-    * deterministically (md5 rank, then id) within `numBuckets` hash
-    * buckets; each bucket is an independent stream chunked into sequences
-    * of `budget` tokens. Returns (id, bucket, seq_id, seq_offset,
-    * n_tokens): the document's tokens start at `seq_offset` of sequence
-    * `seq_id` in its bucket's stream and may straddle into the following
-    * sequence(s) — the GPT-style packed-loader layout, where the chunker
-    * downstream slices the concatenated stream.
-    *
-    * Scale shape: ONE shuffle (by bucket) and a per-bucket sort; no global
-    * ordering anywhere. Size numBuckets so a bucket's documents fit an
-    * executor's sort spill comfortably — streams are independent, so more
-    * buckets only means more (shorter) packed streams. Offsets are longs:
-    * a 2^53 float path would silently lose token positions at real corpus
-    * sizes, so the division stays integral (`div`).
-    */
   /** End-to-end curation composition (the `curate` CLI verb's engine and
     * the q_curate gate): exact dedup → near-dup cluster removal → token
     * floor → benchmark decontamination → optional mixture resample.
@@ -326,6 +309,23 @@ object CurationOps {
     (cur, stages.toSeq)
   }
 
+  /** Concat-and-chunk sequence packing: assign every document a position in
+    * a fixed-token-budget training-sequence stream. Documents are ordered
+    * deterministically (md5 rank, then id) within `numBuckets` hash
+    * buckets; each bucket is an independent stream chunked into sequences
+    * of `budget` tokens. Returns (id, bucket, seq_id, seq_offset,
+    * n_tokens): the document's tokens start at `seq_offset` of sequence
+    * `seq_id` in its bucket's stream and may straddle into the following
+    * sequence(s) — the GPT-style packed-loader layout, where the chunker
+    * downstream slices the concatenated stream.
+    *
+    * Scale shape: ONE shuffle (by bucket) and a per-bucket sort; no global
+    * ordering anywhere. Size numBuckets so a bucket's documents fit an
+    * executor's sort spill comfortably — streams are independent, so more
+    * buckets only means more (shorter) packed streams. Offsets are longs:
+    * a 2^53 float path would silently lose token positions at real corpus
+    * sizes, so the division stays integral (`div`).
+    */
   def packSequences(df: DataFrame, idCol: String, textCol: String,
                     budget: Int, numBuckets: Int): DataFrame = {
     require(budget >= 1, s"token budget must be >= 1, got $budget")

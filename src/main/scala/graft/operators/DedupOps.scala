@@ -416,18 +416,17 @@ object DedupOps {
                         maxBruteRows: Long = 100000L): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
+    val sh = docs.select(col(idCol).as("id"),
+      array_sort(shingleHashes64(TextOps.tokens(col(textCol)), shingleN)).as("hs"))
     // Enforce the bounded-baseline contract (see cosineNearDupPairs): an
     // uncapped collect is a silent driver OOM; past the cap the answer is
     // the banded-LSH path, not a bigger cap.
-    val nRows = docs.count()
-    require(nRows <= maxBruteRows,
+    val side = SimilarityOps.collectBounded(sh.as[(Long, Seq[Long])],
+      maxBruteRows,
       s"ngramJaccardPairs is the BOUNDED brute-force baseline: corpus has " +
-        s"$nRows rows > maxBruteRows=$maxBruteRows. Use the banded-LSH " +
+        s"more rows than maxBruteRows=$maxBruteRows. Use the banded-LSH " +
         "path (DedupOps.minhashNearDupPairs) for full corpora, or raise " +
         "maxBruteRows if the driver heap allows.")
-    val sh = docs.select(col(idCol).as("id"),
-      array_sort(shingleHashes64(TextOps.tokens(col(textCol)), shingleN)).as("hs"))
-    val side = sh.as[(Long, Seq[Long])].collect()
       .map { case (i, v) => (i, v.toArray) }.sortBy(_._1)
     val bc = spark.sparkContext.broadcast(side)
     sh.as[(Long, Seq[Long])].mapPartitions { it =>
@@ -530,6 +529,25 @@ object DedupOps {
     expandPairs(repPairs, membership, Seq(lit(0).as("dist")))
   }
 
+  /** The persisted-index relation for [[dedupAgainstIndex]]: one row per
+    * DISTINCT corpus text — (id = group-min doc id, fp = bag-of-words
+    * fingerprint, hs = 60-bit shingle-hash set). This is what a production
+    * pipeline stores between snapshots instead of re-scanning the corpus:
+    * ~50 bytes + one long per distinct shingle per distinct text, never
+    * the text itself. All three columns are pure md5-derived functions of
+    * the text, so a stored index and a recomputation are interchangeable
+    * ([[dedupAgainstCorpus]] is literally `dedupAgainstIndex` over
+    * `corpusDedupIndex(existing)`). Persist with
+    * `LayoutOps.writeManifested` / append per snapshot. */
+  def corpusDedupIndex(existing: DataFrame, idCol: String, textCol: String,
+                       shingleN: Int = 3): DataFrame = {
+    val (eReps, _) = collapseIdentical(
+      existing.select(col(idCol), col(textCol)), idCol, md5(col(textCol)))
+    eReps.select(col(idCol).as("id"),
+      tokenSetFingerprint(col(textCol)).as("fp"),
+      shingleHashes64(TextOps.tokens(col(textCol)), shingleN).as("hs"))
+  }
+
   /** Incremental (cross-snapshot) dedup: classify every document of an
     * incoming batch against an EXISTING corpus without re-deduplicating
     * the corpus — the shape a continuously-ingesting training pipeline
@@ -559,25 +577,6 @@ object DedupOps {
     *
     * @return one row per incoming doc: (id, status, matched_id, jaccard)
     */
-  /** The persisted-index relation for [[dedupAgainstIndex]]: one row per
-    * DISTINCT corpus text — (id = group-min doc id, fp = bag-of-words
-    * fingerprint, hs = 60-bit shingle-hash set). This is what a production
-    * pipeline stores between snapshots instead of re-scanning the corpus:
-    * ~50 bytes + one long per distinct shingle per distinct text, never
-    * the text itself. All three columns are pure md5-derived functions of
-    * the text, so a stored index and a recomputation are interchangeable
-    * ([[dedupAgainstCorpus]] is literally `dedupAgainstIndex` over
-    * `corpusDedupIndex(existing)`). Persist with
-    * `LayoutOps.writeManifested` / append per snapshot. */
-  def corpusDedupIndex(existing: DataFrame, idCol: String, textCol: String,
-                       shingleN: Int = 3): DataFrame = {
-    val (eReps, _) = collapseIdentical(
-      existing.select(col(idCol), col(textCol)), idCol, md5(col(textCol)))
-    eReps.select(col(idCol).as("id"),
-      tokenSetFingerprint(col(textCol)).as("fp"),
-      shingleHashes64(TextOps.tokens(col(textCol)), shingleN).as("hs"))
-  }
-
   def dedupAgainstCorpus(existing: DataFrame, incoming: DataFrame,
                          idCol: String, textCol: String,
                          shingleN: Int = 3, k: Int = 12, bands: Int = 4,

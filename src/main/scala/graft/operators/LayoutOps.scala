@@ -650,7 +650,8 @@ object LayoutOps {
 
   private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  /** Footer min/max/null-count for `cols` of one parquet file. A column
+  /** Footer min/max/null-count for `cols` of one parquet file, with the
+    * file's total row count from the same footer read. A column
     * appears in the result only if EVERY row group has usable stats for it
     * (a single unknown block would make pruning unsound). min/max are both
     * absent only when the column is PROVABLY all-null in the file
@@ -662,7 +663,8 @@ object LayoutOps {
   private[graft] def parquetFileStats(
       conf: org.apache.hadoop.conf.Configuration,
       file: org.apache.hadoop.fs.Path,
-      cols: Set[String]): Map[String, (String, Option[String], Option[String], Long)] = {
+      cols: Set[String])
+      : (Map[String, (String, Option[String], Option[String], Long)], Long) = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -742,10 +744,10 @@ object LayoutOps {
         }
       }
       // min/max-less entries are kept ONLY when provably all-null
-      acc.filter { case (name, (_, mn, mx, nulls)) =>
+      (acc.filter { case (name, (_, mn, mx, nulls)) =>
         (mn.nonEmpty && mx.nonEmpty) ||
           (rowsSeen(name) > 0 && nulls == rowsSeen(name))
-      }.toMap
+      }.toMap, reader.getRecordCount)
     } finally reader.close()
   }
 
@@ -845,18 +847,21 @@ object LayoutOps {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
   }
 
-  /** One Spark job over a freshly written data directory: per file, per
-    * bloom column, the OR of its value-hash bloom bits. Keyed by file
-    * NAME (unique within the directory). */
+  /** One Spark job over a freshly written data directory of the given
+    * schema: per file, per bloom column, the OR of its value-hash bloom
+    * bits. Keyed by file NAME (unique within the directory). */
   private def collectBlooms(spark: org.apache.spark.sql.SparkSession,
-      dataDirAbs: String, bloomCols: Seq[String],
+      dataDirAbs: String, schema: org.apache.spark.sql.types.StructType,
+      bloomCols: Seq[String],
       numBits: Int): Map[String, Map[String, Array[Long]]] = {
     if (bloomCols.isEmpty) return Map.empty
     val aggs = bloomCols.map { c =>
       udaf(new BloomValueAgg(numBits, bloomHashes))
         .apply(PipelineOps.hash60(col(c))).as(s"__bloom_$c")
     }
-    spark.read.parquet(dataDirAbs)
+    // read with the schema the write used: inferring it would cost a
+    // footer-reading job per call
+    spark.read.schema(schema).parquet(dataDirAbs)
       .groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -914,20 +919,11 @@ object LayoutOps {
     jsonMapper.writeValueAsString(root)
   }
 
-  /** Total row count from a parquet footer (block row counts summed) —
-    * metadata only, like [[parquetFileStats]]. */
-  private def parquetRowCount(conf: org.apache.hadoop.conf.Configuration,
-      file: org.apache.hadoop.fs.Path): Long = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    try reader.getRecordCount finally reader.close()
-  }
-
   /** Manifest entry line for one data file: path, plus a stats suffix when
     * requested and obtainable. Any suffix also records the file's row
     * count, which makes fully-covered COUNTs metadata-only.
     *
-    * Cost note: the footer reads here are driver-side, but only for the
+    * Cost note: one footer read per file, driver-side, and only for the
     * files the CURRENT commit adds (an append reads its own batch's
     * footers, never the table's). A 100k-file table accumulates its stats
     * across commits; no operation ever re-reads all live footers — that
@@ -937,13 +933,13 @@ object LayoutOps {
       statsCols: Seq[String],
       blooms: Map[String, Map[String, Array[Long]]]): String = {
     val abs = new org.apache.hadoop.fs.Path(root, relPath)
-    val m = if (statsCols.isEmpty)
-      Map.empty[String, (String, Option[String], Option[String], Long)]
-    else parquetFileStats(conf, abs, statsCols.toSet)
     val b = blooms.getOrElse(abs.getName, Map.empty)
-    if (m.isEmpty && b.isEmpty) relPath
-    else s"$relPath\t${statsJson(m, b, Some(parquetRowCount(conf, abs)),
-      Some(bytes))}"
+    if (statsCols.isEmpty && b.isEmpty) relPath
+    else {
+      val (m, rows) = parquetFileStats(conf, abs, statsCols.toSet)
+      if (m.isEmpty && b.isEmpty) relPath
+      else s"$relPath\t${statsJson(m, b, Some(rows), Some(bytes))}"
+    }
   }
 
   /** The byte length recorded for an entry's data file, if any — lets a
@@ -1280,10 +1276,12 @@ object LayoutOps {
     val conf = spark.sparkContext.hadoopConfiguration
     val dataDir = newDataDir(gen)
     val dir = new org.apache.hadoop.fs.Path(root, dataDir)
-    layout(df, numFiles, clusterBy, zOrderBy).write.parquet(dir.toString)
+    val laid = layout(df, numFiles, clusterBy, zOrderBy)
+    laid.write.parquet(dir.toString)
     val files = dir.getFileSystem(conf).listStatus(dir)
       .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-    val blooms = collectBlooms(spark, dir.toString, bloomCols, bloomBits)
+    val blooms = collectBlooms(spark, dir.toString, laid.schema, bloomCols,
+      bloomBits)
     files.toSeq.map(f => entryLineFor(conf, root,
       s"$dataDir/${f.getPath.getName}", f.getLen, statsCols, blooms))
   }

@@ -1,23 +1,31 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Similarity search over embedding columns (array<float>): brute-force
-  * cosine top-k as the exact baseline, random-hyperplane LSH bucketing as
-  * the scale path, and cosine near-duplicate pairs.
+  * cosine top-k as the exact baseline, random-hyperplane LSH bucketing,
+  * IVF (seeded or k-means-trained coarse cells), product quantization
+  * (flat PQ, PQ with exact re-rank, IVF-PQ over residuals), cosine
+  * near-duplicate pairs, SemDeDup, and persisted ANN models.
   *
   * Scale design:
-  *  - All vector math is pure column expressions (`zip_with` + `aggregate`)
-  *    inside whole-stage codegen — no UDF boxing per element.
-  *  - Brute-force top-k broadcasts the QUERY set (small) against the corpus
-  *    (huge): one pass, no shuffle of the corpus, then a per-query window
-  *    rank on the (corpus x queries) product — the corpus side never moves.
+  *  - All vector math is pure column expressions (`zip_with` + `aggregate`,
+  *    or the native dot kernel) inside whole-stage codegen — no UDF boxing
+  *    per element. Trained models are tiny driver arrays that re-enter the
+  *    plan as LITERALS, so assignment and scoring never join a model table.
+  *  - Every search broadcasts the QUERY set (small) against the corpus
+  *    (huge): one pass, no shuffle of the corpus, then one shared
+  *    per-query window rank ([[topKPerQuery]]).
   *  - The hyperplane code is a per-row expression; candidate generation is
   *    an equi-join on the code, turning O(n²) into bucket-local work. The
   *    hyperplanes are md5-derived ±1 vectors, so codes are deterministic
   *    and engine-portable (no stored model needed).
+  *  - IVF and PQ quantizers train in ONE Lloyd loop ([[lloyd]]): one seed
+  *    collect, then one grouped aggregation per iteration for all
+  *    subspaces.
   */
 object SimilarityOps {
 
@@ -39,12 +47,59 @@ object SimilarityOps {
   private def fastDot(df: DataFrame, a: Column, b: Column): Column =
     graft.functions.GraftFunctions.dot(df.sparkSession, a, b)
 
+  /** A driver-side vector as a literal array<double> column. */
+  private def vecLit(v: Array[Double]): Column = array(v.map(lit).toIndexedSeq: _*)
+
+  /** Subspace `j`'s `dsub`-wide slice of a vector column. */
+  private def subvector(v: Column, j: Int, dsub: Int): Column =
+    slice(v, j * dsub + 1, dsub)
+
+  /** BigDecimal HALF_UP rounding — what Spark's and DuckDB's round() do,
+    * so driver-side rounding matches a rounded column bit for bit. */
+  private[operators] def roundHalfUp(x: Double, decimals: Int): Double =
+    BigDecimal(x).setScale(decimals, BigDecimal.RoundingMode.HALF_UP).toDouble
+
   /** (id, v, nrm): vectors with their norms precomputed ONCE — pair scans
     * then do a single dot per pair instead of three. */
   private def withNorms(df: DataFrame, idCol: String, vecCol: String,
                         idAs: String, vAs: String, nrmAs: String): DataFrame =
     df.select(col(idCol).as(idAs), asDouble(col(vecCol)).as(vAs))
       .withColumn(nrmAs, sqrt(dot(col(vAs), col(vAs))))
+
+  /** The tail every top-k search shares: (query_id, vec_id, `name` =
+    * `score` rounded to 6 decimals, rn), keeping each query's k best by
+    * (score desc, vec_id asc). */
+  private def topKPerQuery(pairs: DataFrame, score: Column, name: String,
+                           k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col(name).desc, col("vec_id").asc)
+    pairs.select(col("query_id"), col("vec_id"), round(score, 6).as(name))
+      .withColumn("rn", row_number().over(w)).where(col("rn") <= k)
+  }
+
+  /** An empty result with the given typed columns: what an empty corpus
+    * or model returns (a zero-argument greatest()/least() fold would fail
+    * analysis). */
+  private def emptyResult(spark: SparkSession,
+                          cols: (String, DataType)*): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(cols.map { case (n, t) => StructField(n, t) }))
+
+  /** [[emptyResult]] in [[topKPerQuery]]'s schema. */
+  private def emptyTopK(spark: SparkSession, name: String): DataFrame =
+    emptyResult(spark, "query_id" -> LongType, "vec_id" -> LongType,
+      name -> DoubleType, "rn" -> IntegerType)
+
+  /** At most `maxRows` rows of `ds` on the driver, or `tooMany` as the
+    * error: ONE capped collect, so the bound holds for exactly the rows
+    * collected, whatever the input does between two scans. */
+  private[operators] def collectBounded[T](ds: Dataset[T], maxRows: Long,
+                                           tooMany: => String): Array[T] = {
+    val rows = ds.limit((maxRows max 0L min (Int.MaxValue - 1L)).toInt + 1)
+      .collect()
+    require(rows.length <= maxRows, tooMany)
+    rows
+  }
 
   /** Exact brute-force cosine top-k: for each query vector, the k nearest
     * corpus vectors (self excluded). Queries broadcast; corpus stays put. */
@@ -53,13 +108,8 @@ object SimilarityOps {
                      k: Int): DataFrame = {
     val c = withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm")
     val q = withNorms(queries, qidCol, qvecCol, "query_id", "qv", "qnrm")
-    val scored = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(fastDot(c, col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6)
-          .as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
+    topKPerQuery(c.join(broadcast(q), col("vec_id") =!= col("query_id")),
+      fastDot(c, col("qv"), col("v")) / (col("qnrm") * col("nrm")), "cos", k)
   }
 
   /** All near-duplicate pairs by cosine >= threshold (brute-force; the
@@ -75,27 +125,20 @@ object SimilarityOps {
     // BOUNDED brute-force baseline; LSH bucketing is the full-corpus path.
     val spark = corpus.sparkSession
     import spark.implicits._
+    val c = withNorms(corpus, idCol, vecCol, "id", "v", "nrm")
     // ENFORCE the bound, don't document it: collecting an uncapped corpus
     // is a silent driver OOM. The cap is overridable for callers that know
     // their driver heap; past it, the answer is the LSH path, not a bigger
     // cap.
-    val nRows = corpus.count()
-    require(nRows <= maxBruteRows,
+    val side = collectBounded(c.as[(Long, Seq[Double], Double)], maxBruteRows,
       s"cosineNearDupPairs is the BOUNDED brute-force baseline: corpus has " +
-        s"$nRows rows > maxBruteRows=$maxBruteRows. Use the LSH-bucketed " +
+        s"more rows than maxBruteRows=$maxBruteRows. Use the LSH-bucketed " +
         "path (SimilarityOps.lshTopK) or SemDeDup (semDedup) for full " +
         "corpora, or raise maxBruteRows if the driver heap allows.")
-    val c = withNorms(corpus, idCol, vecCol, "id", "v", "nrm")
-    val side = c.select(col("id"), col("v"), col("nrm"))
-      .as[(Long, Seq[Double], Double)].collect()
       .map { case (i, v, n) => (i, v.toArray, n) }
       .sortBy(_._1)
     val bc = spark.sparkContext.broadcast(side)
-    // Spark's round() is BigDecimal HALF_UP — replicate it exactly
-    def round6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    c.select(col("id"), col("v"), col("nrm"))
-      .as[(Long, Seq[Double], Double)]
+    c.as[(Long, Seq[Double], Double)]
       .mapPartitions { it =>
         val all = bc.value
         it.flatMap { case (ida, v, nrm) =>
@@ -112,7 +155,7 @@ object SimilarityOps {
             var i = 0
             val n = a.length
             while (i < n) { s += a(i) * b(i); i += 1 }
-            val cos = round6(s / (nrm * nrmB))
+            val cos = roundHalfUp(s / (nrm * nrmB), 6)
             if (cos >= threshold) out += ((ida, idb, cos))
             lo += 1
           }
@@ -156,48 +199,39 @@ object SimilarityOps {
         (0 until probeBits).map(p => col("qcode0").bitwiseXOR(lit(1L << p)))
       q1.withColumn("qcode", explode(array(probeCodes: _*))).drop("qcode0")
     }
-    val scored = cc.join(broadcast(q),
-        col("code") === col("qcode") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(fastDot(cc, col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6)
-          .as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
+    topKPerQuery(cc.join(broadcast(q),
+        col("code") === col("qcode") && col("vec_id") =!= col("query_id")),
+      fastDot(cc, col("qv"), col("v")) / (col("qnrm") * col("nrm")), "cos", k)
   }
 
-  /** IVF (inverted-file) approximate top-k: a coarse quantizer assigns
-    * every corpus vector to its nearest centroid cell ONCE; queries probe
-    * only their `nprobe` nearest cells. With `nprobe == nlist` this is
-    * exhaustive and equals [[bruteForceTopK]] exactly (tested); smaller
-    * nprobe trades recall for a ~nlist/nprobe scan reduction.
-    *
-    * The quantizer here is deterministic (centroids = the `nlist`
-    * lowest-id corpus vectors — no training iterations); swapping in
-    * k-means centroids changes ONLY the broadcast array. At scale the
-    * cell assignment is one broadcast map pass and the probe is a
-    * cell-equality join — the corpus is never shuffled per query.
-    */
+  // ---- IVF (inverted file) --------------------------------------------
+  // A coarse quantizer assigns every corpus vector to its nearest centroid
+  // cell ONCE; queries probe only their `nprobe` nearest cells. With
+  // `nprobe == nlist` the search is exhaustive and equals
+  // [[bruteForceTopK]] exactly (tested); smaller nprobe trades recall for
+  // a ~nlist/nprobe scan reduction. The quantizer is either the `nlist`
+  // lowest-id corpus vectors ([[seedCentroids]]) or their spherical
+  // k-means refinement ([[trainIvfCentroids]]); either way only the
+  // literal centroid arrays change. Cell assignment is one map pass and
+  // the probe a cell-equality join — the corpus never shuffles per query.
+
   /** (cell id, vector, norm) — the coarse-quantizer model shape. */
   type Centroid = (Long, Array[Double], Double)
 
-  /** Deterministic quantizer init: the `nlist` lowest-id corpus vectors. */
-  def seedCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                    nlist: Int): Array[Centroid] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm")
-      .orderBy("vec_id").limit(nlist)
-      .select(col("vec_id"), col("v"), col("nrm"))
-      .as[(Long, Seq[Double], Double)].collect()
-      .map { case (i, v, n) => (i, v.toArray, norm2(v.toArray)) }
-  }
+  private def norm2(v: Array[Double]): Double = math.sqrt(normSq(v))
 
-  private def norm2(v: Array[Double]): Double = {
+  private def normSq(v: Array[Double]): Double = {
     var s = 0.0; var i = 0
     while (i < v.length) { s += v(i) * v(i); i += 1 }
-    math.sqrt(s)
+    s
   }
+
+  /** Deterministic quantizer init: the `nlist` lowest-id corpus vectors
+    * (Lloyd with zero iterations). */
+  def seedCentroids(corpus: DataFrame, idCol: String, vecCol: String,
+                    nlist: Int): Array[Centroid] =
+    ivfModel(withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm"),
+      nlist, iterations = 0, roundDecimals = None)
 
   /** Spherical k-means (Lloyd) refinement of the IVF coarse quantizer:
     * assign every vector to its max-cosine centroid (the same codegen'd
@@ -208,66 +242,55 @@ object SimilarityOps {
     * nondeterminism is avg()'s floating summation order, which can move a
     * centroid by an ulp under a different partition layout and flip a
     * borderline vector's cell — harmless for recall, but don't hash-gate
-    * anything downstream of a trained quantizer. Each iteration is one
-    * pass over the corpus + an nlist x dim aggregation — the training cost
-    * a real IVF pays once at index build. Empty cells keep their previous
-    * centroid. */
+    * anything downstream of an unquantized trained model.
+    *
+    * `roundDecimals` quantizes each recomputed centroid coordinate per
+    * iteration (HALF_UP, as Spark's and DuckDB's round()). This resets the
+    * summation-order float noise every round, which makes the TRAINED
+    * model engine-portable and hash-stable; the ~1e-6 coordinate loss is
+    * far below any recall-relevant scale. Training is [[lloyd]] with
+    * m = 1. Empty cells keep their previous centroid. */
   def trainIvfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                         nlist: Int, iterations: Int = 5,
-                        roundDecimals: Option[Int] = None): Array[Centroid] = {
-    val c = withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm")
-      .localCheckpoint()
-    val dimRow = c.select(size(col("v"))).head(1)
-    if (dimRow.isEmpty) return Array.empty // empty corpus -> empty model
-    val dim = dimRow(0).getInt(0)
-    // roundDecimals: quantize each recomputed centroid coordinate per
-    // iteration (BigDecimal HALF_UP — the same rounding as Spark's and
-    // DuckDB's round()). This resets the summation-order float noise at
-    // every round, making the TRAINED model engine-portable and
-    // hash-stable (the unquantized path documents why it is not); the
-    // ~1e-6 coordinate loss is far below any recall-relevant scale.
-    def quantize(m: Array[Double]): Array[Double] = roundDecimals match {
-      case Some(d) => m.map(x =>
-        BigDecimal(x).setScale(d, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      case None => m
-    }
-    var cents = seedCentroids(corpus, idCol, vecCol, nlist)
-    for (_ <- 1 to iterations) {
-      val assigned = c.withColumn("cell",
-        nearestCellFor(c, cents, col("v"), col("nrm")))
-      val meanCols = (0 until dim).map(i =>
-        avg(element_at(col("v"), i + 1)).as(s"m$i"))
-      val means = assigned.groupBy("cell").agg(meanCols.head, meanCols.tail: _*)
-        .collect()
-        .map(r => r.getLong(0) ->
-          Array.tabulate(dim)(i => r.getDouble(i + 1))).toMap
-      cents = cents.map { case (cid, v, n) =>
-        means.get(cid) match {
-          case Some(m0) => val m = quantize(m0); (cid, m, norm2(m))
-          case None     => (cid, v, n) // empty cell keeps its centroid
-        }
-      }
-    }
-    cents
-  }
+                        roundDecimals: Option[Int] = None): Array[Centroid] =
+    ivfModel(withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm")
+      .localCheckpoint(), nlist, iterations, roundDecimals)
 
-  /** Per-centroid cosine columns against a (v, nrm) pair — centroids as
-    * literal arrays so the scoring stays in whole-stage codegen. */
-  private def centScoresFor(df: DataFrame, cents: Array[Centroid],
-                            v: Column, nrm: Column): Seq[(Long, Column)] =
-    cents.toSeq.map { case (cid, cv, cnrm) =>
-      val cvLit = array(cv.map(lit).toIndexedSeq: _*)
-      cid -> fastDot(df, v, cvLit) / (lit(cnrm) * nrm)
-    }
+  private def ivfModel(c: DataFrame, nlist: Int, iterations: Int,
+                       roundDecimals: Option[Int]): Array[Centroid] =
+    lloyd(c, 1, nlist, iterations, roundDecimals, ivfRule)
+      .headOption.getOrElse(Array.empty)
 
-  /** Argmax cell via a greatest() struct fold; ties -> lowest centroid id. */
+  /** Argmax-cosine cell via a greatest() struct fold over literal
+    * centroids (whole-stage codegen); ties -> lowest centroid id. */
   private def nearestCellFor(df: DataFrame, cents: Array[Centroid],
                              v: Column, nrm: Column): Column = {
-    val scored = centScoresFor(df, cents, v, nrm).map { case (cid, cos) =>
-      struct(cos.as("cos"), lit(-cid).as("negid"))
+    val scored = cents.toSeq.map { case (cid, cv, cnrm) =>
+      struct((fastDot(df, v, vecLit(cv)) / (lit(cnrm) * nrm)).as("cos"),
+        lit(-cid).as("negid"))
     }
     val best = if (scored.size == 1) scored.head else greatest(scored: _*)
     -best.getField("negid")
+  }
+
+  /** IVF cell probe: each query's top-`nprobe` cells by (cosine desc, cell
+    * asc) as (query_id, qv, qnrm, cell, qdotc), where qdotc = dot(qv,
+    * centroid) feeds IVF-PQ's score decomposition. `q` carries (query_id,
+    * qv, qnrm); the query side is small by contract, so the explode +
+    * window is cheap. */
+  private def probeCells(q: DataFrame, cents: Array[Centroid],
+                         nprobe: Int): DataFrame = {
+    val qScored = q.withColumn("sc", explode(array(
+      cents.toSeq.map { case (cid, cv, cnrm) =>
+        val d = fastDot(q, col("qv"), vecLit(cv))
+        struct((d / (lit(cnrm) * col("qnrm"))).as("cos"),
+          d.as("qdotc"), lit(cid).as("cell"))
+      }: _*)))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("sc.cos").desc, col("sc.cell").asc)
+    qScored.withColumn("rc", row_number().over(w)).where(col("rc") <= nprobe)
+      .select(col("query_id"), col("qv"), col("qnrm"),
+        col("sc.cell").as("cell"), col("sc.qdotc").as("qdotc"))
   }
 
   def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
@@ -282,39 +305,13 @@ object SimilarityOps {
     // hyperplaneCodeFast. Pass `centroids` (e.g. from trainIvfCentroids)
     // to swap the quantizer without touching the plan.
     val cents = centroids.getOrElse(seedCentroids(corpus, idCol, vecCol, nlist))
-    if (cents.isEmpty) {
-      // empty corpus/model: zero-argument greatest() would fail analysis;
-      // return the (empty) result with the contract schema instead
-      import org.apache.spark.sql.types._
-      return corpus.sparkSession.createDataFrame(
-        corpus.sparkSession.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("query_id", LongType), StructField("vec_id", LongType),
-          StructField("cos", DoubleType), StructField("rn", IntegerType))))
-    }
-    // assignment: argmax via the greatest() struct fold; ties -> lowest
-    // centroid id, matching a first-wins maxBy and the oracle's
-    // (cos DESC, cent ASC)
+    if (cents.isEmpty) return emptyTopK(corpus.sparkSession, "cos")
     val assigned = c.withColumn("cell", nearestCellFor(c, cents, col("v"), col("nrm")))
-    // probe: top-nprobe cells per query via explode + window rank — the
-    // query side is small by contract, so the window is cheap
-    val q0 = withNorms(queries, qidCol, qvecCol, "query_id", "qv", "qnrm")
-    val qScored = q0.withColumn("sc", explode(array(
-      centScoresFor(q0, cents, col("qv"), col("qnrm")).map { case (cid, cos) =>
-        struct(cos.as("cos"), lit(cid).as("cell"))
-      }.toIndexedSeq: _*)))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("sc.cos").desc, col("sc.cell").asc)
-    val q = qScored.withColumn("rc", row_number().over(wProbe))
-      .where(col("rc") <= nprobe)
-      .select(col("query_id"), col("qv"), col("qnrm"), col("sc.cell").as("cell"))
-    val scored = assigned.join(broadcast(q),
-        assigned("cell") === q("cell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(fastDot(c, col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6)
-          .as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
+    val q = probeCells(withNorms(queries, qidCol, qvecCol, "query_id", "qv",
+      "qnrm"), cents, nprobe)
+    topKPerQuery(assigned.join(broadcast(q),
+        assigned("cell") === q("cell") && col("vec_id") =!= col("query_id")),
+      fastDot(c, col("qv"), col("v")) / (col("qnrm") * col("nrm")), "cos", k)
   }
 
   /** Random-hyperplane LSH code, packed: Σ (v·h_p > 0) << p. Bit p is the
@@ -353,8 +350,8 @@ object SimilarityOps {
     * schema-level fact the caller reads once, not per row. */
   def hyperplaneCodeFast(df: DataFrame, v: Column, planes: Int, dim: Int): Column =
     (0 until planes).map { p =>
-      val plane = array(planeVector(p, dim).map(lit).toIndexedSeq: _*)
-      when(fastDot(df, v, plane) > 0, lit(1L << p)).otherwise(lit(0L))
+      when(fastDot(df, v, vecLit(planeVector(p, dim))) > 0, lit(1L << p))
+        .otherwise(lit(0L))
     }.reduce(_ + _)
 
   // ---- product quantization (PQ) ---------------------------------------
@@ -366,7 +363,9 @@ object SimilarityOps {
   // centroids, and scoring is ADC: score(q, x) = Σ_j dot(q_j, C_j[code_j]).
 
   /** One subspace's codebook: cells 0..k-1 as (centroid subvector,
-    * squared norm). Index j of the outer array = subspace j. */
+    * squared norm). Index j of the outer array = subspace j. A stored
+    * model defines its own layout: m is the number of codebooks, whatever
+    * m a caller passes alongside it. */
   type PqCodebook = Array[Array[(Array[Double], Double)]]
 
   /** Await a concurrently-submitted driver job with a FINITE bound.
@@ -397,24 +396,6 @@ object SimilarityOps {
             "GRAFT_AWAIT_TIMEOUT_S only if the scale genuinely needs it")
     }
 
-  private def normSq(v: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < v.length) { s += v(i) * v(i); i += 1 }
-    s
-  }
-
-  /** Argmin-L2 cell for a subvector via a least() struct fold — ties →
-    * lowest cell. ||s−c||² ranks identically to (||c||² − 2·s·c) because
-    * ||s||² is constant per row, so the fold never materializes it. */
-  /** Effective PQ subspace count. A STORED model defines its own layout:
-    * the number of codebooks it was trained with wins over the caller's
-    * `m` parameter (the CLI `ann-topk --model` path always passes its
-    * default m=2). Layout-vs-vector-width validation happens lazily
-    * INSIDE the plan via [[pqDimGuard]] — no Spark job fires at
-    * DataFrame-construction time, and the check holds for empty query
-    * sets and the train-on-the-fly path alike. */
-  private def pqModelM(books: PqCodebook): Int = books.length
-
   /** In-plan vector-width guard: rows whose vector is exactly `dim` wide
     * pass through unchanged; any other width raises a descriptive error
     * when the row is actually scanned (native `when`/`raise_error` —
@@ -430,11 +411,14 @@ object SimilarityOps {
         s"(m x dsub = $dim) — the model was trained for a different " +
         "embedding width; rebuild it with `ann-build`", size(v))))
 
+  /** Argmin-L2 cell for a subvector via a least() struct fold — ties →
+    * lowest cell. ||s−c||² ranks identically to (||c||² − 2·s·c) because
+    * ||s||² is constant per row, so the fold never materializes it. */
   private def nearestPqCellFor(df: DataFrame,
       book: Array[(Array[Double], Double)], sv: Column): Column = {
     val scored = book.zipWithIndex.map { case ((cv, cn2), cid) =>
-      struct((lit(cn2) - lit(2.0) * fastDot(df, sv,
-        array(cv.map(lit).toIndexedSeq: _*))).as("d"), lit(cid).as("cid"))
+      struct((lit(cn2) - lit(2.0) * fastDot(df, sv, vecLit(cv))).as("d"),
+        lit(cid).as("cid"))
     }.toIndexedSeq
     val best = if (scored.size == 1) scored.head else least(scored: _*)
     // NULL vector -> NULL code (and downstream a NULL ADC score that
@@ -444,70 +428,117 @@ object SimilarityOps {
     when(sv.isNull, lit(null).cast("int")).otherwise(best.getField("cid"))
   }
 
-  /** Train per-subspace Lloyd codebooks (standard PQ, L2 assignment).
-    * Seeding is the k lowest-id vectors' subvectors (cell = seed rank),
-    * ties break to the lowest cell, and `roundDecimals` quantizes every
-    * recomputed centroid coordinate per iteration — the same determinism
-    * recipe as [[trainIvfCentroids]], so the trained model is hash-stable
-    * and engine-portable (the q_ann_pq oracle re-derives it in SQL).
-    * Each iteration per subspace is one corpus pass + a k×dsub
-    * aggregation; empty cells keep their centroid. */
-  def trainPqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
-                       m: Int, cells: Int, iterations: Int = 2,
-                       roundDecimals: Option[Int] = Some(6),
-                       inputCheckpointed: Boolean = false): PqCodebook = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // the projection is re-scanned (m subspaces) x (1 + iterations) times:
-    // checkpoint it once — unless the CALLER already materialized exactly
-    // this relation (ivfPqTopK's residuals), where a second checkpoint
-    // would only re-copy the data
-    val c0 = corpus.select(col(idCol).cast("long").as("vec_id"),
-      asDouble(col(vecCol)).as("v"))
-    val c = if (inputCheckpointed) c0 else c0.localCheckpoint()
-    val dimRow = c.select(size(col("v"))).head(1)
-    if (dimRow.isEmpty) return Array.empty
-    val dim = dimRow(0).getInt(0)
+  /** The m code columns code0..code{m-1} of vector column `v`. */
+  private def pqCodes(df: DataFrame, books: PqCodebook, dsub: Int,
+                      v: Column): Seq[Column] =
+    books.indices.map(j =>
+      nearestPqCellFor(df, books(j), subvector(v, j, dsub)).as(s"code$j"))
+
+  /** ADC score of a row carrying the query vector `qv` and a corpus
+    * vector's codes: Σ_j dot(qv_j, C_j[code_j]), the codebooks entering
+    * as literal arrays. */
+  private def adcScore(df: DataFrame, books: PqCodebook, dsub: Int): Column =
+    books.indices.map { j =>
+      val bookLit = array(books(j).map(e => vecLit(e._1)).toIndexedSeq: _*)
+      fastDot(df, subvector(col("qv"), j, dsub),
+        element_at(bookLit, col(s"code$j") + 1))
+    }.reduce(_ + _)
+
+  // ---- the Lloyd trainer --------------------------------------------------
+
+  /** How [[lloyd]] assigns a slice to a cell (`assign`, given the current
+    * book), names a cell from its seed's (vec_id, rank), and which norm
+    * the model keeps per cell. */
+  private final case class LloydRule(
+      assign: (DataFrame, Array[Centroid], Column) => Column,
+      cellName: (Long, Int) => Long,
+      norm: Array[Double] => Double)
+
+  /** IVF: max-cosine against the row's precomputed `nrm`, ties to the
+    * lowest centroid id; cells named by their seed's vec_id; √norm. */
+  private val ivfRule = LloydRule(
+    (df, book, sv) => nearestCellFor(df, book, sv, col("nrm")),
+    (id, _) => id, norm2)
+
+  /** PQ: min-L2 per slice, ties to the lowest cell rank; cells named by
+    * seed rank; ‖c‖². */
+  private val pqRule = LloydRule(
+    (df, book, sv) => nearestPqCellFor(df, book.map(e => (e._2, e._3)), sv),
+    (_, rank) => rank.toLong, normSq)
+
+  /** The one Lloyd trainer behind both quantizers: IVF is the m = 1 case.
+    * `c` holds `vec_id` and an array<double> `v` (plus what `rule` reads),
+    * materialized once by the caller; each vector splits into m equal
+    * slices, one codebook of up to `cells` cells each.
+    *
+    * Seeds are the `cells` lowest-id rows — one collect, which also fixes
+    * the dimension. Each iteration assigns every slice by `rule`, takes
+    * every (subspace, cell) mean in ONE grouped aggregation and collects
+    * it once, so a training costs 1 + iterations rounds whatever m is.
+    * New coordinates round HALF_UP to `roundDecimals`; empty cells keep
+    * their centroid. An empty input trains an empty model. */
+  private def lloyd(c: DataFrame, m: Int, cells: Int, iterations: Int,
+                    roundDecimals: Option[Int],
+                    rule: LloydRule): Array[Array[Centroid]] = {
+    val seeds = c.orderBy("vec_id").limit(cells)
+      .select(col("vec_id"), col("v")).collect()
+    if (seeds.isEmpty) return Array.empty
+    val dim = seeds.head.getSeq[Double](1).length
     require(dim % m == 0, s"dim $dim does not split into $m subspaces")
     val dsub = dim / m
-    def quantize(x: Array[Double]): Array[Double] = roundDecimals match {
-      case Some(d) => x.map(v =>
-        BigDecimal(v).setScale(d, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      case None => x
+    def centroid(name: Long, v: Array[Double]): Centroid =
+      (name, v, rule.norm(v))
+    var books = Array.tabulate(m) { j =>
+      seeds.zipWithIndex.map { case (r, rank) =>
+        centroid(rule.cellName(r.getAs[Number](0).longValue, rank),
+          r.getSeq[Double](1).slice(j * dsub, (j + 1) * dsub).toArray)
+      }
     }
-    // subspaces train INDEPENDENTLY (each its own seed collect + Lloyd
-    // iterations over its own slice) — run them as concurrent driver
-    // threads so the m training chains overlap instead of serializing.
-    // Per-subspace math, seeding, tie-breaks and rounding are untouched,
-    // so the trained model is bit-identical to the sequential loop.
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val trained = (0 until m).map { j => Future {
-      val sub = c.select(col("vec_id"),
-        slice(col("v"), j * dsub + 1, dsub).as("sv"))
-      var book: Array[(Array[Double], Double)] =
-        sub.orderBy("vec_id").limit(cells).as[(Long, Seq[Double])]
-          .collect().map { p => val a = p._2.toArray; (a, normSq(a)) }
-      for (_ <- 1 to iterations) {
-        val assigned = sub.withColumn("cell",
-          nearestPqCellFor(sub, book, col("sv")))
-        val meanCols = (0 until dsub).map(i =>
-          avg(element_at(col("sv"), i + 1)).as(s"m$i"))
-        val means = assigned.groupBy("cell")
-          .agg(meanCols.head, meanCols.tail: _*).collect()
-          .map(r => r.getInt(0) ->
-            Array.tabulate(dsub)(i => r.getDouble(i + 1))).toMap
-        book = book.zipWithIndex.map { case (old, cid) =>
-          means.get(cid).map { m0 =>
-            val mq = quantize(m0); (mq, normSq(mq))
-          }.getOrElse(old)
+    val meanCols = (0 until dsub).map(i =>
+      avg(element_at(col("sv"), i + 1)).as(s"m$i"))
+    for (_ <- 1 to iterations) {
+      val slices = (0 until m).map { j =>
+        val sv = subvector(col("v"), j, dsub)
+        struct(lit(j).as("subspace"), rule.assign(c, books(j), sv).as("cell"),
+          sv.as("sv"))
+      }
+      // a NULL vector has no cell (PQ) and contributes to no mean
+      val means = c.select(explode(array(slices: _*)).as("s")).select("s.*")
+        .groupBy("subspace", "cell").agg(meanCols.head, meanCols.tail: _*)
+        .collect().filterNot(_.isNullAt(1))
+        .map(r => (r.getInt(0), r.getAs[Number](1).longValue) ->
+          Array.tabulate(dsub)(i => r.getDouble(i + 2))).toMap
+      books = books.zipWithIndex.map { case (book, j) =>
+        book.map { case old @ (name, _, _) =>
+          means.get((j, name)).fold(old) { mu =>
+            centroid(name, roundDecimals.fold(mu)(d => mu.map(roundHalfUp(_, d))))
+          }
         }
       }
-      book
-    }}
-    trained.zipWithIndex.map { case (f, j) =>
-      awaitOrFail(f, s"PQ subspace-$j codebook training") }.toArray
+    }
+    books
   }
+
+  /** [[lloyd]] with the PQ rule over a materialized (vec_id, v). */
+  private def pqModel(c: DataFrame, m: Int, cells: Int, iterations: Int,
+                      roundDecimals: Option[Int]): PqCodebook =
+    lloyd(c, m, cells, iterations, roundDecimals, pqRule)
+      .map(_.map(e => (e._2, e._3)))
+
+  /** Train PQ codebooks (standard PQ, L2 assignment). Seeding is the k
+    * lowest-id vectors' subvectors (cell = seed rank), ties break to the
+    * lowest cell, and `roundDecimals` quantizes every recomputed centroid
+    * coordinate per iteration — the same determinism recipe as
+    * [[trainIvfCentroids]], so the trained model is hash-stable and
+    * engine-portable (the q_ann_pq oracle re-derives it in SQL). All m
+    * subspaces train together: one corpus pass and one (subspace, cell)
+    * aggregation per iteration. */
+  def trainPqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
+                       m: Int, cells: Int, iterations: Int = 2,
+                       roundDecimals: Option[Int] = Some(6)): PqCodebook =
+    pqModel(corpus.select(col(idCol).cast("long").as("vec_id"),
+        asDouble(col(vecCol)).as("v")).localCheckpoint(),
+      m, cells, iterations, roundDecimals)
 
   /** PQ-ANN top-k by asymmetric distance computation. The index-build
     * pass is the ONLY scan that reads corpus vectors — it reduces each
@@ -521,40 +552,22 @@ object SimilarityOps {
              codebooks: Option[PqCodebook] = None): DataFrame = {
     val books = codebooks.getOrElse(
       trainPqCodebooks(corpus, idCol, vecCol, m, cells, iterations))
-    val spark = corpus.sparkSession
-    if (books.isEmpty || books.exists(_.isEmpty)) {
-      import org.apache.spark.sql.types._
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("query_id", LongType),
-          StructField("vec_id", LongType),
-          StructField("score", DoubleType), StructField("rn", IntegerType))))
-    }
+    if (books.isEmpty || books.exists(_.isEmpty))
+      return emptyTopK(corpus.sparkSession, "score")
     val dsub = books.head.head._1.length
-    val mEff = pqModelM(books)
+    val dim = books.length * dsub
     // stored models guard BOTH sides in-plan (the model's layout is
     // external to this data); trained-on-the-fly models derived dsub from
     // this corpus, so only the queries need the width check
     val c = corpus.select(col(idCol).cast("long").as("vec_id"),
       (if (codebooks.isDefined)
-         pqDimGuard(asDouble(col(vecCol)), mEff * dsub, "corpus")
+         pqDimGuard(asDouble(col(vecCol)), dim, "corpus")
        else asDouble(col(vecCol))).as("v"))
-    val coded = c.select(col("vec_id") +: (0 until mEff).map(j =>
-      nearestPqCellFor(c, books(j),
-        slice(col("v"), j * dsub + 1, dsub)).as(s"code$j")): _*)
+    val coded = c.select(col("vec_id") +: pqCodes(c, books, dsub, col("v")): _*)
     val q = queries.select(col(qidCol).cast("long").as("query_id"),
-      pqDimGuard(asDouble(col(qvecCol)), mEff * dsub, "query").as("qv"))
+      pqDimGuard(asDouble(col(qvecCol)), dim, "query").as("qv"))
     val joined = coded.join(broadcast(q), col("vec_id") =!= col("query_id"))
-    val score = (0 until mEff).map { j =>
-      val bookLit = array(books(j).map(e =>
-        array(e._1.map(lit).toIndexedSeq: _*)).toIndexedSeq: _*)
-      fastDot(joined, slice(col("qv"), j * dsub + 1, dsub),
-        element_at(bookLit, col(s"code$j") + 1))
-    }.reduce(_ + _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    joined.select(col("query_id"), col("vec_id"),
-        round(score, 6).as("score"))
-      .withColumn("rn", row_number().over(w)).where(col("rn") <= k)
+    topKPerQuery(joined, adcScore(joined, books, dsub), "score", k)
   }
 
   /** PQ-ANN with exact re-ranking: [[pqTopK]]'s ADC scan produces a
@@ -584,11 +597,8 @@ object SimilarityOps {
     val c = withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm")
     val q = withNorms(queries, qidCol, qvecCol, "query_id", "qv", "qnrm")
     val joined = c.join(broadcast(cand), "vec_id").join(broadcast(q), "query_id")
-    val cos = fastDot(joined, col("v"), col("qv")) / (col("nrm") * col("qnrm"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    joined.select(col("query_id"), col("vec_id"), round(cos, 6).as("cos"))
-      .withColumn("rn", row_number().over(w)).where(col("rn") <= k)
+    topKPerQuery(joined,
+      fastDot(joined, col("v"), col("qv")) / (col("nrm") * col("qnrm")), "cos", k)
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -620,17 +630,11 @@ object SimilarityOps {
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
                     nlist: Int, threshold: Double, iterations: Int = 2,
                     roundDecimals: Option[Int] = Some(6)): DataFrame = {
-    val spark = corpus.sparkSession
     val cents = trainIvfCentroids(corpus, idCol, vecCol, nlist, iterations,
       roundDecimals)
-    if (cents.isEmpty) {
-      import org.apache.spark.sql.types._
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("vec_id", LongType),
-          StructField("cell", LongType),
-          StructField("canonical_id", LongType),
-          StructField("is_dup", BooleanType))))
-    }
+    if (cents.isEmpty)
+      return emptyResult(corpus.sparkSession, "vec_id" -> LongType,
+        "cell" -> LongType, "canonical_id" -> LongType, "is_dup" -> BooleanType)
     val ided = corpus.select(col(idCol).cast("long").as("vec_id"),
       asDouble(col(vecCol)).as("v0"))
     val (reps0, membership) = DedupOps.collapseIdentical(
@@ -658,39 +662,39 @@ object SimilarityOps {
       .withColumn("is_dup", col("vec_id") =!= col("canonical_id"))
   }
 
-  /** IVF-PQ — the standard billion-scale ANN index shape: the trained
-    * coarse quantizer partitions the corpus into `nlist` cells, each
-    * vector's RESIDUAL (v − centroid) is product-quantized into m codes,
-    * and queries probe the top-`nprobe` cells scoring candidates by the
-    * inner-product decomposition dot(q,v) ≈ dot(q, c_cell) + Σ_j
-    * dot(q_j, book_j[code_j]).
-    *
-    * Residual quantization is what separates this from flat PQ: residuals
-    * are centered near zero, so the same codebook budget carries far more
-    * precision. Scale shape: the index-build pass reduces each corpus row
-    * to (cell, m codes); the scoring scan ships (id, cell, codes) through
-    * a cell equi-join against the broadcast probe set — centroids and
-    * codebooks are LITERAL arrays (the model IS the plan, codegen'd), and
-    * the corpus never shuffles. Determinism: both quantizers train with
-    * per-iteration 6-decimal rounding, residual subtraction is exact FP,
-    * and scores round to 6 — hash-stable and oracle-reproducible.
-    */
-  /** Per-vector residuals (vec_id, cell, rv) against trained coarse
-    * centroids: the cell's centroid enters as a literal selected by a
-    * when-chain over the (bounded) cell ids — codegen'd, no join against
-    * a centroid table. */
+  // ---- IVF-PQ ---------------------------------------------------------
+  // The standard billion-scale ANN index shape: the trained coarse
+  // quantizer partitions the corpus into `nlist` cells, each vector's
+  // RESIDUAL (v − centroid) is product-quantized into m codes, and queries
+  // probe the top-`nprobe` cells scoring candidates by the inner-product
+  // decomposition dot(q,v) ≈ dot(q, c_cell) + Σ_j dot(q_j, book_j[code_j]).
+  //
+  // Residual quantization is what separates this from flat PQ: residuals
+  // are centered near zero, so the same codebook budget carries far more
+  // precision. Scale shape: the index-build pass reduces each corpus row
+  // to (cell, m codes); the scoring scan ships (id, cell, codes) through a
+  // cell equi-join against the broadcast probe set — centroids and
+  // codebooks are LITERAL arrays (the model IS the plan, codegen'd), and
+  // the corpus never shuffles. Determinism: both quantizers train with
+  // per-iteration 6-decimal rounding, residual subtraction is exact FP,
+  // and scores round to 6 — hash-stable and oracle-reproducible.
+
+  /** Per-vector residuals (vec_id, cell, v = residual) against trained
+    * coarse centroids, materialized once: the cell's centroid enters as a
+    * literal selected by a when-chain over the (bounded) cell ids —
+    * codegen'd, no join against a centroid table. The checkpoint feeds
+    * both residual training and the coding pass. */
   private def residualsFor(corpus: DataFrame, idCol: String, vecCol: String,
                            cents: Array[Centroid]): DataFrame = {
     val c = withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm")
     val assigned = c.withColumn("cell",
       nearestCellFor(c, cents, col("v"), col("nrm")))
-    def centLit(cv: Array[Double]) = array(cv.map(lit).toIndexedSeq: _*)
     val centFor = cents.tail.foldLeft(
-      when(col("cell") === cents.head._1, centLit(cents.head._2))) {
-      case (acc, (cid, cv, _)) => acc.when(col("cell") === cid, centLit(cv))
+      when(col("cell") === cents.head._1, vecLit(cents.head._2))) {
+      case (acc, (cid, cv, _)) => acc.when(col("cell") === cid, vecLit(cv))
     }
     assigned.select(col("vec_id"), col("cell"),
-      zip_with(col("v"), centFor, (a, b) => a - b).as("rv"))
+      zip_with(col("v"), centFor, (a, b) => a - b).as("v")).localCheckpoint()
   }
 
   /** Train the residual PQ codebooks for an IVF-PQ index under
@@ -700,9 +704,8 @@ object SimilarityOps {
                                vecCol: String, cents: Array[Centroid],
                                m: Int, cells: Int,
                                iterations: Int = 2): PqCodebook =
-    trainPqCodebooks(
-      residualsFor(corpus, idCol, vecCol, cents).localCheckpoint(),
-      "vec_id", "rv", m, cells, iterations)
+    pqModel(residualsFor(corpus, idCol, vecCol, cents), m, cells, iterations,
+      Some(6))
 
   def ivfPqTopK(corpus: DataFrame, idCol: String, vecCol: String,
                 queries: DataFrame, qidCol: String, qvecCol: String,
@@ -711,62 +714,29 @@ object SimilarityOps {
                 centroids: Option[Array[Centroid]] = None,
                 codebooks: Option[PqCodebook] = None): DataFrame = {
     val spark = corpus.sparkSession
-    def emptyResult: DataFrame = {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("query_id", LongType),
-          StructField("vec_id", LongType),
-          StructField("score", DoubleType), StructField("rn", IntegerType))))
-    }
     val cents = centroids.getOrElse(
       trainIvfCentroids(corpus, idCol, vecCol, nlist, iterations,
         roundDecimals = Some(6)))
-    if (cents.isEmpty) return emptyResult
-    val resid = residualsFor(corpus, idCol, vecCol, cents).localCheckpoint()
+    if (cents.isEmpty) return emptyTopK(spark, "score")
+    val resid = residualsFor(corpus, idCol, vecCol, cents)
     val books = codebooks.getOrElse(
-      trainPqCodebooks(resid, "vec_id", "rv", m, cells, iterations,
-        inputCheckpointed = true))
-    if (books.isEmpty || books.exists(_.isEmpty)) return emptyResult
-    def centLit(cv: Array[Double]) = array(cv.map(lit).toIndexedSeq: _*)
+      pqModel(resid, m, cells, iterations, Some(6)))
+    if (books.isEmpty || books.exists(_.isEmpty)) return emptyTopK(spark, "score")
     val dsub = books.head.head._1.length
-    val mEff = pqModelM(books)
     val coded = resid.select(col("vec_id") +: col("cell") +:
-      (0 until mEff).map(j => nearestPqCellFor(resid, books(j),
-        slice(col("rv"), j * dsub + 1, dsub)).as(s"code$j")): _*)
+      pqCodes(resid, books, dsub, col("v")): _*)
     // probe: top-nprobe cells by cosine (ivfTopK's rule), carrying
     // dot(qv, centroid) forward for the scoring decomposition; a stored
     // model's layout is validated in-plan against the query vectors
     // (residuals share the corpus width, so one guard covers scoring)
-    val q0raw = withNorms(queries, qidCol, qvecCol, "query_id", "qv", "qnrm")
-    val q0 =
+    val q0 = withNorms(queries, qidCol, qvecCol, "query_id", "qv", "qnrm")
+    val q = probeCells(
       if (codebooks.isDefined)
-        q0raw.withColumn("qv", pqDimGuard(col("qv"), mEff * dsub, "query"))
-      else q0raw
-    val qScored = q0.withColumn("sc", explode(array(
-      cents.toSeq.map { case (cid, cv, cnrm) =>
-        val d = fastDot(q0, col("qv"), centLit(cv))
-        struct((d / (lit(cnrm) * col("qnrm"))).as("cos"),
-          d.as("qdotc"), lit(cid).as("cell"))
-      }.toIndexedSeq: _*)))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("sc.cos").desc, col("sc.cell").asc)
-    val q = qScored.withColumn("rc", row_number().over(wProbe))
-      .where(col("rc") <= nprobe)
-      .select(col("query_id"), col("qv"), col("sc.cell").as("cell"),
-        col("sc.qdotc").as("qdotc"))
+        q0.withColumn("qv", pqDimGuard(col("qv"), books.length * dsub, "query"))
+      else q0, cents, nprobe)
     val joined = coded.join(broadcast(q),
       coded("cell") === q("cell") && col("vec_id") =!= col("query_id"))
-    val residScore = (0 until mEff).map { j =>
-      val bookLit = array(books(j).map(e =>
-        array(e._1.map(lit).toIndexedSeq: _*)).toIndexedSeq: _*)
-      fastDot(joined, slice(col("qv"), j * dsub + 1, dsub),
-        element_at(bookLit, col(s"code$j") + 1))
-    }.reduce(_ + _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    joined.select(col("query_id"), col("vec_id"),
-        round(col("qdotc") + residScore, 6).as("score"))
-      .withColumn("rn", row_number().over(w)).where(col("rn") <= k)
+    topKPerQuery(joined, col("qdotc") + adcScore(joined, books, dsub), "score", k)
   }
 
   // ---- persisted ANN models: train once, probe many ----
@@ -783,7 +753,7 @@ object SimilarityOps {
   // obligation.
 
   /** Persist trained IVF centroids as a manifested table (cell, v). */
-  def saveIvfModel(spark: org.apache.spark.sql.SparkSession,
+  def saveIvfModel(spark: SparkSession,
                    cents: Array[Centroid], path: String): Unit = {
     import spark.implicits._
     LayoutOps.writeManifested(
@@ -792,7 +762,7 @@ object SimilarityOps {
   }
 
   /** Load IVF centroids saved by [[saveIvfModel]] (cells sorted by id). */
-  def loadIvfModel(spark: org.apache.spark.sql.SparkSession,
+  def loadIvfModel(spark: SparkSession,
                    path: String): Array[Centroid] = {
     import spark.implicits._
     LayoutOps.readManifested(spark, path)
@@ -803,7 +773,7 @@ object SimilarityOps {
 
   /** Persist trained PQ codebooks as a manifested table
     * (subspace, cell, v). */
-  def savePqModel(spark: org.apache.spark.sql.SparkSession,
+  def savePqModel(spark: SparkSession,
                   books: PqCodebook, path: String): Unit = {
     import spark.implicits._
     val rows = for {
@@ -815,7 +785,7 @@ object SimilarityOps {
   }
 
   /** Load PQ codebooks saved by [[savePqModel]] (subspaces/cells sorted). */
-  def loadPqModel(spark: org.apache.spark.sql.SparkSession,
+  def loadPqModel(spark: SparkSession,
                   path: String): PqCodebook = {
     import spark.implicits._
     LayoutOps.readManifested(spark, path)

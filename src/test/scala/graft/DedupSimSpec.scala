@@ -355,6 +355,71 @@ class DedupSimSpec extends SparkSpec {
     }
   }
 
+  /** Jobs per training call on the sf0.001 embeddings (cells = 4 or 8,
+    * 2 iterations): a checkpoint, one seed collect, then one (subspace,
+    * cell) aggregation per iteration whatever m is. Measured; a count
+    * may only go down. */
+  private val trainJobBudget: Map[String, Int] = Map(
+    "trainIvfCentroids" -> 6,
+    "trainPqCodebooks" -> 6,
+    "trainPqResidualCodebooks" -> 6)
+
+  test("Lloyd training submits the same jobs for m = 1, 2 and 4, within " +
+      "the committed budget") {
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    var cents: Array[SimilarityOps.Centroid] = null
+    val ivf = jobsOf { cents = SimilarityOps.trainIvfCentroids(emb, "vec_id",
+      "embedding", nlist = 8, iterations = 2, roundDecimals = Some(6)) }
+    val ms = Seq(1, 2, 4)
+    val pq = ms.map(m => jobsOf(SimilarityOps.trainPqCodebooks(emb, "vec_id",
+      "embedding", m = m, cells = 4, iterations = 2)))
+    val resid = ms.map(m => jobsOf(SimilarityOps.trainPqResidualCodebooks(emb,
+      "vec_id", "embedding", cents, m = m, cells = 4, iterations = 2)))
+    info(s"trainIvfCentroids=$ivf trainPqCodebooks(m=1,2,4)=${pq.mkString(",")} " +
+      s"trainPqResidualCodebooks(m=1,2,4)=${resid.mkString(",")}")
+    assert(pq.distinct.size === 1, s"PQ jobs grow with m: $pq")
+    assert(resid.distinct.size === 1, s"residual PQ jobs grow with m: $resid")
+    for ((op, n) <- Seq("trainIvfCentroids" -> ivf,
+        "trainPqCodebooks" -> pq.max, "trainPqResidualCodebooks" -> resid.max))
+      assert(n <= trainJobBudget(op), s"$op submitted $n jobs")
+  }
+
+  test("fused PQ training keeps subspaces apart: book j of m = 2 equals " +
+      "an m = 1 training over slice j") {
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val books = SimilarityOps.trainPqCodebooks(emb, "vec_id", "embedding",
+      m = 2, cells = 4, iterations = 2)
+    assert(books.length === 2)
+    val dsub = books.head.head._1.length
+    for (j <- 0 until 2) {
+      val one = SimilarityOps.trainPqCodebooks(emb.select(col("vec_id"),
+          slice(col("embedding"), j * dsub + 1, dsub).as("embedding")),
+        "vec_id", "embedding", m = 1, cells = 4, iterations = 2)
+      assert(one.length === 1)
+      assert(one.head.map(_._1.toSeq).toSeq === books(j).map(_._1.toSeq).toSeq,
+        s"subspace $j centroids")
+      assert(one.head.map(_._2).toSeq === books(j).map(_._2).toSeq,
+        s"subspace $j squared norms")
+    }
+  }
+
+  test("a NULL vector outside the seeds trains the same IVF and PQ models " +
+      "as its absence") {
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val nulled = emb.select(col("vec_id"),
+      when(col("vec_id") === 300L, lit(null).cast("array<float>"))
+        .otherwise(col("embedding")).as("embedding"))
+    val without = emb.where(col("vec_id") =!= 300L)
+    def pq(df: org.apache.spark.sql.DataFrame) = SimilarityOps
+      .trainPqCodebooks(df, "vec_id", "embedding", m = 2, cells = 4,
+        iterations = 2).map(_.map(_._1.toSeq).toSeq).toSeq
+    def ivf(df: org.apache.spark.sql.DataFrame) = SimilarityOps
+      .trainIvfCentroids(df, "vec_id", "embedding", nlist = 8, iterations = 2,
+        roundDecimals = Some(6)).map(c => (c._1, c._2.toSeq)).toSeq
+    assert(pq(nulled) === pq(without), "a NULL vector has no PQ cell")
+    assert(ivf(nulled) === ivf(without), "a NULL vector adds to no IVF mean")
+  }
+
   test("IVF k-means training: deterministic, objective non-decreasing, sane recall") {
     import graft.operators.SimilarityOps.Centroid
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
