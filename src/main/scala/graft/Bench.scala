@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.queries.{QuerySpec, ScanSplit}
 
-/** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line. Each query is fully materialized through the
-  * `noop` sink (forces the whole plan to execute — `count()` would let
-  * Catalyst prune most of the work away and under-report).
+/** Benchmark main: runs every gate query ([[graft.queries.Catalog]]) on
+  * SPARK_GRAFT_SF_DIR and prints one JSON line. Each query is fully
+  * materialized through the `noop` sink (forces the whole plan to execute —
+  * `count()` would let Catalyst prune most of the work away and
+  * under-report).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -17,13 +19,10 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // Scan splits are sized PER QUERY (graft.ScanPolicy, set before each
-      // query below): 512 KB for the ~50:1-compressed text family whose
-      // CPU-dense kernels need partitions sized to decompressed work, the
-      // wider r9 value for the scan-light set that a global 512 KB floor
-      // regressed 2.4-3.1x at 100x (BENCH_r10_100x vs r9). This initial
-      // value only covers session warm-up.
-      .config("spark.sql.files.maxPartitionBytes", ScanPolicy.textSplit)
+      // Scan splits are sized PER QUERY (each spec's confs, set around the
+      // query below; see graft.queries.ScanSplit). This initial value only
+      // covers session warm-up.
+      .config(ScanSplit.key, ScanSplit.text(ScanSplit.key))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warm-up: session/codegen/FS init otherwise lands on the
@@ -31,30 +30,11 @@ object Bench {
     spark.range(1000).selectExpr("sum(id)").collect()
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-    // SPARK_GRAFT_ONLY=q_a,q_b runs a subset (local iteration aid);
-    // SPARK_GRAFT_RUNS=n repeats each query n times and reports the
-    // per-query MEDIAN — single-shot numbers on this class of box swing
-    // up to 2x run-to-run, which made round-over-round deltas meaningless
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt)
-    // the multi-second PageRank family is where this box's 2x run-to-run
-    // swing turns into judge-visible round-over-round "regressions"
-    // (q_pagerank_log 2.2s->4.1s in r4 was exactly this); give those
-    // queries 5 runs so their medians have a real noise floor. The
-    // personalized variants are in the same multi-second class and were
-    // the r5 unguarded-noise watch items — covered now too.
-    val noisyGraphQueries = Set("q_pagerank", "q_pagerank_log",
-      "q_pagerank_hub", "q_pagerank_range", "q_pagerank_conv",
-      "q_ppr_hub", "q_ppr_topk")
-    // the train-loop queries (k-means / GD / curate's staged checkpoints)
-    // are in the same multi-second driver-iteration class — same 5-run
-    // noise floor so round-over-round medians stay comparable
-    val noisyTrainQueries = Set("q_ann_ivf_trained", "q_ann_pq",
-      "q_ann_rerank", "q_semdedup", "q_quality_classifier", "q_curate")
-    def runsFor(name: String): Int =
-      if (noisyGraphQueries(name) || noisyTrainQueries(name))
-        math.max(runs, 5)
-      else runs
+    // SPARK_GRAFT_RUNS=n repeats each query max(n, 5) times and reports
+    // the per-query MEDIAN — single-shot numbers on this class of box
+    // swing up to 2x run-to-run, and the multi-second graph and training
+    // queries needed 5 runs for their medians to have a real noise floor
+    val runs = math.max(5, sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt)
     def median(xs: Seq[Double]): Double = {
       val v = xs.sorted
       if (v.size % 2 == 1) v(v.size / 2) else (v(v.size / 2 - 1) + v(v.size / 2)) / 2
@@ -76,24 +56,16 @@ object Bench {
     })
     val calBound = sys.env.getOrElse("SPARK_GRAFT_CAL_BOUND", "2.0").toDouble
     val calBefore = calibrate()
-    // SPARK_GRAFT_STREAMS=N benches N CONCURRENT query streams on the one
-    // session's cluster (real pipelines multiplex queries): a work queue
-    // over the same query list, one spark.newSession() per stream so
-    // per-query session confs stay isolated. Per-query seconds then
-    // include CPU sharing (expected); "value" reports the SWEEP WALL, the
-    // number that actually changes with concurrency.
-    val streams = math.max(1, sys.env.getOrElse("SPARK_GRAFT_STREAMS", "1").toInt)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    def benchOne(s: SparkSession,
-                 name: String,
-                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (String, Double, Boolean) = {
-      ScanPolicy.applyFor(s, name)
+    // with SPARK_GRAFT_STREAMS=N concurrent streams (graft.Harness),
+    // per-query seconds include CPU sharing (expected); "value" reports the
+    // SWEEP WALL, the number that actually changes with concurrency
+    val streams = Harness.streams
+    def benchOne(s: SparkSession, spec: QuerySpec): (String, Double, Boolean) = {
+      val name = spec.name
       // label every job this query submits (guide §1.5) — event-log
       // profiling then attributes jobs/stages to queries by description
       s.sparkContext.setJobDescription(name)
-      val times = (1 to runsFor(name)).map { i =>
+      val times = spec.withConfs(s)((1 to runs).map { i =>
         // Release every prior persisted/checkpointed block BEFORE each
         // run's timer starts — BLOCKING, so the removal cost can never
         // bleed into the measurement. Two measured effects drove this:
@@ -111,13 +83,13 @@ object Bench {
             .foreach(_.unpersist(blocking = true))
         val t0 = System.nanoTime()
         val ok =
-          try { fn(s, sfDir).write.format("noop").mode("overwrite").save(); true }
+          try { spec.build(s, sfDir).write.format("noop").mode("overwrite").save(); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name run $i failed: ${e.getMessage}")
             false
           }
         ((System.nanoTime() - t0) / 1e9, ok)
-      }
+      })
       val okTimes = times.collect { case (s, true) => s }
       // a query only counts as failed when EVERY run failed
       val ok = okTimes.nonEmpty
@@ -127,30 +99,7 @@ object Bench {
       (name, med, ok)
     }
     val sweepT0 = System.nanoTime()
-    val results =
-      if (streams == 1) selected.map { case (n, f) => benchOne(spark, n, f) }
-      else {
-        val queue = new java.util.concurrent.ConcurrentLinkedQueue[
-          (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]()
-        selected.foreach(queue.add)
-        val out = new java.util.concurrent.ConcurrentLinkedQueue[
-          (String, Double, Boolean)]()
-        val ts = (1 to streams).map { i =>
-          val t = new Thread(() => {
-            val s = spark.newSession()
-            // see Verify: the stream session must be the thread's active
-            // session so the kernel registry lands in ITS registry
-            SparkSession.setActiveSession(s)
-            graft.functions.GraftFunctions.register(s)
-            var kv = queue.poll()
-            while (kv != null) { out.add(benchOne(s, kv._1, kv._2)); kv = queue.poll() }
-          }, s"bench-stream-$i")
-          t.start(); t
-        }
-        ts.foreach(_.join())
-        import scala.jdk.CollectionConverters._
-        out.asScala.toSeq.sortBy(_._1)
-      }
+    val results = Harness.runAll(spark, Harness.selected)(benchOne)
     val sweepWall = (System.nanoTime() - sweepT0) / 1e9
     // a failed query reports -1 (not its elapsed time) so the JSON line is
     // self-describing; "failed" lists the names explicitly
@@ -161,9 +110,6 @@ object Bench {
     val total =
       if (streams == 1) results.collect { case (_, v, true) => v }.sum
       else sweepWall
-    val overrides = (noisyGraphQueries ++ noisyTrainQueries).toSeq.sorted
-      .filter(n => only.forall(_.contains(n)) && runsFor(n) != runs)
-      .map(n => "\"" + n + "\":" + runsFor(n)).mkString("{", ",", "}")
     val calAfter = calibrate()
     val contended = calBefore > calBound || calAfter > calBound
     if (contended) System.err.println(
@@ -171,7 +117,7 @@ object Bench {
         f"exceeds the $calBound%.1f s idle-box bound — this run is contended " +
         "and its numbers are not clean evidence; re-run on a quiet box")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"runs":$runs,"runs_overrides":$overrides,"streams":$streams,"cal_before":$calBefore,"cal_after":$calAfter,"contended":$contended,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"runs":$runs,"streams":$streams,"cal_before":$calBefore,"cal_after":$calAfter,"contended":$contended,"sf":"$sfDir"}"""
     // stdout AND a file: the driver's tail-based capture truncated the
     // (long) stdout line in round 3 (BENCH_r03.json parsed: null) — the
     // file copy survives any pipe truncation

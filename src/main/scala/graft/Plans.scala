@@ -1,11 +1,13 @@
 package graft
 import org.apache.spark.sql.SparkSession
-/** Prints formatted physical plans for key queries (plan-review tool).
+import graft.queries.Catalog
+/** Prints formatted physical plans of gate queries (plan-review tool).
   *
   * Usage: runMain graft.Plans [--sf dir] [--out dir] [--suffix s] q_a q_b | all
   * With --out, each query's plan is also written to <out>/<query><suffix>.txt
-  * (the judge-facing plan evidence under plans/r11/). ScanPolicy is applied
-  * per query so the captured plan is the one Bench/Verify actually run.
+  * (the plan evidence under plans/). Each query is built under its catalog
+  * confs ([[graft.queries.QuerySpec.confs]]), so the captured plan is the
+  * one Bench and Verify run.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -29,23 +31,20 @@ object Plans {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val selected =
-      if (names.contains("all")) SparkEntry.queries.keys.toSeq.sorted
-      else names.toSeq
+      if (names.contains("all")) Catalog.specs
+      else names.toSeq.map(Catalog(_))
     outDir.foreach(d => java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(d)))
-    selected.foreach { name =>
-      println(s"===== $name =====")
-      ScanPolicy.applyFor(spark, name)
+    selected.foreach { spec =>
+      println(s"===== ${spec.name} =====")
       val plan =
-        try {
-          val df = SparkEntry.queries(name)(spark, sfDir)
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-        } catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}" }
+        try spec.withConfs(spark)(spec.build(spark, sfDir).queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode))
+        catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}" }
       println(plan)
       outDir.foreach { d =>
         java.nio.file.Files.write(
-          java.nio.file.Paths.get(d, s"$name$suffix.txt"),
+          java.nio.file.Paths.get(d, s"${spec.name}$suffix.txt"),
           plan.getBytes("UTF-8"))
       }
     }

@@ -1,16 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.operators._
+import graft.queries.Catalog
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Each entry in [[queries]] exercises one or more operators from
-  * SURVEY.md §2 over the driver-provided parquet tables; [[oracleSql]]
-  * holds the DuckDB-equivalent SQL the driver hash-compares against.
-  * Floating-point outputs are rounded on BOTH sides so cross-engine
-  * summation-order differences cannot flip the hash.
+/** Entry points: the flagship query, and name-keyed views of the gate
+  * catalog ([[graft.queries.Catalog]]), where each query's builder, DuckDB
+  * oracle and session confs are declared together.
   */
 object SparkEntry {
 
@@ -18,2995 +14,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RelationalOps.revenueByNation(spark, "/root/testdata/sf0.001")
 
-  private def docs(s: SparkSession, dir: String): DataFrame = Tables.documents(s, dir)
+  /** Each gate query's builder. A builder called directly runs under the
+    * caller's session confs; the harnesses add the spec's confs
+    * ([[graft.queries.QuerySpec.withConfs]]). */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Catalog.specs.map(s => s.name -> s.build).toMap
 
-  /** Gate-scratch temp dirs, recursively deleted at JVM exit. Gate
-    * lambdas return LAZY DataFrames over these paths (the driver
-    * materializes them after the lambda returns), so eager deletion
-    * inside the lambda would break the read; the exit hook keeps
-    * repeated Verify/Bench runs from accumulating table copies in
-    * /tmp across processes. */
-  private val scratchDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]
-  private lazy val scratchHookInstalled: Boolean = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      scratchDirs.forEach(d =>
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(d)): Unit)))
-    true
-  }
-  private def scratchDir(prefix: String): String = {
-    require(scratchHookInstalled)
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
-    scratchDirs.add(d)
-    d
-  }
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.events(s, dir)
+  /** Each gate query's equivalent DuckDB SQL over the same parquet tables. */
+  val oracleSql: Map[String, String] =
+    Catalog.specs.map(s => s.name -> s.oracle).toMap
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- text corpus (assignment-2 family): P1-P5, A1-A5, J1 ----
-    "q_wordcount" -> ((s, dir) =>
-      TextOps.wordCount(docs(s, dir), "text")),
-    "q_bigram_count" -> ((s, dir) =>
-      TextOps.bigramCount(docs(s, dir), "text")),
-    "q_cooc_pairs" -> ((s, dir) =>
-      TextOps.coocPairs(docs(s, dir), "text", window = 2)),
-    "q_cooc_stripes" -> ((s, dir) =>
-      // stripes layout (map column), exploded back to rows for the oracle
-      TextOps.coocStripes(docs(s, dir), "text", window = 2)
-        .select(col("term"), explode(col("stripe")).as(Seq("neighbor", "cnt")))),
-    "q_pair_doccount" -> ((s, dir) =>
-      TextOps.pairDocCounts(docs(s, dir), "doc_id", "text")),
-    "q_pmi" -> ((s, dir) =>
-      TextOps.pmi(docs(s, dir), "doc_id", "text", minCount = 10)
-        .select(col("x"), col("y"), col("n_docs"), round(col("pmi"), 6).as("pmi"))),
-
-    // ---- relational / join surface (SURVEY §2.4): J1-J3 analogues ----
-    "q1_pricing" -> ((s, dir) =>
-      RelationalOps.pricingSummary(Tables.lineitem(s, dir))),
-    "q_revenue_by_nation" -> ((s, dir) =>
-      RelationalOps.revenueByNation(s, dir)),
-    "q_top_customers" -> ((s, dir) =>
-      RelationalOps.topCustomers(s, dir, k = 10)),
-    "q_segments_with_orders" -> ((s, dir) =>
-      RelationalOps.segmentsWithOrders(s, dir)),
-    "q_customers_without_orders" -> ((s, dir) =>
-      RelationalOps.customersWithoutOrders(s, dir)),
-    // as-of join (operator Spark lacks): every event gets the user's most
-    // recent purchase value at or before its timestamp; verified against
-    // DuckDB's NATIVE ASOF LEFT JOIN
-    "q_asof_join" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val purchases = ev.where(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("value")).as("purchase_value"))
-      JoinOps.asofJoinBackward(
-        ev.select(col("event_id"), col("user_id"), col("ts")),
-        purchases, "user_id", "ts", "ts", Seq("purchase_value"))
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"),
-          round(col("purchase_value"), 6).as("purchase_value"))
-    }),
-
-    // forward as-of: every event gets the user's NEXT purchase at or after
-    // its timestamp; verified against DuckDB's native forward ASOF
-    "q_asof_forward" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val purchases = ev.where(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("value")).as("purchase_value"))
-      JoinOps.asofJoinForward(
-        ev.select(col("event_id"), col("user_id"), col("ts")),
-        purchases, "user_id", "ts", "ts", Seq("purchase_value"))
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"),
-          round(col("purchase_value"), 6).as("purchase_value"))
-    }),
-
-    // bucketized range join: points to containing [lo, hi] intervals as a
-    // plain equi-join on buckets (the naive range condition plans as an
-    // O(n*m) BroadcastNestedLoopJoin)
-    "q_range_join" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val points = ev.select(col("event_id"), col("value"))
-      val intervals = ev
-        .where(col("user_id") < 30 && col("event_type") === "purchase")
-        .select(col("event_id").as("interval_id"),
-          col("value").as("lo"), (col("value") + lit(25.0)).as("hi"))
-      JoinOps.rangeJoin(points, "value", intervals, "lo", "hi",
-        bucketWidth = 25.0)
-        .groupBy("interval_id")
-        .agg(count(lit(1)).as("n_points"),
-          round(min(col("value")), 6).as("min_v"),
-          round(max(col("value")), 6).as("max_v"))
-    }),
-
-    // ---- inverted index / retrieval (assignment-3 family): A6, R1-R4, J3 ----
-    "q_term_doctf" -> ((s, dir) =>
-      IndexOps.termDocTf(docs(s, dir), "doc_id", "text")
-        .withColumnRenamed("docid", "doc_id")),
-    "q_index_stats" -> ((s, dir) =>
-      IndexOps.invertedIndex(docs(s, dir), "doc_id", "text")
-        .select(col("term"), col("df"),
-          aggregate(col("postings"), lit(0L), (acc, x) => acc + x.getField("tf"))
-            .as("total_tf"),
-          element_at(col("postings"), 1).getField("docid").as("min_docid"),
-          element_at(col("postings"), -1).getField("docid").as("max_docid"))),
-    // exercises the d-gap+VInt codec end-to-end: encode then decode must
-    // reproduce the raw postings relation
-    "q_postings_roundtrip" -> ((s, dir) =>
-      IndexOps.decodeIndex(
-        IndexOps.compressedIndex(IndexOps.invertedIndex(docs(s, dir), "doc_id", "text")))
-        .where(col("term").isin("join", "hash", "vector"))
-        .select(col("term"), explode(col("postings")).as("p"))
-        .select(col("term"), col("p._1").as("doc_id"), col("p._2").as("tf"))),
-    // ranked retrieval on top of the index family
-    "q_tfidf" -> ((s, dir) =>
-      IndexOps.tfidf(docs(s, dir), "doc_id", "text")
-        .where(col("term").isin("join", "hash", "vector"))
-        .select(col("term"), col("docid").as("doc_id"), col("tf"),
-          round(col("tfidf"), 6).as("tfidf"))),
-    "q_bm25_search" -> ((s, dir) =>
-      IndexOps.searchBM25(docs(s, dir), "doc_id", "text",
-        Seq("join", "hash", "vector"), k = 10)
-        .withColumnRenamed("docid", "doc_id")),
-    "q_bool_retrieval" -> ((s, dir) =>
-      IndexOps.booleanRetrieve(
-        IndexOps.termDocTf(docs(s, dir), "doc_id", "text"),
-        Seq("join", "hash", "AND", "vector", "OR"))
-        .withColumnRenamed("docid", "doc_id")),
-
-    // tf-value histogram for one term's postings (A7 / LookupPostings tool)
-    "q_tf_histogram" -> ((s, dir) =>
-      IndexOps.tfHistogram(
-        IndexOps.termDocTf(docs(s, dir), "doc_id", "text"), "join")),
-
-    // ---- graph / iterative (assignment-4 family): G1-G10, T3, T4 ----
-    // Test graph derived from lineitem: part -> supplier edges. Suppliers
-    // (keys 0-99, also part keys) close cycles; parts never bought are
-    // absent; high-degree suppliers exercise the gather shuffle.
-    "q_pagerank" -> ((s, dir) =>
-      GraphOps.pageRank(graphEdges(s, dir), iterations = 5)
-        .select(col("nodeid"), round(col("rank"), 9).as("pr"))),
-    // SAME oracle, alternate physical paths: range-partitioned adjacency
-    // (G10 second half) and the hub-guard edge-relation scatter (forced
-    // with threshold 1) — both must land on identical ranks, so the
-    // driver's gate exercises every PageRank code path end-to-end
-    "q_pagerank_range" -> ((s, dir) =>
-      GraphOps.pageRank(graphEdges(s, dir), iterations = 5,
-        rangePartition = true)
-        .select(col("nodeid"), round(col("rank"), 9).as("pr"))),
-    // 3 iterations: these exist to gate the alternate physical path, and
-    // path coverage is identical at any depth — no need to pay the
-    // worst-case fallback 5 deep
-    "q_pagerank_hub" -> ((s, dir) =>
-      GraphOps.pageRank(graphEdges(s, dir), iterations = 3,
-        hubDegreeThreshold = 1L)
-        .select(col("nodeid"), round(col("rank"), 9).as("pr"))),
-    // the log-space numeric regime (the reference's float-underflow
-    // armor, double-precision here) must agree with linear space to
-    // 9 decimals — gated against the SAME unrolled oracle as q_pagerank
-    "q_pagerank_log" -> ((s, dir) =>
-      GraphOps.pageRankLogSpace(graphEdges(s, dir), iterations = 5)
-        .select(col("nodeid"), round(exp(col("rank")), 9).as("pr"))),
-    "q_ppr_topk" -> ((s, dir) => {
-      val pr = GraphOps.personalizedPageRank(graphEdges(s, dir), Seq(1L, 2L), iterations = 5)
-        .select(col("source"), col("nodeid"), round(col("rank"), 9).as("rank"))
-      GraphOps.topKPerSource(pr, 5).withColumnRenamed("rank", "pr")
-    }),
-    // personalized hub-fallback path forced end-to-end, same oracle.
-    // 1 source / 2 iterations: the forced per-source edge scatter is the
-    // deliberately-pessimal path, and its coverage is invariant in both
-    // source count and depth — at 2 sources x 3 iterations this one gate
-    // cost ~25% of the whole bench (VERDICT r3 wrong-2)
-    "q_ppr_hub" -> ((s, dir) => {
-      val pr = GraphOps.personalizedPageRank(graphEdges(s, dir), Seq(1L),
-        iterations = 2, hubDegreeThreshold = 1L)
-        .select(col("source"), col("nodeid"), round(col("rank"), 9).as("rank"))
-      GraphOps.topKPerSource(pr, 5).withColumnRenamed("rank", "pr")
-    }),
-
-    // convergence mode (the iteration-count-free variant a real engine
-    // offers): stops when the L∞ rank change drops below tol. The oracle
-    // is a SELF-TERMINATING recursive CTE running the same loop with the
-    // same stopping rule, so the gate holds at any SF; the reported
-    // iteration count is emitted as a column and must agree cross-engine.
-    // tol=1e-4 sits ≥25% from the nearest per-iteration delta at sf0.01
-    // and sf0.1 (deltas shrink ~8x/iteration), so float noise cannot flip
-    // the stopping iteration between engines.
-    "q_pagerank_conv" -> ((s, dir) => {
-      val (ranks, iters) = GraphOps.pageRankConverged(graphEdges(s, dir),
-        tol = 1e-4, maxIterations = 20)
-      ranks.select(col("nodeid"), round(col("rank"), 9).as("pr"),
-        lit(iters).as("iters"))
-    }),
-
-    // graph summary counters (A8) — the reference's job-counter surface
-    "q_graph_stats" -> ((s, dir) => {
-      val stats = GraphOps.graphStats(graphEdges(s, dir))
-      import s.implicits._
-      Seq((stats("nodes"), stats("edges"), stats("dangling")))
-        .toDF("nodes", "n_edges", "dangling")
-    }),
-
-    // ---- training-data pipeline: dedup family ----
-    "q_dedup_exact" -> ((s, dir) =>
-      DedupOps.exactDedup(docs(s, dir), "doc_id",
-        DedupOps.tokenSetFingerprint(col("text")))
-        .select(col("doc_id"), col("fp"), col("canonical_id"), col("is_dup"))),
-    "q_dedup_minhash" -> ((s, dir) =>
-      DedupOps.minhashNearDupPairs(docs(s, dir), "doc_id", "text",
-        shingleN = 3, k = 12, bands = 4, threshold = 0.5)
-        .select(col("ida"), col("idb"), round(col("jaccard"), 6).as("jaccard"))),
-    // pairs -> dedup decisions: connected components over the near-dup
-    // graph; min-id per component is the canonical doc
-    "q_dedup_clusters" -> ((s, dir) =>
-      DedupOps.nearDupClusters(docs(s, dir), "doc_id", "text",
-        shingleN = 3, k = 12, bands = 4, threshold = 0.5)),
-    // brute-force O(n²) oracle baseline for the LSH path — bounded to the
-    // first 1000 docs so bench cost stays bounded (the LSH variant above is
-    // the full-corpus path)
-    "q_ngram_jaccard" -> ((s, dir) =>
-      DedupOps.ngramJaccardPairs(docs(s, dir).where(col("doc_id") < 1000),
-        "doc_id", "text", shingleN = 3, threshold = 0.3)
-        .select(col("ida"), col("idb"), round(col("jaccard"), 6).as("jaccard"))),
-    "q_simhash" -> ((s, dir) =>
-      DedupOps.simhash(docs(s, dir), "doc_id", "text")
-        .withColumnRenamed("id", "doc_id")),
-    "q_simhash_pairs" -> ((s, dir) =>
-      DedupOps.simhashNearDupPairs(
-        DedupOps.simhash(docs(s, dir), "doc_id", "text"),
-        "id", "simhash", bits = 60, maxDist = 3)),
-    // incremental (cross-snapshot) dedup: even doc_ids play the EXISTING
-    // corpus, odd ids the incoming batch; every incoming doc is classified
-    // exact / near / new against the corpus via a cross-side band join —
-    // the per-snapshot ingestion shape (no corpus self-pairing, no rescan)
-    "q_dedup_incremental" -> ((s, dir) => {
-      val d = docs(s, dir)
-      DedupOps.dedupAgainstCorpus(
-        d.where(col("doc_id") % 2 === 0), d.where(col("doc_id") % 2 === 1),
-        "doc_id", "text", shingleN = 3, k = 12, bands = 4, threshold = 0.5)
-    }),
-
-    // ---- training-data pipeline: similarity search over embeddings ----
-    "q_ann_topk" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      SimilarityOps.bruteForceTopK(emb, "vec_id", "embedding",
-        emb.where(col("vec_id") < 3), "vec_id", "embedding", k = 5)
-    }),
-    "q_ann_ivf" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      SimilarityOps.ivfTopK(emb, "vec_id", "embedding",
-        emb.where(col("vec_id") < 3), "vec_id", "embedding",
-        k = 5, nlist = 8, nprobe = 2)
-    }),
-    // the full train->probe IVF pipeline: k-means-refined centroids
-    // (2 Lloyd iterations, coordinates quantized to 6 decimals per
-    // iteration — the quantization is what makes a TRAINED float model
-    // hash-stable cross-engine) fed through the same probe path as
-    // q_ann_ivf. The oracle unrolls the identical training iterations.
-    "q_ann_ivf_trained" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val cents = SimilarityOps.trainIvfCentroids(emb, "vec_id", "embedding",
-        nlist = 8, iterations = 2, roundDecimals = Some(6))
-      SimilarityOps.ivfTopK(emb, "vec_id", "embedding",
-        emb.where(col("vec_id") < 3), "vec_id", "embedding",
-        k = 5, nlist = 8, nprobe = 2, centroids = Some(cents))
-    }),
-    // product quantization ANN: per-subspace Lloyd codebooks (L2
-    // assignment, per-iteration 6-decimal centroid quantization for
-    // hash-stability), corpus reduced to m int codes, ADC scoring from
-    // literal codebooks — the full train→encode→score pipeline vs an
-    // unrolled per-subspace-Lloyd oracle
-    "q_ann_pq" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      SimilarityOps.pqTopK(emb, "vec_id", "embedding",
-        emb.where(col("vec_id") < 3), "vec_id", "embedding",
-        k = 5, m = 2, cells = 4, iterations = 2)
-    }),
-    // IVF-PQ (the FAISS-style billion-scale shape): trained coarse cells
-    // + product-quantized RESIDUALS; probe top-2 cells, score by
-    // dot(q,centroid) + residual ADC — both quantizers' training unrolled
-    // in the oracle
-    "q_ann_ivfpq" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      SimilarityOps.ivfPqTopK(emb, "vec_id", "embedding",
-        emb.where(col("vec_id") < 3), "vec_id", "embedding",
-        k = 5, nlist = 8, nprobe = 2, m = 2, cells = 4, iterations = 2)
-    }),
-    // two-stage retrieve-then-refine: the PQ/ADC shortlist (20 deep) is
-    // re-ranked with exact cosine — only shortlist ids' vectors are
-    // re-read (broadcast semi-join fetch, no corpus shuffle)
-    "q_ann_rerank" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      SimilarityOps.pqTopKRerank(emb, "vec_id", "embedding",
-        emb.where(col("vec_id") < 3), "vec_id", "embedding",
-        k = 5, shortlist = 20, m = 2, cells = 4, iterations = 2)
-    }),
-    // SemDeDup (Abbas et al. 2023): trained-quantizer clustering bounds
-    // the pairwise cosine scan to intra-cell pairs; connected duplicate
-    // groups keep their minimum id. Identical embeddings collapse before
-    // the cell self-join (duplicate safety, same guard as text dedup).
-    "q_semdedup" -> ((s, dir) =>
-      SimilarityOps.semanticDedup(Tables.embeddings(s, dir), "vec_id",
-        "embedding", nlist = 8, threshold = 0.45)),
-    // hyperplane-LSH bucketed ANN (approximate by construction — no SQL
-    // oracle; the driver records a rows-only check)
-    "q_ann_lsh" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      SimilarityOps.lshTopK(emb, "vec_id", "embedding",
-        emb.where(col("vec_id") < 3), "vec_id", "embedding",
-        k = 5, planes = 4)
-    }),
-    // multi-probe LSH: also probes the Hamming-distance-1 buckets on the
-    // query side (recall recovery for near-hyperplane vectors)
-    "q_ann_lsh_mp" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      SimilarityOps.lshTopK(emb, "vec_id", "embedding",
-        emb.where(col("vec_id") < 3), "vec_id", "embedding",
-        k = 5, planes = 4, probeBits = 4)
-    }),
-    // ANN recall@k harness: the sizing number an index user needs —
-    // recall of each approximate shortlist vs the exact brute-force
-    // top-k, across the tunable that governs each method (probeBits for
-    // LSH, nprobe for IVF, quantization for PQ). Every approximate
-    // result set AND the brute reference are re-derived by DuckDB (the
-    // same unrolled-training oracles as the individual q_ann_* gates),
-    // so the recall numbers themselves are hash-gated.
-    "q_ann_recall" -> ((s, dir) => {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val emb = Tables.embeddings(s, dir)
-      val queries = emb.where(col("vec_id") < 3)
-      def pairs(df: DataFrame) = df.select("query_id", "vec_id")
-      // the sweep's wall time is dominated by the independent MODEL
-      // TRAININGS (IVF centroids, PQ codebooks, IVF-PQ residual
-      // codebooks) and the brute-force reference — each a short chain of
-      // driver-blocking jobs. Build them CONCURRENTLY (Spark schedules
-      // jobs from multiple driver threads); every training's math and
-      // output is unchanged, so the hash gate is unaffected.
-      val centsF = Future(SimilarityOps.trainIvfCentroids(emb, "vec_id",
-        "embedding", nlist = 8, iterations = 2, roundDecimals = Some(6)))
-      val pqF = Future(SimilarityOps.pqTopK(emb, "vec_id", "embedding",
-        queries, "vec_id", "embedding", k = 5, m = 2, cells = 4,
-        iterations = 2))
-      // the brute-force top-5 is joined twice downstream (hits and
-      // totals): checkpoint it once, concurrently with the trainings
-      val bruteF = Future(pairs(SimilarityOps.bruteForceTopK(emb, "vec_id",
-        "embedding", queries, "vec_id", "embedding", k = 5))
-        .withColumn("hit", lit(1)).localCheckpoint())
-      val ivfpqF = centsF.map(cents => SimilarityOps.ivfPqTopK(emb,
-        "vec_id", "embedding", queries, "vec_id", "embedding", k = 5,
-        nlist = 8, nprobe = 2, m = 2, cells = 4, iterations = 2,
-        centroids = Some(cents)))
-      val cents = SimilarityOps.awaitOrFail(centsF, "IVF centroid training")
-      def ivfAt(nprobe: Int) = SimilarityOps.ivfTopK(emb, "vec_id",
-        "embedding", queries, "vec_id", "embedding", k = 5, nlist = 8,
-        nprobe = nprobe, centroids = Some(cents))
-      // evaluate each variant's (query_id, vec_id) shortlist as its OWN
-      // concurrent action down to a |queries| x k checkpointed relation —
-      // the methods' plans are independent, so the sweep's wall time is
-      // max(variant), not sum(variant); the union then reads 7 tiny
-      // in-memory relations. Content and ordering are deterministic, so
-      // the hash gate is unaffected.
-      def shortlist(n: String, dfF: Future[DataFrame]): Future[DataFrame] =
-        dfF.map(df =>
-          pairs(df).withColumn("method", lit(n)).localCheckpoint())
-      val variantFs: Seq[Future[DataFrame]] = Seq(
-        shortlist("lsh_p4", Future(SimilarityOps.lshTopK(emb, "vec_id",
-          "embedding", queries, "vec_id", "embedding", k = 5, planes = 4))),
-        shortlist("lsh_p4_mp", Future(SimilarityOps.lshTopK(emb, "vec_id",
-          "embedding", queries, "vec_id", "embedding", k = 5, planes = 4,
-          probeBits = 4))),
-        shortlist("ivf_np1", Future(ivfAt(1))),
-        shortlist("ivf_np2", Future(ivfAt(2))),
-        shortlist("ivf_np4", Future(ivfAt(4))),
-        shortlist("pq_m2c4", pqF),
-        shortlist("ivfpq_np2", ivfpqF))
-      val union = variantFs.map(
-        SimilarityOps.awaitOrFail(_, "ANN variant shortlist"))
-        .reduce(_ unionByName _)
-      val brute = SimilarityOps.awaitOrFail(bruteF, "brute-force reference")
-      union.join(broadcast(brute), Seq("query_id", "vec_id"), "left_outer")
-        .groupBy("method")
-        .agg(sum(coalesce(col("hit"), lit(0))).as("hits"))
-        .crossJoin(broadcast(brute.agg(count(lit(1)).as("total"))))
-        .select(col("method"), col("hits"), col("total"),
-          round(col("hits").cast("double") / col("total"), 6).as("recall"))
-    }),
-    // brute-force O(n²) pair scan — bounded to the first 2000 vectors; the
-    // hyperplane-LSH bucketing in SimilarityOps is the full-corpus path
-    "q_embed_neardup" -> ((s, dir) =>
-      SimilarityOps.cosineNearDupPairs(
-        Tables.embeddings(s, dir).where(col("vec_id") < 2000),
-        "vec_id", "embedding", threshold = 0.4)),
-
-    // ---- training-data pipeline: text analysis ----
-    "q_langid" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        TextAnalysisOps.langId(TextOps.tokens(col("text"))).as("lang_pred"))),
-    "q_quality" -> ((s, dir) =>
-      TextAnalysisOps.qualityScore(docs(s, dir), "doc_id", "text")),
-    "q_token_counts" -> ((s, dir) =>
-      TextAnalysisOps.tokenCounts(docs(s, dir), "doc_id", "text")),
-    "q_fingerprint" -> ((s, dir) =>
-      TextAnalysisOps.fingerprintSketch(docs(s, dir), "doc_id", "text",
-        shingleN = 4, window = 4)),
-    // unigram token entropy (bits): distribution-shape quality signal —
-    // near 0 for one-token spam, log2(n) for all-distinct docs
-    "q_entropy" -> ((s, dir) =>
-      TextAnalysisOps.tokenEntropy(docs(s, dir), "doc_id", "text")),
-    // n-gram LM quality scoring (the pretraining perplexity filter):
-    // add-k bigram model trained on the corpus itself, each doc scored by
-    // its average bigram log-probability
-    "q_lm_score" -> ((s, dir) =>
-      TextAnalysisOps.lmQualityScore(docs(s, dir), "doc_id", "text")),
-    // bounded-state LM scoring: the same perplexity filter with both
-    // count relations replaced by broadcast count-min matrices (fixed
-    // d*w state at any corpus size) — the 100 TB-safe variant
-    "q_lm_score_bounded" -> ((s, dir) =>
-      TextAnalysisOps.lmQualityScoreBounded(docs(s, dir), "doc_id", "text",
-        cmsDepth = 3, cmsWidth = 1 << 18)),
-    // learned quality filter: hashed bag-of-words logistic regression
-    // (full-batch GD, driver-held weights, per-iteration 6-decimal
-    // rounding — the trained-model determinism recipe); labels = lang=en,
-    // the CCNet-style language-filter flavor. Oracle unrolls the same GD
-    // iterations in SQL.
-    "q_quality_classifier" -> ((s, dir) =>
-      ClassifierOps.qualityClassifier(docs(s, dir), "doc_id", "text",
-        col("lang") === "en", dims = 16, iterations = 3)),
-    // subword seed-vocabulary induction: top-200 word substrings (len<=4)
-    // weighted by word frequency — the SentencePiece/BPE seed step,
-    // computed on the distinct-word relation, never corpus-scale rows
-    "q_vocab_induction" -> ((s, dir) =>
-      TextAnalysisOps.vocabInduction(docs(s, dir), "text",
-        maxPieceLen = 4, topK = 200)),
-    // subword tokenization under the self-induced vocab: greedy
-    // longest-match per DISTINCT word (driver-bounded relational loop),
-    // rejoined to the corpus for per-doc subword counts
-    "q_subword_tokens" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val vocab = TextAnalysisOps.vocabInduction(d, "text",
-        maxPieceLen = 4, topK = 200)
-      TextAnalysisOps.subwordTokenCounts(d, "doc_id", "text", vocab,
-        maxPieceLen = 4)
-    }),
-    // Gopher-style repetitiveness signal: repeated-shingle fraction
-    "q_repetition" -> ((s, dir) =>
-      TextAnalysisOps.repetitionRatio(docs(s, dir), "doc_id", "text",
-        shingleN = 3)),
-    // fingerprint-bucket pair detection (plagiarism application): pairs
-    // sharing >= 2 winnowing fingerprints, hot fps df-capped at 50
-    "q_winnow_pairs" -> ((s, dir) =>
-      TextAnalysisOps.winnowedPairs(docs(s, dir), "doc_id", "text",
-        shingleN = 4, window = 4, maxDf = 50, minShared = 2)
-        .withColumnRenamed("id", "doc_id")),
-
-    // ---- training-data pipeline: multimodal plumbing (STUB kernels) ----
-    "q_multimodal_meta" -> ((s, dir) =>
-      MultimodalOps.extractMeta(
-        MultimodalOps.asAssets(docs(s, dir), "doc_id", "text", "text/plain"))
-        .toDF()),
-    // REAL media decode, gated: each doc's md5 bytes render a 4x4 gray8
-    // PNG (ImageIO ENCODE), the decode kernel (ImageIO DECODE, raw raster
-    // samples) reads dimensions + pixel mean back, and DuckDB verifies
-    // the mean straight from the same md5 hex — lossless roundtrip
-    "q_image_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      implicit val enc =
-        org.apache.spark.sql.Encoders.product[MultimodalOps.MediaAsset]
-      val assets = docs(s, dir)
-        .select(col("doc_id"), md5(col("text")).as("h"))
-        .as[(Long, String)]
-        .map { case (id, h) => MultimodalOps.MediaAsset(id, "image/png",
-          MultimodalOps.grayPngBytes(MultimodalOps.hexBytes(h), 4, 4)) }
-      MultimodalOps.decodeImages(assets).toDF()
-        .select(col("asset_id").as("doc_id"), col("width"), col("height"),
-          round(col("mean_pixel"), 6).as("mean_pixel"))
-    }),
-    // same contract for audio: md5 bytes -> 8 signed 16-bit PCM samples
-    // -> WAV (RIFF byte-walk ENCODE, spec-proven byte-identical to the
-    // independent AudioSystem codec) -> parse rate/channels/frames +
-    // sample mean back (byte-walk DECODE with AudioSystem fallback);
-    // DuckDB recomputes from the hex
-    "q_audio_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      implicit val enc =
-        org.apache.spark.sql.Encoders.product[MultimodalOps.MediaAsset]
-      val assets = docs(s, dir)
-        .select(col("doc_id"), md5(col("text")).as("h"))
-        .as[(Long, String)]
-        .map { case (id, h) =>
-          val b = MultimodalOps.hexBytes(h)
-          val samples = Array.tabulate(8)(i =>
-            (((b(2 * i) << 8) | b(2 * i + 1)) & 0xffff).toShort)
-          MultimodalOps.MediaAsset(id, "audio/wav",
-            MultimodalOps.pcm16WavBytes(samples, 8000f)) }
-      MultimodalOps.decodeAudio(assets).toDF()
-        .select(col("asset_id").as("doc_id"), col("sample_rate"),
-          col("channels"), col("n_frames"),
-          round(col("mean_sample"), 6).as("mean_sample"))
-    }),
-    // video container metadata: each doc's md5 bytes pick the parameters
-    // of a minimal VALID MP4 (ISO-BMFF ENCODE), the box-walk kernel reads
-    // duration/timescale/tracks/codec/dimensions back, and DuckDB
-    // re-derives every field straight from the hex — a real parse of the
-    // exact surface a pipeline filters video on before decoding
-    "q_video_meta" -> ((s, dir) => {
-      import s.implicits._
-      implicit val enc =
-        org.apache.spark.sql.Encoders.product[MultimodalOps.MediaAsset]
-      val assets = docs(s, dir)
-        .select(col("doc_id"), md5(col("text")).as("h"))
-        .as[(Long, String)]
-        .map { case (id, h) =>
-          val b = MultimodalOps.hexBytes(h)
-          MultimodalOps.MediaAsset(id, "video/mp4", MultimodalOps.tinyMp4(
-            timescale = 1000L + b(0),
-            duration = b(1) * 256L + b(2),
-            width = 16 * (1 + b(3) % 16),
-            height = 16 * (1 + b(4) % 16),
-            fourcc = Seq("avc1", "hvc1", "vp09", "av01")(b(5) % 4),
-            nTracks = 1 + b(6) % 3)) }
-      MultimodalOps.videoContainerMeta(assets).toDF()
-        .select(col("asset_id").as("doc_id"),
-          round(col("duration_ms"), 6).as("duration_ms"),
-          col("timescale"), col("n_tracks"), col("codec"),
-          col("width"), col("height"))
-    }),
-    // video FRAME decode: each doc becomes a 2-frame MPNG-in-AVI (PNG
-    // stills in a RIFF container — lossless, so the decoded pixels are
-    // SQL-recomputable; the lossy MJPG sibling rides the identical walk
-    // and is spec-gated instead). Frame 0's 4x4 gray pixels are md5(text)
-    // bytes, frame 1's are md5(md5(text)) bytes; the kernel walks the
-    // movi list, ImageIO-decodes each chunk, and DuckDB re-derives every
-    // frame's mean straight from the hex.
-    "q_video_frames" -> ((s, dir) => {
-      import s.implicits._
-      implicit val enc =
-        org.apache.spark.sql.Encoders.product[MultimodalOps.MediaAsset]
-      val assets = docs(s, dir)
-        .select(col("doc_id"), md5(col("text")).as("h0"),
-          md5(md5(col("text"))).as("h1"))
-        .as[(Long, String, String)]
-        .map { case (id, h0, h1) =>
-          MultimodalOps.MediaAsset(id, "video/x-msvideo",
-            MultimodalOps.framesAvi(Seq(
-              MultimodalOps.grayPngBytes(MultimodalOps.hexBytes(h0), 4, 4),
-              MultimodalOps.grayPngBytes(MultimodalOps.hexBytes(h1), 4, 4)),
-              width = 4, height = 4, fps = 10, fourcc = "MPNG")) }
-      MultimodalOps.decodeVideoFrames(assets).toDF()
-        .select(col("asset_id").as("doc_id"), col("frame_idx"),
-          col("width"), col("height"),
-          round(col("mean_pixel"), 6).as("mean_pixel"))
-    }),
-    // the LOSSY sibling, hash-gated: each doc becomes a 4-frame MJPG-in-
-    // AVI whose frame f is a CONSTANT-gray 8x8 JPEG (quality 1.0) valued
-    // at md5 byte f. Constant DC-only blocks survive the real JPEG
-    // quantize/Huffman/IDCT pipeline EXACTLY for all 256 values
-    // (MultimodalOps.grayJpegBytes, spec-proven), so the decoded mean of
-    // a genuinely lossy codec becomes SQL-recomputable from the hex —
-    // the same movi walk as q_video_frames, ImageIO JPEG decode branch.
-    "q_video_frames_mjpg" -> ((s, dir) => {
-      import s.implicits._
-      implicit val enc =
-        org.apache.spark.sql.Encoders.product[MultimodalOps.MediaAsset]
-      val assets = docs(s, dir)
-        .select(col("doc_id"), md5(col("text")).as("h"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          // only 256 constant tiles exist: memoize the (deterministic)
-          // JPEG encode per partition so the fixture build costs at most
-          // 256 ImageIO writer dispatches per task, not 4 per document —
-          // the DECODE through the movi walk (the operator under test)
-          // still runs per frame on every asset
-          val tiles = scala.collection.mutable.HashMap.empty[Int, Array[Byte]]
-          def tile(v: Int): Array[Byte] = tiles.getOrElseUpdate(v,
-            MultimodalOps.grayJpegBytes(Array.fill(64)(v), 8, 8))
-          it.map { case (id, h) =>
-            val b = MultimodalOps.hexBytes(h)
-            MultimodalOps.MediaAsset(id, "video/x-msvideo",
-              MultimodalOps.framesAvi((0 until 4).map(f => tile(b(f))),
-                width = 8, height = 8, fps = 10, fourcc = "MJPG")) } }
-      MultimodalOps.decodeVideoFrames(assets).toDF()
-        .select(col("asset_id").as("doc_id"), col("frame_idx"),
-          col("width"), col("height"),
-          round(col("mean_pixel"), 6).as("mean_pixel"))
-    }),
-
-    // ---- training-data pipeline: contamination / sampling / sketches ----
-    // benchmark-overlap check: docs 0-99 act as the "eval set"
-    "q_contamination" -> ((s, dir) => {
-      val d = docs(s, dir)
-      PipelineOps.contamination(
-        d.where(col("doc_id") >= 100), d.where(col("doc_id") < 100),
-        "doc_id", "text", shingleN = 3)
-    }),
-    // same overlap question through a FIXED-SIZE bloom bit set (the scale
-    // path when the benchmark side is itself huge); deterministic
-    // md5-permutation bit positions make it oracle-able
-    "q_bloom_contamination" -> ((s, dir) => {
-      val d = docs(s, dir)
-      PipelineOps.bloomContamination(
-        d.where(col("doc_id") >= 100), d.where(col("doc_id") < 100),
-        "doc_id", "text", shingleN = 3, numBits = 1 << 16, numHashes = 3)
-    }),
-    // exact-k deterministic sample per class (md5-priority reservoir)
-    "q_sample_exact" -> ((s, dir) =>
-      PipelineOps.sampleExactPerClass(
-        events(s, dir).select(col("event_type"), col("event_id")),
-        col("event_type"), col("event_id"), k = 20)
-        .select(col("event_type"), col("event_id"), col("sample_rank"))),
-    // deterministic md5 train/valid/test split — same key, same split, forever
-    "q_sample_split" -> ((s, dir) =>
-      events(s, dir)
-        .select(col("event_type"),
-          PipelineOps.splitLabel(col("event_id")).as("split"))
-        .groupBy("event_type", "split").agg(count(lit(1)).as("cnt"))),
-    // two-stage salted exact distinct (hot-key mitigation) must equal the
-    // plain count distinct — proven against the oracle, not just in-process
-    "q_salted_distinct" -> ((s, dir) =>
-      SkewOps.saltedCountDistinct(
-        events(s, dir).select(col("event_type"), col("user_id")),
-        "event_type", "user_id", salts = 16)),
-    // stratified deterministic sampling: class rebalancing by md5 bucket
-    "q_sample_strat" -> ((s, dir) =>
-      PipelineOps.stratifiedSampleByHash(events(s, dir), col("event_id"),
-        col("event_type"),
-        Map("click" -> 50, "purchase" -> 100, "view" -> 10), defaultPct = 5)
-        .groupBy("event_type").agg(count(lit(1)).as("cnt"))),
-    // bounded KMV distinct sketch (typed Aggregator => map-side combine)
-    // vs the exact distinct it approximates
-    "q_kmv_distinct" -> ((s, dir) =>
-      events(s, dir)
-        .withColumn("h", PipelineOps.hash60(col("user_id")))
-        .groupBy("event_type")
-        .agg(count_distinct(col("user_id")).as("exact"),
-          round(graft.functions.KmvSketch.kmvDistinct(col("h"), 64), 6)
-            .as("kmv_est"))),
-
-    // count-min frequency sketch: d x w counter matrix (fixed state),
-    // point estimates = min over rows; probes checked against exact counts
-    "q_cms_counts" -> ((s, dir) => {
-      val ev = events(s, dir).withColumn("h", PipelineOps.hash60(col("user_id")))
-      val matrix = ev.agg(
-        graft.functions.CmsSketch.cmsMatrix(col("h"), 3, 1024).as("m"))
-      val probes = ev.where(col("user_id") < 20)
-        .groupBy("user_id").agg(count(lit(1)).as("exact"))
-      probes.crossJoin(broadcast(matrix))
-        .select(col("user_id"), col("exact"),
-          graft.functions.CmsSketch.estimate(col("m"),
-            PipelineOps.hash60(col("user_id")), 3, 1024).as("cms_est"))
-    }),
-
-    // bounded-state quantile sketch: deterministic bottom-k-by-hash sample
-    // + linear interpolation (k (hash,value) pairs per group, mergeable)
-    "q_quantile_sketch" -> ((s, dir) =>
-      events(s, dir)
-        .withColumn("h", PipelineOps.hash60(col("event_id")))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          round(graft.functions.QuantileSketch.quantile(
-            col("h"), col("value"), 128, 0.5), 6).as("p50_est"),
-          round(graft.functions.QuantileSketch.quantile(
-            col("h"), col("value"), 128, 0.95), 6).as("p95_est"))),
-
-    // HyperLogLog distinct sketch (fixed 2^p-byte state, register-max
-    // merge) vs the exact distinct — the constant-state cousin of KMV
-    "q_hll_distinct" -> ((s, dir) =>
-      events(s, dir)
-        .withColumn("h", PipelineOps.hash60(col("user_id")))
-        .groupBy("event_type")
-        .agg(count_distinct(col("user_id")).as("exact"),
-          round(graft.functions.HllSketch.hllDistinct(col("h"), 8), 6)
-            .as("hll_est"))),
-
-    // batched per-partition media kernel (stub decode — md5-derived, so
-    // the DuckDB oracle replicates it bit-for-bit)
-    "q_frame_features" -> ((s, dir) =>
-      MultimodalOps.frameFeatures(
-        MultimodalOps.asAssets(docs(s, dir), "doc_id", "text", "text/plain"),
-        framesPerAsset = 2, featureDim = 4)
-        .toDF()
-        .select(col("asset_id"), col("frame_idx"),
-          round(element_at(col("feature"), 1).cast("double"), 6).as("f0"),
-          round(element_at(col("feature"), 4).cast("double"), 6).as("f3"))),
-
-    // ---- time series (assignment-6 family): P6-P9, T4 ----
-    // window frames: rolling stats over the trailing 4 events per user
-    "q_rolling" -> ((s, dir) =>
-      TimeSeriesOps.rollingStats(
-        events(s, dir).select(col("user_id"), col("event_id"), col("ts"), col("value")),
-        "user_id", "ts", "event_id", "value", frame = 4)),
-    // pivot with explicit values (no discovery job at scale)
-    "q_pivot_daily" -> ((s, dir) => {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      val p = TimeSeriesOps.dailyTypePivot(events(s, dir), "ts", "event_type", types)
-      p.select(col("m") +: col("d") +:
-        types.map(t => coalesce(col(s"`$t`"), lit(0L)).as(t)): _*)
-    }),
-    // full SQL window-function surface in one query: offsets (lag/lead),
-    // ranking (rank/row_number), distribution (percent_rank), bucketing
-    // (ntile) — ONE partition pass serves all of them
-    "q_window_suite" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val ev = events(s, dir).where(col("user_id") < 50)
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), col("value"))
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts_us").asc, col("event_id").asc)
-      val wv = Window.partitionBy("user_id")
-        .orderBy(col("value").desc, col("event_id").asc)
-      ev.select(col("user_id"), col("event_id"),
-        round(lag("value", 1).over(w), 6).as("prev_value"),
-        round(lead("value", 1).over(w), 6).as("next_value"),
-        rank().over(wv).as("value_rank"),
-        ntile(4).over(w).as("quartile"),
-        round(percent_rank().over(w), 6).as("pr"),
-        row_number().over(w).as("rn"))
-    }),
-    // edit distance over the LSH near-dup candidates (the precise-refine
-    // step a fuzzy-dedup pipeline runs after candidate generation).
-    // Duplicate-safe: byte-identical texts collapse to one representative
-    // BEFORE candidate generation (DedupOps.collapseIdentical on
-    // md5(text)), so the O(len^2) levenshtein kernel runs once per
-    // distinct-text pair, not once per doc pair; member pairs rejoin
-    // relationally — cross-group pairs inherit the rep pair's distance
-    // (members carry byte-identical text) and within-group pairs are 0.
-    "q_levenshtein" -> ((s, dir) => {
-      val (reps, membership, repPairs) = DedupOps.minhashNearDupRepPairs(
-        docs(s, dir).select(col("doc_id"), col("text")), "doc_id", "text",
-        shingleN = 3, k = 12, bands = 4, threshold = 0.5)
-      val lev = repPairs
-        .join(reps.select(col("doc_id").as("ida"), col("text").as("ta")), "ida")
-        .join(reps.select(col("doc_id").as("idb"), col("text").as("tb")), "idb")
-        .select(col("ida"), col("idb"),
-          levenshtein(col("ta"), col("tb")).as("edit_dist"))
-      DedupOps.expandPairs(lev, membership, Seq(lit(0).as("edit_dist")))
-    }),
-    // JSON property extraction (get_json_object, codegen'd — no UDF)
-    "q_json_kstats" -> ((s, dir) =>
-      TimeSeriesOps.jsonKStats(events(s, dir), "event_type", "props")),
-    // z-order clustering values (write-layout op): morton interleave of
-    // (user_id, value bucket) — pure codegen arithmetic
-    "q_zorder" -> ((s, dir) =>
-      events(s, dir).select(col("event_id"),
-        LayoutOps.zValue(LayoutOps.boundedBucket(col("user_id")),
-          LayoutOps.boundedBucket(floor(col("value")).cast("long"))).as("z"))),
-    // manifest-committed table with file-level column stats: orders is
-    // written range-clustered on o_orderkey (8 files, disjoint key slices),
-    // then a narrow key-range read plans from the MANIFEST — files whose
-    // [min,max] cannot match are skipped without opening them — and must
-    // still equal the plain filtered table the oracle computes
-    "q_manifest_skip" -> ((s, dir) => {
-      val tbl = scratchDir("graft-mskip") + "/orders"
-      LayoutOps.writeManifested(Tables.orders(s, dir), tbl, numFiles = 8,
-        statsCols = Seq("o_orderkey"), clusterBy = Seq("o_orderkey"))
-      LayoutOps.readManifestedWhere(s, tbl,
-        Seq(LayoutOps.ColBounds("o_orderkey", Some(1000L), Some(5000L))))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("o_totalprice")), 2).as("total"),
-          min(col("o_orderkey")).as("min_key"),
-          max(col("o_orderkey")).as("max_key"))
-    }),
-    // append-only change feed: the delta between generation 0 and the
-    // latest must be exactly the appended rows — verified against the
-    // oracle recomputing the same split from the raw table
-    "q_manifest_changes" -> ((s, dir) => {
-      val tbl = scratchDir("graft-mchg") + "/orders"
-      val ord = Tables.orders(s, dir)
-      LayoutOps.writeManifested(
-        ord.where(col("o_orderkey") <= 3000), tbl, numFiles = 2)
-      LayoutOps.appendManifested(
-        ord.where(col("o_orderkey") > 3000), tbl, numFiles = 4)
-      val (delta, gen) = LayoutOps.readManifestedChanges(s, tbl, 0L)
-      require(gen == 1L, s"expected generation 1, got $gen")
-      delta.groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("o_totalprice")), 2).as("total"))
-    }),
-    // additive schema evolution: the appended batch carries a column the
-    // original table lacked; old files read it back as NULL through the
-    // recorded union schema — the oracle reproduces that with a CASE
-    "q_manifest_evolve" -> ((s, dir) => {
-      val tbl = scratchDir("graft-mevo") + "/orders"
-      val ord = Tables.orders(s, dir)
-      LayoutOps.writeManifested(ord.where(col("o_orderkey") <= 3000)
-        .select(col("o_orderkey"), col("o_orderstatus")), tbl, numFiles = 2)
-      LayoutOps.appendManifested(ord.where(col("o_orderkey") > 3000)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice")), tbl, numFiles = 2)
-      LayoutOps.readManifested(s, tbl)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          round(col("o_totalprice"), 2).as("price"))
-    }),
-    // metadata-only COUNT: files fully inside the range are counted from
-    // the manifest's recorded row counts; only boundary files are scanned
-    "q_manifest_count" -> ((s, dir) => {
-      val tbl = scratchDir("graft-mcnt") + "/orders"
-      LayoutOps.writeManifested(Tables.orders(s, dir), tbl, numFiles = 8,
-        statsCols = Seq("o_orderkey"), clusterBy = Seq("o_orderkey"))
-      val (inRange, _) = LayoutOps.countManifestedWhere(s, tbl,
-        Seq(LayoutOps.ColBounds("o_orderkey", Some(1000L), Some(5000L))))
-      // unbounded count over a fully stats'd table: zero files scanned
-      val (total, scanned) = LayoutOps.countManifestedWhere(s, tbl)
-      require(scanned == 0, s"count(*) must be metadata-only, scanned $scanned")
-      import s.implicits._
-      Seq((inRange, total)).toDF("in_range", "total")
-    }),
-    // per-file bloom skipping: orders is clustered by o_orderkey, so
-    // every file's o_custkey RANGE covers the whole domain — only the
-    // manifest blooms can prune this point lookup; result must equal the
-    // oracle's plain equality filter
-    "q_manifest_point" -> ((s, dir) => {
-      val tbl = scratchDir("graft-mpt") + "/orders"
-      LayoutOps.writeManifested(Tables.orders(s, dir), tbl, numFiles = 8,
-        statsCols = Seq("o_orderkey"), clusterBy = Seq("o_orderkey"),
-        bloomCols = Seq("o_custkey"))
-      LayoutOps.readManifestedWhere(s, tbl,
-        Seq(LayoutOps.ColBounds("o_custkey", Some(101L), Some(101L))))
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          round(col("o_totalprice"), 2).as("price"))
-    }),
-    // copy-on-write delete targeted by the manifest stats: only the files
-    // whose [min,max] overlap the key range are rewritten; the remaining
-    // table must equal the oracle's NOT BETWEEN
-    "q_manifest_delete" -> ((s, dir) => {
-      val tbl = scratchDir("graft-mdel") + "/orders"
-      LayoutOps.writeManifested(Tables.orders(s, dir), tbl, numFiles = 8,
-        statsCols = Seq("o_orderkey"), clusterBy = Seq("o_orderkey"))
-      LayoutOps.deleteManifestedWhere(s, tbl,
-        Seq(LayoutOps.ColBounds("o_orderkey", Some(1000L), Some(5000L))))
-      LayoutOps.readManifested(s, tbl)
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("o_totalprice")), 2).as("total"))
-    }),
-    // copy-on-write upsert: a key-clustered batch replaces its rows in
-    // place (only overlapping files rewritten); result must equal the
-    // oracle's CASE rewrite of the same rows
-    "q_manifest_upsert" -> ((s, dir) => {
-      val tbl = scratchDir("graft-mups") + "/orders"
-      LayoutOps.writeManifested(Tables.orders(s, dir), tbl, numFiles = 8,
-        statsCols = Seq("o_orderkey"), clusterBy = Seq("o_orderkey"))
-      val updates = Tables.orders(s, dir)
-        .where(col("o_orderkey").between(1000, 2000))
-        .withColumn("o_totalprice", lit(1.0))
-      LayoutOps.upsertManifested(updates, tbl, "o_orderkey")
-      LayoutOps.readManifested(s, tbl)
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("o_totalprice")), 2).as("total"))
-    }),
-    // timestamp-range skipping: o_orderdate written as TIMESTAMP_MICROS
-    // (Spark's INT96 default records no footer stats) so per-file
-    // min/max cover micros ranges, and the lazy path translates the
-    // query's own timestamp literals (session tz UTC) into the stats
-    // domain — the time-series retention-scan shape
-    "q_manifest_tsrange" -> ((s, dir) => {
-      val tbl = scratchDir("graft-mts") + "/orders"
-      val prev = s.conf.getOption("spark.sql.parquet.outputTimestampType")
-      s.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      try LayoutOps.writeManifested(Tables.orders(s, dir), tbl,
-        numFiles = 8, statsCols = Seq("o_orderdate"),
-        clusterBy = Seq("o_orderdate"))
-      finally prev match {
-        case Some(v) => s.conf.set("spark.sql.parquet.outputTimestampType", v)
-        case None => s.conf.unset("spark.sql.parquet.outputTimestampType")
-      }
-      LayoutOps.readManifested(s, tbl)
-        .where(col("o_orderdate") >= to_timestamp(lit("1996-01-01 00:00:00"))
-          && col("o_orderdate") < to_timestamp(lit("1998-01-01 00:00:00")))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("o_totalprice")), 2).as("total"),
-          min(col("o_orderdate")).as("first_d"),
-          max(col("o_orderdate")).as("last_d"))
-    }),
-    // dimension-driven semi-join pruning: the probe keys come from a
-    // DIMENSION query (small by construction), re-enter the plan as an
-    // IN list, and the lazy FileIndex prunes fact files per key through
-    // the per-file blooms — the "read only this user's files" shape; the
-    // oracle is the equivalent IN-subquery
-    "q_manifest_semijoin" -> ((s, dir) => {
-      val tbl = scratchDir("graft-msj") + "/orders"
-      LayoutOps.writeManifested(Tables.orders(s, dir), tbl, numFiles = 8,
-        statsCols = Seq("o_orderkey"), clusterBy = Seq("o_orderkey"),
-        bloomCols = Seq("o_custkey"))
-      val keys = Tables.customer(s, dir)
-        .where(col("c_mktsegment") === "BUILDING" && col("c_custkey") <= 40)
-        .select(col("c_custkey")).collect().map(_.getLong(0)).sorted
-      LayoutOps.readManifested(s, tbl)
-        .where(col("o_custkey").isin(keys: _*))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("o_totalprice")), 2).as("total"),
-          count_distinct(col("o_custkey")).as("n_cust"))
-    }),
-    // z-order manifest layout: the table is written along a Morton curve
-    // of (o_custkey, o_orderkey), so each file covers a compact rectangle
-    // of that 2-D space and a conjunctive range query on BOTH dimensions
-    // prunes through the lazy FileIndex; a CoW delete in between proves
-    // the curve survives maintenance
-    "q_manifest_zorder" -> ((s, dir) => {
-      val tbl = scratchDir("graft-mz") + "/orders"
-      LayoutOps.writeManifested(Tables.orders(s, dir), tbl, numFiles = 16,
-        statsCols = Seq("o_custkey", "o_orderkey"),
-        zOrderBy = Seq("o_custkey", "o_orderkey"))
-      LayoutOps.deleteManifestedWhere(s, tbl,
-        Seq(LayoutOps.ColBounds("o_orderkey", Some(50000L), None)))
-      LayoutOps.readManifested(s, tbl)
-        .where(col("o_custkey").between(100L, 400L) &&
-          col("o_orderkey").between(2000L, 20000L))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("o_totalprice")), 2).as("total"),
-          max(col("o_custkey")).as("max_cust"))
-    }),
-    // lazy Catalyst-time file skipping: readManifested scans through a
-    // manifest-backed FileIndex, so this plain .where() prunes data files
-    // from the query's own predicate during physical planning (range
-    // stats + blooms) — no bounds API involved; hash-compared against
-    // the relational answer
-    "q_manifest_lazy" -> ((s, dir) => {
-      val tbl = scratchDir("graft-mlazy") + "/orders"
-      LayoutOps.writeManifested(Tables.orders(s, dir), tbl, numFiles = 8,
-        statsCols = Seq("o_orderkey"), clusterBy = Seq("o_orderkey"),
-        bloomCols = Seq("o_custkey"))
-      LayoutOps.readManifested(s, tbl)
-        .where(col("o_orderkey").between(1000L, 5000L) &&
-          col("o_custkey") =!= 7L)
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("o_totalprice")), 2).as("total"),
-          min(col("o_orderkey")).as("min_key"),
-          max(col("o_orderkey")).as("max_key"))
-    }),
-    // metadata-only rollback: a bad append is undone by re-committing the
-    // good generation's listing (zero data I/O); the restored table must
-    // equal the oracle computing the ORIGINAL split from the raw table
-    "q_manifest_rollback" -> ((s, dir) => {
-      val tbl = scratchDir("graft-mrb") + "/orders"
-      val ord = Tables.orders(s, dir)
-      LayoutOps.writeManifested(ord.where(col("o_orderkey") <= 3000),
-        tbl, numFiles = 4, statsCols = Seq("o_orderkey"),
-        clusterBy = Seq("o_orderkey"))
-      // the "bad batch": wrong prices land in generation 1
-      LayoutOps.appendManifested(ord.where(col("o_orderkey") > 3000)
-        .withColumn("o_totalprice", lit(-1.0)), tbl, numFiles = 2)
-      val g = LayoutOps.rollbackManifested(s, tbl, 0L)
-      require(g == 2L, s"rollback must commit a NEW generation, got $g")
-      LayoutOps.readManifested(s, tbl)
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("o_totalprice")), 2).as("total"),
-          max(col("o_orderkey")).as("max_key"))
-    }),
-    // streaming manifested ingest: a FILE stream source (public API — no
-    // internal MemoryStream seam in the gated plan) discovers three
-    // staged parquet drops of a known orders split and feeds them through
-    // the foreachBatch manifest sink — one token-committed generation per
-    // micro-batch (exactly-once under replay, proven in LayoutOpsSpec) —
-    // and the settled table must equal the oracle's plain filter over the
-    // raw table. Staged-drop feeding is exactly how production ingest
-    // lands: files appear, the stream picks them up.
-    // the change-feed SOURCE (CDC read side): a manifested table built in
-    // three generations is consumed as a stream — snapshot batch + one
-    // batch per append, offsets = generations; the union of all delivered
-    // batches must equal the table, hash-compared against the oracle
-    "q_manifest_cdc" -> ((s, dir) => {
-      val base = scratchDir("graft-mcdc")
-      val tbl = base + "/orders"
-      val ord = Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      LayoutOps.writeManifested(ord.where(col("o_orderkey") <= 2000), tbl,
-        numFiles = 2, statsCols = Seq("o_orderkey"),
-        clusterBy = Seq("o_orderkey"))
-      LayoutOps.appendManifested(ord.where(col("o_orderkey") > 2000 &&
-        col("o_orderkey") <= 4000), tbl, numFiles = 2)
-      LayoutOps.appendManifested(ord.where(col("o_orderkey") > 4000), tbl,
-        numFiles = 2)
-      val q = graft.streaming.StreamingOps.readStreamManifested(s, tbl)
-        .writeStream.format("memory").queryName("mcdc")
-        .option("checkpointLocation", base + "/_ckpt")
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.sql("SELECT * FROM mcdc")
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("o_totalprice")), 2).as("total"),
-          max(col("o_orderkey")).as("max_key"))
-    }),
-    "q_manifest_stream" -> ((s, dir) => {
-      val base = scratchDir("graft-mstr")
-      val tbl = base + "/orders"
-      val staging = new java.io.File(base, "staging")
-      staging.mkdirs()
-      val ord = Tables.orders(s, dir).where(col("o_orderkey") <= 6000)
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      val q = s.readStream.schema(ord.schema).parquet(staging.toString)
-        .writeStream
-        .option("checkpointLocation", base + "/_ckpt")
-        .foreachBatch(graft.streaming.StreamingOps.manifestedBatchSink(tbl,
-          statsCols = Seq("o_orderkey"), clusterBy = Seq("o_orderkey")))
-        .outputMode("append").start()
-      try {
-        // three staged drops, each settled before the next lands: write
-        // the chunk aside, then move its part-files into the watched dir
-        // (the file source only ever sees complete files)
-        Seq((Long.MinValue, 2000L), (2000L, 4000L), (4000L, 6000L))
-          .zipWithIndex.foreach { case ((lo, hi), i) =>
-            val tmp = new java.io.File(base, s"tmp$i")
-            ord.where(col("o_orderkey") > lo && col("o_orderkey") <= hi)
-              .coalesce(1).write.parquet(tmp.toString)
-            tmp.listFiles().filter(_.getName.endsWith(".parquet"))
-              .zipWithIndex.foreach { case (f, j) =>
-                java.nio.file.Files.move(f.toPath,
-                  new java.io.File(staging, s"drop$i-$j.parquet").toPath)
-              }
-            q.processAllAvailable()
-          }
-      } finally q.stop()
-      // this gate's scratch tree holds three parquet copies of the
-      // orders split — materialize the (3-row) aggregate and delete the
-      // tree NOW rather than waiting for the JVM-exit hook
-      val agg = LayoutOps.readManifested(s, tbl)
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("o_totalprice")), 2).as("total"))
-      val localRows = agg.collect().toIndexedSeq
-      val schema = agg.schema
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(localRows).asJava),
-        schema)
-    }),
-    // co-located join: both sides bucketed on the join key at WRITE time,
-    // so the repeated join needs no exchange at read (BucketingSpec proves
-    // the shuffle-free plan; this gate hash-verifies the result). The
-    // pre-paid shuffle is the 100 TB answer to a dimension too big to
-    // broadcast that is joined on every query.
-    "q_bucketed_join" -> ((s, dir) => {
-      val wh = scratchDir("graft-bk")
-      s.sql("DROP TABLE IF EXISTS graft_bk_orders")
-      s.sql("DROP TABLE IF EXISTS graft_bk_customer")
-      Tables.orders(s, dir).write.mode("overwrite")
-        .bucketBy(8, "o_custkey").sortBy("o_custkey")
-        .option("path", s"$wh/orders").saveAsTable("graft_bk_orders")
-      Tables.customer(s, dir).write.mode("overwrite")
-        .bucketBy(8, "c_custkey").sortBy("c_custkey")
-        .option("path", s"$wh/customer").saveAsTable("graft_bk_customer")
-      s.table("graft_bk_orders")
-        .join(s.table("graft_bk_customer"), col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_orders"),
-          round(sum(col("o_totalprice")), 2).as("total"))
-    }),
-    // PII scrub: redactable strings are synthesized DETERMINISTICALLY from
-    // table columns (the corpus text itself is word soup), then the
-    // regexp_replace chain + pre-scrub exposure counts must match RE2's
-    // reading of the same patterns in DuckDB
-    "q_redact" -> ((s, dir) => {
-      val synth = concat(
-        col("text"),
-        lit(" contact user"), col("doc_id").cast("string"),
-        lit("@mail.example.com from 10.0."),
-        (col("doc_id") % 256).cast("string"),
-        lit(".7 via https://"), col("source"), lit(".example/item/"),
-        col("doc_id").cast("string"),
-        lit(" ssn "), lpad((col("doc_id") % 1000).cast("string"), 3, "0"),
-        lit("-45-6789"))
-      TextAnalysisOps.redact(
-        docs(s, dir).select(col("doc_id"), synth.as("text")),
-        "doc_id", "text")
-    }),
-    // recency-weighted features: exponentially decayed per-type sums,
-    // anchored at the corpus max timestamp (one driver scalar)
-    "q_decayed" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val ref = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
-      TimeSeriesOps.timeDecayedSum(ev, "event_type", "ts", "value",
-        halfLifeMinutes = 60 * 24, refEpochUs = ref)
-    }),
-    // grouping sets: per-nation, per-region subtotal and grand total in one agg
-    "q_rollup_revenue" -> ((s, dir) =>
-      RelationalOps.revenueRollup(s, dir)),
-    "q_hourly_counts" -> ((s, dir) =>
-      TimeSeriesOps.hourlyCounts(events(s, dir), "ts")),
-    "q_hourly_filtered" -> ((s, dir) =>
-      TimeSeriesOps.hourlyCountsFiltered(events(s, dir), "ts",
-        "event_type", "(?i)(click|view)")),
-    "q_topk_per_type" -> ((s, dir) =>
-      TimeSeriesOps.topKPerGroup(
-        events(s, dir).select(col("event_type"), col("event_id"), col("value")),
-        "event_type", "value", "event_id", k = 3)),
-    // distribution stats per event type: exact interpolated quantiles
-    // (Spark percentile == DuckDB quantile_cont, linear interpolation)
-    "q_value_stats" -> ((s, dir) =>
-      events(s, dir).groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          round(avg(col("value")), 6).as("mean"),
-          round(expr("percentile(value, 0.5)"), 6).as("p50"),
-          round(expr("percentile(value, 0.95)"), 6).as("p95"),
-          round(min(col("value")), 6).as("vmin"),
-          round(max(col("value")), 6).as("vmax"))),
-    "q_sessionize" -> ((s, dir) =>
-      TimeSeriesOps.sessionize(
-        events(s, dir).select(col("user_id"), col("ts"), col("event_id")),
-        "user_id", "ts", gapMinutes = 30)
-        .groupBy("user_id", "session_id")
-        .agg(count(lit(1)).as("n_events"),
-          min(unix_micros(col("ts"))).as("start_us"),
-          max(unix_micros(col("ts"))).as("end_us"))),
-
-    // ---- training-data pipeline: corpus curation (CurationOps) ----
-    // repeated-substring detection: token 8-gram windows recurring
-    // corpus-wide, merged into maximal spans (exact-substring dedup at
-    // window granularity — doc-level dedup's missing finer level)
-    "q_dup_spans" -> ((s, dir) =>
-      CurationOps.duplicateSpans(docs(s, dir), "doc_id", "text", k = 8)),
-    // keep-first removal of those spans: per-doc token loss + digest of
-    // the rewritten body (narrow result; full text never shuffles)
-    "q_dup_span_removal" -> ((s, dir) =>
-      CurationOps.removeDuplicateSpans(docs(s, dir), "doc_id", "text", k = 8)),
-    // corpus-composition report: source x language mixture shares
-    "q_mixture_report" -> ((s, dir) =>
-      CurationOps.mixtureReport(docs(s, dir), "text", Seq("source", "lang"))),
-    // deterministic downsample-only resample to a target language mix
-    // (zh has no target weight -> dropped entirely)
-    "q_mixture_resample" -> ((s, dir) =>
-      CurationOps.mixtureResample(docs(s, dir), "doc_id", "lang",
-        Map("en" -> 0.5, "de" -> 0.2, "es" -> 0.15, "fr" -> 0.15))),
-    // concat-and-chunk sequence packing: 256-token sequences, 8 buckets
-    "q_pack_sequences" -> ((s, dir) =>
-      CurationOps.packSequences(docs(s, dir), "doc_id", "text",
-        budget = 256, numBuckets = 8)),
-    // the END-TO-END curation composition, hash-gated as one unit: exact
-    // dedup -> near-dup removal -> 20-token floor -> decontamination
-    // against the doc_id%17 slice at <= 0.3 shingle overlap. The oracle
-    // chains the same five relational stages in one SQL statement.
-    "q_curate" -> ((s, dir) => {
-      val d = docs(s, dir)
-      CurationOps.curate(d, "doc_id", "text", minTokens = Some(20),
-        benchmark = Some(d.where(col("doc_id") % 17 === 0)),
-        maxContamination = 0.3)._1.select(col("doc_id"), col("source"))
-    }),
-  )
-
-  private def graphEdges(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .select(col("l_partkey").as("src"), col("l_suppkey").as("dst"))
-
-  // DuckDB-side tokenization mirroring TextOps.tokens.
-  private val toksSql =
-    "list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '')"
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "q_wordcount" ->
-      s"""SELECT word, count(*) AS cnt
-         |FROM (SELECT unnest($toksSql) AS word FROM documents)
-         |GROUP BY word""".stripMargin,
-    "q_bigram_count" ->
-      s"""WITH d AS (SELECT $toksSql AS toks FROM documents),
-         |i AS (SELECT toks, unnest(generate_series(1, len(toks)-1)) AS i FROM d)
-         |SELECT toks[i] || '_' || toks[i+1] AS bigram, count(*) AS cnt
-         |FROM i GROUP BY 1""".stripMargin,
-    "q_cooc_pairs" -> coocSql,
-    "q_cooc_stripes" -> coocSql,
-    "q_pair_doccount" ->
-      s"""WITH d AS (SELECT doc_id, list_distinct($toksSql) AS terms FROM documents),
-         |x AS (SELECT doc_id, unnest(terms) AS x, terms FROM d),
-         |xy AS (SELECT doc_id, x, unnest(terms) AS y FROM x)
-         |SELECT x, y, count(*) AS n_docs FROM xy WHERE x < y GROUP BY x, y""".stripMargin,
-    "q_pmi" ->
-      s"""WITH d AS (SELECT doc_id, list_distinct($toksSql) AS terms FROM documents),
-         |n AS (SELECT count(*) AS n FROM documents),
-         |m AS (SELECT t, count(*) AS df FROM (SELECT unnest(terms) AS t FROM d) GROUP BY t),
-         |x1 AS (SELECT doc_id, unnest(terms) AS x, terms FROM d),
-         |xy AS (SELECT doc_id, x, unnest(terms) AS y FROM x1),
-         |p AS (SELECT x, y, count(*) AS n_docs FROM xy WHERE x < y
-         |      GROUP BY x, y HAVING count(*) >= 10)
-         |SELECT p.x, p.y, p.n_docs,
-         |       round(ln(p.n_docs * (SELECT n FROM n) / (mx.df * my.df)), 6) AS pmi
-         |FROM p JOIN m mx ON p.x = mx.t JOIN m my ON p.y = my.t""".stripMargin,
-    "q1_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       round(sum(l_quantity), 2) AS sum_qty,
-        |       round(sum(l_extendedprice), 2) AS sum_base_price,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        |       round(avg(l_quantity), 6) AS avg_qty,
-        |       count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q_revenue_by_nation" ->
-      """SELECT r_name, n_name,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        |       count(*) AS n_items
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name""".stripMargin,
-    "q_top_customers" ->
-      """SELECT c_custkey, c_name, c_mktsegment,
-        |       round(sum(o_totalprice), 2) AS total_spent,
-        |       count(*) AS n_orders
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_custkey, c_name, c_mktsegment
-        |ORDER BY total_spent DESC, c_custkey ASC LIMIT 10""".stripMargin,
-    "q_segments_with_orders" ->
-      """SELECT c_mktsegment, count(*) AS n_customers
-        |FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |GROUP BY c_mktsegment""".stripMargin,
-    "q_customers_without_orders" ->
-      """SELECT c_custkey, c_name, c_mktsegment
-        |FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""".stripMargin,
-    "q_asof_join" ->
-      """WITH p AS (SELECT user_id, ts, max(value) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts)
-        |SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us,
-        |       round(p.purchase_value, 6) AS purchase_value
-        |FROM events e ASOF LEFT JOIN p
-        |  ON e.user_id = p.user_id AND e.ts >= p.ts""".stripMargin,
-    "q_asof_forward" ->
-      """WITH p AS (SELECT user_id, ts, max(value) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts)
-        |SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us,
-        |       round(p.purchase_value, 6) AS purchase_value
-        |FROM events e ASOF LEFT JOIN p
-        |  ON e.user_id = p.user_id AND e.ts <= p.ts""".stripMargin,
-    "q_term_doctf" -> termDocTfSql,
-    "q_index_stats" ->
-      s"""WITH t AS ($termDocTfSql)
-         |SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS total_tf,
-         |       min(doc_id) AS min_docid, max(doc_id) AS max_docid
-         |FROM t GROUP BY term""".stripMargin,
-    "q_postings_roundtrip" ->
-      s"""WITH t AS ($termDocTfSql)
-         |SELECT term, doc_id, tf FROM t
-         |WHERE term IN ('join', 'hash', 'vector')""".stripMargin,
-    "q_tfidf" ->
-      s"""WITH t AS ($termDocTfSql),
-         |nn AS (SELECT count(*) AS n FROM documents),
-         |d AS (SELECT term, count(*) AS df FROM t GROUP BY term)
-         |SELECT t.term, t.doc_id, t.tf,
-         |  round(t.tf * ln(CAST((SELECT n FROM nn) AS DOUBLE) / d.df), 6)
-         |    AS tfidf
-         |FROM t JOIN d USING (term)
-         |WHERE t.term IN ('join', 'hash', 'vector')""".stripMargin,
-    "q_bm25_search" ->
-      s"""WITH t AS ($termDocTfSql),
-         |nn AS (SELECT count(*) AS n FROM documents),
-         |d AS (SELECT term, count(*) AS df FROM t GROUP BY term),
-         |L AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM t GROUP BY doc_id),
-         |a AS (SELECT avg(dl) AS avgdl FROM L),
-         |s AS (SELECT t.doc_id,
-         |  ln(1.0 + (CAST((SELECT n FROM nn) AS DOUBLE) - d.df + 0.5) / (d.df + 0.5))
-         |  * (t.tf * ${1.2 + 1}) / (t.tf + 1.2 * (${1 - 0.75} + 0.75 * L.dl
-         |      / (SELECT avgdl FROM a))) AS sc
-         |  FROM t JOIN d USING (term) JOIN L USING (doc_id)
-         |  WHERE t.term IN ('join', 'hash', 'vector'))
-         |SELECT doc_id, round(sum(sc), 6) AS score FROM s GROUP BY doc_id
-         |ORDER BY score DESC, doc_id ASC LIMIT 10""".stripMargin,
-    "q_bool_retrieval" ->
-      s"""WITH d AS (SELECT doc_id, $toksSql AS toks FROM documents)
-         |(SELECT doc_id FROM d WHERE list_contains(toks, 'join')
-         | INTERSECT
-         | SELECT doc_id FROM d WHERE list_contains(toks, 'hash'))
-         |UNION
-         |SELECT doc_id FROM d WHERE list_contains(toks, 'vector')""".stripMargin,
-    "q_tf_histogram" ->
-      s"""WITH t AS ($termDocTfSql)
-         |SELECT tf, count(*) AS cnt FROM t WHERE term = 'join' GROUP BY tf""".stripMargin,
-    "q_graph_stats" ->
-      """WITH e AS (SELECT l_partkey AS src, l_suppkey AS dst FROM lineitem),
-        |v AS (SELECT src AS nodeid FROM e UNION SELECT dst FROM e)
-        |SELECT (SELECT count(*) FROM v) AS nodes,
-        |       (SELECT count(*) FROM e) AS n_edges,
-        |       (SELECT count(*) FROM v
-        |        WHERE nodeid NOT IN (SELECT DISTINCT src FROM e)) AS dangling""".stripMargin,
-    "q_pagerank" -> pageRankOracle(5),
-    "q_pagerank_range" -> pageRankOracle(5),
-    "q_pagerank_hub" -> pageRankOracle(3),
-    "q_pagerank_log" -> pageRankOracle(5),
-    "q_pagerank_conv" -> pageRankConvOracle(1e-4, 20),
-    "q_ppr_topk" -> pprTopkOracle(5, Seq(1L, 2L), 5),
-    "q_ppr_hub" -> pprTopkOracle(2, Seq(1L), 5),
-    "q_dedup_exact" ->
-      s"""WITH d AS (SELECT doc_id,
-         |  md5(array_to_string(list_sort(list_distinct($toksSql)), ' ')) AS fp
-         |  FROM documents),
-         |c AS (SELECT fp, min(doc_id) AS canonical_id FROM d GROUP BY fp)
-         |SELECT d.doc_id, d.fp, c.canonical_id,
-         |       d.doc_id <> c.canonical_id AS is_dup
-         |FROM d JOIN c USING (fp)""".stripMargin,
-    "q_dedup_minhash" -> {
-      // same 60-bit hash + odd-multiplier permutations as DedupOps
-      // (30-bit-split modular multiply, identical in both engines)
-      val mods = DedupOps.minhashMultipliers(12).map(c =>
-        s"list_min([${DedupOps.permuteHashSql("x", c)} FOR x IN hs])")
-        .mkString(",\n|    ")
-      s"""WITH d AS ($shinglesSql),
-         |h AS (SELECT doc_id, $hashListSql AS hs FROM d),
-         |sig AS (SELECT doc_id, [
-         |    $mods
-         |  ] AS sig FROM h),
-         |bands AS (SELECT doc_id, b,
-         |  md5(b || '|' || array_to_string(sig[b*3+1 : b*3+3], ',')) AS bh
-         |  FROM sig CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)),
-         |cand AS (SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
-         |  FROM bands a JOIN bands b
-         |    ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id)
-         |SELECT ida, idb, round($jaccardSql, 6) AS jaccard
-         |FROM cand JOIN h a ON cand.ida = a.doc_id JOIN h b ON cand.idb = b.doc_id
-         |WHERE $jaccardSql >= 0.5""".stripMargin
-    },
-    // same LSH pipeline as q_dedup_minhash, then components as a recursive
-    // transitive closure (fine at oracle scale; the engine iterates
-    // min-label propagation instead). The CTE chain through `pairs` is
-    // shared with the pinnedOracle closure recipe, so the two oracles
-    // cannot drift apart.
-    "q_dedup_clusters" -> {
-      s"""WITH RECURSIVE ${minhashPairCtes()},
-         |e AS (SELECT ida AS u, idb AS v FROM pairs
-         |      UNION SELECT idb, ida FROM pairs),
-         |reach AS (SELECT u, v FROM e
-         |          UNION SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u)
-         |SELECT u AS doc_id, least(u, min(v)) AS cluster_id,
-         |       least(u, min(v)) = u AS is_canonical
-         |FROM reach GROUP BY u""".stripMargin
-    },
-    "q_ngram_jaccard" ->
-      s"""WITH d0 AS ($shinglesSql),
-         |d AS (SELECT doc_id, $hashListSql AS hs FROM d0 WHERE doc_id < 1000)
-         |SELECT a.doc_id AS ida, b.doc_id AS idb, round($jaccardSql, 6) AS jaccard
-         |FROM d a JOIN d b ON a.doc_id < b.doc_id
-         |WHERE $jaccardSql >= 0.3""".stripMargin,
-    "q_simhash" -> simhashSql,
-    "q_simhash_pairs" ->
-      s"""WITH s AS ($simhashSql),
-         |blk AS (SELECT doc_id, simhash, b,
-         |  (simhash >> (b * 15)) & 32767 AS blkval
-         |  FROM s CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)),
-         |cand AS (SELECT DISTINCT x.doc_id AS ida, y.doc_id AS idb,
-         |  x.simhash AS sa, y.simhash AS sb
-         |  FROM blk x JOIN blk y
-         |    ON x.b = y.b AND x.blkval = y.blkval AND x.doc_id < y.doc_id)
-         |SELECT ida, idb, bit_count(xor(sa, sb)) AS dist
-         |FROM cand WHERE bit_count(xor(sa, sb)) <= 3""".stripMargin,
-    // incremental dedup: the engine's collapse/expand pre-pass is
-    // invisible to results, so the oracle is the direct formulation —
-    // fingerprint lookup, cross-side band join, jaccard refine, best match
-    "q_dedup_incremental" -> {
-      val mods = DedupOps.minhashMultipliers(12).map(c =>
-        s"list_min([${DedupOps.permuteHashSql("x", c)} FOR x IN hs])")
-        .mkString(",\n|    ")
-      def side(cte: String, pred: String): String =
-        s"""$cte AS (SELECT doc_id, text FROM documents WHERE $pred),
-           |${cte}_sh AS (SELECT doc_id,
-           |  CASE WHEN len(toks) >= 3
-           |    THEN list_distinct([array_to_string(toks[i:i+2], ' ')
-           |                       FOR i IN generate_series(1, len(toks)-2)])
-           |    ELSE [array_to_string(toks, ' ')] END AS sh
-           |  FROM (SELECT doc_id, $toksSql AS toks FROM $cte)),
-           |${cte}_h AS (SELECT doc_id, $hashListSql AS hs FROM ${cte}_sh),
-           |${cte}_sig AS (SELECT doc_id, [
-           |    $mods
-           |  ] AS sig FROM ${cte}_h),
-           |${cte}_b AS (SELECT doc_id, b,
-           |  md5(b || '|' || array_to_string(sig[b*3+1 : b*3+3], ',')) AS bh
-           |  FROM ${cte}_sig CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b))"""
-      s"""WITH ${side("ex", "doc_id % 2 = 0")},
-         |${side("inc", "doc_id % 2 = 1")},
-         |efp AS (SELECT md5(array_to_string(list_sort(list_distinct($toksSql)), ' ')) AS fp,
-         |  min(doc_id) AS exact_id FROM ex GROUP BY 1),
-         |ifp AS (SELECT doc_id,
-         |  md5(array_to_string(list_sort(list_distinct($toksSql)), ' ')) AS fp
-         |  FROM inc),
-         |ehit AS (SELECT ifp.doc_id, efp.exact_id
-         |  FROM ifp LEFT JOIN efp USING (fp)),
-         |cand AS (SELECT DISTINCT i.doc_id AS id, e.doc_id AS eid
-         |  FROM inc_b i JOIN ex_b e ON i.b = e.b AND i.bh = e.bh),
-         |ref AS (SELECT id, eid, $jaccardSql AS jaccard
-         |  FROM cand JOIN inc_h a ON cand.id = a.doc_id
-         |            JOIN ex_h b ON cand.eid = b.doc_id
-         |  WHERE $jaccardSql >= 0.5),
-         |best AS (SELECT id, eid AS near_id, jaccard AS near_jaccard FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY id
-         |    ORDER BY jaccard DESC, eid ASC) AS rn FROM ref) WHERE rn = 1)
-         |SELECT e.doc_id,
-         |  CASE WHEN e.exact_id IS NOT NULL THEN 'exact'
-         |       WHEN b.near_id IS NOT NULL THEN 'near'
-         |       ELSE 'new' END AS status,
-         |  CASE WHEN e.exact_id IS NOT NULL THEN e.exact_id
-         |       ELSE b.near_id END AS matched_id,
-         |  CASE WHEN e.exact_id IS NOT NULL THEN CAST(1.0 AS DOUBLE)
-         |       ELSE round(b.near_jaccard, 6) END AS jaccard
-         |FROM ehit e LEFT JOIN best b ON e.doc_id = b.id""".stripMargin
-    },
-    "q_ann_topk" ->
-      s"""WITH e AS ($embSql),
-         |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM e
-         |      WHERE vec_id < 3),
-         |s AS (SELECT query_id, vec_id,
-         |        round(list_dot_product(qv, v) / (qnrm * nrm), 6) AS cos
-         |      FROM e CROSS JOIN q WHERE vec_id <> query_id)
-         |SELECT query_id, vec_id, cos, rn FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |                               ORDER BY cos DESC, vec_id ASC) AS rn
-         |  FROM s) WHERE rn <= 5""".stripMargin,
-    "q_ann_ivf" ->
-      s"""WITH e AS ($embSql),
-         |cents AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM e
-         |          WHERE vec_id < 8),
-         |asg AS (SELECT vec_id, v, nrm, cent_id AS cell FROM (
-         |  SELECT e.vec_id, e.v, e.nrm, cents.cent_id,
-         |    row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY list_dot_product(e.v, cents.cv) / (e.nrm * cents.cnrm)
-         |        DESC, cents.cent_id ASC) AS rc
-         |  FROM e CROSS JOIN cents) WHERE rc = 1),
-         |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM e
-         |      WHERE vec_id < 3),
-         |probe AS (SELECT query_id, qv, qnrm, cent_id AS cell FROM (
-         |  SELECT q.query_id, q.qv, q.qnrm, cents.cent_id,
-         |    row_number() OVER (PARTITION BY q.query_id
-         |      ORDER BY list_dot_product(q.qv, cents.cv) / (q.qnrm * cents.cnrm)
-         |        DESC, cents.cent_id ASC) AS rc
-         |  FROM q CROSS JOIN cents) WHERE rc <= 2),
-         |s AS (SELECT probe.query_id, asg.vec_id,
-         |  round(list_dot_product(probe.qv, asg.v) / (probe.qnrm * asg.nrm), 6)
-         |    AS cos
-         |  FROM asg JOIN probe ON asg.cell = probe.cell
-         |  WHERE asg.vec_id <> probe.query_id)
-         |SELECT query_id, vec_id, cos, rn FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |                               ORDER BY cos DESC, vec_id ASC) AS rn
-         |  FROM s) WHERE rn <= 5""".stripMargin,
-    // hyperplane-LSH: the md5-derived ±1 planes (SimilarityOps.planeSign /
-    // planeVector — first md5 hex char of "p:d" even -> +1) are fully
-    // deterministic, so the bucket code is SQL-expressible exactly like
-    // the MinHash permutations above. q_ann_lsh_mp shares every piece
-    // except the query CTE, which also unnests the Hamming-1 probe codes.
-    "q_ann_pq" -> pqOracleSql(cells = 4, iters = 2, topK = 5, dim = 64),
-    "q_ann_ivf_trained" -> ivfTrainedOracleSql(nlist = 8, iters = 2,
-      nprobe = 2, k = 5),
-    "q_ann_ivfpq" -> ivfPqOracleSql(nlist = 8, iters = 2, nprobe = 2,
-      cells = 4, k = 5, dim = 64),
-    // the ADC shortlist is the q_ann_pq pipeline at depth 20 (nested as a
-    // subquery — its WITH scope is self-contained), then exact cosine
-    // re-ranks from the raw vectors
-    "q_ann_rerank" ->
-      s"""WITH cand AS (SELECT query_id, vec_id FROM (
-         |${pqOracleSql(cells = 4, iters = 2, topK = 20, dim = 64)})),
-         |e AS ($embSql),
-         |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM e
-         |      WHERE vec_id < 3),
-         |s AS (SELECT c.query_id, c.vec_id,
-         |  round(list_dot_product(q.qv, e.v) / (q.qnrm * e.nrm), 6) AS cos
-         |  FROM cand c JOIN e ON c.vec_id = e.vec_id
-         |              JOIN q ON c.query_id = q.query_id)
-         |SELECT query_id, vec_id, cos, rn FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |                               ORDER BY cos DESC, vec_id ASC) AS rn
-         |  FROM s) WHERE rn <= 5""".stripMargin,
-    // SemDeDup: unrolled-Lloyd assignment (shared CTEs with
-    // q_ann_ivf_trained), intra-cell cosine pairs at >= 0.45, components
-    // as a recursive transitive closure, min-id canonical per component
-    "q_semdedup" ->
-      s"""WITH RECURSIVE ${ivfTrainCtes(nlist = 8, iters = 2)},
-         |p AS (SELECT a.vec_id AS ida, b.vec_id AS idb
-         |  FROM asg a JOIN asg b
-         |    ON a.cell = b.cell AND a.vec_id < b.vec_id
-         |  WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6)
-         |        >= 0.45),
-         |g AS (SELECT ida AS u, idb AS v FROM p
-         |      UNION SELECT idb, ida FROM p),
-         |reach AS (SELECT u, v FROM g
-         |          UNION SELECT r.u, g.v FROM reach r JOIN g ON r.v = g.u),
-         |cl AS (SELECT u AS vec_id, least(u, min(v)) AS canonical_id
-         |       FROM reach GROUP BY u)
-         |SELECT a.vec_id, a.cell,
-         |       COALESCE(cl.canonical_id, a.vec_id) AS canonical_id,
-         |       COALESCE(cl.canonical_id, a.vec_id) <> a.vec_id AS is_dup
-         |FROM asg a LEFT JOIN cl USING (vec_id)""".stripMargin,
-    // recall@5 of every approximate method vs exact brute force: DuckDB
-    // re-derives BOTH result sets (the same unrolled-training oracles as
-    // the per-method gates, each nested as a CTE) and recomputes the
-    // overlap ratio — the recall numbers are themselves hash-verified
-    "q_ann_recall" -> recallOracleSql(pinned = false),
-    "q_ann_lsh" -> lshAnnOracleSql(multiProbe = false),
-    "q_ann_lsh_mp" -> lshAnnOracleSql(multiProbe = true),
-    "q_embed_neardup" ->
-      s"""WITH e0 AS ($embSql),
-         |e AS (SELECT * FROM e0 WHERE vec_id < 2000)
-         |SELECT a.vec_id AS ida, b.vec_id AS idb,
-         |       round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) AS cos
-         |FROM e a JOIN e b ON a.vec_id < b.vec_id
-         |WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) >= 0.4""".stripMargin,
-    "q_langid" ->
-      s"""WITH r AS (SELECT doc_id,
-         |  ${stopRatioSql("en")} AS r_en, ${stopRatioSql("es")} AS r_es,
-         |  ${stopRatioSql("de")} AS r_de, ${stopRatioSql("fr")} AS r_fr
-         |  FROM (SELECT doc_id, $toksSql AS toks FROM documents))
-         |SELECT doc_id,
-         |  CASE WHEN greatest(r_en, r_es, r_de, r_fr) >= 0.02 THEN
-         |    CASE WHEN r_en >= r_es AND r_en >= r_de AND r_en >= r_fr THEN 'en'
-         |         WHEN r_es >= r_de AND r_es >= r_fr THEN 'es'
-         |         WHEN r_de >= r_fr THEN 'de' ELSE 'fr' END
-         |  ELSE 'und' END AS lang_pred
-         |FROM r""".stripMargin,
-    "q_quality" ->
-      s"""WITH c AS (SELECT doc_id,
-         |  len(toks) AS n_tokens,
-         |  CASE WHEN len(toks) > 0 THEN
-         |    list_sum(list_transform(toks, s -> length(s)))::DOUBLE / len(toks)
-         |  ELSE 0.0 END AS mean_len,
-         |  ${stopRatioSql("en")} AS stop_ratio,
-         |  CASE WHEN len(toks) > 0 THEN
-         |    len(list_distinct(toks))::DOUBLE / len(toks) ELSE 0.0 END AS dr,
-         |  CASE WHEN length(text) > 0 THEN
-         |    (length(text) - length(regexp_replace(text, '[a-zA-Z]', '', 'g')))::DOUBLE
-         |      / length(text) ELSE 0.0 END AS ar
-         |  FROM (SELECT doc_id, text, $toksSql AS toks FROM documents))
-         |SELECT doc_id, n_tokens, round(mean_len, 6) AS mean_token_len,
-         |  round(stop_ratio, 6) AS stopword_ratio, round(dr, 6) AS distinct_ratio,
-         |  round(ar, 6) AS alpha_ratio,
-         |  round((CASE WHEN mean_len >= 3 AND mean_len <= 10 THEN 1.0
-         |              WHEN mean_len > 0 THEN 0.5 ELSE 0.0 END) * 0.25
-         |    + least(stop_ratio * 5.0, 1.0) * 0.25 + dr * 0.25 + ar * 0.25, 6)
-         |    AS quality
-         |FROM c""".stripMargin,
-    "q_token_counts" ->
-      s"""SELECT doc_id, len($toksSql) AS ws_tokens,
-         |  len(regexp_extract_all(text, '[A-Za-z0-9_]+|[^A-Za-z0-9_\\s]'))
-         |    AS regex_tokens,
-         |  CAST(ceil(length(text)::DOUBLE / 4) AS BIGINT) AS approx_subwords
-         |FROM documents""".stripMargin,
-    "q_entropy" ->
-      s"""WITH t AS (SELECT doc_id, unnest($toksSql) AS tok FROM documents),
-         |c AS (SELECT doc_id, tok, count(*) AS c FROM t GROUP BY doc_id, tok)
-         |SELECT doc_id, sum(c)::BIGINT AS n_tokens, count(*) AS n_distinct,
-         |  round(log2(sum(c)) - sum(c * log2(c)) / sum(c), 6) AS entropy_bits
-         |FROM c GROUP BY doc_id""".stripMargin,
-    // distinct counted over the 60-bit HASHES (as the engine does), so a
-    // hash collision — however unlikely — cannot split the two engines
-    "q_lm_score" ->
-      s"""WITH d AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |p AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
-         |      FROM (SELECT doc_id, toks,
-         |              unnest(generate_series(1, len(toks)-1)) AS i FROM d)),
-         |uni AS (SELECT w1, count(*) AS cw FROM
-         |        (SELECT unnest(toks) AS w1 FROM d) GROUP BY w1),
-         |v AS (SELECT count(*) AS vocab FROM uni),
-         |sc AS (SELECT p.doc_id,
-         |  ln((bi.cbg + 0.5) / (uni.cw + 0.5 * v.vocab)) AS lp
-         |  FROM p
-         |  JOIN (SELECT w1, w2, count(*) AS cbg FROM p GROUP BY w1, w2) bi
-         |    USING (w1, w2)
-         |  JOIN uni USING (w1) CROSS JOIN v)
-         |SELECT d.doc_id, count(sc.lp) AS n_bigrams,
-         |  round(avg(sc.lp), 6) AS avg_logp
-         |FROM d LEFT JOIN sc ON sc.doc_id = d.doc_id
-         |GROUP BY d.doc_id""".stripMargin,
-    "q_lm_score_bounded" -> {
-      val d = 3
-      val w = 1 << 18
-      val cs = operators.DedupOps.minhashMultipliers(d)
-      def pos(hExpr: String, c: Long) =
-        s"(${operators.DedupOps.permuteHashSql(hExpr, c)} % $w)"
-      def h60(e: String) =
-        s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
-      s"""WITH d AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |p AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
-         |      FROM (SELECT doc_id, toks,
-         |              unnest(generate_series(1, len(toks)-1)) AS i FROM d)),
-         |tw AS (SELECT unnest(toks) AS w FROM d),
-         |ut AS (SELECT ${h60("w")} AS h FROM tw),
-         |v AS (SELECT count(DISTINCT w) AS vocab FROM tw),
-         |${(0 until d).map(j => s"u$j AS (SELECT ${pos("h", cs(j))} AS b, " +
-              s"count(*) AS n FROM ut GROUP BY 1)").mkString(",\n")},
-         |bt AS (SELECT ${h60("w1 || ' ' || w2")} AS h FROM p),
-         |${(0 until d).map(j => s"g$j AS (SELECT ${pos("h", cs(j))} AS b, " +
-              s"count(*) AS n FROM bt GROUP BY 1)").mkString(",\n")},
-         |ph AS (SELECT doc_id, ${h60("w1")} AS hu,
-         |       ${h60("w1 || ' ' || w2")} AS hb FROM p),
-         |sc AS (SELECT ph.doc_id,
-         |  ln((least(${(0 until d).map(j => s"coalesce(g$j.n, 0)")
-                .mkString(", ")}) + 0.5) /
-         |     (least(${(0 until d).map(j => s"coalesce(u$j.n, 0)")
-                .mkString(", ")}) + 0.5 * v.vocab)) AS lp
-         |  FROM ph
-         |  ${(0 until d).map(j =>
-              s"LEFT JOIN g$j ON ${pos("ph.hb", cs(j))} = g$j.b").mkString("\n  ")}
-         |  ${(0 until d).map(j =>
-              s"LEFT JOIN u$j ON ${pos("ph.hu", cs(j))} = u$j.b").mkString("\n  ")}
-         |  CROSS JOIN v)
-         |SELECT d.doc_id, count(sc.lp) AS n_bigrams,
-         |  round(avg(sc.lp), 6) AS avg_logp
-         |FROM d LEFT JOIN sc ON sc.doc_id = d.doc_id
-         |GROUP BY d.doc_id""".stripMargin
-    },
-    // learned quality filter: the same hashed-BoW logistic regression
-    // unrolled — w0 = zeros; each iteration computes per-doc margins from
-    // the previous weights, residuals via the sigmoid, per-bucket
-    // gradients, and the 6-decimal-rounded weight update (the rounding is
-    // what makes a TRAINED float model hash-comparable cross-engine)
-    "q_quality_classifier" -> {
-      val dims = 16
-      val iters = 3
-      def iteration(i: Int): String =
-        s"""z$i AS (SELECT f.doc_id, sum(w.wv * f.x) AS z
-           |  FROM f JOIN w${i - 1} w USING (bucket) GROUP BY f.doc_id),
-           |r$i AS (SELECT z.doc_id, 1.0/(1.0 + exp(-z.z)) - t.y AS r
-           |  FROM z$i z JOIN t USING (doc_id)),
-           |g$i AS (SELECT f.bucket, sum(f.x * r.r) AS g
-           |  FROM f JOIN r$i r USING (doc_id) GROUP BY f.bucket),
-           |w$i AS (SELECT w.bucket,
-           |  round(w.wv - COALESCE(g.g, 0) / (SELECT nn FROM n), 6) AS wv
-           |  FROM w${i - 1} w LEFT JOIN g$i g USING (bucket))""".stripMargin
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks,
-         |  CAST(lang = 'en' AS DOUBLE) AS y FROM documents),
-         |tok AS (SELECT doc_id, unnest(toks) AS tk, len(toks) AS nt FROM t),
-         |f AS (SELECT doc_id,
-         |    CAST(('0x' || substring(md5(tk), 1, 15)) AS BIGINT) % $dims
-         |      AS bucket,
-         |    count(*)::DOUBLE / max(nt) AS x
-         |  FROM tok GROUP BY doc_id, bucket
-         |  UNION ALL SELECT doc_id, $dims, 1.0 FROM t),
-         |n AS (SELECT count(*)::DOUBLE AS nn FROM t),
-         |w0 AS (SELECT unnest(generate_series(0, $dims)) AS bucket,
-         |       0.0 AS wv),
-         |${(1 to iters).map(iteration).mkString(",\n")},
-         |zf AS (SELECT f.doc_id, sum(w.wv * f.x) AS z
-         |  FROM f JOIN w$iters w USING (bucket) GROUP BY f.doc_id)
-         |SELECT t.doc_id, t.y AS label,
-         |  round(1.0/(1.0 + exp(-zf.z)), 6) AS prob,
-         |  round(1.0/(1.0 + exp(-zf.z)), 6) >= 0.5 AS predicted
-         |FROM t JOIN zf USING (doc_id)""".stripMargin
-    },
-    "q_vocab_induction" ->
-      s"""WITH wc AS (SELECT w, count(*) AS wc FROM (
-         |  SELECT unnest($toksSql) AS w FROM documents) GROUP BY w),
-         |p0 AS (SELECT w, wc,
-         |  unnest(generate_series(1, length(w))) AS i FROM wc),
-         |p1 AS (SELECT w, wc, i,
-         |  unnest(generate_series(1, least(4, length(w) - i + 1))) AS l
-         |  FROM p0),
-         |p AS (SELECT substring(w, i, l) AS piece,
-         |  CAST(sum(wc) AS BIGINT) AS cnt FROM p1 GROUP BY 1)
-         |SELECT piece, cnt, rank FROM (
-         |  SELECT piece, cnt, row_number() OVER (ORDER BY cnt DESC,
-         |    piece ASC) AS rank FROM p) WHERE rank <= 200""".stripMargin,
-    // greedy longest-match segmentation as SQL: per-(word, pos) steps are
-    // precomputed non-recursively (max matching piece length, 1 = UNK),
-    // then a recursive walk advances each word's cursor; terminal rows
-    // (pos past the word) carry the piece count
-    "q_subword_tokens" ->
-      s"""WITH RECURSIVE wc0 AS (SELECT w, count(*) AS wc FROM (
-         |  SELECT unnest($toksSql) AS w FROM documents) GROUP BY w),
-         |p0 AS (SELECT w, wc,
-         |  unnest(generate_series(1, length(w))) AS i FROM wc0),
-         |p1 AS (SELECT w, wc, i,
-         |  unnest(generate_series(1, least(4, length(w) - i + 1))) AS l
-         |  FROM p0),
-         |vp AS (SELECT substring(w, i, l) AS piece,
-         |  CAST(sum(wc) AS BIGINT) AS cnt FROM p1 GROUP BY 1),
-         |vocab AS (SELECT piece FROM (
-         |  SELECT piece, row_number() OVER (ORDER BY cnt DESC, piece ASC)
-         |    AS rank FROM vp) WHERE rank <= 200),
-         |sub AS (SELECT w, i AS pos, l, substring(w, i, l) AS piece FROM p1),
-         |steps AS (SELECT sub.w, sub.pos,
-         |  COALESCE(max(CASE WHEN v.piece IS NOT NULL THEN sub.l END), 1)
-         |    AS step
-         |  FROM sub LEFT JOIN vocab v ON sub.piece = v.piece
-         |  GROUP BY sub.w, sub.pos),
-         |seg AS (SELECT w, 1 AS pos, 0 AS n FROM wc0
-         |  UNION ALL SELECT seg.w, seg.pos + st.step, seg.n + 1
-         |  FROM seg JOIN steps st ON st.w = seg.w AND st.pos = seg.pos),
-         |fin AS (SELECT w, max(n) AS n_pieces FROM seg
-         |        WHERE pos > length(w) GROUP BY w),
-         |tok AS (SELECT doc_id, unnest($toksSql) AS w FROM documents)
-         |SELECT tok.doc_id, CAST(sum(fin.n_pieces) AS BIGINT) AS n_subwords
-         |FROM tok JOIN fin USING (w) GROUP BY tok.doc_id""".stripMargin,
-    "q_repetition" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |s0 AS (SELECT doc_id,
-         |  CASE WHEN len(toks) >= 3
-         |    THEN [array_to_string(toks[i:i+2], ' ')
-         |          FOR i IN generate_series(1, len(toks)-2)]
-         |    ELSE [array_to_string(toks, ' ')] END AS sh
-         |  FROM t),
-         |h AS (SELECT doc_id, $hashListSql AS hs FROM s0)
-         |SELECT doc_id, len(hs) AS n_ngrams,
-         |  len(list_distinct(hs)) AS n_distinct,
-         |  round((len(hs) - len(list_distinct(hs)))::DOUBLE / len(hs), 6)
-         |    AS repetition_ratio
-         |FROM h""".stripMargin,
-    "q_fingerprint" ->
-      s"""WITH $winnowCtes
-         |SELECT doc_id, len(fps) AS n_fingerprints,
-         |       md5(array_to_string(fps, ',')) AS fp_digest
-         |FROM w""".stripMargin,
-    "q_winnow_pairs" ->
-      s"""WITH $winnowCtes,
-         |x AS (SELECT doc_id, unnest(fps) AS fp FROM w),
-         |hot AS (SELECT fp FROM x GROUP BY fp HAVING count(*) > 50),
-         |xx AS (SELECT doc_id, fp FROM x
-         |       WHERE fp NOT IN (SELECT fp FROM hot))
-         |SELECT a.doc_id AS ida, b.doc_id AS idb, count(*) AS shared
-         |FROM xx a JOIN xx b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
-    "q_multimodal_meta" ->
-      """SELECT doc_id AS asset_id, 'text/plain' AS media_type,
-        |  octet_length(CAST(text AS BLOB)) AS n_bytes,
-        |  CAST(('0x' || substring(md5(text), 1, 4)) AS INT) % 1920 + 1 AS width,
-        |  CAST(('0x' || substring(md5(text), 5, 4)) AS INT) % 1080 + 1 AS height,
-        |  md5(text) AS digest
-        |FROM documents""".stripMargin,
-    // the engine PNG-encodes each doc's md5 bytes as 4x4 gray8 and
-    // decodes them back with ImageIO; gray8 PNG is lossless, so the
-    // decoded pixel mean must equal the mean of the digest bytes
-    "q_image_roundtrip" ->
-      """WITH d AS (SELECT doc_id, md5(text) AS h FROM documents),
-        |b AS (SELECT doc_id,
-        |  avg(CAST(('0x' || substring(h, 2*i+1, 2)) AS INT)) AS m
-        |  FROM (SELECT doc_id, h, unnest(generate_series(0, 15)) AS i
-        |        FROM d)
-        |  GROUP BY doc_id)
-        |SELECT doc_id, 4 AS width, 4 AS height,
-        |       round(m, 6) AS mean_pixel FROM b""".stripMargin,
-    // WAV PCM16 roundtrip: the engine's samples are consecutive md5 byte
-    // pairs as signed big-endian shorts; AudioSystem parse must recover
-    // rate/channels/frames and the exact sample mean
-    "q_audio_roundtrip" ->
-      """WITH d AS (SELECT doc_id, md5(text) AS h FROM documents),
-        |s AS (SELECT doc_id,
-        |  CAST(('0x' || substring(h, 4*i+1, 2)) AS INT) * 256
-        |    + CAST(('0x' || substring(h, 4*i+3, 2)) AS INT) AS u
-        |  FROM (SELECT doc_id, h, unnest(generate_series(0, 7)) AS i
-        |        FROM d)),
-        |sg AS (SELECT doc_id,
-        |  CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS v FROM s)
-        |SELECT doc_id, CAST(8000.0 AS DOUBLE) AS sample_rate,
-        |       1 AS channels, CAST(8 AS BIGINT) AS n_frames,
-        |       round(avg(v), 6) AS mean_sample
-        |FROM sg GROUP BY doc_id""".stripMargin,
-    // the engine builds a minimal MP4 from each doc's md5 bytes and
-    // box-walks it back; the container fields must equal the md5-derived
-    // parameters they were encoded from
-    "q_video_meta" ->
-      """WITH d AS (SELECT doc_id, md5(text) AS h FROM documents),
-        |b AS (SELECT doc_id,
-        |  CAST(('0x' || substring(h, 1, 2)) AS INT) AS b0,
-        |  CAST(('0x' || substring(h, 3, 2)) AS INT) AS b1,
-        |  CAST(('0x' || substring(h, 5, 2)) AS INT) AS b2,
-        |  CAST(('0x' || substring(h, 7, 2)) AS INT) AS b3,
-        |  CAST(('0x' || substring(h, 9, 2)) AS INT) AS b4,
-        |  CAST(('0x' || substring(h, 11, 2)) AS INT) AS b5,
-        |  CAST(('0x' || substring(h, 13, 2)) AS INT) AS b6
-        |  FROM d)
-        |SELECT doc_id,
-        |  round((b1 * 256 + b2) * 1000.0 / (1000 + b0), 6) AS duration_ms,
-        |  CAST(1000 + b0 AS BIGINT) AS timescale,
-        |  1 + b6 % 3 AS n_tracks,
-        |  CASE b5 % 4 WHEN 0 THEN 'avc1' WHEN 1 THEN 'hvc1'
-        |    WHEN 2 THEN 'vp09' ELSE 'av01' END AS codec,
-        |  16 * (1 + b3 % 16) AS width,
-        |  16 * (1 + b4 % 16) AS height
-        |FROM b""".stripMargin,
-    // video frame decode: frame 0's pixels are md5(text) bytes, frame 1's
-    // are md5(md5(text)) bytes — the AVI walk + per-frame PNG decode must
-    // recover each frame's exact pixel mean
-    "q_video_frames" ->
-      """WITH d AS (SELECT doc_id, md5(text) AS h0,
-        |                  md5(md5(text)) AS h1 FROM documents),
-        |u AS (SELECT doc_id, h0, h1,
-        |             unnest(generate_series(0, 1)) AS f FROM d),
-        |v AS (SELECT doc_id, f,
-        |             CASE WHEN f = 0 THEN h0 ELSE h1 END AS h FROM u),
-        |b AS (SELECT doc_id, f,
-        |  avg(CAST(('0x' || substring(h, 2*i+1, 2)) AS INT)) AS m
-        |  FROM (SELECT doc_id, f, h, unnest(generate_series(0, 15)) AS i
-        |        FROM v)
-        |  GROUP BY doc_id, f)
-        |SELECT doc_id, CAST(f AS INT) AS frame_idx,
-        |       4 AS width, 4 AS height, round(m, 6) AS mean_pixel
-        |FROM b""".stripMargin,
-    // MJPG twin: frame f is a constant 8x8 tile valued at md5 byte f, and
-    // constant blocks roundtrip EXACTLY through quality-1.0 JPEG, so the
-    // decoded mean is simply that byte
-    "q_video_frames_mjpg" ->
-      """WITH d AS (SELECT doc_id, md5(text) AS h FROM documents),
-        |u AS (SELECT doc_id, h,
-        |             unnest(generate_series(0, 3)) AS f FROM d)
-        |SELECT doc_id, CAST(f AS INT) AS frame_idx,
-        |       8 AS width, 8 AS height,
-        |       round(CAST(CAST(('0x' || substring(h, 2*f+1, 2)) AS INT)
-        |                  AS DOUBLE), 6) AS mean_pixel
-        |FROM u""".stripMargin,
-    // mirrors MultimodalOps.frameFeatures' md5 stub kernel: feature[j] =
-    // first 24 bits of md5(md5(content) || ':' || frame || ':' || j) / 2^24
-    "q_frame_features" -> {
-      def featSql(j: Int): String =
-        s"CAST(('0x' || substring(md5(md5(text) || ':' || f || ':$j'), 1, 6)) AS BIGINT)" +
-          " / 16777216.0"
-      s"""SELECT doc_id AS asset_id, f AS frame_idx,
-         |  round(${featSql(0)}, 6) AS f0,
-         |  round(${featSql(3)}, 6) AS f3
-         |FROM documents
-         |CROSS JOIN (SELECT unnest(generate_series(0, 1)) AS f)""".stripMargin
-    },
-    "q_contamination" ->
-      s"""WITH d AS ($shinglesSql),
-         |h AS (SELECT doc_id, $hashListSql AS hs FROM d),
-         |bench AS (SELECT DISTINCT unnest(hs) AS h FROM h WHERE doc_id < 100),
-         |corp AS (SELECT doc_id, unnest(hs) AS h FROM h WHERE doc_id >= 100),
-         |j AS (SELECT corp.doc_id,
-         |  CASE WHEN bench.h IS NOT NULL THEN 1 ELSE 0 END AS hit
-         |  FROM corp LEFT JOIN bench ON corp.h = bench.h)
-         |SELECT doc_id, count(*) AS n_shingles,
-         |  CAST(sum(hit) AS BIGINT) AS n_contaminated,
-         |  round(sum(hit)::DOUBLE / count(*), 6) AS contamination
-         |FROM j GROUP BY doc_id""".stripMargin,
-    // mirrors PipelineOps.bloomContamination: bloom membership = every one
-    // of the k permuted-hash bit positions present in the benchmark's
-    // position set (bit-set words and a position set are equivalent here)
-    "q_bloom_contamination" -> {
-      val mask = (1 << 16) - 1
-      val cs = operators.DedupOps.minhashMultipliers(3)
-      def pos(x: String, c: Long) =
-        s"(${operators.DedupOps.permuteHashSql(x, c)} & $mask)"
-      s"""WITH d AS ($shinglesSql),
-         |h AS (SELECT doc_id, $hashListSql AS hs FROM d),
-         |bh AS (SELECT DISTINCT unnest(hs) AS h FROM h WHERE doc_id < 100),
-         |bloom AS (${cs.map(c => s"SELECT DISTINCT ${pos("h", c)} AS pos FROM bh")
-                        .mkString("\n|  UNION\n|  ")}),
-         |corp AS (SELECT doc_id, unnest(hs) AS h FROM h WHERE doc_id >= 100),
-         |probe AS (SELECT doc_id,
-         |  CASE WHEN ${cs.map(c => s"${pos("h", c)} IN (SELECT pos FROM bloom)")
-                         .mkString("\n|    AND ")}
-         |  THEN 1 ELSE 0 END AS hit FROM corp)
-         |SELECT doc_id, count(*) AS n_shingles,
-         |  CAST(sum(hit) AS BIGINT) AS n_maybe_contaminated,
-         |  round(sum(hit)::DOUBLE / count(*), 6) AS bloom_rate
-         |FROM probe GROUP BY doc_id""".stripMargin
-    },
-    "q_sample_exact" ->
-      s"""SELECT event_type, event_id, sample_rank FROM (
-         |  SELECT event_type, event_id,
-         |    row_number() OVER (PARTITION BY event_type
-         |      ORDER BY $hash60Sql ASC, event_id ASC) AS sample_rank
-         |  FROM events)
-         |WHERE sample_rank <= 20""".stripMargin,
-    "q_sample_split" ->
-      s"""SELECT event_type, split, count(*) AS cnt FROM (
-         |  SELECT event_type,
-         |    CASE WHEN h % 100 < 80 THEN 'train'
-         |         WHEN h % 100 < 90 THEN 'valid' ELSE 'test' END AS split
-         |  FROM (SELECT event_type, $hash60Sql AS h FROM events))
-         |GROUP BY event_type, split""".stripMargin,
-    "q_salted_distinct" ->
-      """SELECT event_type, count(DISTINCT user_id) AS user_id_distinct
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q_sample_strat" ->
-      s"""SELECT event_type, count(*) AS cnt FROM (
-         |  SELECT event_type, $hash60Sql AS h FROM events)
-         |WHERE h % 100 < CASE event_type WHEN 'click' THEN 50
-         |  WHEN 'purchase' THEN 100 WHEN 'view' THEN 10 ELSE 5 END
-         |GROUP BY event_type""".stripMargin,
-    "q_kmv_distinct" ->
-      s"""WITH h AS (SELECT event_type, user_id, $hash60Sql AS h
-         |  FROM (SELECT event_type, user_id, user_id AS event_id FROM events)),
-         |k AS (SELECT event_type, list_sort(list_distinct(list(h))) AS hs,
-         |  count(DISTINCT user_id) AS exact FROM h GROUP BY event_type)
-         |SELECT event_type, exact,
-         |  round(CASE WHEN len(hs) < 64 THEN len(hs)::DOUBLE
-         |             ELSE 63.0 * pow(2.0, 60) / hs[64] END, 6) AS kmv_est
-         |FROM k""".stripMargin,
-    // mirrors functions.CmsSketch at d=3, w=1024: a row-j counter is the
-    // total count of events hashing to the same permuted bucket; the
-    // estimate is the min over the three rows
-    "q_cms_counts" -> {
-      val cs = operators.DedupOps.minhashMultipliers(3)
-      def pos(c: Long) = s"(${operators.DedupOps.permuteHashSql("h", c)} % 1024)"
-      s"""WITH h AS (SELECT user_id,
-         |  CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-         |  FROM events),
-         |b AS (SELECT user_id, ${cs.zipWithIndex.map { case (c, j) =>
-                  s"${pos(c)} AS p$j" }.mkString(", ")} FROM h),
-         |${cs.indices.map(j =>
-             s"c$j AS (SELECT p$j, count(*) AS n$j FROM b GROUP BY p$j)")
-             .mkString(",\n|")},
-         |probe AS (SELECT user_id, count(*) AS exact,
-         |  ${cs.indices.map(j => s"min(p$j) AS q$j").mkString(", ")}
-         |  FROM b WHERE user_id < 20 GROUP BY user_id)
-         |SELECT probe.user_id, probe.exact,
-         |  least(${cs.indices.map(j => s"c$j.n$j").mkString(", ")}) AS cms_est
-         |FROM probe ${cs.indices.map(j =>
-             s"JOIN c$j ON probe.q$j = c$j.p$j").mkString(" ")}""".stripMargin
-    },
-    // mirrors functions.QuantileSketch at k=128: the sample is the 128
-    // rows with smallest md5 hash; interpolation arithmetic is spelled
-    // out identically on both sides
-    "q_quantile_sketch" -> {
-      def interp(qv: String): String =
-        s"""CASE WHEN CAST(floor($qv * (len(vs) - 1)) AS BIGINT) + 2 > len(vs)
-           | THEN vs[len(vs)]
-           | ELSE vs[CAST(floor($qv * (len(vs) - 1)) AS BIGINT) + 1]
-           |   + (vs[CAST(floor($qv * (len(vs) - 1)) AS BIGINT) + 2]
-           |      - vs[CAST(floor($qv * (len(vs) - 1)) AS BIGINT) + 1])
-           |     * ($qv * (len(vs) - 1) - floor($qv * (len(vs) - 1)))
-           | END""".stripMargin
-      s"""WITH h AS (SELECT event_type, value, $hash60Sql AS h FROM events),
-         |s AS (SELECT event_type, value,
-         |  row_number() OVER (PARTITION BY event_type ORDER BY h ASC) AS rn
-         |  FROM h),
-         |g AS (SELECT event_type, list_sort(list(value)) AS vs
-         |      FROM s WHERE rn <= 128 GROUP BY event_type),
-         |x AS (SELECT event_type, count(*) AS n FROM events GROUP BY event_type)
-         |SELECT x.event_type, x.n,
-         |  round(${interp("0.5::DOUBLE")}, 6) AS p50_est,
-         |  round(${interp("0.95::DOUBLE")}, 6) AS p95_est
-         |FROM x JOIN g USING (event_type)""".stripMargin
-    },
-    // mirrors functions.HllSketch at p=8: register = top 8 hash bits,
-    // rank = 53 - bitlength(low 52 bits) (53 when zero), harmonic mean +
-    // linear-counting correction; bin() keeps the rank integer-exact
-    "q_hll_distinct" -> {
-      val lowMask = (1L << 52) - 1
-      s"""WITH h AS (SELECT event_type, user_id,
-         |  CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-         |  FROM events),
-         |r AS (SELECT event_type, h >> 52 AS idx,
-         |  max(CASE WHEN (h & $lowMask) = 0 THEN 53
-         |      ELSE 53 - length(bin(h & $lowMask)) END) AS rank
-         |  FROM h GROUP BY event_type, idx),
-         |s AS (SELECT event_type,
-         |  sum(pow(2.0::DOUBLE, -rank)) + (256 - count(*)) AS sm,
-         |  256 - count(*) AS zeros FROM r GROUP BY event_type),
-         |e AS (SELECT event_type,
-         |  (0.7213::DOUBLE / (1 + 1.079::DOUBLE / 256)) * 256 * 256 / sm AS raw,
-         |  zeros FROM s),
-         |x AS (SELECT event_type, count(DISTINCT user_id) AS exact
-         |      FROM events GROUP BY event_type)
-         |SELECT x.event_type, x.exact,
-         |  round(CASE WHEN e.raw <= 2.5::DOUBLE * 256 AND e.zeros > 0
-         |    THEN 256 * ln(256.0::DOUBLE / e.zeros) ELSE e.raw END, 6) AS hll_est
-         |FROM x JOIN e USING (event_type)""".stripMargin
-    },
-    "q_rolling" ->
-      """SELECT user_id, event_id,
-        |  round(avg(value) OVER w, 6) AS roll_avg,
-        |  round(max(value) OVER w, 6) AS roll_max,
-        |  count(*) OVER w AS roll_n
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-        |             ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "q_pivot_daily" ->
-      """SELECT month(ts) AS m, day(ts) AS d,
-        |  CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
-        |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error,
-        |  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
-        |  CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
-        |  CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "q_range_join" ->
-      """WITH p AS (SELECT event_id, value FROM events),
-        |i AS (SELECT event_id AS interval_id, value AS lo, value + 25.0 AS hi
-        |      FROM events WHERE user_id < 30 AND event_type = 'purchase')
-        |SELECT interval_id, count(*) AS n_points,
-        |  round(min(p.value), 6) AS min_v, round(max(p.value), 6) AS max_v
-        |FROM p JOIN i ON p.value >= i.lo AND p.value <= i.hi
-        |GROUP BY interval_id""".stripMargin,
-    "q_window_suite" ->
-      """SELECT user_id, event_id,
-        |  round(lag(value, 1) OVER w, 6) AS prev_value,
-        |  round(lead(value, 1) OVER w, 6) AS next_value,
-        |  rank() OVER (PARTITION BY user_id
-        |               ORDER BY value DESC, event_id ASC) AS value_rank,
-        |  ntile(4) OVER w AS quartile,
-        |  round(percent_rank() OVER w, 6) AS pr,
-        |  row_number() OVER w AS rn
-        |FROM (SELECT user_id, event_id, epoch_us(ts) AS ts_us, value
-        |      FROM events WHERE user_id < 50)
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts_us ASC, event_id ASC)""".stripMargin,
-    // same LSH candidate pipeline as q_dedup_minhash, refined by edit
-    // distance (both engines implement unit-cost Levenshtein). The oracle
-    // short-circuits identical texts to 0 (levenshtein(a,a) = 0 by
-    // definition): on duplicate-skewed corpora the candidate set is
-    // dominated by exact-duplicate pairs, and computing the O(len^2) DP
-    // for each made the zipf-fixture oracle infeasible.
-    "q_levenshtein" -> {
-      val mods = DedupOps.minhashMultipliers(12).map(c =>
-        s"list_min([${DedupOps.permuteHashSql("x", c)} FOR x IN hs])")
-        .mkString(",\n|    ")
-      s"""WITH d AS ($shinglesSql),
-         |h AS (SELECT doc_id, $hashListSql AS hs FROM d),
-         |sig AS (SELECT doc_id, [
-         |    $mods
-         |  ] AS sig FROM h),
-         |bands AS (SELECT doc_id, b,
-         |  md5(b || '|' || array_to_string(sig[b*3+1 : b*3+3], ',')) AS bh
-         |  FROM sig CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)),
-         |cand AS (SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
-         |  FROM bands a JOIN bands b
-         |    ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
-         |pairs AS (SELECT ida, idb
-         |  FROM cand JOIN h a ON cand.ida = a.doc_id JOIN h b ON cand.idb = b.doc_id
-         |  WHERE $jaccardSql >= 0.5)
-         |SELECT ida, idb,
-         |  CASE WHEN da.text = db.text THEN 0
-         |       ELSE levenshtein(da.text, db.text) END AS edit_dist
-         |FROM pairs JOIN documents da ON pairs.ida = da.doc_id
-         |JOIN documents db ON pairs.idb = db.doc_id""".stripMargin
-    },
-    "q_json_kstats" ->
-      """SELECT event_type, count(k) AS n_with_k,
-        |  round(avg(k), 6) AS mean_k, round(min(k), 6) AS min_k,
-        |  round(max(k), 6) AS max_k
-        |FROM (SELECT event_type,
-        |  CAST(regexp_extract(props, '"k":\s*([0-9.eE+-]+)', 1) AS DOUBLE) AS k
-        |  FROM events)
-        |GROUP BY event_type""".stripMargin,
-    "q_zorder" ->
-      """SELECT event_id,
-        |  CAST(list_sum([(((user_id & 2097151) >> i) & 1) * (1::BIGINT << (2*i))
-        |    + (((CAST(floor(value) AS BIGINT) & 2097151) >> i) & 1)
-        |      * (1::BIGINT << (2*i + 1))
-        |    FOR i IN generate_series(0, 20)]) AS BIGINT) AS z
-        |FROM events""".stripMargin,
-    "q_manifest_skip" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |  round(sum(o_totalprice), 2) AS total,
-        |  min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-        |FROM orders WHERE o_orderkey BETWEEN 1000 AND 5000
-        |GROUP BY o_orderstatus""".stripMargin,
-    "q_manifest_point" ->
-      """SELECT o_orderkey, o_orderstatus, round(o_totalprice, 2) AS price
-        |FROM orders WHERE o_custkey = 101""".stripMargin,
-    "q_manifest_count" ->
-      """SELECT (SELECT count(*) FROM orders
-        |        WHERE o_orderkey BETWEEN 1000 AND 5000) AS in_range,
-        |       (SELECT count(*) FROM orders) AS total""".stripMargin,
-    "q_manifest_changes" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |  round(sum(o_totalprice), 2) AS total
-        |FROM orders WHERE o_orderkey > 3000
-        |GROUP BY o_orderstatus""".stripMargin,
-    "q_manifest_evolve" ->
-      """SELECT o_orderkey, o_orderstatus,
-        |  CASE WHEN o_orderkey <= 3000 THEN NULL
-        |       ELSE round(o_totalprice, 2) END AS price
-        |FROM orders""".stripMargin,
-    "q_manifest_delete" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |  round(sum(o_totalprice), 2) AS total
-        |FROM orders WHERE o_orderkey NOT BETWEEN 1000 AND 5000
-        |GROUP BY o_orderstatus""".stripMargin,
-    "q_manifest_upsert" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |  round(sum(o_totalprice), 2) AS total
-        |FROM (SELECT o_orderstatus,
-        |        CASE WHEN o_orderkey BETWEEN 1000 AND 2000
-        |             THEN 1.0 ELSE o_totalprice END AS o_totalprice
-        |      FROM orders)
-        |GROUP BY o_orderstatus""".stripMargin,
-    "q_manifest_tsrange" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |  round(sum(o_totalprice), 2) AS total,
-        |  min(o_orderdate) AS first_d, max(o_orderdate) AS last_d
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY o_orderstatus""".stripMargin,
-    "q_manifest_semijoin" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |  round(sum(o_totalprice), 2) AS total,
-        |  count(DISTINCT o_custkey) AS n_cust
-        |FROM orders WHERE o_custkey IN (
-        |  SELECT c_custkey FROM customer
-        |  WHERE c_mktsegment = 'BUILDING' AND c_custkey <= 40)
-        |GROUP BY o_orderstatus""".stripMargin,
-    "q_manifest_zorder" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |  round(sum(o_totalprice), 2) AS total,
-        |  max(o_custkey) AS max_cust
-        |FROM orders
-        |WHERE o_orderkey < 50000
-        |  AND o_custkey BETWEEN 100 AND 400
-        |  AND o_orderkey BETWEEN 2000 AND 20000
-        |GROUP BY o_orderstatus""".stripMargin,
-    "q_manifest_lazy" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |  round(sum(o_totalprice), 2) AS total,
-        |  min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-        |FROM orders
-        |WHERE o_orderkey BETWEEN 1000 AND 5000 AND o_custkey <> 7
-        |GROUP BY o_orderstatus""".stripMargin,
-    "q_manifest_rollback" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |  round(sum(o_totalprice), 2) AS total,
-        |  max(o_orderkey) AS max_key
-        |FROM orders WHERE o_orderkey <= 3000
-        |GROUP BY o_orderstatus""".stripMargin,
-    "q_manifest_cdc" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |  round(sum(o_totalprice), 2) AS total,
-        |  max(o_orderkey) AS max_key
-        |FROM orders GROUP BY o_orderstatus""".stripMargin,
-    "q_manifest_stream" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |  round(sum(o_totalprice), 2) AS total
-        |FROM orders WHERE o_orderkey <= 6000
-        |GROUP BY o_orderstatus""".stripMargin,
-    "q_bucketed_join" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-        |  round(sum(o_totalprice), 2) AS total
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-    "q_redact" -> {
-      val url = """https?://[^\s]+"""
-      val email = """[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"""
-      val ipv4 = """\b(?:\d{1,3}\.){3}\d{1,3}\b"""
-      val ssn = """\b\d{3}-\d{2}-\d{4}\b"""
-      s"""WITH synth AS (SELECT doc_id,
-         |  text || ' contact user' || CAST(doc_id AS VARCHAR)
-         |    || '@mail.example.com from 10.0.'
-         |    || CAST(doc_id % 256 AS VARCHAR) || '.7 via https://' || source
-         |    || '.example/item/' || CAST(doc_id AS VARCHAR) || ' ssn '
-         |    || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-45-6789' AS t
-         |  FROM documents)
-         |SELECT doc_id,
-         |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(t,
-         |    '$url', '<URL>', 'g'),
-         |    '$email', '<EMAIL>', 'g'),
-         |    '$ipv4', '<IPV4>', 'g'),
-         |    '$ssn', '<SSN>', 'g') AS redacted,
-         |  len(regexp_extract_all(t, '$url')) AS n_url,
-         |  len(regexp_extract_all(t, '$email')) AS n_email,
-         |  len(regexp_extract_all(t, '$ipv4')) AS n_ipv4,
-         |  len(regexp_extract_all(t, '$ssn')) AS n_ssn
-         |FROM synth""".stripMargin
-    },
-    "q_decayed" ->
-      """WITH r AS (SELECT max(epoch_us(ts)) AS ref FROM events)
-        |SELECT event_type, count(*) AS n,
-        |  round(sum(value * exp(-ln(2) / (1440 * 60000000.0)
-        |    * (ref - epoch_us(ts)))), 6) AS decayed_sum,
-        |  round(sum(exp(-ln(2) / (1440 * 60000000.0)
-        |    * (ref - epoch_us(ts)))), 6) AS decayed_count
-        |FROM events CROSS JOIN r GROUP BY event_type""".stripMargin,
-    "q_rollup_revenue" ->
-      """SELECT r_name, n_name,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        |  count(*) AS n_items,
-        |  GROUPING(r_name) * 2 + GROUPING(n_name) AS lvl
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP (r_name, n_name)""".stripMargin,
-    "q_hourly_counts" ->
-      """SELECT month(ts) AS m, day(ts) AS d, hour(ts) AS h, count(*) AS cnt
-        |FROM events GROUP BY 1, 2, 3""".stripMargin,
-    "q_hourly_filtered" ->
-      """SELECT month(ts) AS m, day(ts) AS d, hour(ts) AS h, count(*) AS cnt
-        |FROM events WHERE regexp_matches(event_type, '(?i)(click|view)')
-        |GROUP BY 1, 2, 3""".stripMargin,
-    "q_value_stats" ->
-      """SELECT event_type, count(*) AS n,
-        |  round(avg(value), 6) AS mean,
-        |  round(quantile_cont(value, 0.5), 6) AS p50,
-        |  round(quantile_cont(value, 0.95), 6) AS p95,
-        |  round(min(value), 6) AS vmin, round(max(value), 6) AS vmax
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q_sessionize" ->
-      """WITH w AS (SELECT user_id, ts,
-        |  lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
-        |  FROM events),
-        |n AS (SELECT user_id, ts,
-        |  CASE WHEN prev_ts IS NULL
-        |         OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000 THEN 1
-        |       ELSE 0 END AS ns
-        |  FROM w),
-        |s AS (SELECT user_id, ts,
-        |  sum(ns) OVER (PARTITION BY user_id ORDER BY ts
-        |                ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM n)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-        |       count(*) AS n_events,
-        |       min(epoch_us(ts)) AS start_us, max(epoch_us(ts)) AS end_us
-        |FROM s GROUP BY user_id, session_id""".stripMargin,
-    "q_topk_per_type" ->
-      """SELECT event_type, event_id, value, rn FROM (
-        |  SELECT event_type, event_id, value,
-        |         row_number() OVER (PARTITION BY event_type
-        |                            ORDER BY value DESC, event_id ASC) AS rn
-        |  FROM events) WHERE rn <= 3""".stripMargin,
-
-    // ---- corpus curation (CurationOps) ----
-    "q_dup_spans" ->
-      s"""WITH $dupWindowCtes,
-         |g AS (SELECT doc_id, pos,
-         |        CASE WHEN pos > lag(pos) OVER (PARTITION BY doc_id
-         |                                       ORDER BY pos) + 8
-         |             THEN 1 ELSE 0 END AS gap
-         |      FROM dw),
-         |i AS (SELECT doc_id, pos,
-         |        sum(gap) OVER (PARTITION BY doc_id ORDER BY pos
-         |                       ROWS UNBOUNDED PRECEDING) AS island
-         |      FROM g)
-         |SELECT doc_id, min(pos) AS span_start, max(pos) + 7 AS span_end,
-         |       count(*) AS n_windows
-         |FROM i GROUP BY doc_id, island""".stripMargin,
-    "q_dup_span_removal" ->
-      s"""WITH $dupWindowCtes,
-         |r AS (SELECT doc_id, pos,
-         |        row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rk
-         |      FROM dw),
-         |rm AS (SELECT doc_id, pos FROM r WHERE rk > 1),
-         |g AS (SELECT doc_id, pos,
-         |        CASE WHEN pos > lag(pos) OVER (PARTITION BY doc_id
-         |                                       ORDER BY pos) + 8
-         |             THEN 1 ELSE 0 END AS gap
-         |      FROM rm),
-         |i AS (SELECT doc_id, pos,
-         |        sum(gap) OVER (PARTITION BY doc_id ORDER BY pos
-         |                       ROWS UNBOUNDED PRECEDING) AS island
-         |      FROM g),
-         |sp AS (SELECT doc_id, min(pos) AS s, max(pos) + 7 AS e
-         |       FROM i GROUP BY doc_id, island),
-         |rp AS (SELECT doc_id, unnest(generate_series(s, e)) AS tpos FROM sp),
-         |aff AS (SELECT DISTINCT doc_id FROM rp),
-         |tok AS (SELECT doc_id, unnest(toks) AS tok,
-         |          unnest(generate_series(0, len(toks)-1)) AS tpos
-         |        FROM t WHERE doc_id IN (SELECT doc_id FROM aff)),
-         |keep AS (SELECT tok.doc_id, tok.tpos, tok.tok
-         |         FROM tok LEFT JOIN rp
-         |           ON tok.doc_id = rp.doc_id AND tok.tpos = rp.tpos
-         |         WHERE rp.doc_id IS NULL),
-         |rebuilt AS (SELECT doc_id, count(*) AS n_kept,
-         |              md5(string_agg(tok, ' ' ORDER BY tpos)) AS clean_digest
-         |            FROM keep GROUP BY doc_id)
-         |SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-         |       CAST(0 AS BIGINT) AS n_removed,
-         |       md5(array_to_string(toks, ' ')) AS clean_digest
-         |FROM t WHERE doc_id NOT IN (SELECT doc_id FROM aff)
-         |UNION ALL
-         |SELECT t.doc_id, CAST(len(t.toks) AS BIGINT),
-         |       CAST(len(t.toks) - r.n_kept AS BIGINT), r.clean_digest
-         |FROM t JOIN rebuilt r USING (doc_id)
-         |UNION ALL
-         |SELECT t.doc_id, CAST(len(t.toks) AS BIGINT),
-         |       CAST(len(t.toks) AS BIGINT), md5('')
-         |FROM t
-         |WHERE doc_id IN (SELECT doc_id FROM aff)
-         |  AND doc_id NOT IN (SELECT doc_id FROM rebuilt)""".stripMargin,
-    "q_mixture_report" ->
-      s"""SELECT source, lang, count(*) AS n_docs,
-         |  CAST(sum(len(toks)) AS BIGINT) AS n_tokens,
-         |  CAST(sum(length(text)) AS BIGINT) AS n_chars,
-         |  round(count(*) / (sum(count(*)) OVER ()), 6) AS doc_share,
-         |  round(sum(len(toks)) / (sum(sum(len(toks))) OVER ()), 6)
-         |    AS token_share
-         |FROM (SELECT source, lang, text, $toksSql AS toks FROM documents)
-         |GROUP BY source, lang""".stripMargin,
-    "q_mixture_resample" ->
-      s"""WITH tgt AS (SELECT * FROM (VALUES
-         |    ('en', CAST(0.5 AS DOUBLE)), ('de', CAST(0.2 AS DOUBLE)),
-         |    ('es', CAST(0.15 AS DOUBLE)), ('fr', CAST(0.15 AS DOUBLE)))
-         |  AS v(lang, t)),
-         |d AS (SELECT doc_id, documents.lang, t
-         |      FROM documents JOIN tgt ON documents.lang = tgt.lang),
-         |c AS (SELECT lang, t, count(*) AS c FROM d GROUP BY lang, t),
-         |q AS (SELECT lang,
-         |        CAST(floor(t * (min(c / t) OVER ())) AS BIGINT) AS quota
-         |      FROM c),
-         |r AS (SELECT doc_id, lang,
-         |        row_number() OVER (PARTITION BY lang ORDER BY
-         |          CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)),
-         |                                  1, 15)) AS BIGINT), doc_id) AS rk
-         |      FROM d)
-         |SELECT r.doc_id, r.lang, CAST(r.rk AS BIGINT) AS rk
-         |FROM r JOIN q USING (lang) WHERE rk <= quota""".stripMargin,
-    "q_pack_sequences" ->
-      s"""WITH b AS (SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS n_tokens,
-         |    CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-         |         AS BIGINT) AS hkey
-         |  FROM documents),
-         |o AS (SELECT doc_id, CAST(hkey % 8 AS INT) AS bucket, n_tokens,
-         |        CAST(sum(n_tokens) OVER (PARTITION BY hkey % 8
-         |               ORDER BY hkey, doc_id ROWS UNBOUNDED PRECEDING)
-         |             - n_tokens AS BIGINT) AS start_off
-         |      FROM b)
-         |SELECT doc_id, bucket, CAST(start_off // 256 AS BIGINT) AS seq_id,
-         |       CAST(start_off % 256 AS BIGINT) AS seq_offset, n_tokens
-         |FROM o""".stripMargin,
-    // end-to-end curation: the five stages chained in one statement —
-    // exact dedup (md5 text), minhash near-dup clusters via recursive
-    // closure (non-canonical members dropped), 20-token floor, and
-    // distinct-shingle contamination <= 0.3 vs the doc_id%17 slice
-    "q_curate" -> {
-      val mods = DedupOps.minhashMultipliers(12).map(c =>
-        s"list_min([${DedupOps.permuteHashSql("x", c)} FOR x IN hs])")
-        .mkString(",\n|    ")
-      s"""WITH RECURSIVE t0 AS (SELECT doc_id, text, source FROM documents),
-         |e0 AS (SELECT doc_id, text, source, md5(text) AS fp FROM t0),
-         |ec AS (SELECT fp, min(doc_id) AS cid FROM e0 GROUP BY fp),
-         |t1 AS (SELECT e0.doc_id, e0.text, e0.source
-         |       FROM e0 JOIN ec USING (fp) WHERE e0.doc_id = ec.cid),
-         |d1 AS (SELECT doc_id,
-         |  CASE WHEN len(toks) >= 3
-         |    THEN list_distinct([array_to_string(toks[i:i+2], ' ')
-         |                       FOR i IN generate_series(1, len(toks)-2)])
-         |    ELSE [array_to_string(toks, ' ')] END AS sh
-         |  FROM (SELECT doc_id, $toksSql AS toks FROM t1)),
-         |h1 AS (SELECT doc_id, $hashListSql AS hs FROM d1),
-         |sig AS (SELECT doc_id, [
-         |    $mods
-         |  ] AS sig FROM h1),
-         |bnd AS (SELECT doc_id, b,
-         |  md5(b || '|' || array_to_string(sig[b*3+1 : b*3+3], ',')) AS bh
-         |  FROM sig CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)),
-         |cand AS (SELECT DISTINCT x.doc_id AS ida, y.doc_id AS idb
-         |  FROM bnd x JOIN bnd y
-         |    ON x.b = y.b AND x.bh = y.bh AND x.doc_id < y.doc_id),
-         |pairs AS (SELECT ida, idb
-         |  FROM cand JOIN h1 a ON cand.ida = a.doc_id
-         |            JOIN h1 b ON cand.idb = b.doc_id
-         |  WHERE $jaccardSql >= 0.5),
-         |g AS (SELECT ida AS u, idb AS v FROM pairs
-         |      UNION SELECT idb, ida FROM pairs),
-         |reach AS (SELECT u, v FROM g
-         |          UNION SELECT r.u, g.v FROM reach r JOIN g ON r.v = g.u),
-         |cl AS (SELECT u AS doc_id, least(u, min(v)) AS cluster_id
-         |       FROM reach GROUP BY u),
-         |t2 AS (SELECT t1.doc_id, t1.text, t1.source FROM t1
-         |  LEFT JOIN cl USING (doc_id)
-         |  WHERE cl.cluster_id IS NULL OR cl.cluster_id = t1.doc_id),
-         |t3 AS (SELECT * FROM t2 WHERE len($toksSql) >= 20),
-         |db AS (SELECT doc_id,
-         |  CASE WHEN len(toks) >= 3
-         |    THEN list_distinct([array_to_string(toks[i:i+2], ' ')
-         |                       FOR i IN generate_series(1, len(toks)-2)])
-         |    ELSE [array_to_string(toks, ' ')] END AS sh
-         |  FROM (SELECT doc_id, $toksSql AS toks FROM t0
-         |        WHERE doc_id % 17 = 0)),
-         |bh AS (SELECT DISTINCT unnest(hs) AS h
-         |       FROM (SELECT $hashListSql AS hs FROM db)),
-         |ch AS (SELECT h1.doc_id, unnest(h1.hs) AS h
-         |       FROM h1 JOIN t3 USING (doc_id)),
-         |cont AS (SELECT ch.doc_id,
-         |  sum(CASE WHEN bh.h IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
-         |    / count(*) AS c
-         |  FROM ch LEFT JOIN bh ON ch.h = bh.h GROUP BY ch.doc_id)
-         |SELECT t3.doc_id, t3.source
-         |FROM t3 JOIN cont USING (doc_id)
-         |WHERE round(cont.c, 6) <= 0.3""".stripMargin
-    },
-  )
-
-  private val termDocTfSql =
-    s"""SELECT term, doc_id, count(*) AS tf
-       |FROM (SELECT doc_id, unnest($toksSql) AS term FROM documents)
-       |GROUP BY term, doc_id""".stripMargin
-
-  // Token n-gram shingles in DuckDB, mirroring DedupOps.shingles.
-  private def shinglesSqlN(n: Int): String =
-    s"""SELECT doc_id,
-       |  CASE WHEN len(toks) >= $n
-       |    THEN list_distinct([array_to_string(toks[i:i+${n - 1}], ' ')
-       |                       FOR i IN generate_series(1, len(toks)-${n - 1})])
-       |    ELSE [array_to_string(toks, ' ')] END AS sh
-       |FROM (SELECT doc_id, $toksSql AS toks FROM documents)""".stripMargin
-  private val shinglesSql = shinglesSqlN(3)
-
-  private def stopListSql(lang: String): String =
-    operators.TextAnalysisOps.stopwordProfiles(lang)
-      .map(w => s"'$w'").mkString("[", ", ", "]")
-  private def stopRatioSql(lang: String): String =
-    s"len(list_filter(toks, s -> list_contains(${stopListSql(lang)}, s)))::DOUBLE" +
-      " / greatest(len(toks), 1)"
-
-  // jaccard over the 60-bit shingle-hash lists (matches DedupOps refine)
-  private val jaccardSql =
-    "len(list_intersect(a.hs, b.hs))::DOUBLE / " +
-      "(len(a.hs) + len(b.hs) - len(list_intersect(a.hs, b.hs)))"
-  private val hashListSql =
-    "[CAST(('0x' || substring(md5(s), 1, 15)) AS BIGINT) FOR s IN sh]"
-  // mirror of PipelineOps.hash60 over an `event_id` column
-  private val hash60Sql =
-    "CAST(('0x' || substring(md5(CAST(event_id AS VARCHAR)), 1, 15)) AS BIGINT)"
-
-  // Repeated 8-gram window occurrences (minCount=2), mirroring
-  // CurationOps.duplicateWindows: dw(doc_id, pos, h) with t(doc_id, toks)
-  // kept visible for the removal oracle's rebuild step. Window hash =
-  // 60-bit md5 prefix of the space-joined tokens (ShingleHash64).
-  private val dupWindowCtes =
-    s"""t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-       |w0 AS (SELECT doc_id,
-       |  [CAST(('0x' || substring(md5(array_to_string(toks[i:i+7], ' ')),
-       |                           1, 15)) AS BIGINT)
-       |   FOR i IN generate_series(1, len(toks)-7)] AS hs
-       |  FROM t WHERE len(toks) >= 8),
-       |w AS (SELECT doc_id, unnest(hs) AS h,
-       |        unnest(generate_series(0, len(hs)-1)) AS pos
-       |      FROM w0),
-       |hot AS (SELECT h FROM w GROUP BY h HAVING count(*) >= 2),
-       |dw AS (SELECT w.doc_id, w.pos, w.h FROM w JOIN hot USING (h))""".stripMargin
-
-  // Winnowing fingerprint sets (shingleN=4, window=4), mirroring
-  // TextAnalysisOps.winnowingFingerprintSets: w(doc_id, fps)
-  private val winnowCtes =
-    s"""sh AS (SELECT doc_id,
-       |  CASE WHEN len(toks) >= 4
-       |    THEN [array_to_string(toks[i:i+3], ' ')
-       |          FOR i IN generate_series(1, len(toks)-3)]
-       |    ELSE [array_to_string(toks, ' ')] END AS sh
-       |  FROM (SELECT doc_id, $toksSql AS toks FROM documents)),
-       |h AS (SELECT doc_id,
-       |  [CAST(('0x' || substring(md5(s), 1, 15)) AS BIGINT) FOR s IN sh] AS hs
-       |  FROM sh),
-       |w AS (SELECT doc_id,
-       |  CASE WHEN len(hs) >= 4 THEN
-       |    list_sort(list_distinct([list_min(hs[i:i+3])
-       |                             FOR i IN generate_series(1, len(hs)-3)]))
-       |  WHEN len(hs) > 0 THEN [list_min(hs)] ELSE [] END AS fps
-       |  FROM h)""".stripMargin
-
-  // Relational SimHash mirroring DedupOps.simhash (60-bit, tf-weighted
-  // bit votes).
-  private val simhashSql =
-    s"""SELECT doc_id,
-       |  CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT)
-       |    AS simhash
-       |FROM (SELECT doc_id, j,
-       |  sum(CASE WHEN (h >> j) & 1 = 1 THEN tf ELSE -tf END) AS s
-       |  FROM (SELECT doc_id, tf,
-       |    CAST(('0x' || substring(md5(term), 1, 15)) AS BIGINT) AS h
-       |    FROM (SELECT doc_id, term, count(*) AS tf
-       |      FROM (SELECT doc_id, unnest($toksSql) AS term FROM documents)
-       |      GROUP BY doc_id, term))
-       |  CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS j)
-       |  GROUP BY doc_id, j)
-       |GROUP BY doc_id""".stripMargin
-
-  // Cosine over double-cast embedding lists with per-row precomputed norms,
-  // mirroring SimilarityOps (dot(a,b) / (nrm_a * nrm_b)).
-  private val embSql =
-    """SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      |  FROM embeddings)""".stripMargin
-
-  /** Trained-IVF oracle: unrolls the k-means (Lloyd) training iterations
-    * of `SimilarityOps.trainIvfCentroids(roundDecimals=Some(6))` — assign
-    * every vector to its max-cosine centroid (ties -> lowest cell),
-    * recompute each cell's centroid as the per-dimension mean ROUNDED to
-    * 6 decimals (the per-iteration quantization that resets cross-engine
-    * float noise), empty cells keep their previous centroid — then probes
-    * with the same top-`nprobe`-cells / top-`k` pipeline as q_ann_ivf.
-    * The per-dimension mean zips parallel `unnest`s (DuckDB evaluates
-    * them in lockstep) and rebuilds the vector with list(... ORDER BY d).
-    */
-  /** The q_ann_pq oracle: per-subspace Lloyd (L2 assignment, seeds = the
-    * `cells` lowest-id vectors' subvectors, means rounded to 6 decimals
-    * per iteration, empty cells keep their centroid) unrolled in SQL for
-    * TWO subspaces, then ADC scoring — the PQ twin of
-    * [[ivfTrainedOracleSql]]. */
-  /** Per-subspace Lloyd training CTEs for TWO subspaces over `src`'s
-    * `vcol` vector column: produces sub0/sub1, c0_N/c1_N (final
-    * codebooks) and code0/code1 (per-vector cell codes). Shared by the
-    * flat-PQ oracle (src = the embedding CTE) and the IVF-PQ oracle
-    * (src = the residual CTE). */
-  /** When `pinnedPrefix` is set, the training iterations are REPLACED by
-    * reads of exported model tables `<prefix>0`/`<prefix>1` (cell, cv) —
-    * the CTE names (c0_N, c1_N, code0, code1) are identical, so the
-    * probe/ADC tail downstream is shared VERBATIM with the unrolled
-    * oracle and the pinned variant can only differ in where the model
-    * came from. This is what closes the 100x gate for the queries whose
-    * k-means unroll DuckDB cannot execute at scale: training is proven by
-    * the unrolled oracle at <=10x, the probe path by the pinned oracle at
-    * 100x against the engine's own exported (deterministic, hash-stable)
-    * model. */
-  private def pqTrainCtes(cells: Int, iters: Int, dim: Int,
-                          src: String, vcol: String,
-                          pinnedPrefix: Option[String] = None): String = {
-    val dsub = dim / 2
-    def svExpr(j: Int) =
-      if (j == 0) s"$vcol[1:$dsub]" else s"$vcol[${dsub + 1}:$dim]"
-    // min-L2 cell pick as a slim GROUP BY argmin — same rewrite (and the
-    // same tie rule: lowest distance, then lowest cell) as [[cellPick]],
-    // replacing the subvector-payload window sort
-    def pickFrom(j: Int, centsCte: String): String =
-      s"""(SELECT s2.vec_id, struct_extract(min(
-         |    {'d': list_dot_product(c.cv, c.cv)
-         |          - 2 * list_dot_product(s2.sv, c.cv),
-         |     'cl': c.cell}), 'cl') AS cell
-         |  FROM sub$j s2 CROSS JOIN $centsCte c GROUP BY s2.vec_id)"""
-    def train(j: Int): String = pinnedPrefix match {
-      case Some(p) =>
-        s"""sub$j AS (SELECT vec_id, ${svExpr(j)} AS sv FROM $src),
-           |c${j}_$iters AS (SELECT CAST(cell AS INT) AS cell, cv
-           |  FROM ${p}$j),
-           |code$j AS (SELECT vec_id, cell FROM ${pickFrom(j, s"c${j}_$iters")})"""
-      case None =>
-        def iteration(i: Int) =
-          s"""a${j}_$i AS (SELECT s.vec_id, s.sv, p.cell
-             |  FROM sub$j s JOIN ${pickFrom(j, s"c${j}_${i - 1}")} p
-             |  USING (vec_id)),
-             |m${j}_$i AS (SELECT cell, list(mx ORDER BY d) AS cv FROM (
-             |  SELECT cell, d, round(avg(val), 6) AS mx FROM (
-             |    SELECT cell, unnest(sv) AS val,
-             |           unnest(generate_series(1, len(sv))) AS d FROM a${j}_$i)
-             |  GROUP BY cell, d) GROUP BY cell),
-             |c${j}_$i AS (SELECT c0.cell, COALESCE(m${j}_$i.cv, c0.cv) AS cv
-             |  FROM c${j}_${i - 1} c0 LEFT JOIN m${j}_$i USING (cell))"""
-        s"""sub$j AS (SELECT vec_id, ${svExpr(j)} AS sv FROM $src),
-           |c${j}_0 AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-           |  sv AS cv FROM (SELECT vec_id, sv FROM sub$j ORDER BY vec_id
-           |                 LIMIT $cells)),
-           |${(1 to iters).map(iteration).mkString(",\n")},
-           |code$j AS (SELECT vec_id, cell FROM ${pickFrom(j, s"c${j}_$iters")})"""
-    }
-    s"""${train(0)},
-       |${train(1)}""".stripMargin
-  }
-
-  private def pqOracleSql(cells: Int, iters: Int, topK: Int,
-                          dim: Int,
-                          pinnedPrefix: Option[String] = None): String = {
-    val dsub = dim / 2
-    s"""WITH e AS ($embSql),
-       |${pqTrainCtes(cells, iters, dim, "e", "v", pinnedPrefix)},
-       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 3),
-       |lk0 AS (SELECT q.query_id, c.cell,
-       |  list_dot_product(q.qv[1:$dsub], c.cv) AS dp
-       |  FROM q CROSS JOIN c0_$iters c),
-       |lk1 AS (SELECT q.query_id, c.cell,
-       |  list_dot_product(q.qv[${dsub + 1}:$dim], c.cv) AS dp
-       |  FROM q CROSS JOIN c1_$iters c),
-       |sc AS (SELECT lk0.query_id, code0.vec_id,
-       |  round(lk0.dp + lk1.dp, 6) AS score
-       |  FROM code0 JOIN code1 USING (vec_id)
-       |  JOIN lk0 ON lk0.cell = code0.cell
-       |  JOIN lk1 ON lk1.cell = code1.cell
-       |    AND lk1.query_id = lk0.query_id
-       |  WHERE code0.vec_id <> lk0.query_id)
-       |SELECT query_id, vec_id, score, rn FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY score DESC, vec_id ASC) AS rn FROM sc)
-       |WHERE rn <= $topK""".stripMargin
-  }
-
-  /** The q_ann_ivfpq oracle: coarse unrolled-Lloyd training (shared with
-    * q_ann_ivf_trained), per-vector residuals against the final
-    * centroids, per-subspace Lloyd codebooks over the RESIDUALS (shared
-    * CTE builder with q_ann_pq), then probe + inner-product
-    * decomposition scoring dot(q,c) + residual ADC. */
-  private def ivfPqOracleSql(nlist: Int, iters: Int, nprobe: Int,
-                             cells: Int, k: Int, dim: Int,
-                             pinned: Boolean = false): String = {
-    val dsub = dim / 2
-    s"""WITH ${ivfTrainCtes(nlist, iters, pinned)},
-       |res AS (SELECT a.vec_id, a.cell AS ccell,
-       |  [a.v[i] - c.cv[i] FOR i IN generate_series(1, $dim)] AS rv
-       |  FROM asg a JOIN cents$iters c ON a.cell = c.cell),
-       |${pqTrainCtes(cells, iters, dim, "res", "rv",
-          if (pinned) Some("__m_ivfpq_book") else None)},
-       |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM e
-       |      WHERE vec_id < 3),
-       |probe AS (SELECT query_id, qv, cell, qdotc FROM (
-       |  SELECT q.query_id, q.qv, c.cell,
-       |    list_dot_product(q.qv, c.cv) AS qdotc,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_dot_product(q.qv, c.cv) / (q.qnrm * c.cnrm)
-       |        DESC, c.cell ASC) AS rc
-       |  FROM q CROSS JOIN cents$iters c) WHERE rc <= $nprobe),
-       |lk0 AS (SELECT q.query_id, c.cell,
-       |  list_dot_product(q.qv[1:$dsub], c.cv) AS dp
-       |  FROM q CROSS JOIN c0_$iters c),
-       |lk1 AS (SELECT q.query_id, c.cell,
-       |  list_dot_product(q.qv[${dsub + 1}:$dim], c.cv) AS dp
-       |  FROM q CROSS JOIN c1_$iters c),
-       |resc AS (SELECT vec_id, ccell FROM res),
-       |pr AS (SELECT query_id, cell, qdotc FROM probe),
-       |sc AS (SELECT pr.query_id, code0.vec_id,
-       |  round(pr.qdotc + lk0.dp + lk1.dp, 6) AS score
-       |  FROM code0 JOIN code1 USING (vec_id)
-       |  JOIN resc ON resc.vec_id = code0.vec_id
-       |  JOIN pr ON pr.cell = resc.ccell
-       |  JOIN lk0 ON lk0.query_id = pr.query_id AND lk0.cell = code0.cell
-       |  JOIN lk1 ON lk1.query_id = pr.query_id AND lk1.cell = code1.cell
-       |  WHERE code0.vec_id <> pr.query_id)
-       |SELECT query_id, vec_id, score, rn FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY score DESC, vec_id ASC) AS rn FROM sc)
-       |WHERE rn <= $k""".stripMargin
-  }
-
-  /** The shared unrolled-Lloyd training CTEs (e, cents0..N, asg): seeds =
-    * the `nlist` lowest-id vectors, max-cosine assignment with lowest-cell
-    * tie-break, per-iteration 6-decimal mean quantization — ending with
-    * the full-corpus assignment `asg(vec_id, v, nrm, cell)`. Consumed by
-    * the trained-IVF probe oracle and the SemDeDup oracle. */
-  /** Max-cosine cell pick as a slim GROUP BY argmin instead of a
-    * payload-carrying window: `min({'nc': -cos, 'cl': cell})` is
-    * lexicographic, so it picks highest cos then lowest cell — exactly
-    * the window's `ORDER BY cos DESC, cell ASC ... rc = 1` — but the
-    * aggregation state is (double, int) per VECTOR, while the window
-    * sorted every (vector x centroid) row with the full embedding list
-    * in the payload. At the 100x fixture that sort was the oracle's
-    * spill driver (>78 GB temp); the argmin form keeps it in RAM. */
-  private def cellPick(centsCte: String): String =
-    s"""(SELECT e2.vec_id, struct_extract(min(
-       |    {'nc': -list_dot_product(e2.v, c.cv) / (e2.nrm * c.cnrm),
-       |     'cl': c.cell}), 'cl') AS cell
-       |  FROM e e2 CROSS JOIN $centsCte c GROUP BY e2.vec_id)"""
-
-  /** With `pinned = true` the Lloyd iterations are replaced by a read of
-    * the exported `__m_ivf_cents` model table — same terminal CTE names
-    * (cents$iters, asg), so every downstream probe/assignment consumer is
-    * shared verbatim with the unrolled training oracle (see
-    * [[pqTrainCtes]] for why). */
-  private def ivfTrainCtes(nlist: Int, iters: Int,
-                           pinned: Boolean = false): String = if (pinned) {
-    s"""e AS ($embSql),
-       |cents$iters AS (SELECT CAST(cell AS BIGINT) AS cell, cv,
-       |  sqrt(list_dot_product(cv, cv)) AS cnrm FROM __m_ivf_cents),
-       |asg AS (SELECT e.vec_id, e.v, e.nrm, p.cell
-       |  FROM e JOIN ${cellPick(s"cents$iters")} p USING (vec_id))""".stripMargin
-  } else {
-    def iteration(i: Int): String =
-      s"""asg$i AS (SELECT e.vec_id, e.v, e.nrm, p.cell
-         |  FROM e JOIN ${cellPick(s"cents${i - 1}")} p USING (vec_id)),
-         |m$i AS (SELECT cell, list(mx ORDER BY d) AS cv FROM (
-         |  SELECT cell, d, round(avg(val), 6) AS mx FROM (
-         |    SELECT cell, unnest(v) AS val,
-         |           unnest(generate_series(1, len(v))) AS d FROM asg$i)
-         |  GROUP BY cell, d) GROUP BY cell),
-         |cents$i AS (SELECT c0.cell, COALESCE(m$i.cv, c0.cv) AS cv,
-         |  sqrt(list_dot_product(COALESCE(m$i.cv, c0.cv),
-         |                        COALESCE(m$i.cv, c0.cv))) AS cnrm
-         |  FROM cents${i - 1} c0 LEFT JOIN m$i USING (cell))""".stripMargin
-    s"""e AS ($embSql),
-       |cents0 AS (SELECT vec_id AS cell, v AS cv, nrm AS cnrm FROM e
-       |           WHERE vec_id < $nlist),
-       |${(1 to iters).map(iteration).mkString(",\n")},
-       |asg AS (SELECT e.vec_id, e.v, e.nrm, p.cell
-       |  FROM e JOIN ${cellPick(s"cents$iters")} p USING (vec_id))""".stripMargin
-  }
-
-  private def ivfTrainedOracleSql(nlist: Int, iters: Int, nprobe: Int,
-                                  k: Int, pinned: Boolean = false): String = {
-    s"""WITH ${ivfTrainCtes(nlist, iters, pinned)},
-       |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM e
-       |      WHERE vec_id < 3),
-       |probe AS (SELECT query_id, qv, qnrm, cell FROM (
-       |  SELECT q.query_id, q.qv, q.qnrm, c.cell,
-       |    row_number() OVER (PARTITION BY q.query_id
-       |      ORDER BY list_dot_product(q.qv, c.cv) / (q.qnrm * c.cnrm)
-       |        DESC, c.cell ASC) AS rc
-       |  FROM q CROSS JOIN cents$iters c) WHERE rc <= $nprobe),
-       |s AS (SELECT probe.query_id, asg.vec_id,
-       |  round(list_dot_product(probe.qv, asg.v) / (probe.qnrm * asg.nrm), 6)
-       |    AS cos
-       |  FROM asg JOIN probe ON asg.cell = probe.cell
-       |  WHERE asg.vec_id <> probe.query_id)
-       |SELECT query_id, vec_id, cos, rn FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |                               ORDER BY cos DESC, vec_id ASC) AS rn
-       |  FROM s) WHERE rn <= $k""".stripMargin
-  }
-
-  /** The MinHash-LSH near-dup CTE chain ending in `pairs(ida, idb)` —
-    * shingles, 12 permuted min-hashes, 4 banded buckets, candidate join,
-    * Jaccard >= 0.5 refine. Shared VERBATIM by the committed
-    * q_dedup_clusters oracle (recursive closure on top) and the
-    * [[pinnedOracle]] iterative-closure recipe (scripted min-label
-    * propagation on top), so the two can only differ in how the closure
-    * is computed. */
-  private def minhashPairCtes(): String = {
-    val mods = DedupOps.minhashMultipliers(12).map(c =>
-      s"list_min([${DedupOps.permuteHashSql("x", c)} FOR x IN hs])")
-      .mkString(",\n|    ")
-    s"""d AS ($shinglesSql),
-       |h AS (SELECT doc_id, $hashListSql AS hs FROM d),
-       |sig AS (SELECT doc_id, [
-       |    $mods
-       |  ] AS sig FROM h),
-       |bands AS (SELECT doc_id, b,
-       |  md5(b || '|' || array_to_string(sig[b*3+1 : b*3+3], ',')) AS bh
-       |  FROM sig CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)),
-       |cand AS (SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
-       |  FROM bands a JOIN bands b
-       |    ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
-       |pairs AS (SELECT ida, idb
-       |  FROM cand JOIN h a ON cand.ida = a.doc_id JOIN h b ON cand.idb = b.doc_id
-       |  WHERE $jaccardSql >= 0.5)""".stripMargin
-  }
-
-  /** SemDeDup pinned-closure prelude: pinned-centroid assignment (`asg`
-    * via [[ivfTrainCtes]] pinned mode) plus the identical-vector collapse
-    * the engine applies (rep = min vec_id per distinct vector) — pair
-    * generation runs over REPRESENTATIVES, exactly like
-    * `SimilarityOps.semanticDedup`, which is what keeps the oracle's
-    * intra-cell self-join bounded by DISTINCT vectors at any duplication
-    * factor (uniform 100x or Zipf skew). */
-  private def semdedupPinnedPrelude: String =
-    s"""${ivfTrainCtes(8, 2, pinned = true)},
-       |reps AS (SELECT min(vec_id) AS rid FROM e
-       |         GROUP BY md5(array_to_string(v, ','))),
-       |ra AS (SELECT a.vec_id, a.v, a.nrm, a.cell
-       |       FROM asg a JOIN reps r ON a.vec_id = r.rid)""".stripMargin
-
-  private def semdedupPinnedPairsSql: String =
-    s"""WITH $semdedupPinnedPrelude,
-       |p AS (SELECT a.vec_id AS ida, b.vec_id AS idb
-       |  FROM ra a JOIN ra b ON a.cell = b.cell AND a.vec_id < b.vec_id
-       |  WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6)
-       |        >= 0.45)
-       |SELECT ida, idb FROM p""".stripMargin
-
-  /** Final SemDeDup relation given `labels(node, lbl)` over the rep pair
-    * graph: members inherit their representative's component label (reps
-    * are group minima, so the component's min rep IS the min member id —
-    * identical to the engine's coalesce(cluster_id, rep)). */
-  private def semdedupPinnedFinalSql: String =
-    s"""WITH $semdedupPinnedPrelude,
-       |mem AS (SELECT vec_id, min(vec_id) OVER (
-       |          PARTITION BY md5(array_to_string(v, ','))) AS rep FROM e)
-       |SELECT m.vec_id, a.cell,
-       |       COALESCE(l.lbl, m.rep) AS canonical_id,
-       |       COALESCE(l.lbl, m.rep) <> m.vec_id AS is_dup
-       |FROM mem m JOIN asg a ON m.rep = a.vec_id
-       |LEFT JOIN labels l ON m.rep = l.node""".stripMargin
-
-  /** Scale-oracle recipes for the four queries whose committed DuckDB
-    * oracle is infeasible at the 100x / Zipf fixtures — the k-means
-    * training unroll OOMs past 10x regardless of memory_limit, and the
-    * recursive-CTE closures time out on clique-dense pair graphs.
-    *
-    * Two restructurings, both mathematically equivalent to the committed
-    * oracle (cross-validated at sf0.01/sf0.1, where BOTH run):
-    *  - `kind: sql` — the training CTEs are replaced by reads of the
-    *    engine's EXPORTED model tables (`Verify` with
-    *    SPARK_GRAFT_EXPORT_MODELS=1 writes `_models/<name>`; training
-    *    is deterministic and 6-decimal-quantized, so the export is
-    *    hash-stable). DuckDB then verifies the full probe/assignment/ADC
-    *    path treating the model as an input — pure argmin/join SQL.
-    *    Training itself stays proven by the unrolled oracle at <=10x.
-    *  - `kind: closure` — the relation is split into `pairs_sql` (the
-    *    pair graph), a scripted bounded-round min-label propagation run
-    *    by tools/pinned_check.py (materialized `labels(node, lbl)`), and
-    *    `final_sql` consuming `labels` — replacing the recursive CTE
-    *    whose O(paths) expansion defeats DuckDB on dense graphs.
-    * `models` lists the `_models/<name>` tables the SQL reads. */
-  def pinnedOracle: Map[String, Map[String, String]] = Map(
-    "q_ann_ivfpq" -> Map(
-      "kind" -> "sql",
-      "models" -> "ivf_cents,ivfpq_book0,ivfpq_book1",
-      "sql" -> ivfPqOracleSql(nlist = 8, iters = 2, nprobe = 2, cells = 4,
-        k = 5, dim = 64, pinned = true)),
-    "q_ann_recall" -> Map(
-      "kind" -> "sql",
-      "models" -> "ivf_cents,pq_book0,pq_book1,ivfpq_book0,ivfpq_book1",
-      "sql" -> recallOracleSql(pinned = true)),
-    "q_semdedup" -> Map(
-      "kind" -> "closure",
-      "models" -> "ivf_cents",
-      "pairs_sql" -> semdedupPinnedPairsSql,
-      "final_sql" -> semdedupPinnedFinalSql),
-    "q_dedup_clusters" -> Map(
-      "kind" -> "closure",
-      "models" -> "",
-      "pairs_sql" -> s"WITH ${minhashPairCtes()}\nSELECT ida, idb FROM pairs",
-      "final_sql" -> ("SELECT node AS doc_id, lbl AS cluster_id, " +
-        "lbl = node AS is_canonical FROM labels")))
-
-  /** The q_ann_recall oracle: DuckDB re-derives the brute-force reference
-    * AND every approximate shortlist (each variant's full oracle nested
-    * as a CTE), then recomputes the overlap — the recall numbers are
-    * themselves hash-verified. With `pinned = true` the three
-    * trained-model families (IVF, PQ, IVF-PQ) read the engine's exported
-    * model tables instead of unrolling k-means; brute force and LSH are
-    * training-free and stay identical. */
-  private def recallOracleSql(pinned: Boolean): String = {
-    val bruteSql =
-      s"""WITH e AS ($embSql),
-         |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM e
-         |      WHERE vec_id < 3),
-         |s AS (SELECT query_id, vec_id,
-         |        round(list_dot_product(qv, v) / (qnrm * nrm), 6) AS cos
-         |      FROM e CROSS JOIN q WHERE vec_id <> query_id)
-         |SELECT query_id, vec_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |                               ORDER BY cos DESC, vec_id ASC) AS rn
-         |  FROM s) WHERE rn <= 5""".stripMargin
-    val variants = Seq(
-      "lsh_p4" -> lshAnnOracleSql(multiProbe = false),
-      "lsh_p4_mp" -> lshAnnOracleSql(multiProbe = true),
-      "ivf_np1" -> ivfTrainedOracleSql(nlist = 8, iters = 2,
-        nprobe = 1, k = 5, pinned),
-      "ivf_np2" -> ivfTrainedOracleSql(nlist = 8, iters = 2,
-        nprobe = 2, k = 5, pinned),
-      "ivf_np4" -> ivfTrainedOracleSql(nlist = 8, iters = 2,
-        nprobe = 4, k = 5, pinned),
-      "pq_m2c4" -> pqOracleSql(cells = 4, iters = 2, topK = 5, dim = 64,
-        if (pinned) Some("__m_pq_book") else None),
-      "ivfpq_np2" -> ivfPqOracleSql(nlist = 8, iters = 2, nprobe = 2,
-        cells = 4, k = 5, dim = 64, pinned))
-    val ctes = variants.map { case (n, sql) => s"v_$n AS (\n$sql\n)" }
-    val union = variants.map { case (n, _) =>
-      s"SELECT '$n' AS method, query_id, vec_id FROM v_$n" }
-      .mkString("\n  UNION ALL ")
-    s"""WITH brute AS (
-       |$bruteSql
-       |),
-       |${ctes.mkString(",\n")},
-       |u AS (
-       |  $union),
-       |t AS (SELECT CAST(count(*) AS BIGINT) AS total FROM brute)
-       |SELECT u.method,
-       |  CAST(count(b.query_id) AS BIGINT) AS hits,
-       |  (SELECT total FROM t) AS total,
-       |  round(CAST(count(b.query_id) AS DOUBLE) / (SELECT total FROM t),
-       |        6) AS recall
-       |FROM u LEFT JOIN brute b
-       |  ON u.query_id = b.query_id AND u.vec_id = b.vec_id
-       |GROUP BY u.method""".stripMargin
-  }
-
-  /** Hyperplane-LSH ANN oracle (planes=4, k=5, queries vec_id < 3),
-    * mirroring SimilarityOps.lshTopK: md5-derived ±1 plane signs, packed
-    * sign-bit code, bucket-equality join, (cos DESC, vec_id ASC) rank.
-    * `multiProbe` adds the query-side Hamming-distance-1 codes —
-    * everything else is shared so the two gates cannot drift apart. */
-  private def lshAnnOracleSql(multiProbe: Boolean): String = {
-    def planeSql(p: Int): String =
-      s"[CASE WHEN CAST(('0x' || substring(md5('$p:' || CAST(d AS VARCHAR)), 1, 1)) AS INT) % 2 = 0" +
-        s" THEN 1.0 ELSE -1.0 END FOR d IN generate_series(0, len(v) - 1)]"
-    val codeSql = (0 until 4).map(p =>
-      s"(CASE WHEN list_dot_product(v, ${planeSql(p)}) > 0 THEN ${1L << p} ELSE 0 END)")
-      .mkString("\n|    + ")
-    val qCte =
-      if (!multiProbe)
-        """q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, code AS qcode
-          |      FROM c WHERE vec_id < 3)""".stripMargin
-      else
-        """q0 AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, code AS qc
-          |       FROM c WHERE vec_id < 3),
-          |q AS (SELECT query_id, qv, qnrm,
-          |        unnest([qc, xor(qc, 1), xor(qc, 2), xor(qc, 4), xor(qc, 8)])
-          |          AS qcode
-          |      FROM q0)""".stripMargin
-    s"""WITH e AS ($embSql),
-       |c AS (SELECT vec_id, v, nrm, $codeSql AS code FROM e),
-       |$qCte,
-       |s AS (SELECT query_id, vec_id,
-       |        round(list_dot_product(qv, v) / (qnrm * nrm), 6) AS cos
-       |      FROM c JOIN q ON c.code = q.qcode AND c.vec_id <> q.query_id)
-       |SELECT query_id, vec_id, cos, rn FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |                               ORDER BY cos DESC, vec_id ASC) AS rn
-       |  FROM s) WHERE rn <= 5""".stripMargin
-  }
-
-  // Shared graph CTEs: part->supplier edges from lineitem (deduped, as the
-  // engine dedupes), vertex set = src UNION dst, out-degrees.
-  private val graphBaseSql =
-    """e AS (SELECT DISTINCT l_partkey AS src, l_suppkey AS dst FROM lineitem),
-      |v AS (SELECT src AS nodeid FROM e UNION SELECT dst FROM e),
-      |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM v),
-      |deg AS (SELECT src, CAST(count(*) AS DOUBLE) AS outdeg FROM e GROUP BY src)""".stripMargin
-
-  /** PageRank unrolled to `iters` CTE rounds (DuckDB has no loops; the
-    * unrolled plan is the exact dataflow the engine runs per iteration). */
-  private def pageRankOracle(iters: Int): String = {
-    val rounds = (1 to iters).map { i =>
-      s"""d$i AS (SELECT COALESCE(sum(pr), 0) AS d FROM r${i - 1}
-         |        WHERE nodeid NOT IN (SELECT src FROM e)),
-         |g$i AS (SELECT e.dst AS nodeid, sum(r.pr / deg.outdeg) AS mass
-         |        FROM r${i - 1} r JOIN e ON r.nodeid = e.src JOIN deg ON e.src = deg.src
-         |        GROUP BY e.dst),
-         |r$i AS (SELECT v.nodeid,
-         |        CAST(0.15 AS DOUBLE) / (SELECT n FROM nn)
-         |        + CAST(0.85 AS DOUBLE) * (COALESCE(g$i.mass, 0)
-         |            + (SELECT d FROM d$i) / (SELECT n FROM nn)) AS pr
-         |        FROM v LEFT JOIN g$i ON v.nodeid = g$i.nodeid)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $graphBaseSql,
-       |r0 AS (SELECT nodeid, 1.0 / (SELECT n FROM nn) AS pr FROM v),
-       |$rounds
-       |SELECT nodeid, round(pr, 9) AS pr FROM r$iters""".stripMargin
-  }
-
-  /** Convergence-mode PageRank as a SELF-TERMINATING recursive CTE: each
-    * recursion round computes the next rank vector from the working table
-    * (exactly the engine's per-iteration dataflow), carries the L∞ delta
-    * as a column, and recurses only while the previous round's delta
-    * exceeds `tol` — the same stopping rule as
-    * `GraphOps.pageRankConverged`, so the oracle needs no hardcoded
-    * iteration count and holds at any SF.
-    *
-    * DuckDB quirk: inside WITH RECURSIVE, a helper CTE whose body is a
-    * TOP-LEVEL `UNION` is itself given recursive-CTE treatment (and
-    * silently mis-evaluates); the vertex union is wrapped in a subquery
-    * with an explicit DISTINCT instead. */
-  private def pageRankConvOracle(tol: Double, maxIter: Int): String =
-    s"""WITH RECURSIVE
-       |e AS (SELECT DISTINCT l_partkey AS src, l_suppkey AS dst FROM lineitem),
-       |v AS (SELECT DISTINCT nodeid FROM
-       |      (SELECT src AS nodeid FROM e UNION ALL SELECT dst AS nodeid FROM e)),
-       |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM v),
-       |deg AS (SELECT src, CAST(count(*) AS DOUBLE) AS outdeg FROM e GROUP BY src),
-       |it AS (
-       |  SELECT nodeid, 1.0/(SELECT n FROM nn) AS pr, 1e300 AS delta, 0 AS iter FROM v
-       |  UNION ALL
-       |  (WITH prev AS (SELECT * FROM it),
-       |   d AS (SELECT COALESCE(sum(pr),0) AS d FROM prev
-       |         WHERE nodeid NOT IN (SELECT src FROM e)),
-       |   g AS (SELECT e.dst AS nodeid, sum(p.pr/deg.outdeg) AS mass
-       |         FROM prev p JOIN e ON p.nodeid=e.src JOIN deg ON e.src=deg.src
-       |         GROUP BY e.dst),
-       |   nxt AS (SELECT v.nodeid,
-       |           CAST(0.15 AS DOUBLE)/(SELECT n FROM nn)
-       |           + CAST(0.85 AS DOUBLE)*(COALESCE(g.mass,0)
-       |               + (SELECT d FROM d)/(SELECT n FROM nn)) AS pr
-       |           FROM v LEFT JOIN g USING (nodeid)),
-       |   dl AS (SELECT max(abs(nxt.pr - prev.pr)) AS delta
-       |          FROM nxt JOIN prev USING (nodeid))
-       |   SELECT nxt.nodeid, nxt.pr, (SELECT delta FROM dl) AS delta,
-       |          (SELECT max(iter)+1 FROM prev) AS iter
-       |   FROM nxt
-       |   WHERE (SELECT max(delta) FROM prev) > $tol
-       |     AND (SELECT max(iter) FROM prev) < $maxIter)
-       |)
-       |SELECT nodeid, round(pr, 9) AS pr, iter AS iters
-       |FROM it WHERE iter = (SELECT max(iter) FROM it)""".stripMargin
-
-  /** Personalized PageRank: teleport + dangling mass go to the walk's own
-    * source only; state keyed by (source, nodeid). Top-k per source after
-    * rounding (rounding first makes the rank/tie order engine-stable). */
-  private def pprTopkOracle(iters: Int, sources: Seq[Long], k: Int): String = {
-    val srcVals = sources.map(s => s"($s)").mkString(", ")
-    val rounds = (1 to iters).map { i =>
-      s"""d$i AS (SELECT source, COALESCE(sum(pr), 0) AS d FROM r${i - 1}
-         |        WHERE nodeid NOT IN (SELECT src FROM e) GROUP BY source),
-         |g$i AS (SELECT r.source, e.dst AS nodeid, sum(r.pr / deg.outdeg) AS mass
-         |        FROM r${i - 1} r JOIN e ON r.nodeid = e.src JOIN deg ON e.src = deg.src
-         |        GROUP BY r.source, e.dst),
-         |r$i AS (SELECT vs.source, vs.nodeid,
-         |        CASE WHEN vs.nodeid = vs.source THEN CAST(0.15 AS DOUBLE) ELSE 0 END
-         |        + CAST(0.85 AS DOUBLE) * (COALESCE(g$i.mass, 0)
-         |            + CASE WHEN vs.nodeid = vs.source THEN COALESCE(d$i.d, 0) ELSE 0 END) AS pr
-         |        FROM vs
-         |        LEFT JOIN g$i ON vs.nodeid = g$i.nodeid AND vs.source = g$i.source
-         |        LEFT JOIN d$i ON vs.source = d$i.source)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $graphBaseSql,
-       |s AS (SELECT CAST(source AS BIGINT) AS source FROM (VALUES $srcVals) AS t(source)),
-       |vs AS (SELECT s.source, v.nodeid FROM v CROSS JOIN s),
-       |r0 AS (SELECT source, nodeid,
-       |       CASE WHEN nodeid = source THEN CAST(1.0 AS DOUBLE) ELSE 0 END AS pr FROM vs),
-       |$rounds
-       |SELECT source, nodeid, pr, rn FROM (
-       |  SELECT source, nodeid, round(pr, 9) AS pr,
-       |         row_number() OVER (PARTITION BY source
-       |                            ORDER BY round(pr, 9) DESC, nodeid ASC) AS rn
-       |  FROM r$iters) WHERE rn <= $k""".stripMargin
-  }
-
-  private def coocSql: String =
-    s"""WITH d AS (SELECT $toksSql AS toks FROM documents),
-       |i AS (SELECT toks, unnest(generate_series(1, len(toks))) AS i FROM d),
-       |ij AS (SELECT toks, i,
-       |       unnest(generate_series(greatest(1, i-2), least(len(toks), i+2))) AS j FROM i)
-       |SELECT toks[i] AS term, toks[j] AS neighbor, count(*) AS cnt
-       |FROM ij WHERE j <> i GROUP BY 1, 2""".stripMargin
+  /** Scale-oracle recipes for the queries whose [[oracleSql]] DuckDB
+    * cannot run at the 100x / Zipf fixtures
+    * ([[graft.queries.QuerySpec.pinned]]). */
+  val pinnedOracle: Map[String, Map[String, String]] =
+    Catalog.specs.flatMap(s => s.pinned.map(s.name -> _)).toMap
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
@@ -15,7 +16,31 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  /** Inferred schemas per session, keyed by (path, length, modification
+    * time): a rewritten file misses and is inferred again. */
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[(String, Long, Long), StructType]]
+
+  /** `path` read under its pinned schema. Parquet schema inference is a
+    * Spark job (a footer read), so it runs once per session and file
+    * version, under `inferConfs`; every later read of the file submits no
+    * job until the DataFrame runs. */
+  private def read(s: SparkSession, path: String,
+                   inferConfs: Map[String, String] = Map.empty): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val key = (st.getPath.toString, st.getLen, st.getModificationTime)
+    val cache = schemas.synchronized(schemas.computeIfAbsent(s,
+      _ => new java.util.concurrent.ConcurrentHashMap()))
+    val schema = Option(cache.get(key)).getOrElse {
+      val inferred = SessionConfs.scoped(s, inferConfs)(s.read.parquet(path).schema)
+      cache.putIfAbsent(key, inferred)
+      inferred
+    }
+    s.read.schema(schema).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -34,33 +59,22 @@ object Tables {
     * at 1e18 nanos); NTZ -> cast, which under the engine's pinned UTC
     * session timezone preserves the wall-clock micros bit-for-bit.
     *
-    * The legacy conf is needed at schema-inference time (read.parquet below)
-    * AND at scan execution; we pin the inferred LongType schema with an
-    * explicit `.schema(...)` so later executions don't depend on the session
-    * conf, and restore the previous conf value before returning — loading
-    * events must not change how unrelated reads in the same session behave.
+    * The legacy conf is needed only to infer the schema: it is set for the
+    * inference on a cache miss and restored before returning, so loading
+    * events never changes how unrelated reads in the same session behave.
+    * The scan runs under the pinned LongType schema whatever the session
+    * conf says later. (Inference without the conf fails on a nanos file,
+    * so a plain [[load]] of events never caches a different schema.)
     */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try {
-      val raw = load(s, d, "events")
-      raw.schema("ts").dataType match {
-        case LongType =>
-          // re-read with the inferred schema pinned explicitly: execution of
-          // THIS DataFrame then works whatever the session conf says later
-          s.read.schema(raw.schema).parquet(s"$d/events.parquet")
-            .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        case TimestampNTZType =>
-          raw.withColumn("ts", col("ts").cast(TimestampType))
-        case _ => raw
-      }
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
+    val raw = read(s, s"$d/events.parquet",
+      Map("spark.sql.legacy.parquet.nanosAsLong" -> "true"))
+    raw.schema("ts").dataType match {
+      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => raw
     }
   }
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")

@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import graft.queries.{Catalog, ScanSplit}
+/** Correctness dump: each gate query's result ([[Catalog]]) → parquet,
+  * plus oracle_sql.json and pinned_oracle.json, for the DuckDB compare
+  * (tools/check.py). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -20,10 +22,9 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // same per-query split sizing as Bench (graft.ScanPolicy, applied
-      // before each query below): text family 512 KB, scan-light set the
-      // wider r9 value — the gate runs under the same confs it benches
-      .config("spark.sql.files.maxPartitionBytes", ScanPolicy.textSplit)
+      // each query's own confs (its scan split among them) are set around
+      // it below, as Bench does: the gate runs under the confs it benches
+      .config(ScanSplit.key, ScanSplit.text(ScanSplit.key))
     val builder = if (master.startsWith("local-cluster")) {
       val addOpens = Seq(
         "java.base/java.lang", "java.base/java.lang.invoke",
@@ -44,65 +45,23 @@ object Verify {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration escape hatch: SPARK_GRAFT_ONLY=q_a,q_b runs a subset
-    // (the driver never sets it, so the gate always runs everything)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
-    // SPARK_GRAFT_STREAMS=N runs the gate as N CONCURRENT query streams
-    // (real pipelines share one cluster): each stream gets its own
-    // spark.newSession() so per-query session confs (ScanPolicy splits,
-    // the iteration AQE toggle) stay isolated, while executors, caches
-    // and scratch dirs are shared — exactly the surface where cross-query
-    // interference would corrupt results, which the DuckDB hash compare
-    // then catches. Default 1 = the serial gate, byte-for-byte as before.
-    val streams = math.max(1, sys.env.getOrElse("SPARK_GRAFT_STREAMS", "1").toInt)
-    val queue = new java.util.concurrent.ConcurrentLinkedQueue[
-      (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]()
-    selected.foreach(kv => queue.add(kv))
-    def drain(s: SparkSession): Unit = {
-      var kv = queue.poll()
-      while (kv != null) {
-        val (name, fn) = kv
-        ScanPolicy.applyFor(s, name)
-        // inter-query storage release (serial mode only): persisted/
-        // checkpointed blocks from earlier queries must not squeeze this
-        // one's execution memory. Under concurrent streams OTHER queries
-        // are still running — releasing their blocks mid-flight is the
-        // kind of interference this mode exists to catch, not cause.
-        if (streams == 1)
-          s.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-        try fn(s, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        kv = queue.poll()
+    // SPARK_GRAFT_STREAMS > 1 runs the gate as concurrent streams
+    // (graft.Harness): cross-query interference would corrupt results,
+    // which the DuckDB hash compare then catches
+    Harness.runAll(spark, Harness.selected) { (s, spec) =>
+      // inter-query storage release (serial mode only): persisted/
+      // checkpointed blocks from earlier queries must not squeeze this
+      // one's execution memory. Under concurrent streams OTHER queries
+      // are still running — releasing their blocks mid-flight is the
+      // kind of interference this mode exists to catch, not cause.
+      if (Harness.streams == 1)
+        s.sparkContext.getPersistentRDDs.values
+          .foreach(_.unpersist(blocking = true))
+      try spec.withConfs(s)(spec.build(s, sfDir).coalesce(1)
+        .write.mode("overwrite").parquet(s"$outDir/${spec.name}"))
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] ${spec.name} failed: ${e.getMessage}")
       }
-    }
-    if (streams == 1) drain(spark)
-    else {
-      val threads = (1 to streams).map { i =>
-        val t = new Thread(() => {
-          val s = spark.newSession()
-          // the stream's session must be this thread's ACTIVE session:
-          // the kernel Column helpers register graft_* functions into the
-          // active session, and a newSession has its own function
-          // registry (first caught here: 13 queries failed with
-          // UNRESOLVED_ROUTINE graft_shingle_hash under 4 streams). A
-          // production multi-session deployment gets the same effect from
-          // spark.sql.extensions=graft.functions.GraftExtensions.
-          SparkSession.setActiveSession(s)
-          graft.functions.GraftFunctions.register(s)
-          drain(s)
-        }, s"verify-stream-$i")
-        t.start(); t
-      }
-      threads.foreach(_.join())
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -116,16 +75,15 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    def obj(kvs: Seq[(String, String)]): String =
+      kvs.map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ",", "}")
+    val json = obj(Catalog.specs.map(s => s.name -> q(s.oracle)))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // scale-oracle recipes (model-pinned SQL / iterative closure) for the
     // queries whose committed oracle is infeasible at 100x/zipf — see
-    // SparkEntry.pinnedOracle and tools/pinned_check.py
-    val pinnedJson = SparkEntry.pinnedOracle.map { case (k, m) =>
-      s"${q(k)}: ${m.map { case (mk, mv) => s"${q(mk)}: ${q(mv)}" }
-        .mkString("{", ",", "}")}"
-    }.mkString("{", ",", "}")
+    // QuerySpec.pinned and tools/pinned_check.py
+    val pinnedJson = obj(Catalog.specs.flatMap(s => s.pinned.map(m =>
+      s.name -> obj(m.toSeq.map { case (k, v) => k -> q(v) }))))
     Files.writeString(Paths.get(s"$outDir/pinned_oracle.json"), pinnedJson)
     // SPARK_GRAFT_EXPORT_MODELS=1: export the trained ANN models the
     // pinned oracles read (`__m_*` views over _models/<name>). Training

@@ -107,33 +107,29 @@ object GraphOps {
     * [[inTaskCutoff]]. */
   private val aqeIterationCutoff = 1000000L
 
-  private def withIterationAqe[T](spark: SparkSession, n: Long)(body: => T): T = {
-    val conf = spark.conf
-    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-    val prev = keys.map(k => k -> conf.getOption(k))
-    if (n < aqeIterationCutoff) {
-      conf.set(keys.head, "false")
-      conf.set(keys(1), "8")
-    }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
-    }
-  }
+  private def withIterationAqe[T](spark: SparkSession, n: Long)(body: => T): T =
+    graft.SessionConfs.scoped(spark,
+      if (n < aqeIterationCutoff)
+        Map("spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "8")
+      else Map.empty)(body)
 
-  /** System-property override for the in-task regime's cutoff (default
-    * [[aqeIterationCutoff]]). Tests force the distributed join regime onto
-    * small graphs with -Dgraft.graph.localizedCutoff=0. */
-  private def inTaskCutoff: Long =
-    sys.props.get("graft.graph.localizedCutoff").map(_.toLong)
-      .getOrElse(aqeIterationCutoff)
+  /** Session conf holding the in-task regime's cutoff (default
+    * [[aqeIterationCutoff]]), read on every call: 0 sends every walk to
+    * the join regime, as the gate's q_pagerank_range, q_pagerank_hub and
+    * q_ppr_hub do on their small graph. */
+  val InTaskCutoffKey = "spark.graft.graph.inTaskCutoff"
+
+  private def inTaskCutoff(spark: SparkSession): Long =
+    spark.conf.getOption(InTaskCutoffKey).fold(aqeIterationCutoff)(v =>
+      v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$InTaskCutoffKey must be a whole number, got '$v'")))
 
   /** Regime gate: the in-task regime holds the raw edges, then CSR arrays
     * and one rank array of n doubles per walk, in one task, so it runs
     * only while |walks| x n + raw edges is under the cutoff. */
-  private[graft] def inTask(n: Long, walks: Int, rawEdges: Long): Boolean =
-    n * walks + rawEdges < inTaskCutoff
+  private[graft] def inTask(spark: SparkSession, n: Long, walks: Int,
+                            rawEdges: Long): Boolean =
+    n * walks + rawEdges < inTaskCutoff(spark)
 
   /** What the regime gate, the hub guard, the partition clamp and
     * [[graphStats]] need: the vertex count, the raw edge count, the max raw
@@ -355,7 +351,7 @@ object GraphOps {
                    rule: Walk, stop: Stop): (DataFrame, Int) = {
     val s = stats(edges, vertices)
     val cut = new LineageCutter(checkpointDir)
-    if (inTask(s.n, rule.sources.size max 1, s.rawEdges))
+    if (inTask(edges.sparkSession, s.n, rule.sources.size max 1, s.rawEdges))
       inTaskWalk(edges, vertices, dedupeEdges, rule, stop, cut)
     else {
       val g = prepare(edges, vertices, s, numPartitions, dedupeEdges, rangePartition,

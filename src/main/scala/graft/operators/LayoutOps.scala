@@ -1575,17 +1575,24 @@ object LayoutOps {
     (metaRows + scanned, undecided.size)
   }
 
-  /** (newest generation, recorded schema DDL) — the streaming change
-    * source's view of the table head. One listStatus + one header read. */
-  private[graft] def latestGenerationAndSchema(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): (Long, Option[String]) = {
+  /** The newest committed generation — the streaming change source's
+    * offset. One listStatus. */
+  private[graft] def latestGeneration(spark: org.apache.spark.sql.SparkSession,
+      path: String): Long = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    latestManifest(root.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      root).getOrElse(throw new java.io.IOException(
+        s"$path has no committed manifest — not a manifested table"))._1
+  }
+
+  /** The newest generation's table schema, recorded or inferred exactly as
+    * batch reads infer it ([[tableSchema]]) — the streaming change
+    * source's column set. */
+  private[graft] def latestSchema(spark: org.apache.spark.sql.SparkSession,
+      path: String): org.apache.spark.sql.types.StructType = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (g, mp) = latestManifest(fs, root).getOrElse(
-      throw new java.io.IOException(
-        s"$path has no committed manifest — not a manifested table"))
-    (g, readHeader(fs, mp).schemaDdl)
+    tableSchema(spark, root, resolveManifest(fs, root, None, path))
   }
 
   /** The rows a generation window (fromGeneration, toGeneration] ADDED —

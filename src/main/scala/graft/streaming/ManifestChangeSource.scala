@@ -64,7 +64,7 @@ class ManifestChangeSource(
     * restart (the engine hands v1 sources no pre-trigger offset
     * replay) — the cap is a within-run smoothing knob. */
   override def getOffset: Option[Offset] = {
-    val latest = LayoutOps.latestGenerationAndSchema(spark, path)._1
+    val latest = LayoutOps.latestGeneration(spark, path)
     Some(LongOffset((maxGenerationsPerBatch, lastEnd) match {
       case (Some(cap), Some(last)) if cap > 0 => math.min(latest, last + cap)
       case _ => latest
@@ -126,12 +126,8 @@ class ManifestChangeSourceProvider
       params: Map[String, String]): StructType = {
     val path = params.getOrElse("path", throw new IllegalArgumentException(
       "manifest-changes source needs .option(\"path\", <manifested table>)"))
-    val (_, ddl) = LayoutOps.latestGenerationAndSchema(
-      sqlContext.sparkSession, path)
-    val raw = ddl.map(StructType.fromDDL).getOrElse(
-      throw new java.io.IOException(
-        s"$path records no schema — not streamable (pre-schema manifest)"))
-    graft.plans.ManifestFileIndex.relaxed(raw).asInstanceOf[StructType]
+    graft.plans.ManifestFileIndex.relaxed(
+      LayoutOps.latestSchema(sqlContext.sparkSession, path)).asInstanceOf[StructType]
   }
 
   override def sourceSchema(sqlContext: SQLContext,

@@ -80,7 +80,7 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("in-task regime == join regime for all four walks on both scatter layouts") {
-    // graft.graph.localizedCutoff=0 forces the big-graph JOIN regime onto
+    // a zero GraphOps.InTaskCutoffKey forces the big-graph JOIN regime onto
     // the small fixture, where the default runs the in-task regime. Both
     // must land on the same ranks AND the same convergence round count;
     // the join regime runs each walk on both scatter layouts (adjacency
@@ -152,10 +152,8 @@ class GraphOpsSpec extends SparkSpec {
     (inTask, withCutoff(0)(body))
   }
 
-  private def withCutoff[T](cutoff: Long)(body: => T): T = {
-    sys.props("graft.graph.localizedCutoff") = cutoff.toString
-    try body finally sys.props.remove("graft.graph.localizedCutoff")
-  }
+  private def withCutoff[T](cutoff: Long)(body: => T): T =
+    SessionConfs.scoped(spark, Map(GraphOps.InTaskCutoffKey -> cutoff.toString))(body)
 
   test("iterations = 0: every walk returns the same schema and rows in both regimes") {
     def runAll() = Seq(
@@ -288,6 +286,33 @@ class GraphOpsSpec extends SparkSpec {
     assert(converged === fixed, "pageRankConverged's round count costs no job")
   }
 
+  test("gate catalog: q_pagerank_range, q_pagerank_hub and q_ppr_hub run the " +
+      "join regime under their confs; q_pagerank and q_ppr_topk run in-task") {
+    val dir = sf0001
+    val joinPinned = Set("q_pagerank_range", "q_pagerank_hub", "q_ppr_hub")
+    Tables.lineitem(spark, dir) // its schema inference is no walk's job
+    val counts = for (name <- Seq("q_pagerank", "q_ppr_topk") ++ joinPinned.toSeq.sorted) yield {
+      val spec = graft.queries.Catalog(name)
+      def run() = jobsOf(spec.build(spark, dir).collect())
+      // each regime forced inside the spec's confs, then the confs alone
+      val inTask = spec.withConfs(spark)(withCutoff(Long.MaxValue)(run()))
+      val join = spec.withConfs(spark)(withCutoff(0)(run()))
+      val catalog = spec.withConfs(spark)(run())
+      assert(join > inTask, s"$name: the regimes are told apart by their jobs")
+      assert(catalog === (if (joinPinned(name)) join else inTask),
+        s"$name under its catalog confs: $catalog jobs (in-task $inTask, join $join)")
+      s"$name=$catalog (in-task $inTask, join $join)"
+    }
+    info(counts.mkString(" "))
+  }
+
+  test("a non-numeric in-task cutoff fails naming its conf key") {
+    val e = intercept[IllegalArgumentException](SessionConfs.scoped(spark,
+      Map(GraphOps.InTaskCutoffKey -> "lots"))(GraphOps.pageRank(smallEdges, iterations = 1)))
+    assert(e.getMessage.contains(GraphOps.InTaskCutoffKey) && e.getMessage.contains("lots"),
+      e.getMessage)
+  }
+
   test("regime gate weighs |sources| x n: a many-sources call lands in the join regime") {
     def ppr() = GraphOps.personalizedPageRank(smallEdges, Seq(1L, 2L, 4L),
       iterations = 3, vertices = Some(smallVerts), numPartitions = 2).collect()
@@ -296,8 +321,8 @@ class GraphOpsSpec extends SparkSpec {
     var rows = Array.empty[org.apache.spark.sql.Row]
     // the fixture's 7 raw edges count too: 5 x 1 + 7 < 20 <= 5 x 3 + 7
     val gatedJobs = withCutoff(20) {
-      assert(GraphOps.inTask(n = 5, walks = 1, rawEdges = 7), "5 x 1 + 7 < 20 stays in-task")
-      assert(!GraphOps.inTask(n = 5, walks = 3, rawEdges = 7),
+      assert(GraphOps.inTask(spark, n = 5, walks = 1, rawEdges = 7), "5 x 1 + 7 < 20 stays in-task")
+      assert(!GraphOps.inTask(spark, n = 5, walks = 3, rawEdges = 7),
         "5 x 3 + 7 >= 20 goes to the join regime")
       jobsOf { rows = ppr() }
     }
@@ -317,8 +342,8 @@ class GraphOpsSpec extends SparkSpec {
     val prJoinJobs = withCutoff(0)(jobsOf(pr()))
     var prRows = Array.empty[org.apache.spark.sql.Row]
     val prGatedJobs = withCutoff(100) {
-      assert(GraphOps.inTask(n = 3, walks = 1, rawEdges = 0), "3 vertices alone stay in-task")
-      assert(!GraphOps.inTask(n = 3, walks = 1, rawEdges = 124), "124 raw edges do not")
+      assert(GraphOps.inTask(spark, n = 3, walks = 1, rawEdges = 0), "3 vertices alone stay in-task")
+      assert(!GraphOps.inTask(spark, n = 3, walks = 1, rawEdges = 124), "124 raw edges do not")
       jobsOf { prRows = pr() }
     }
     assert(prGatedJobs === prJoinJobs, "the edge-heavy call runs the join regime's jobs")

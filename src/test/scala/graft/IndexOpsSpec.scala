@@ -58,6 +58,70 @@ class IndexOpsSpec extends SparkSpec {
       assert(java.util.Arrays.equals(repacked(t), b), s"term $t") }
   }
 
+  // ---- MapFile container checks on sf0.001 documents (no corpus) ------
+
+  private lazy val smallCorpus = Tables.documents(spark, sf0001)
+
+  /** term -> docid-ascending postings, from termDocTf on the same input:
+    * the expected answer of every container lookup below. */
+  private lazy val smallPostings: Map[String, Seq[(Long, Long)]] =
+    IndexOps.termDocTf(smallCorpus, "doc_id", "text").collect()
+      .groupBy(_.getString(0)).map { case (t, rs) =>
+        t -> rs.map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq }
+
+  /** `body` over a fresh 4-part MapFile index of the sf0.001 documents. */
+  private def withSmallMapFileIndex(body: String => Unit): Unit = {
+    val base = java.nio.file.Files.createTempDirectory("graft-mapfile-small").toString
+    try {
+      IndexOps.writeMapFileIndex(IndexOps.compressedIndex(
+        IndexOps.invertedIndex(smallCorpus, "doc_id", "text")), s"$base/idx",
+        numPartitions = 4)
+      body(s"$base/idx")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+  }
+
+  test("MapFile sink serves MapFile.get point lookups (sf0.001 documents)") {
+    withSmallMapFileIndex { dir =>
+      val byDf = smallPostings.toSeq.sortBy { case (t, p) => (-p.length, t) }
+      // the most common term, a single-posting term, and a spread between
+      val probes = (byDf.take(3) ++ byDf.filter(_._2.length == 1).take(3) ++
+        byDf.grouped(byDf.length / 5).map(_.head)).map(_._1).distinct
+      for (t <- probes) assert(IndexOps.mapFileGet(dir, t) === Some(smallPostings(t)), t)
+      assert(!smallPostings.contains("bronze-absent"))
+      assert(IndexOps.mapFileGet(dir, "bronze-absent") === None)
+    }
+  }
+
+  test("point lookup opens exactly ONE part of a 4-part index (sf0.001 documents)") {
+    withSmallMapFileIndex { dir =>
+      val conf = spark.sparkContext.hadoopConfiguration
+      val parts = new java.io.File(dir).listFiles()
+        .filter(_.getName.startsWith("part-")).map(_.getName).sorted
+      assert(parts.length === 4)
+      // terms spread across the vocabulary's byte order: each must resolve
+      // to a SINGLE candidate part (range-partitioned parts have disjoint
+      // spans that together cover every term)
+      val vocab = smallPostings.keys.toSeq.sorted
+      val probes = Seq(0.0, 0.2, 0.4, 0.6, 0.8).map(q => vocab((q * vocab.length).toInt)) :+
+        vocab.last
+      val hits = probes.map { t =>
+        val cand = IndexOps.candidateParts(dir, t, conf)
+        assert(cand.length === 1, s"term '$t' must map to exactly one part")
+        cand.head.getName
+      }
+      assert(hits.distinct.length > 1, "probes must span multiple parts")
+      // a term outside every span opens zero readers
+      assert(IndexOps.candidateParts(dir, "", conf).isEmpty)
+      assert(IndexOps.candidateParts(dir, "\uffff\uffff", conf).isEmpty)
+      for (t <- probes) assert(IndexOps.mapFileGet(dir, t) === Some(smallPostings(t)), t)
+      // fallback: with the sidecar removed (reference-written container),
+      // sequential probing still serves lookups from all parts
+      assert(new java.io.File(dir, "_ranges").delete())
+      assert(IndexOps.candidateParts(dir, probes.head, conf).length === 4)
+      for (t <- probes) assert(IndexOps.mapFileGet(dir, t) === Some(smallPostings(t)), t)
+    }
+  }
+
   // ---- golden corpus fixtures ----------------------------------------
 
   private val gzPath = "/root/reference/assignment2/bible+shakes.nopunc.gz"

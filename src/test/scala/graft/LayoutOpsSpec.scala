@@ -1643,21 +1643,27 @@ class LayoutOpsSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(baseA))
 
-    // (b) with validation: the reader waits out the "copy"; a fixer
-    // thread completes the object and nothing is lost
+    // (b) with validation: the reader waits out the "copy"; the copy
+    // completes right after the reader's first look at the short object
+    // (a read hook on the store, no timing guess) and nothing is lost
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.fauxread.impl", classOf[FauxReadHookFileSystem].getName)
     val baseB = java.nio.file.Files.createTempDirectory("graft-shorthead").toString
     try {
       val mt = mkTable(baseB)
       val full = truncate(mt)
-      val fixer = new Thread(() => { Thread.sleep(300); restore(mt, full) })
-      fixer.start()
-      LayoutOps.appendManifested(Seq(4L).toDF("id"), mt, numFiles = 1)
-      fixer.join()
+      var shortReads = 0
+      FauxReadHookFileSystem.afterRead = Some(f"_manifests/${1L}%020d.manifest" ->
+        (() => { shortReads += 1; restore(mt, full) }))
+      LayoutOps.appendManifested(Seq(4L).toDF("id"), s"fauxread://$mt", numFiles = 1)
+      assert(shortReads === 1, "the append's reader observed the short head")
       assert(LayoutOps.readManifested(spark, mt)
         .collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L, 3L, 4L),
         "validation waits out the partial copy; zero rows lost")
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(baseB))
+    } finally {
+      FauxReadHookFileSystem.afterRead = None
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(baseB))
+    }
 
     // (c) a truncation that never heals fails LOUDLY, naming the defect
     val baseC = java.nio.file.Files.createTempDirectory("graft-shorthead").toString

@@ -126,6 +126,53 @@ class ManifestStreamSpec extends SparkSpec {
     }
   }
 
+  test("a schema-less (pre-#schema=) table streams under the schema batch " +
+      "reads infer, batch for batch equal to readManifestedChanges") {
+    withDirs { (t, ckpt, _) =>
+      // strip the #schema= header from every manifest — the shape of a
+      // table committed before manifests recorded schemas
+      def stripSchema(): Unit = {
+        val md = new java.io.File(s"$t/_manifests")
+        md.listFiles().filter(_.getName.endsWith("manifest")).foreach { f =>
+          val lines = new String(java.nio.file.Files.readAllBytes(f.toPath),
+            "UTF-8").split("\n").filterNot(_.startsWith("#schema="))
+          java.nio.file.Files.write(f.toPath,
+            (lines.mkString("\n") + "\n").getBytes("UTF-8"))
+          val crc = new java.io.File(md, s".${f.getName}.crc")
+          if (crc.exists()) crc.delete(): Unit
+        }
+        assert(!LayoutOps.describeManifest(spark, t).exists(_.startsWith("schema:")))
+      }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      def batch(lo: Long, hi: Long) =
+        spark.range(lo, hi).select(col("id"), (col("id") % 7).as("v"))
+      LayoutOps.writeManifested(batch(0, 40), t, numFiles = 2)
+      LayoutOps.appendManifested(batch(40, 50), t)
+      stripSchema()
+      val batches = scala.collection.mutable.ArrayBuffer.empty[Seq[(Long, Long)]]
+      val q = StreamingOps.readStreamManifested(spark, t)
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[
+            org.apache.spark.sql.Row], _: Long) =>
+          val got = rows(b)
+          batches.synchronized { batches += got }; ()
+        }.start()
+      try {
+        q.processAllAvailable()
+        assert(batches.toSeq === Seq(rows(LayoutOps.readManifested(spark, t))),
+          "the snapshot batch is the table")
+        LayoutOps.appendManifested(batch(50, 65), t)
+        stripSchema()
+        q.processAllAvailable()
+        val (changes, _) = LayoutOps.readManifestedChanges(spark, t, 1L)
+        assert(batches.toSeq.drop(1) === Seq(rows(changes)),
+          "the appended generation streams exactly its change feed")
+        assert(batches(1) === (50L until 65L).map(i => (i, i % 7)))
+      } finally q.stop()
+    }
+  }
+
   test("the reflective internalCreateDataFrame seam is pinned: the " +
       "signature resolves on this Spark, and a moved seam fails actionably") {
     val m = graft.streaming.ManifestChangeSource

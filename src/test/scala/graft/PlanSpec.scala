@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.IndexOps
+import graft.queries.Catalog
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Physical-plan regression guards: these queries must keep the plan shape
@@ -11,8 +13,13 @@ import org.apache.spark.sql.functions._
 class PlanSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
+  /** `name`'s catalog builder, planned under its catalog confs. */
+  private def planned[T](name: String)(plan: DataFrame => T): T = {
+    val spec = Catalog(name)
+    spec.withConfs(spark)(plan(spec.build(spark, dir)))
+  }
   private def planOf(name: String): String =
-    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+    planned(name)(_.queryExecution.executedPlan.toString)
 
   test("dimension-chain revenue joins broadcast (never sort-merge)") {
     val p = planOf("q_revenue_by_nation")
@@ -26,12 +33,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("wordcount aggregates partially before the shuffle (combiner)") {
-    val p = SparkEntry.queries("q_wordcount")(spark, dir)
-      .queryExecution.executedPlan.toString
+    val p = planOf("q_wordcount")
     assert(p.contains("partial_count") || p.contains("HashAggregate"), p)
-    val formatted = SparkEntry.queries("q_wordcount")(spark, dir)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    val formatted = planned("q_wordcount")(_.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
     assert(formatted.contains("partial_count"), formatted)
   }
 
@@ -174,8 +179,9 @@ class PlanSpec extends SparkSpec {
     // in a gated plan is a regression (last one out: the IVF cell
     // assignment, replaced by a literal-centroid greatest() fold).
     import org.apache.spark.sql.catalyst.expressions.ScalaUDF
-    for ((name, q) <- SparkEntry.queries) {
-      val plan = q(spark, dir).queryExecution.analyzed
+    for (spec <- Catalog.specs) {
+      val name = spec.name
+      val plan = planned(name)(_.queryExecution.analyzed)
       val udfs = plan.collectWithSubqueries {
         case p => p.expressions.flatMap(_.collect { case u: ScalaUDF => u })
       }.flatten

@@ -8,6 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** The smallest generated fixture (TESTDATA.md). */
+  val sf0001 = "/root/testdata/sf0.001"
+
   override def afterAll(): Unit = super.afterAll() // session shared across suites
 
   /** Spark jobs `body` submits: a listener counts job starts, and the

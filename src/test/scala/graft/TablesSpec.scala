@@ -38,4 +38,37 @@ class TablesSpec extends SparkSpec {
     // must carry the read on its own
     assert(df.count() > 0)
   }
+
+  test("a table's schema is inferred once per file version: an unchanged " +
+      "file reloads with no job, a rewritten one is inferred again") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-schema").toString
+    try {
+      val src = java.nio.file.Paths.get(sf0001)
+      val dst = java.nio.file.Paths.get(dir, "documents.parquet")
+      java.nio.file.Files.copy(src.resolve("documents.parquet"), dst)
+      assert(jobsOf(Tables.documents(spark, dir)) >= 1, "first load infers")
+      assert(jobsOf(Tables.documents(spark, dir)) === 0, "an unchanged file: no job")
+      val docs = Tables.documents(spark, dir).schema
+      // rewrite the file in place (another table's bytes, a later mtime)
+      java.nio.file.Files.copy(src.resolve("nation.parquet"), dst,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      java.nio.file.Files.setLastModifiedTime(dst, java.nio.file.attribute
+        .FileTime.fromMillis(System.currentTimeMillis() + 60000))
+      var reread: org.apache.spark.sql.DataFrame = null
+      assert(jobsOf { reread = Tables.documents(spark, dir) } >= 1,
+        "a rewritten file is inferred again")
+      assert(reread.schema !== docs)
+      assert(reread.schema === spark.read.parquet(dst.toString).schema)
+      assert(reread.count() === spark.read.parquet(dst.toString).count())
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("events keeps its TimestampType ts on a schema-cache hit") {
+    val dir = sf0001
+    Tables.events(spark, dir)
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { df = Tables.events(spark, dir) } === 0, "a cache hit infers nothing")
+    assert(df.schema("ts").dataType === TimestampType)
+    assert(df.count() > 0)
+  }
 }

@@ -4,7 +4,8 @@ infeasible at a fixture scale (k-means training unrolls that OOM past
 10x; recursive-CTE closures that explode on clique-dense pair graphs).
 
 Executes the recipes `graft.Verify` dumps to <outDir>/pinned_oracle.json
-(authored in SparkEntry.pinnedOracle, next to the committed oracles):
+(authored in each query's catalog spec, QuerySpec.pinned, next to its
+committed oracle):
 
   kind "sql"     — the training CTEs are replaced by reads of the
                    engine's exported model tables (<outDir>/_models/<m>,

@@ -7,7 +7,7 @@ one DuckDB process per query (a single all-query process buffers output
 until the end and one pathological oracle sinks the whole sweep), with:
 
   - a MANDATORY pinned-recipe cross-validation FIRST: each
-    SparkEntry.pinnedOracle recipe is proven equal to the COMMITTED
+    pinned recipe (QuerySpec.pinned) is proven equal to the COMMITTED
     oracle at a feasible scale (sf0.01) before it is trusted as a scale
     oracle. A drifted/poisoned recipe fails the gate loudly (XVAL-FAIL)
     — the pinned slots can never pass on semantics that no longer match.
@@ -24,7 +24,7 @@ Usage:
   tag        round tag, e.g. r11 (artifact CORRECTNESS_<tag>_<label>.json)
   fixtureDir scale fixture (tools/make_scale_fixture.py output)
   label      artifact label, e.g. 100x or 1000x
-  --queries  subset (default: every SparkEntry query)
+  --queries  subset (default: every catalog query)
   --skip-verify  reuse an existing <work>/verify_out (local iteration)
 
 Env knobs: GRAFT_SCALE_ORACLE_TIMEOUT (default 900 s),
@@ -44,7 +44,7 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# pinnedOracle slots (SparkEntry.pinnedOracle): committed oracle is
+# pinnedOracle slots (QuerySpec.pinned): committed oracle is
 # infeasible at scale; verified via the cross-validated recipe instead
 PINNED = ["q_ann_ivfpq", "q_ann_recall", "q_dedup_clusters", "q_semdedup"]
 
