@@ -71,16 +71,15 @@ object ClassifierOps {
                   checkpointDir: Option[String] = None): Array[Double] = {
     // the GD loop re-reads feats/labels every iteration: with a
     // checkpointDir the materialization is RELIABLE (survives executor
-    // loss mid-training), else executor-local — see GraphOps.cutLineage
-    val feats = GraphOps.cutLineage(
-      features(docs, idCol, textCol, dims), checkpointDir)
+    // loss mid-training), else executor-local — see GraphOps.LineageCutter
+    val cut = new GraphOps.LineageCutter(checkpointDir)
+    val feats = cut(features(docs, idCol, textCol, dims))
     // Drop null-labeled docs BEFORE counting n: a label expression like
     // `lang = 'en'` evaluates to NULL on null lang, and a null label would
     // both inflate n with zero-gradient rows and poison sum(x*r) to NULL
     // for any bucket touched only by such docs (NPE at the collect).
-    val labels = GraphOps.cutLineage(docs.select(col(idCol).as("id"),
-      labelCol.cast("double").as("y"))
-      .where(col("y").isNotNull), checkpointDir)
+    val labels = cut(docs.select(col(idCol).as("id"), labelCol.cast("double").as("y"))
+      .where(col("y").isNotNull))
     val n = labels.count().toDouble
     var w = Array.fill(dims + 1)(0.0)
     if (n == 0) return w

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{LogSpace, LongDoubleMap, MapLookup}
+import graft.functions.LogSpace
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.internal.SQLConf
@@ -37,10 +37,10 @@ import scala.collection.mutable
   *    are written once over [[Arith]], so the in-task regime's doubles
   *    and the join regime's Columns run the same IEEE operations;
   *  - a [[Stop]] rule: a fixed round count, or L∞ change < tol;
-  *  - in the join regime, a [[Scatter]] layout built once by [[prepare]]:
-  *    adjacency arrays (`explode(adj)`), or — when the hub guard trips —
-  *    the persisted flat (src, dst) relation joined per round, so a
-  *    100M-out-degree hub never becomes one giant array row.
+  *  - in the join regime, the [[adjacency]] relation built once by
+  *    [[prepare]] and joined per round: out-neighbour arrays cut into
+  *    bounded chunks, so a 100M-out-degree hub spreads over many rows and
+  *    never becomes one giant array row.
   *
   * Each walk runs in one of two regimes, chosen by [[inTask]] after one
   * stats pass (vertex count n, raw edge count, max raw out-degree):
@@ -80,23 +80,38 @@ object GraphOps {
   /** Partition an edge relation by source — hash by default; `byRange`
     * gives the reference's contiguous node-id ranges
     * (reference/assignment4/src/main/basic/RangePartitioner.java:37-40),
-    * useful when node ids encode locality (e.g. crawl order). Both
-    * partitionings satisfy the downstream groupBy("src")'s clustered
-    * distribution, so the adjacency build adds no second exchange. */
+    * useful when node ids encode locality (e.g. crawl order). */
   def partitionEdges(edges: DataFrame, parts: Int, byRange: Boolean = false): DataFrame =
     if (byRange) edges.repartitionByRange(parts, col("src"))
     else edges.repartition(parts, col("src"))
 
-  /** The adjacency layout's graph relation (src, adj, outdeg), built in ONE
-    * aggregation shuffle: collect_set dedupes per source map-side,
-    * collect_list keeps the reference's duplicate out-edges (it divides by
-    * the raw list length). */
+  /** Out-neighbours one adjacency row holds at most (up to hash skew):
+    * a 512 KB array. */
+  private[graft] val chunkEdges = 1L << 16
+
+  /** The join regime's graph relation (src, adj, outdeg): each source's
+    * out-neighbours in up to `chunks` rows split by a hash of `dst`, so
+    * with `chunks` = ceil(max out-degree / [[chunkEdges]]) no row outgrows
+    * a bounded array, however large a hub; `outdeg` is the source's total
+    * over its rows (a per-source window, needed only when `chunks` > 1).
+    * Built over ONE shuffle: both partitionings satisfy the clustered
+    * distribution of the (src, chunk) aggregation and of the window, so
+    * neither adds an exchange. collect_set dedupes (a repeated `dst` hashes
+    * to the same chunk), collect_list keeps the reference's duplicate
+    * out-edges (it divides by the raw list length). A NULL `dst` is no
+    * edge, as in the in-task regime. */
   private[graft] def adjacency(edges: DataFrame, parts: Int, dedupe: Boolean,
-                               byRange: Boolean): DataFrame =
-    partitionEdges(edges, parts, byRange)
-      .groupBy("src")
+                               byRange: Boolean, chunks: Int): DataFrame = {
+    val (chunk, outdeg) =
+      if (chunks == 1) (Nil, size(col("adj")))
+      else (Seq(pmod(xxhash64(col("dst")), lit(chunks))),
+        sum(size(col("adj"))).over(Window.partitionBy("src")))
+    partitionEdges(edges.select(col("src"), col("dst")).where(col("dst").isNotNull),
+        parts, byRange)
+      .groupBy(col("src") +: chunk: _*)
       .agg((if (dedupe) collect_set(col("dst")) else collect_list(col("dst"))).as("adj"))
-      .withColumn("outdeg", size(col("adj")).cast("long"))
+      .select(col("src"), col("adj"), outdeg.cast("long").as("outdeg"))
+  }
 
   /** Below this vertex count the join regime's loop runs with AQE off and
     * 8 shuffle partitions: per-round AQE re-planning costs more than it
@@ -131,11 +146,10 @@ object GraphOps {
                             rawEdges: Long): Boolean =
     n * walks + rawEdges < inTaskCutoff(spark)
 
-  /** What the regime gate, the hub guard, the partition clamp and
-    * [[graphStats]] need: the vertex count, the raw edge count, the max raw
-    * out-degree (an upper bound on the deduped one, so the hub guard
-    * triggers conservatively without paying a distinct) and the vertices
-    * without an out-edge. */
+  /** What the regime gate, the partition clamp, the adjacency chunking
+    * and [[graphStats]] need: the vertex count, the raw edge count, the
+    * max raw out-degree (an upper bound on the deduped one, so the chunk
+    * count needs no distinct) and the vertices without an out-edge. */
   private final case class Stats(n: Long, rawEdges: Long, maxDeg: Long, dangling: Long) {
     def +(o: Stats): Stats = Stats(n + o.n, rawEdges + o.rawEdges,
       maxDeg max o.maxDeg, dangling + o.dangling)
@@ -184,66 +198,28 @@ object GraphOps {
         (totalRawEdges + edgesPerPartition - 1) / edgesPerPartition)).toInt
     }
 
-  /** Scatter layout over a persisted graph relation partitioned on `src`:
-    * adjacency rows (src, adj, outdeg), or flat edges (src, dst) with the
-    * separate out-degree relation `deg` (src, outdeg). */
-  private final case class Scatter(graph: DataFrame, deg: DataFrame, exploded: Boolean) {
-    /** each source's out-neighbours, one row per out-edge */
-    def dst: Column = if (exploded) explode(col("adj")) else col("dst")
-
-    /** (keys, dst, m) from a (keys, nodeid, rank) state. A
-      * vertex without out-edges sends its whole rank to the NULL `dst`
-      * sentinel, so the gather yields the dangling mass in the same pass. */
-    def fromState(state: DataFrame, keys: Seq[Column],
-                  mass: (Column, Column) => Column): DataFrame = {
-      val m = when(col("outdeg").isNull, col("rank"))
-        .otherwise(mass(col("rank"), col("outdeg"))).as("m")
-      if (exploded)
-        state.join(graph, col("nodeid") === col("src"), "left_outer")
-          .select(keys ++ Seq(explode_outer(col("adj")).as("dst"), m): _*)
-      else
-        state.join(deg, col("nodeid") === col("src"), "left_outer")
-          .select(keys ++ Seq(col("nodeid"), m): _*)
-          .join(graph, col("nodeid") === col("src"), "left_outer")
-          .select(keys ++ Seq(col("dst"), col("m")): _*)
-    }
+  /** A prepared graph: the vertex relation, its count and the persisted
+    * [[adjacency]]. */
+  private final case class Graph(verts: DataFrame, n: Long, adj: DataFrame) {
+    def unpersist(): Unit = Seq(verts, adj).foreach(_.unpersist())
   }
 
-  /** A prepared graph: vertex relation, vertex count, scatter layout. */
-  private final case class Graph(verts: DataFrame, n: Long, scatter: Scatter) {
-    def unpersist(): Unit =
-      Seq(verts, scatter.graph, scatter.deg).foreach(_.unpersist())
-  }
-
-  /** The join regime's setup: the [[Stats]] size the partitioning and run
-    * the hub guard (a raw out-degree above `hubDegreeThreshold`, default
-    * 4M ≈ a 32 MB array row, selects flat edges); then the layout's
-    * relations are built, persisted and materialized, and the vertex set
-    * (explicit, or src ∪ dst) is persisted. */
+  /** The join regime's setup: the [[Stats]] size the partitioning and the
+    * chunking, the [[adjacency]] is persisted and materialized, and the
+    * vertex set (explicit, or src ∪ dst) is persisted. */
   private def prepare(edges: DataFrame, vertices: Option[DataFrame], s: Stats,
                       numPartitions: Int, dedupeEdges: Boolean,
-                      rangePartition: Boolean, hubDegreeThreshold: Long): Graph = {
+                      rangePartition: Boolean): Graph = {
     val parts = resolveParts(edges.sparkSession, numPartitions, s.rawEdges)
-    def persisted(df: DataFrame) = {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK); p.count(); p
-    }
-    val scatter =
-      if (s.maxDeg > hubDegreeThreshold) {
-        val e = persisted(partitionEdges(if (dedupeEdges) edges.distinct() else edges,
-          parts, rangePartition))
-        // reuses e's partitioning (clustered on src) — no extra exchange
-        Scatter(e, persisted(e.groupBy("src").agg(count(lit(1)).as("outdeg"))),
-          exploded = false)
-      } else {
-        val adj = persisted(adjacency(edges, parts, dedupeEdges, rangePartition))
-        Scatter(adj, adj.select(col("src"), col("outdeg")), exploded = true)
-      }
-    val verts = vertices.map(_.select(col("nodeid"))).getOrElse(
-        scatter.graph.select(col("src").as("nodeid"))
-          .union(scatter.graph.select(scatter.dst.as("nodeid")))
-          .distinct())
+    val chunks = ((s.maxDeg + chunkEdges - 1) / chunkEdges).max(1L).toInt
+    val adj = adjacency(edges, parts, dedupeEdges, rangePartition, chunks)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    Graph(verts, s.n, scatter)
+    adj.count()
+    val verts = vertices.map(_.select(col("nodeid"))).getOrElse(
+        adj.select(col("src").as("nodeid"))
+          .union(adj.select(explode(col("adj")).as("nodeid"))).distinct())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    Graph(verts, s.n, adj)
   }
 
   /** The arithmetic walk rules are written in: doubles (in-task regime)
@@ -347,15 +323,14 @@ object GraphOps {
     * picks. Returns (ranks, rounds run). */
   private def walk(edges: DataFrame, vertices: Option[DataFrame], numPartitions: Int,
                    dedupeEdges: Boolean, rangePartition: Boolean,
-                   hubDegreeThreshold: Long, checkpointDir: Option[String],
-                   rule: Walk, stop: Stop): (DataFrame, Int) = {
+                   checkpointDir: Option[String], rule: Walk,
+                   stop: Stop): (DataFrame, Int) = {
     val s = stats(edges, vertices)
     val cut = new LineageCutter(checkpointDir)
     if (inTask(edges.sparkSession, s.n, rule.sources.size max 1, s.rawEdges))
       inTaskWalk(edges, vertices, dedupeEdges, rule, stop, cut)
     else {
-      val g = prepare(edges, vertices, s, numPartitions, dedupeEdges, rangePartition,
-        hubDegreeThreshold)
+      val g = prepare(edges, vertices, s, numPartitions, dedupeEdges, rangePartition)
       try withIterationAqe(edges.sparkSession, g.n)(joinWalk(g, rule, stop, cut))
       finally g.unpersist()
     }
@@ -492,9 +467,13 @@ object GraphOps {
     (ranks, rounds)
   }
 
-  /** Join regime: (keys, nodeid, rank) state joined against the graph each
-    * round; the gather and, when converging, the new ranks are cut. An
-    * empty graph runs no round (its update would fold x / 0 constants). */
+  /** Join regime: (keys, nodeid, rank) state left-joined against the
+    * adjacency each round, every row's chunk exploded. A vertex without
+    * out-edges sends its whole rank to the NULL `dst` sentinel, so the
+    * gather yields the dangling mass in the same pass; it returns to the
+    * update as a literal per walk. The gather and, when converging, the
+    * new ranks are cut. An empty graph runs no round (its update would
+    * fold x / 0 constants). */
   private def joinWalk(g: Graph, rule: Walk, stop: Stop,
                        cut: DataFrame => DataFrame): (DataFrame, Int) = {
     val spark = g.verts.sparkSession
@@ -510,17 +489,18 @@ object GraphOps {
     var rounds = 0
     var change = Double.MaxValue
     while (g.n > 0 && stop.continues(rounds, change)) {
-      val gathered = g.scatter
-        .fromState(state, keys.map(col), rule.mass(Columns, _, _))
+      val m = when(col("outdeg").isNull, col("rank"))
+        .otherwise(rule.mass(Columns, col("rank"), col("outdeg")))
+      val gathered = state.join(g.adj, col("nodeid") === col("src"), "left_outer")
+        .select(keys.map(col) ++ Seq(explode_outer(col("adj")).as("dst"), m.as("m")): _*)
         .groupBy((keys :+ "dst").map(col): _*).agg(rule.gather(col("m")).as("in_mass"))
         .transform(cut)
       val dangling = gathered.where(col("dst").isNull)
         .select((keys :+ "in_mass").map(col): _*).collect()
       val missing =
         if (keys.isEmpty) lit(dangling.headOption.fold(rule.none)(_.getDouble(0)))
-        else coalesce(MapLookup.lookup(LongDoubleMap.fromPairs(
-          dangling.map(r => r.getLong(0) -> r.getDouble(1))), col("source")),
-          lit(rule.none))
+        else coalesce(element_at(typedLit(dangling.map(r => r.getLong(0) -> r.getDouble(1))
+          .toMap), col("source")), lit(rule.none))
       val in = gathered.where(col("dst").isNotNull)
         .select(keys.map(k => col(k).as("g_" + k)) ++ Seq(col("dst"), col("in_mass")): _*)
       val on = keys.foldLeft(col("nodeid") === col("dst"))((c, k) => c && col(k) === col("g_" + k))
@@ -536,21 +516,6 @@ object GraphOps {
     }
     (if (stop.tol.nonEmpty && rounds > 0) state else cut(state), rounds)
   }
-
-  /** Lineage cut for the iterative family (G9). The default
-    * `localCheckpoint()` keeps cut blocks on executors (fastest; an
-    * executor loss mid-loop kills the job); `checkpointDir` swaps in a
-    * RELIABLE `checkpoint()` there, which survives executor loss. Results
-    * are bit-identical either way (GraphOpsSpec). */
-  private[graft] def cutLineage(df: DataFrame,
-      checkpointDir: Option[String]): DataFrame =
-    checkpointDir match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        setCheckpointBase(sc, dir)
-        df.checkpoint()
-      case None => df.localCheckpoint()
-    }
 
   /** Point the context's checkpoint location at `dir` unless it already
     * lives there: setCheckpointDir appends a random UUID child, so the
@@ -568,8 +533,12 @@ object GraphOps {
     if (!already) sc.setCheckpointDir(dir)
   }
 
-  /** Per-LOOP lineage cutter: [[cutLineage]] plus deletion of the reliable
-    * checkpoints the loop no longer reads (Spark keeps them for the
+  /** Per-LOOP lineage cutter for the iterative family (G9). The default
+    * `localCheckpoint()` keeps cut blocks on executors (fastest; an
+    * executor loss mid-loop kills the job); `checkpointDir` swaps in a
+    * RELIABLE `checkpoint()` there, which survives executor loss. Results
+    * are bit-identical either way (GraphOpsSpec). A reliable cutter also
+    * deletes the checkpoints the loop no longer reads (Spark keeps them for the
     * context's lifetime: `spark.cleaner.referenceTracking.cleanCheckpoints`
     * is off by default). Deletion lags [[LineageCutter.retainedCuts]]
     * generations: the join regime cuts up to TWO relations a round (the
@@ -612,13 +581,14 @@ object GraphOps {
   }
 
   /** PageRank over a directed edge relation — G1/G3-G7/G9.
-    * `numPartitions`, `rangePartition` and `hubDegreeThreshold` shape the
-    * join regime only.
+    * `numPartitions` and `rangePartition` shape the join regime only.
+    * `hubDegreeThreshold` is ignored: the join regime's [[adjacency]]
+    * chunks a hub of any out-degree.
     * @param edges    (src, dst); duplicates are collapsed
     * @param vertices optional explicit vertex set (needed when dangling
     *                 nodes never appear as src/dst); defaults to src∪dst
     * @param checkpointDir optional reliable-checkpoint directory for the
-    *                 lineage cuts (see [[cutLineage]])
+    *                 lineage cuts (see [[LineageCutter]])
     * @return (nodeid, rank) with sum(rank) == 1 */
   def pageRank(edges: DataFrame, iterations: Int, alpha: Double = 0.15,
                vertices: Option[DataFrame] = None, numPartitions: Int = 0,
@@ -626,7 +596,7 @@ object GraphOps {
                hubDegreeThreshold: Long = 4000000L,
                checkpointDir: Option[String] = None): DataFrame =
     walk(edges, vertices, numPartitions, dedupeEdges, rangePartition,
-      hubDegreeThreshold, checkpointDir, new Linear(alpha), Stop(iterations))._1
+      checkpointDir, new Linear(alpha), Stop(iterations))._1
 
   /** Personalized (multi-source) PageRank — G2/G8. All sources walk
     * together (one rank array each in one task, or one (source, dst)
@@ -639,12 +609,10 @@ object GraphOps {
                            alpha: Double = 0.15, vertices: Option[DataFrame] = None,
                            numPartitions: Int = 0, dedupeEdges: Boolean = true,
                            rangePartition: Boolean = false,
-                           hubDegreeThreshold: Long = 4000000L,
                            checkpointDir: Option[String] = None): DataFrame = {
     require(sources.nonEmpty, "personalizedPageRank needs at least one source")
     walk(edges, vertices, numPartitions, dedupeEdges, rangePartition,
-      hubDegreeThreshold, checkpointDir, new Personalized(alpha, sources.distinct),
-      Stop(iterations))._1
+      checkpointDir, new Personalized(alpha, sources.distinct), Stop(iterations))._1
   }
 
   /** PageRank with ranks carried in LOG space — the reference's numeric
@@ -655,10 +623,9 @@ object GraphOps {
                        vertices: Option[DataFrame] = None,
                        numPartitions: Int = 0,
                        rangePartition: Boolean = false,
-                       hubDegreeThreshold: Long = 4000000L,
                        checkpointDir: Option[String] = None): DataFrame =
     walk(edges, vertices, numPartitions, dedupeEdges = true, rangePartition,
-      hubDegreeThreshold, checkpointDir, new LogLinear(alpha), Stop(iterations))._1
+      checkpointDir, new LogLinear(alpha), Stop(iterations))._1
 
   /** PageRank iterated until the L∞ rank change is at most `tol`, or for
     * `maxIterations` rounds (the reference's RunPageRankBasic takes a
@@ -668,10 +635,9 @@ object GraphOps {
                         maxIterations: Int = 100, alpha: Double = 0.15,
                         vertices: Option[DataFrame] = None,
                         numPartitions: Int = 0,
-                        hubDegreeThreshold: Long = 4000000L,
                         checkpointDir: Option[String] = None): (DataFrame, Int) =
     walk(edges, vertices, numPartitions, dedupeEdges = true, rangePartition = false,
-      hubDegreeThreshold, checkpointDir, new Linear(alpha), Stop(maxIterations, Some(tol)))
+      checkpointDir, new Linear(alpha), Stop(maxIterations, Some(tol)))
 
   /** Graph summary counters — A8 (the reference's job counters:
     * BuildPageRankRecords.java:97-102 NODES/EDGES, RunPageRankBasic

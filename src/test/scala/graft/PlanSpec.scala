@@ -143,13 +143,21 @@ class PlanSpec extends SparkSpec {
     import graft.operators.GraphOps
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    // the adjacency build every walk runs on its default layout
-    val ranged = GraphOps.adjacency(edges, parts = 4, dedupe = true, byRange = true)
-      .queryExecution.executedPlan.toString
-    assert(ranged.toLowerCase.contains("rangepartitioning"), ranged)
-    val hashed = GraphOps.adjacency(edges, parts = 4, dedupe = true, byRange = false)
-      .queryExecution.executedPlan.toString
-    assert(!hashed.toLowerCase.contains("rangepartitioning"), hashed)
+    // the join regime's graph build, with and without the dedupe and the
+    // chunking: one exchange, range-partitioned when asked
+    def plan(dedupe: Boolean, byRange: Boolean, chunks: Int) =
+      GraphOps.adjacency(edges, parts = 4, dedupe, byRange, chunks)
+        .queryExecution.executedPlan.toString
+    for (dedupe <- Seq(true, false); chunks <- Seq(1, 3)) {
+      val ranged = plan(dedupe, byRange = true, chunks)
+      assert(ranged.toLowerCase.contains("rangepartitioning"), ranged)
+      val hashed = plan(dedupe, byRange = false, chunks)
+      assert(!hashed.toLowerCase.contains("rangepartitioning"), hashed)
+      for (p <- Seq(ranged, hashed))
+        assert(p.linesIterator.count(_.contains("Exchange")) === 1,
+          s"dedupe=$dedupe chunks=$chunks: the chunk aggregation and the out-degree window reuse the " +
+            s"src partitioning\n$p")
+    }
   }
 
   test("incremental dedup: cross-side band join is an equi-join, exact tier broadcasts") {

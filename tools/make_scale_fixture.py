@@ -7,8 +7,15 @@ Usage: python3 tools/make_scale_fixture.py [srcDir] [dstDir] [factor]
 Pipeline tables (documents, embeddings, events) are unioned `factor`
 times with id-shifted copies (an adversarial fixture: every doc gains
 factor-1 exact duplicates, stressing the dedup/refinement paths).
-TPC-H-ish tables are copied as-is — scaling them naively would break key
-integrity, and the experiment targets the pipeline operators.
+
+TPC-H-ish tables (part, supplier, customer, orders, lineitem) are unioned
+`factor` times too, copy i adding i*ID_SHIFT to every key column, so each
+copy joins only to itself and key integrity holds. partkey and suppkey
+shift by the SAME offset: supplier keys are also part keys, and the graph
+queries' part -> supplier edges close their cycles through that overlap,
+so the Nx graph is N disjoint copies of the source graph (Nx vertices and
+Nx raw edges; at 10x of sf0.1, 200k vertices and 6M edges). nation and
+region are shared by every copy and copied as-is.
 
 events.ts must keep its parquet TIMESTAMP(NANOS) annotation (the engine's
 Tables.events and the DuckDB oracles both depend on it), which DuckDB's
@@ -66,10 +73,21 @@ for i in range(factor):
 pq.write_table(pa.concat_tables(parts), f"{dst}/events.parquet", version="2.6",
                **({"row_group_size": row_group * 20} if row_group else {}))
 
-for t in ["region", "nation", "customer", "supplier", "part", "orders", "lineitem"]:
+# TPC-H tables: every key column shifted by the copy's offset
+keys = {"part": ["p_partkey"], "supplier": ["s_suppkey"], "customer": ["c_custkey"],
+        "orders": ["o_orderkey", "o_custkey"],
+        "lineitem": ["l_orderkey", "l_partkey", "l_suppkey"]}
+for t, cols in keys.items():
+    shifted = ", ".join(f"x.{c} + i*{ID_SHIFT} AS {c}" for c in cols)
+    con.execute(f"""COPY (
+  SELECT x.* REPLACE ({shifted})
+  FROM read_parquet('{src}/{t}.parquet') x,
+       generate_series(0, {factor - 1}) t(i)
+) TO '{dst}/{t}.parquet' (FORMAT PARQUET{rg_opt})""")
+for t in ["region", "nation"]:
     shutil.copy(f"{src}/{t}.parquet", f"{dst}/{t}.parquet")
 
-for t in ["documents", "embeddings", "events"]:
+for t in ["documents", "embeddings", "events", *keys]:
     n = con.sql(f"SELECT count(*) FROM read_parquet('{dst}/{t}.parquet')").fetchone()[0]
     print(f"{t}: {n} rows")
 print(f"fixture at {dst} ({factor}x of {src})")
