@@ -449,26 +449,75 @@ class GraphOpsSpec extends SparkSpec {
     }
   }
 
-  test("mega-hub graph: every walk agrees across regimes, conserves mass, converges early") {
-    // n + E is far under the default cutoff, so the default runs in-task
-    // and the zero cutoff forces the join regime, whose adjacency splits
-    // the hub over two chunks
-    val (inTask, join) = inTaskAndJoin(allWalks(hubEdges, None, Seq(0L, 17L)))
-    assertRegimesAgree(inTask, join)
-    for ((walk, ranks) <- join) {
-      // PPR keys are "source,nodeid": mass is conserved per source
-      val perWalk = ranks.groupMapReduce(kv => if (walk == "ppr") kv._1.takeWhile(_ != ',') else "")(
-        kv => if (walk == "logSpace") math.exp(kv._2) else kv._2)(_ + _)
-      for ((src, mass) <- perWalk)
-        assert(math.abs(mass - 1.0) < 1e-9, s"$walk $src rank mass conserved")
+  // The hub tests below run the hub graph in both regimes: n + E is far
+  // under the default cutoff, so the default runs in-task, and the zero
+  // cutoff forces the join regime, whose adjacency splits the hub over two
+  // chunks (the hub guard's edge scatter was folded into that chunking).
+  private def ranksOf(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+    df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  test("hub guard: edge-relation scatter produces identical ranks") {
+    val (inTask, join) = inTaskAndJoin(ranksOf(
+      GraphOps.pageRank(hubEdges, iterations = 8, numPartitions = 4)))
+    assert(join.keySet === inTask.keySet)
+    for ((k, v) <- inTask) assert(math.abs(join(k) - v) < 1e-15, s"node $k")
+    assert(math.abs(join.values.sum - 1.0) < 1e-9, "rank mass conserved")
+  }
+
+  test("hub guard on personalized PageRank matches the adjacency path and oracle") {
+    def ppr(edges: org.apache.spark.sql.DataFrame, sources: Seq[Long],
+            vertices: Option[org.apache.spark.sql.DataFrame]) =
+      GraphOps.personalizedPageRank(edges, sources, iterations = 10,
+        vertices = vertices, numPartitions = 4)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val (inTask, join) = inTaskAndJoin(ppr(hubEdges, Seq(0L, 17L), None))
+    // across regimes the summation order differs: the suite's 1e-12 bound
+    assert(join.keySet === inTask.keySet)
+    for ((k, v) <- inTask) assert(math.abs(join(k) - v) < 1e-12, s"state $k")
+    for ((src, mass) <- join.groupMapReduce(_._1._1)(_._2)(_ + _))
+      assert(math.abs(mass - 1.0) < 1e-9, s"source $src rank mass conserved")
+    val hubAdj = hubEdges.collect().groupMap(_.getLong(0))(_.getLong(1))
+      .map { case (s, ds) => s -> ds.toSeq }
+      .withDefaultValue(Seq.empty[Long])
+    val hubNodes = join.keys.map(_._2).toSet
+    for (src <- Seq(0L, 17L)) {
+      val exp = seqPpr(hubNodes.map(n => n -> hubAdj(n)).toMap, src, 10)
+      for ((k, v) <- exp)
+        assert(math.abs(join((src, k)) - v) < 1e-12, s"hub graph: source $src node $k")
     }
-    // the converged walk stops early and lands on a long fixed run's ranks
-    val converged = join.toMap.apply("converged")
-    val rounds = converged.keys.head.split(",")(1).toInt
-    assert(rounds < 200, "should converge well before the cap")
-    val fixed = GraphOps.pageRank(hubEdges, iterations = 100).collect().map(r => s"${r.getLong(0)},$rounds" -> r.getDouble(1)).toMap
-    assert(converged.keySet === fixed.keySet)
-    for ((k, v) <- fixed) assert(math.abs(converged(k) - v) < 1e-8, s"node $k")
+    val small = withCutoff(0)(ppr(smallEdges, Seq(1L, 4L), Some(smallVerts)))
+    for (src <- Seq(1L, 4L)) {
+      val exp = seqPpr(smallAdj, src, 10)
+      for ((k, v) <- exp)
+        assert(math.abs(small((src, k)) - v) < 1e-12, s"source $src node $k")
+    }
+  }
+
+  test("hub-safe pageRankConverged: mega-hub graph converges to the fixed-run ranks") {
+    def converged = {
+      val (ranks, iters) = GraphOps.pageRankConverged(hubEdges, tol = 1e-10,
+        maxIterations = 200, numPartitions = 4)
+      (ranksOf(ranks), iters)
+    }
+    val ((inTask, inTaskIters), (got, iters)) = inTaskAndJoin(converged)
+    assert(iters < 200, "should converge well before the cap")
+    val fixed = ranksOf(GraphOps.pageRank(hubEdges, iterations = 100, numPartitions = 4))
+    assert(got.keySet === fixed.keySet)
+    for ((k, v) <- fixed) assert(math.abs(got(k) - v) < 1e-8, s"node $k")
+    assert(math.abs(got.values.sum - 1.0) < 1e-9, "rank mass conserved")
+    // both regimes of the convergence loop agree, round count included
+    assert(inTaskIters === iters)
+    for ((k, v) <- inTask) assert(math.abs(got(k) - v) < 1e-12, s"node $k")
+  }
+
+  test("hub guard on pageRankLogSpace matches the adjacency path") {
+    val (inTask, join) = inTaskAndJoin(ranksOf(
+      GraphOps.pageRankLogSpace(hubEdges, iterations = 8, numPartitions = 4)))
+    assert(join.keySet === inTask.keySet)
+    for ((k, v) <- inTask)
+      assert(math.abs(join(k) - v) < 1e-12, s"node $k (log-space rank)")
+    val mass = join.values.map(math.exp).sum
+    assert(math.abs(mass - 1.0) < 1e-9, "rank mass conserved")
   }
 
   test("graphStats counts nodes, edges, dangling (A8 counters)") {
