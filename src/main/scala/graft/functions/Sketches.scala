@@ -293,25 +293,45 @@ object CmsSketch {
   }
 }
 
-/** Bloom-filter bit set as a typed Aggregator: input rows are BIT
-  * POSITIONS (the caller derives the k positions per value — see
-  * PipelineOps.bloomContamination), state is the fixed `numBits/64` long
-  * words, merge is word-wise OR. Bounded state + associative merge =
-  * map-side partial aggregation, so building a bloom over 100 TB of
-  * benchmark shingles shuffles only `numBits/64` longs per partition —
-  * the bounded cousin of the exact distinct-hash-set broadcast in
-  * PipelineOps.contamination (which is exact but unbounded).
+/** Bloom filter over 60-bit value hashes as a typed Aggregator: `reduce`
+  * sets the value's k bit positions (null hashes are skipped), state is
+  * the fixed `numBits/64` long words, merge is word-wise OR. Bounded state
+  * + associative merge = map-side partial aggregation, so building a bloom
+  * over 100 TB of benchmark shingles shuffles only `numBits/64` longs per
+  * partition — the bounded cousin of the exact distinct-hash-set broadcast
+  * in PipelineOps.contamination (which is exact but unbounded).
+  *
+  * Position i of hash h is ((h * C_i) mod 2^60) & (numBits - 1), the C_i
+  * the md5-derived odd multipliers ([[Kernels.multipliers]]): the bits
+  * manifests store and every probe ([[mightContain]], LayoutOps' host-side
+  * file pruning) tests.
   */
 object BloomSketch {
 
-  class Agg(numBits: Int) extends Aggregator[Long, Array[Long], Array[Long]] {
-    require(numBits > 0 && (numBits & (numBits - 1)) == 0,
-      s"numBits must be a power of two, got $numBits")
+  /** A bloom holds at least one long word: `numBits` must be a power of
+    * two >= 64. Callers check this on the driver, before any job — a
+    * smaller power of two would allocate zero words and fail inside the
+    * executor aggregator. */
+  def requireBits(numBits: Int): Unit =
+    require(numBits >= 64 && (numBits & (numBits - 1)) == 0,
+      s"bloom bits must be a power of two >= 64 (one long word), got $numBits")
+
+  class Agg(numBits: Int, numHashes: Int)
+      extends Aggregator[java.lang.Long, Array[Long], Array[Long]] {
+    requireBits(numBits)
+    private val mults = Kernels.multipliers(numHashes)
 
     override def zero: Array[Long] = new Array[Long](numBits >> 6)
 
-    override def reduce(b: Array[Long], pos: Long): Array[Long] = {
-      b((pos >> 6).toInt) |= 1L << (pos & 63)
+    override def reduce(b: Array[Long], h: java.lang.Long): Array[Long] = {
+      if (h != null) {
+        var i = 0
+        while (i < mults.length) {
+          val pos = ((h.longValue * mults(i)) & Kernels.mask60) & (numBits - 1L)
+          b((pos >> 6).toInt) |= 1L << (pos & 63)
+          i += 1
+        }
+      }
       b
     }
 
@@ -327,8 +347,22 @@ object BloomSketch {
     override def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
-  /** Column aggregate: bloom words from a column of bit positions in
-    * [0, numBits). */
-  def bloomBits(positions: Column, numBits: Int): Column =
-    udaf(new Agg(numBits)).apply(positions)
+  /** Column aggregate: the bloom words over a column of 60-bit hashes. */
+  def bloom(hashes: Column, numBits: Int, numHashes: Int): Column =
+    udaf(new Agg(numBits, numHashes)).apply(hashes)
+
+  /** Column probe: true when all k bits of hash `h` are set in `words` (a
+    * bloom column, e.g. a broadcast 1-row aggregate, or a literal array).
+    * Pure column arithmetic; the 30-bit-split permutation equals the
+    * aggregator's wrapping multiply in the low 60 bits. */
+  def mightContain(words: Column, h: Column, numBits: Int,
+                   numHashes: Int): Column =
+    Kernels.multipliers(numHashes).toSeq.map { c =>
+      val pos = graft.operators.DedupOps.permuteHash(h, c)
+        .bitwiseAND(lit(numBits - 1L))
+      call_function("shiftright",
+        element_at(words, shiftright(pos, 6).cast("int") + lit(1)),
+        pos.bitwiseAND(lit(63L)).cast("int"))
+        .bitwiseAND(lit(1L)) === lit(1L)
+    }.reduce(_ && _)
 }

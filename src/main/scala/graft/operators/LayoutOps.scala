@@ -812,41 +812,6 @@ object LayoutOps {
     case _ => None
   }
 
-  /** Per-value bloom Aggregator: input is the value's 60-bit hash (null =
-    * skip), state is the fixed word array, merge is OR — bounded state
-    * with map-side partial aggregation, same contract as
-    * [[graft.functions.BloomSketch]] but folding the k probe positions
-    * inside reduce so one aggregate per column suffices. */
-  private class BloomValueAgg(numBits: Int, numHashes: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        java.lang.Long, Array[Long], Array[Long]] {
-    require(numBits > 0 && (numBits & (numBits - 1)) == 0,
-      s"bloomBits must be a power of two, got $numBits")
-    private val mults = DedupOps.minhashMultipliers(numHashes).toArray
-    override def zero: Array[Long] = new Array[Long](numBits >> 6)
-    override def reduce(b: Array[Long], h: java.lang.Long): Array[Long] = {
-      if (h != null) {
-        var i = 0
-        while (i < mults.length) {
-          val pos = ((h.longValue * mults(i)) & DedupOps.mask60) & (numBits - 1L)
-          b((pos >> 6).toInt) |= 1L << (pos & 63)
-          i += 1
-        }
-      }
-      b
-    }
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < a.length) { a(i) |= b(i); i += 1 }
-      a
-    }
-    override def finish(st: Array[Long]): Array[Long] = st
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  }
-
   /** One Spark job over a freshly written data directory of the given
     * schema: per file, per bloom column, the OR of its value-hash bloom
     * bits. Keyed by file NAME (unique within the directory). */
@@ -856,8 +821,8 @@ object LayoutOps {
       numBits: Int): Map[String, Map[String, Array[Long]]] = {
     if (bloomCols.isEmpty) return Map.empty
     val aggs = bloomCols.map { c =>
-      udaf(new BloomValueAgg(numBits, bloomHashes))
-        .apply(PipelineOps.hash60(col(c))).as(s"__bloom_$c")
+      graft.functions.BloomSketch.bloom(PipelineOps.hash60(col(c)), numBits,
+        bloomHashes).as(s"__bloom_$c")
     }
     // read with the schema the write used: inferring it would cost a
     // footer-reading job per call
@@ -1272,6 +1237,8 @@ object LayoutOps {
       gen: Long, numFiles: Int, clusterBy: Seq[String], zOrderBy: Seq[String],
       statsCols: Seq[String], bloomCols: Seq[String],
       bloomBits: Int): Seq[String] = {
+    // checked before the write, not inside the bloom job that follows it
+    if (bloomCols.nonEmpty) graft.functions.BloomSketch.requireBits(bloomBits)
     val spark = df.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     val dataDir = newDataDir(gen)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.BloomSketch
 
 /** Training-data pipeline operators beyond dedup/similarity: benchmark
   * contamination checks and deterministic sampling / dataset splits.
@@ -99,15 +100,6 @@ object PipelineOps {
       .where(col("sample_rank") <= k)
   }
 
-  /** The k bloom bit positions of a 60-bit hash: md5-derived odd-multiplier
-    * permutations (the MinHash machinery — each is a bijection on [0,2^60))
-    * masked to [0, numBits). Deterministic and SQL-expressible, so the
-    * bloom semantics are engine-portable. */
-  private[graft] def bloomPositions(h: Column, numBits: Int,
-                                    numHashes: Int): Seq[Column] =
-    DedupOps.minhashMultipliers(numHashes).map(c =>
-      DedupOps.permuteHash(h, c).bitwiseAND(lit(numBits - 1L)))
-
   /** Bloom-filter contamination check: same question as [[contamination]]
     * ("how much of each corpus doc's shingle set appears in the benchmark"),
     * but the benchmark side collapses to a FIXED-SIZE bloom bit set
@@ -124,28 +116,18 @@ object PipelineOps {
                          idCol: String, textCol: String,
                          shingleN: Int = 3, numBits: Int = 1 << 16,
                          numHashes: Int = 3): DataFrame = {
-    require(numBits > 0 && (numBits & (numBits - 1)) == 0,
-      s"numBits must be a power of two, got $numBits")
-    // build: benchmark shingles -> k positions each -> one bloom row.
-    // The aggregation is the bounded Aggregator (map-side combined);
-    // positions fan out via explode (map-side, no shuffle of values).
-    val benchPos = benchmark
+    BloomSketch.requireBits(numBits)
+    // build: benchmark shingle hashes -> one bloom row. The aggregation is
+    // the bounded Aggregator (map-side combined), setting each hash's k
+    // positions inside reduce.
+    val bloom = benchmark
       .select(explode(DedupOps.shingleHashes64(
         TextOps.tokens(col(textCol)), shingleN)).as("h"))
-      .select(explode(array(bloomPositions(col("h"), numBits, numHashes): _*))
-        .as("pos"))
-    val bloom = benchPos.agg(
-      graft.functions.BloomSketch.bloomBits(col("pos"), numBits).as("bloom"))
+      .agg(BloomSketch.bloom(col("h"), numBits, numHashes).as("bloom"))
     // probe: one corpus pass; the bloom words arrive as a broadcast
     // single-row relation; the k bit tests are pure column arithmetic
-    def bitSet(words: Column, pos: Column): Column =
-      call_function("shiftright",
-        element_at(words, shiftright(pos, 6).cast("int") + lit(1)),
-        pos.bitwiseAND(lit(63L)).cast("int"))
-        .bitwiseAND(lit(1L)) === lit(1L)
-    val hit = bloomPositions(col("h"), numBits, numHashes)
-      .map(p => bitSet(col("bloom"), p))
-      .reduce(_ && _)
+    val hit = BloomSketch.mightContain(col("bloom"), col("h"), numBits,
+      numHashes)
     corpus
       .select(col(idCol).as("doc_id"),
         explode(DedupOps.shingleHashes64(

@@ -219,6 +219,7 @@ object StreamingOps {
                                   textCol: String,
                                   bloomBits: Option[Int] = None,
                                   numHashes: Int = 3): DataFrame = {
+    import graft.functions.BloomSketch
     import graft.operators.{DedupOps, PipelineOps}
     val fp = DedupOps.tokenSetFingerprint(col(textCol))
     bloomBits match {
@@ -232,24 +233,12 @@ object StreamingOps {
             when(col("__known"), lit("exact")).otherwise(lit("new")))
           .drop("__fp", "__known")
       case Some(bits) =>
-        require(bits >= 64 && (bits & (bits - 1)) == 0,
-          s"bloomBits must be a power of two >= 64 (one long word), " +
-            s"got $bits")
+        BloomSketch.requireBits(bits)
         val h = PipelineOps.hash60(fp)
-        val words: Seq[Long] = corpus
-          .select(explode(array(
-            PipelineOps.bloomPositions(h, bits, numHashes): _*)).as("pos"))
-          .agg(graft.functions.BloomSketch.bloomBits(col("pos"), bits)
-            .as("bloom"))
+        val words: Seq[Long] = corpus.agg(BloomSketch.bloom(h, bits, numHashes))
           .head().getSeq[Long](0)
-        val wordsLit = array(words.map(lit): _*)
-        def bitSet(pos: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-          call_function("shiftright",
-            element_at(wordsLit, shiftright(pos, 6).cast("int") + lit(1)),
-            pos.bitwiseAND(lit(63L)).cast("int"))
-            .bitwiseAND(lit(1L)) === lit(1L)
-        val hit = PipelineOps.bloomPositions(h, bits, numHashes)
-          .map(bitSet).reduce(_ && _)
+        val hit = BloomSketch.mightContain(array(words.map(lit): _*), h, bits,
+          numHashes)
         stream.withColumn("status",
           when(hit, lit("maybe_dup")).otherwise(lit("new")))
     }

@@ -51,6 +51,25 @@ class PipelineOpsSpec extends SparkSpec {
     assert(repart === bloom.map { case (k, v) => k -> v._2 })
   }
 
+  test("bloom bit counts below one long word are rejected before any job") {
+    // 32 is a power of two but allocates zero long words: both bloom
+    // builders must refuse it on the driver, not fail inside a task
+    val docs = Seq((0L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException] {
+      PipelineOps.bloomContamination(docs, docs, "doc_id", "text", numBits = 32)
+    }
+    assert(e.getMessage.contains(">= 64"))
+    val base = java.nio.file.Files.createTempDirectory("graft-bloom32").toString
+    try {
+      val w = intercept[IllegalArgumentException] {
+        graft.operators.LayoutOps.writeManifested(spark.range(10).toDF("k"),
+          s"$base/t", bloomCols = Seq("k"), bloomBits = 32)
+      }
+      assert(w.getMessage.contains(">= 64"))
+      assert(!new java.io.File(s"$base/t").exists(), "nothing may be written")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+  }
+
   test("split labels are deterministic, exhaustive, and roughly proportional") {
     val keys = spark.range(10000).toDF("id")
     val labeled = keys.select(col("id"), PipelineOps.splitLabel(col("id")).as("split"))
