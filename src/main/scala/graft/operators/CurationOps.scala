@@ -241,9 +241,10 @@ object CurationOps {
     *
     * Returns the surviving rows (all original columns) plus the per-stage
     * audit counts — the first thing an operator reads when a run looks
-    * wrong. Every stage materializes once (`localCheckpoint`), so the
-    * audit count and the next stage share one execution and the lineage
-    * does not re-run every upstream kernel per stage; at 100 TB each
+    * wrong. Every stage materializes once ([[Observed.checkpoint]]), its
+    * audit count observed by that same job, so the next stage reads the
+    * materialized rows and the lineage does not re-run every upstream
+    * kernel per stage; at 100 TB each
     * boundary is also where a real pipeline would persist to storage.
     * All stages are deterministic (md5-keyed), so the composition is
     * hash-gated end-to-end against a DuckDB oracle that chains the same
@@ -261,8 +262,8 @@ object CurationOps {
       : (DataFrame, Seq[(String, Long)]) = {
     val stages = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     def record(name: String, d: DataFrame): DataFrame = {
-      val kept = d.localCheckpoint()
-      stages += name -> kept.count()
+      val (kept, n) = Observed.checkpoint(d, count(lit(1)))
+      stages += name -> n.getLong(0)
       kept
     }
     var cur = record("input", docs)

@@ -1,8 +1,10 @@
 package graft.operators
 
 import graft.functions.GraftFunctions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact (fingerprint group-by), MinHash+LSH near-dup, SimHash, and
@@ -304,43 +306,121 @@ object DedupOps {
   /** Connected components over an undirected pair relation: every vertex's
     * label converges to the minimum id in its component. This is the step
     * that turns near-dup PAIRS into dedup DECISIONS — a cluster keeps its
-    * minimum-id doc as canonical.
+    * minimum-id doc as canonical. A pair with a NULL endpoint is no edge.
     *
     * Algorithm: hash-min propagation WITH pointer jumping — each round a
     * vertex takes the min of its own label, its neighbors' labels, and its
     * label's label (`label(label(v))`). Plain neighbor propagation needs
     * diameter rounds, which is pathological on chain-shaped components
     * (A≈B≈C≈… — exactly what serial plagiarism produces); the jump halves
-    * remaining distances, giving O(log n) rounds on any shape.
+    * remaining distances, giving O(log n) rounds on any shape. The loop
+    * stops after the first round that changes no label, and throws if
+    * `maxIterations` rounds don't get there — silently returning partial
+    * clusters would merge/miss duplicates invisibly.
     *
-    * Scale design: one symmetrized edge relation built once; each round is
-    * two joins + a min-aggregation with `localCheckpoint` keeping the plan
-    * O(1) (the PageRank loop's discipline). Throws if `maxIterations`
-    * rounds don't converge — silently returning partial clusters would
-    * merge/miss duplicates invisibly.
+    * Scale design: integral ids are packed once into long arrays
+    * ([[InTask.blocks]], persisted), so the pair lineage runs once per
+    * call whatever the regime. While 2 x pairs is under [[InTask]]'s
+    * cutoff the rounds run in one task over those arrays
+    * ([[componentsInTask]]); above it (and for non-integral ids) they run
+    * as joins ([[joinComponents]]). Both regimes run the same rounds, so
+    * their labels are identical.
     *
-    * @return (id, cluster_id) for every vertex of the pair graph
+    * @return (id, cluster_id) for every vertex of the pair graph, typed as
+    *         the (widened) id columns and non-nullable
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "ida",
                           bCol: String = "idb",
                           maxIterations: Int = 50): DataFrame = {
-    val sym = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-      .union(pairs.select(col(bCol).as("u"), col(aCol).as("v")))
-      .distinct().localCheckpoint()
-    var labels = sym.select(col("u").as("id")).distinct()
-      .withColumn("cluster_id", col("id")).localCheckpoint()
+    val spark = pairs.sparkSession
+    val ends = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
+      .where(col("u").isNotNull && col("v").isNotNull)
+    val idType = ends.select(col("u")).union(ends.select(col("v"))).schema.head.dataType
+    val asId: Long => Any = idType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case LongType => identity
+      case _ => // not packable into longs: the join regime over the pairs
+        return joinComponents(ends.union(ends.select(col("v"), col("u"))), maxIterations)
+    }
+    val packed = InTask.blocks(ends.select(col("u").cast("long"), col("v").cast("long")))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val n = packed.map(_.rows.toLong).fold(0L)(_ + _)
+      val schema = StructType(Seq("id", "cluster_id").map(StructField(_, idType, nullable = false)))
+      if (InTask.fits(spark, 2 * n)) {
+        val unconverged = spark.sparkContext.longAccumulator("graft.cc.unconverged")
+        val labels = InTask.gather(Seq(packed)) { bs =>
+          componentsInTask(bs.toSeq, maxIterations) match {
+            case Some((ids, label)) =>
+              ids.indices.iterator.map(i => Row(asId(ids(i)), asId(ids(label(i)))))
+            case None => unconverged.add(1); Iterator.empty
+          }
+        }
+        val out = spark.createDataFrame(labels, schema).localCheckpoint()
+        if (unconverged.value > 0) throw notConverged(maxIterations)
+        out
+      } else joinComponents(spark.createDataFrame(packed.flatMap { b =>
+        val (u, v) = (b.ids(0), b.ids(1))
+        u.indices.iterator.flatMap(i =>
+          Iterator(Row(asId(u(i)), asId(v(i))), Row(asId(v(i)), asId(u(i)))))
+      }, StructType(Seq("u", "v").map(StructField(_, idType, nullable = false)))), maxIterations)
+    } finally packed.unpersist()
+  }
+
+  private def notConverged(maxIterations: Int) = new IllegalStateException(
+    s"connectedComponents did not converge in $maxIterations rounds")
+
+  /** [[connectedComponents]]' rounds over the packed pairs, in one task.
+    * Vertices are indices into the sorted distinct ids, so a label is an
+    * index and the min of indices is the min of ids. Returns (ids, label
+    * index per vertex), or None when `maxIterations` rounds leave a label
+    * changing. */
+  private def componentsInTask(blocks: Seq[InTask.Block],
+                               maxIterations: Int): Option[(Array[Long], Array[Int])] = {
+    val (a, b) = (InTask.column(blocks, 0), InTask.column(blocks, 1))
+    val ids = InTask.distinctSorted(Array.concat(a, b))
+    val (ai, bi) = (a.map(java.util.Arrays.binarySearch(ids, _)),
+      b.map(java.util.Arrays.binarySearch(ids, _)))
+    var label = Array.range(0, ids.length)
+    var changed = ids.length
+    var rounds = 0
+    while (changed > 0 && rounds < maxIterations) {
+      // hash-min: own label and every neighbour's
+      val stepped = label.clone()
+      for (e <- ai.indices) {
+        stepped(ai(e)) = stepped(ai(e)) min label(bi(e))
+        stepped(bi(e)) = stepped(bi(e)) min label(ai(e))
+      }
+      // pointer jump through the round's input labels
+      val next = stepped.map(l => l min label(l))
+      changed = next.indices.count(i => next(i) != label(i))
+      label = next
+      rounds += 1
+    }
+    if (changed > 0) None else Some((ids, label))
+  }
+
+  /** [[connectedComponents]]' join regime over a symmetric edge relation
+    * (u, v): one distinct edge set built once; each round is two joins + a
+    * min-aggregation, cut by `localCheckpoint` so the plan stays O(1) (the
+    * PageRank loop's discipline), with the round's changed-label count
+    * observed by that same cut ([[Observed.checkpoint]]). */
+  private def joinComponents(edges: DataFrame, maxIterations: Int): DataFrame = {
+    val sym = edges.distinct().localCheckpoint()
+    val (start, vertices) = Observed.checkpoint(
+      sym.select(col("u").as("id")).distinct().withColumn("cluster_id", col("id")),
+      count(lit(1)))
+    var labels = start
+    var changed = vertices.getLong(0)
     var it = 0
-    var converged = labels.isEmpty
-    while (!converged && it < maxIterations) {
+    while (changed > 0 && it < maxIterations) {
       val nbrMin = sym.join(labels, sym("v") === labels("id"))
         .groupBy(sym("u").as("nid"))
         .agg(min(col("cluster_id")).as("nmin"))
-      // the round's INPUT label rides along as __prev so the convergence
-      // probe is a filter-count over this round's checkpoint — the old
-      // shape re-joined `next` against `labels` for the same answer, one
-      // extra join (plus its broadcast build) per round. Label values and
-      // the changed-row predicate are unchanged, so the stopping round —
-      // and therefore the result — is identical.
+      // the round's INPUT label rides along as __prev, so the cut observes
+      // how many labels the round changed
       val stepped = labels.join(nbrMin, labels("id") === col("nid"), "left_outer")
         .select(col("id"), col("cluster_id").as("__prev"),
           least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id")))
@@ -348,20 +428,18 @@ object DedupOps {
       // pointer jump: follow the label one hop (label(label(v))) — labels
       // only ever shrink, so taking the min stays correct and the jump
       // compresses chains exponentially
-      val next = stepped.as("s")
+      val (next, observed) = Observed.checkpoint(stepped.as("s")
         .join(labels.as("l"), col("s.cluster_id") === col("l.id"), "left_outer")
         .select(col("s.id").as("id"),
           least(col("s.cluster_id"),
             coalesce(col("l.cluster_id"), col("s.cluster_id"))).as("cluster_id"),
-          col("s.__prev").as("__prev"))
-        .localCheckpoint()
-      val changed = next.where(col("cluster_id") =!= col("__prev")).count()
+          col("s.__prev").as("__prev")),
+        coalesce(sum(when(col("cluster_id") =!= col("__prev"), 1L).otherwise(0L)), lit(0L)))
       labels = next.select(col("id"), col("cluster_id"))
-      converged = changed == 0L
+      changed = observed.getLong(0)
       it += 1
     }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIterations rounds")
+    if (changed > 0) throw notConverged(maxIterations)
     labels
   }
 

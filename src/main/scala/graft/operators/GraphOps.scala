@@ -7,7 +7,6 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
 
@@ -118,8 +117,7 @@ object GraphOps {
     * saves on a small graph (~2x per round at 2e4 nodes). The graph build
     * keeps AQE. The toggle saves and restores the SESSION conf, so queries
     * run concurrently on the same session plan without AQE for that
-    * window; pass a `newSession()` to isolate. Also the default
-    * [[inTaskCutoff]]. */
+    * window; pass a `newSession()` to isolate. */
   private val aqeIterationCutoff = 1000000L
 
   private def withIterationAqe[T](spark: SparkSession, n: Long)(body: => T): T =
@@ -128,23 +126,12 @@ object GraphOps {
         Map("spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "8")
       else Map.empty)(body)
 
-  /** Session conf holding the in-task regime's cutoff (default
-    * [[aqeIterationCutoff]]), read on every call: 0 sends every walk to
-    * the join regime, as the gate's q_pagerank_range, q_pagerank_hub and
-    * q_ppr_hub do on their small graph. */
-  val InTaskCutoffKey = "spark.graft.graph.inTaskCutoff"
-
-  private def inTaskCutoff(spark: SparkSession): Long =
-    spark.conf.getOption(InTaskCutoffKey).fold(aqeIterationCutoff)(v =>
-      v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"$InTaskCutoffKey must be a whole number, got '$v'")))
-
   /** Regime gate: the in-task regime holds the raw edges, then CSR arrays
     * and one rank array of n doubles per walk, in one task, so it runs
-    * only while |walks| x n + raw edges is under the cutoff. */
+    * only while |walks| x n + raw edges is under [[InTask]]'s cutoff. */
   private[graft] def inTask(spark: SparkSession, n: Long, walks: Int,
                             rawEdges: Long): Boolean =
-    n * walks + rawEdges < inTaskCutoff(spark)
+    InTask.fits(spark, n * walks + rawEdges)
 
   /** What the regime gate, the partition clamp, the adjacency chunking
     * and [[graphStats]] need: the vertex count, the raw edge count, the
@@ -336,34 +323,27 @@ object GraphOps {
     }
   }
 
-  /** One input partition packed into primitive arrays: edge (src, dst)
-    * pairs, or vertex ids in `src`. A row with a NULL id is dropped. */
-  private final case class Block(vertices: Boolean, src: Array[Long], dst: Array[Long])
+  /** [[InTask.Block]] tags: edge (src, dst) pairs, or vertex ids. A row
+    * with a NULL id is dropped. */
+  private val EdgeTag = 0
+  private val VertexTag = 1
 
-  private def blocks(ids: DataFrame, vertices: Boolean): RDD[Block] =
-    ids.queryExecution.toRdd.mapPartitions { rows =>
-      val src, dst = new mutable.ArrayBuilder.ofLong
-      rows.foreach { r =>
-        if (!r.anyNull) { src += r.getLong(0); if (!vertices) dst += r.getLong(1) }
-      }
-      Iterator(Block(vertices, src.result(), dst.result()))
-    }
-
-  /** In-task regime: every block shuffles to ONE partition, whose task
-    * builds the [[Csr]] graph and runs the walk to its stop rule
-    * ([[walkInTask]]). Cutting the output runs that task — the walk's one
-    * job — and the round count returns through an accumulator. */
+  /** In-task regime: edge and vertex blocks gather in ONE task
+    * ([[InTask.gather]]), which builds the [[Csr]] graph and runs the walk
+    * to its stop rule ([[walkInTask]]). Cutting the output runs that task
+    * — the walk's one job — and the round count returns through an
+    * accumulator. */
   private def inTaskWalk(edges: DataFrame, vertices: Option[DataFrame], dedupe: Boolean,
                          rule: Walk, stop: Stop,
                          cut: DataFrame => DataFrame): (DataFrame, Int) = {
     val spark = edges.sparkSession
     val explicit = vertices.isDefined
-    val input = blocks(edges.select(col("src").cast("long"), col("dst").cast("long")),
-      vertices = false) +: vertices.map(v =>
-        blocks(v.select(col("nodeid").cast("long")), vertices = true)).toSeq
+    val input = InTask.blocks(edges.select(col("src").cast("long"), col("dst").cast("long")),
+      EdgeTag) +: vertices.map(v =>
+        InTask.blocks(v.select(col("nodeid").cast("long")), VertexTag)).toSeq
     val rounds = spark.sparkContext.longAccumulator("graft.graph.rounds")
-    val ranks = spark.sparkContext.union(input).coalesce(1, shuffle = true).mapPartitions { bs =>
-      val g = Csr(bs, explicit, dedupe)
+    val ranks = InTask.gather(input) { bs =>
+      val g = Csr(bs.toSeq, explicit, dedupe)
       val (r, done) = walkInTask(g, rule, stop)
       rounds.add(done)
       val keyed = rule.sources.nonEmpty
@@ -389,12 +369,11 @@ object GraphOps {
                           val start: Array[Int], val adj: Array[Int])
 
   private object Csr {
-    def apply(blocks: Iterator[Block], explicit: Boolean, dedupe: Boolean): Csr = {
-      val (vs, es) = blocks.toArray.partition(_.vertices)
-      val src = Array.concat(es.map(_.src).toIndexedSeq: _*)
-      val dst = Array.concat(es.map(_.dst).toIndexedSeq: _*)
-      val ids = distinctSorted(
-        if (explicit) Array.concat(vs.map(_.src).toIndexedSeq: _*) else Array.concat(src, dst))
+    def apply(blocks: Seq[InTask.Block], explicit: Boolean, dedupe: Boolean): Csr = {
+      val src = InTask.column(blocks, 0, EdgeTag)
+      val dst = InTask.column(blocks, 1, EdgeTag)
+      val ids = InTask.distinctSorted(
+        if (explicit) InTask.column(blocks, 0, VertexTag) else Array.concat(src, dst))
       val n = ids.length
       // counting sort of the edges by source index
       val at = src.map(java.util.Arrays.binarySearch(ids, _))
@@ -420,13 +399,6 @@ object GraphOps {
         start(i + 1) = len
       }
       new Csr(ids, outdeg, start, adj.result())
-    }
-
-    private def distinctSorted(a: Array[Long]): Array[Long] = {
-      val s = a.sorted // java.util.Arrays.sort, unboxed
-      val out = new mutable.ArrayBuilder.ofLong
-      for (i <- s.indices if i == 0 || s(i) != s(i - 1)) out += s(i)
-      out.result()
     }
   }
 

@@ -23,8 +23,9 @@ import org.apache.spark.sql.types._
   *    an equi-join on the code, turning O(n²) into bucket-local work. The
   *    hyperplanes are md5-derived ±1 vectors, so codes are deterministic
   *    and engine-portable (no stored model needed).
-  *  - IVF and PQ quantizers train in ONE Lloyd loop ([[lloyd]]): one seed
-  *    collect, then one grouped aggregation per iteration for all
+  *  - IVF and PQ quantizers train in ONE Lloyd loop ([[lloyd]]): in one
+  *    task while the training set is under [[InTask]]'s cutoff, else one
+  *    seed collect, then one grouped aggregation per iteration for all
   *    subspaces.
   */
 object SimilarityOps {
@@ -230,8 +231,8 @@ object SimilarityOps {
     * (Lloyd with zero iterations). */
   def seedCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                     nlist: Int): Array[Centroid] =
-    ivfModel(withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm"),
-      nlist, iterations = 0, roundDecimals = None)
+    lloydSeeds(withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm"), 1, nlist, ivfRule)
+      .headOption.getOrElse(Array.empty)
 
   /** Spherical k-means (Lloyd) refinement of the IVF coarse quantizer:
     * assign every vector to its max-cosine centroid (the same codegen'd
@@ -252,14 +253,11 @@ object SimilarityOps {
     * m = 1. Empty cells keep their previous centroid. */
   def trainIvfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                         nlist: Int, iterations: Int = 5,
-                        roundDecimals: Option[Int] = None): Array[Centroid] =
-    ivfModel(withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm")
-      .localCheckpoint(), nlist, iterations, roundDecimals)
-
-  private def ivfModel(c: DataFrame, nlist: Int, iterations: Int,
-                       roundDecimals: Option[Int]): Array[Centroid] =
-    lloyd(c, 1, nlist, iterations, roundDecimals, ivfRule)
+                        roundDecimals: Option[Int] = None): Array[Centroid] = {
+    val (c, coords) = trainingSet(withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm"))
+    lloyd(c, coords, 1, nlist, iterations, roundDecimals, ivfRule)
       .headOption.getOrElse(Array.empty)
+  }
 
   /** Argmax-cosine cell via a greatest() struct fold over literal
     * centroids (whole-stage codegen); ties -> lowest centroid id. */
@@ -446,54 +444,105 @@ object SimilarityOps {
 
   // ---- the Lloyd trainer --------------------------------------------------
 
-  /** How [[lloyd]] assigns a slice to a cell (`assign`, given the current
-    * book), names a cell from its seed's (vec_id, rank), and which norm
-    * the model keeps per cell. */
+  /** How [[lloyd]] assigns a slice to a cell given the current book — as a
+    * column (`assign`) and, for the in-task regime, over the slice
+    * `v(from until from + len)` of a driver vector (`nearest`, returning
+    * the cell's index in the book) with the same arithmetic — how it names
+    * a cell from its seed's (vec_id, rank), and which norm the model keeps
+    * per cell. */
   private final case class LloydRule(
       assign: (DataFrame, Array[Centroid], Column) => Column,
+      nearest: (Array[Centroid], Array[Double], Int, Int) => Int,
       cellName: (Long, Int) => Long,
       norm: Array[Double] => Double)
 
+  /** The dot product of `a(from until from + len)` and `b(0 until len)`,
+    * summed in order from 0.0 as the dot kernel and `dot` sum. */
+  private def dotSlice(a: Array[Double], from: Int, len: Int, b: Array[Double],
+                       bFrom: Int = 0): Double = {
+    var s = 0.0; var i = 0
+    while (i < len) { s += a(from + i) * b(bFrom + i); i += 1 }
+    s
+  }
+
+  /** SQL's ordering of doubles, which greatest()/least() over structs
+    * apply: -0.0 equals 0.0 and NaN sorts above every number. */
+  private def compareSql(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  /** The index of the book cell whose `score` ranks first by `better`
+    * (> 0 when its first argument wins), ties to the lowest index. */
+  private def bestCell(book: Array[Centroid], score: Centroid => Double,
+                       better: (Double, Double) => Int): Int = {
+    var best = 0; var bestScore = score(book(0)); var i = 1
+    while (i < book.length) {
+      val s = score(book(i))
+      if (better(s, bestScore) > 0) { best = i; bestScore = s }
+      i += 1
+    }
+    best
+  }
+
   /** IVF: max-cosine against the row's precomputed `nrm`, ties to the
-    * lowest centroid id; cells named by their seed's vec_id; √norm. */
+    * lowest centroid id; cells named by their seed's vec_id; √norm. In a
+    * book, cells are in seed (ascending id) order, so the lowest index is
+    * the lowest id. */
   private val ivfRule = LloydRule(
     (df, book, sv) => nearestCellFor(df, book, sv, col("nrm")),
+    (book, v, from, len) => {
+      val nrm = math.sqrt(dotSlice(v, from, len, v, from))
+      bestCell(book, c => dotSlice(v, from, len, c._2) / (c._3 * nrm), compareSql)
+    },
     (id, _) => id, norm2)
 
   /** PQ: min-L2 per slice, ties to the lowest cell rank; cells named by
     * seed rank; ‖c‖². */
   private val pqRule = LloydRule(
     (df, book, sv) => nearestPqCellFor(df, book.map(e => (e._2, e._3)), sv),
+    (book, v, from, len) =>
+      bestCell(book, c => c._3 - 2.0 * dotSlice(v, from, len, c._2), (x, y) => compareSql(y, x)),
     (_, rank) => rank.toLong, normSq)
+
+  /** `df` (vec_id, v, ...) materialized once, with its size in vector
+    * coordinates (rows x the widest vector) from that same job: what
+    * [[lloyd]]'s regime gate reads. */
+  private def trainingSet(df: DataFrame): (DataFrame, Long) = {
+    val (c, m) = Observed.checkpoint(df, count(lit(1)),
+      coalesce(max(size(col("v"))), lit(0)))
+    (c, m.getLong(0) * m.getInt(1))
+  }
 
   /** The one Lloyd trainer behind both quantizers: IVF is the m = 1 case.
     * `c` holds `vec_id` and an array<double> `v` (plus what `rule` reads),
-    * materialized once by the caller; each vector splits into m equal
-    * slices, one codebook of up to `cells` cells each.
+    * materialized once by [[trainingSet]] with its size `coords`; each
+    * vector splits into m equal slices, one codebook of up to `cells`
+    * cells each.
     *
-    * Seeds are the `cells` lowest-id rows — one collect, which also fixes
-    * the dimension. Each iteration assigns every slice by `rule`, takes
-    * every (subspace, cell) mean in ONE grouped aggregation and collects
-    * it once, so a training costs 1 + iterations rounds whatever m is.
-    * New coordinates round HALF_UP to `roundDecimals`; empty cells keep
-    * their centroid. An empty input trains an empty model. */
-  private def lloyd(c: DataFrame, m: Int, cells: Int, iterations: Int,
+    * Seeds are the `cells` lowest-id rows, which also fix the dimension.
+    * Each iteration assigns every slice by `rule` (a NULL vector has no
+    * cell), and replaces each cell's centroid by its members' mean,
+    * rounded HALF_UP to `roundDecimals`; empty cells keep their centroid.
+    * An empty input trains an empty model. While `coords` is under
+    * [[InTask]]'s cutoff every round runs in one task ([[lloydInTask]]):
+    * the same seeds, assignment arithmetic and rounding, so its models
+    * differ from the distributed regime's only by each mean's summation
+    * order (ulps, which rounding absorbs). Above it, the seeds are one
+    * collect and each iteration takes every (subspace, cell) mean in ONE
+    * grouped aggregation, collected once: 1 + iterations rounds whatever
+    * m is. */
+  private def lloyd(c: DataFrame, coords: Long, m: Int, cells: Int, iterations: Int,
                     roundDecimals: Option[Int],
                     rule: LloydRule): Array[Array[Centroid]] = {
-    val seeds = c.orderBy("vec_id").limit(cells)
-      .select(col("vec_id"), col("v")).collect()
-    if (seeds.isEmpty) return Array.empty
-    val dim = seeds.head.getSeq[Double](1).length
-    require(dim % m == 0, s"dim $dim does not split into $m subspaces")
-    val dsub = dim / m
-    def centroid(name: Long, v: Array[Double]): Centroid =
-      (name, v, rule.norm(v))
-    var books = Array.tabulate(m) { j =>
-      seeds.zipWithIndex.map { case (r, rank) =>
-        centroid(rule.cellName(r.getAs[Number](0).longValue, rank),
-          r.getSeq[Double](1).slice(j * dsub, (j + 1) * dsub).toArray)
-      }
-    }
+    // a failed check in the task (a NULL seed vector, say) is rethrown
+    // on the driver, as the distributed regime throws it
+    if (InTask.fits(c.sparkSession, coords))
+      return InTask.gather(Seq(InTask.blocks(
+          c.select(col("vec_id").cast("long"), col("v"))))) { bs =>
+        Iterator(scala.util.Try(lloydInTask(bs.toSeq, m, cells, iterations, roundDecimals, rule)))
+      }.collect().head.get
+    var books = lloydSeeds(c, m, cells, rule)
+    if (books.isEmpty) return books
+    val dsub = books.head.head._2.length
     val meanCols = (0 until dsub).map(i =>
       avg(element_at(col("sv"), i + 1)).as(s"m$i"))
     for (_ <- 1 to iterations) {
@@ -510,19 +559,83 @@ object SimilarityOps {
           Array.tabulate(dsub)(i => r.getDouble(i + 2))).toMap
       books = books.zipWithIndex.map { case (book, j) =>
         book.map { case old @ (name, _, _) =>
-          means.get((j, name)).fold(old) { mu =>
-            centroid(name, roundDecimals.fold(mu)(d => mu.map(roundHalfUp(_, d))))
-          }
+          means.get((j, name)).fold(old)(centroid(_, name, roundDecimals, rule))
         }
       }
     }
     books
   }
 
-  /** [[lloyd]] with the PQ rule over a materialized (vec_id, v). */
-  private def pqModel(c: DataFrame, m: Int, cells: Int, iterations: Int,
+  /** A cell's centroid from a new (mean) vector, rounded HALF_UP to
+    * `roundDecimals`. */
+  private def centroid(v: Array[Double], name: Long, roundDecimals: Option[Int],
+                       rule: LloydRule): Centroid = {
+    val r = roundDecimals.fold(v)(d => v.map(roundHalfUp(_, d)))
+    (name, r, rule.norm(r))
+  }
+
+  /** [[lloyd]]'s initial books: the `cells` lowest-id rows of `c`, one
+    * collect; empty for an empty `c`. */
+  private def lloydSeeds(c: DataFrame, m: Int, cells: Int,
+                         rule: LloydRule): Array[Array[Centroid]] =
+    seedBooks(c.orderBy("vec_id").limit(cells).select(col("vec_id"), col("v")).collect()
+      .map(r => (r.getAs[Number](0).longValue, Option(r.getSeq[Double](1)).map(_.toArray).orNull)),
+      m, rule)
+
+  /** The books seeded by `seeds` (vec_id, vector), in rank order: slice j
+    * of each seed vector is book j's cell. */
+  private def seedBooks(seeds: Array[(Long, Array[Double])], m: Int,
+                        rule: LloydRule): Array[Array[Centroid]] = {
+    if (seeds.isEmpty) return Array.empty
+    for ((id, v) <- seeds) require(v != null, s"Lloyd seed vec_id $id has a NULL vector")
+    val dim = seeds.head._2.length
+    require(dim % m == 0, s"dim $dim does not split into $m subspaces")
+    val dsub = dim / m
+    Array.tabulate(m) { j =>
+      seeds.zipWithIndex.map { case ((id, v), rank) =>
+        val s = v.slice(j * dsub, (j + 1) * dsub)
+        (rule.cellName(id, rank), s, rule.norm(s))
+      }
+    }
+  }
+
+  /** [[lloyd]] over packed (vec_id, v) blocks in one task. Rows are read
+    * in vec_id order (stable for equal ids), so the seeds are the
+    * distributed regime's and each mean sums its members in id order. */
+  private def lloydInTask(blocks: Seq[InTask.Block], m: Int, cells: Int,
+                          iterations: Int, roundDecimals: Option[Int],
+                          rule: LloydRule): Array[Array[Centroid]] = {
+    val ids = InTask.column(blocks, 0)
+    val vecs = blocks.flatMap(_.vecs).toArray
+    val order = ids.indices.sortBy(ids(_)).toArray
+    var books = seedBooks(order.take(cells).map(i => (ids(i), vecs(i))), m, rule)
+    if (books.isEmpty) return books
+    val dsub = books.head.head._2.length
+    for (_ <- 1 to iterations) {
+      val sums = books.map(_.map(_ => new Array[Double](dsub)))
+      val members = books.map(b => new Array[Long](b.length))
+      for (i <- order if vecs(i) != null; j <- 0 until m) {
+        val v = vecs(i)
+        val cell = rule.nearest(books(j), v, j * dsub, dsub)
+        val sum = sums(j)(cell)
+        for (k <- 0 until dsub) sum(k) += v(j * dsub + k)
+        members(j)(cell) += 1
+      }
+      books = books.indices.map { j =>
+        books(j).indices.map { c =>
+          val n = members(j)(c)
+          if (n == 0) books(j)(c)
+          else centroid(sums(j)(c).map(_ / n), books(j)(c)._1, roundDecimals, rule)
+        }.toArray
+      }.toArray
+    }
+    books
+  }
+
+  /** [[lloyd]] with the PQ rule over a [[trainingSet]]. */
+  private def pqModel(set: (DataFrame, Long), m: Int, cells: Int, iterations: Int,
                       roundDecimals: Option[Int]): PqCodebook =
-    lloyd(c, m, cells, iterations, roundDecimals, pqRule)
+    lloyd(set._1, set._2, m, cells, iterations, roundDecimals, pqRule)
       .map(_.map(e => (e._2, e._3)))
 
   /** Train PQ codebooks (standard PQ, L2 assignment). Seeding is the k
@@ -536,8 +649,8 @@ object SimilarityOps {
   def trainPqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
                        m: Int, cells: Int, iterations: Int = 2,
                        roundDecimals: Option[Int] = Some(6)): PqCodebook =
-    pqModel(corpus.select(col(idCol).cast("long").as("vec_id"),
-        asDouble(col(vecCol)).as("v")).localCheckpoint(),
+    pqModel(trainingSet(corpus.select(col(idCol).cast("long").as("vec_id"),
+        asDouble(col(vecCol)).as("v"))),
       m, cells, iterations, roundDecimals)
 
   /** PQ-ANN top-k by asymmetric distance computation. The index-build
@@ -682,10 +795,10 @@ object SimilarityOps {
   /** Per-vector residuals (vec_id, cell, v = residual) against trained
     * coarse centroids, materialized once: the cell's centroid enters as a
     * literal selected by a when-chain over the (bounded) cell ids —
-    * codegen'd, no join against a centroid table. The checkpoint feeds
-    * both residual training and the coding pass. */
+    * codegen'd, no join against a centroid table. The [[trainingSet]]
+    * feeds both residual training and the coding pass. */
   private def residualsFor(corpus: DataFrame, idCol: String, vecCol: String,
-                           cents: Array[Centroid]): DataFrame = {
+                           cents: Array[Centroid]): (DataFrame, Long) = {
     val c = withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm")
     val assigned = c.withColumn("cell",
       nearestCellFor(c, cents, col("v"), col("nrm")))
@@ -693,8 +806,8 @@ object SimilarityOps {
       when(col("cell") === cents.head._1, vecLit(cents.head._2))) {
       case (acc, (cid, cv, _)) => acc.when(col("cell") === cid, vecLit(cv))
     }
-    assigned.select(col("vec_id"), col("cell"),
-      zip_with(col("v"), centFor, (a, b) => a - b).as("v")).localCheckpoint()
+    trainingSet(assigned.select(col("vec_id"), col("cell"),
+      zip_with(col("v"), centFor, (a, b) => a - b).as("v")))
   }
 
   /** Train the residual PQ codebooks for an IVF-PQ index under
@@ -718,9 +831,9 @@ object SimilarityOps {
       trainIvfCentroids(corpus, idCol, vecCol, nlist, iterations,
         roundDecimals = Some(6)))
     if (cents.isEmpty) return emptyTopK(spark, "score")
-    val resid = residualsFor(corpus, idCol, vecCol, cents)
+    val set @ (resid, _) = residualsFor(corpus, idCol, vecCol, cents)
     val books = codebooks.getOrElse(
-      pqModel(resid, m, cells, iterations, Some(6)))
+      pqModel(set, m, cells, iterations, Some(6)))
     if (books.isEmpty || books.exists(_.isEmpty)) return emptyTopK(spark, "score")
     val dsub = books.head.head._1.length
     val coded = resid.select(col("vec_id") +: col("cell") +:

@@ -119,9 +119,11 @@ object TextOps {
     // CacheManager entry per pmi() call for the session's lifetime (the
     // minhashNearDupPairs lesson). Checkpointed blocks are GC'd with the
     // RDD, and both downstream scans (marginals, pairs) still read the
-    // materialized blocks instead of re-tokenizing the corpus.
-    val terms = docDistinctTerms(docs, docIdCol, textCol).localCheckpoint()
-    val n = terms.count() // corpus size; reference hardcodes 156215
+    // materialized blocks instead of re-tokenizing the corpus. The corpus
+    // size n (the reference hardcodes 156215) is counted by the same job.
+    val (terms, size) = Observed.checkpoint(
+      docDistinctTerms(docs, docIdCol, textCol), count(lit(1)))
+    val n = size.getLong(0)
     val marginals = terms
       .select(explode(col("terms")).as("t"))
       .groupBy("t").agg(count(lit(1)).as("df"))

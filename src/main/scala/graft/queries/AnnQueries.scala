@@ -162,7 +162,10 @@ private[queries] object AnnQueries {
         "kind" -> "closure",
         "models" -> "ivf_cents",
         "pairs_sql" -> semdedupPinnedPairsSql,
-        "final_sql" -> semdedupPinnedFinalSql))),
+        "final_sql" -> semdedupPinnedFinalSql)),
+      // Lloyd and connected components in their distributed regimes, so
+      // the oracle gates those; q_ann_* and q_dedup_clusters gate in-task
+      confs = distributedLoops),
     // hyperplane-LSH bucketed ANN (approximate by construction; the
     // oracle replays the same md5-derived planes and buckets)
     QuerySpec("q_ann_lsh", (s, dir) => {

@@ -10,6 +10,12 @@ private[queries] object Common {
 
   def events(s: SparkSession, dir: String): DataFrame = Tables.events(s, dir)
 
+  /** Confs that send every driver-paced loop (PageRank, connected
+    * components, Lloyd training) to its distributed regime, whatever the
+    * input size: no loop fits under a zero in-task cutoff. */
+  val distributedLoops: Map[String, String] =
+    Map(graft.operators.InTask.CutoffKey -> "0")
+
   /** Gate-scratch temp dirs, recursively deleted at JVM exit. Gate
     * lambdas return LAZY DataFrames over these paths (the harness
     * materializes them after the lambda returns), so eager deletion

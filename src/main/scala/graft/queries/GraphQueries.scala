@@ -8,11 +8,9 @@ import Common._
 
 /** PageRank and graph stats (the assignment-4 family) over the part ->
   * supplier edges of `lineitem`. q_pagerank_range, q_pagerank_hub and
-  * q_ppr_hub pin [[GraphOps.InTaskCutoffKey]] to 0, so their oracles gate
+  * q_ppr_hub run under [[Common.distributedLoops]], so their oracles gate
   * the join regime; the other walks take the in-task regime. */
 private[queries] object GraphQueries {
-  /** The join regime at any graph size: no walk fits under a zero cutoff. */
-  private val joinRegime = Map(GraphOps.InTaskCutoffKey -> "0")
 
   val specs: Seq[QuerySpec] = QuerySpec.family(ScanSplit.text)(
     // Test graph derived from lineitem: part -> supplier edges. Suppliers
@@ -30,12 +28,12 @@ private[queries] object GraphQueries {
       GraphOps.pageRank(graphEdges(s, dir), iterations = 5,
         rangePartition = true)
         .select(col("nodeid"), round(col("rank"), 9).as("pr")),
-      pageRankOracle(5), confs = joinRegime),
+      pageRankOracle(5), confs = distributedLoops),
     // 3 iterations: path coverage is identical at any depth
     QuerySpec("q_pagerank_hub", (s, dir) =>
       GraphOps.pageRank(graphEdges(s, dir), iterations = 3)
         .select(col("nodeid"), round(col("rank"), 9).as("pr")),
-      pageRankOracle(3), confs = joinRegime),
+      pageRankOracle(3), confs = distributedLoops),
     // the log-space numeric regime (the reference's float-underflow
     // armor, double-precision here) must agree with linear space to
     // 9 decimals — gated against the SAME unrolled oracle as q_pagerank
@@ -59,7 +57,7 @@ private[queries] object GraphQueries {
         .select(col("source"), col("nodeid"), round(col("rank"), 9).as("rank"))
       GraphOps.topKPerSource(pr, 5).withColumnRenamed("rank", "pr")
     },
-      pprTopkOracle(2, Seq(1L), 5), confs = joinRegime),
+      pprTopkOracle(2, Seq(1L), 5), confs = distributedLoops),
     // convergence mode (the iteration-count-free variant a real engine
     // offers): stops when the L∞ rank change drops below tol. The oracle
     // is a SELF-TERMINATING recursive CTE running the same loop with the

@@ -122,4 +122,18 @@ class CurationOpsSpec extends SparkSpec {
       }
     }
   }
+
+  /** Jobs per q_curate call on the sf0.001 documents, under its catalog
+    * confs with the result collected: each stage's checkpoint observes its
+    * audit count, and near-dup clustering runs its connected components
+    * in one task (67 before both). Measured; a count may only go down. */
+  private val curateJobBudget = 36
+
+  test("q_curate stays within the committed job budget, its stage counts observed") {
+    val spec = graft.queries.Catalog("q_curate")
+    Tables.documents(spark, sf0001) // its schema inference is no stage's job
+    val n = jobsOf(spec.withConfs(spark)(spec.build(spark, sf0001).collect()))
+    info(s"q_curate=$n jobs")
+    assert(n <= curateJobBudget, s"q_curate submitted $n jobs")
+  }
 }

@@ -136,6 +136,86 @@ class DedupSimSpec extends SparkSpec {
     assert(comp.values.forall(_ == 0L), "whole chain is one component rooted at 0")
   }
 
+  /** The two components and the 300-node chain of the tests above. */
+  private def twoComponents = Seq((10L, 20L), (20L, 30L), (30L, 40L),
+    (7L, 8L), (8L, 9L), (7L, 9L)).toDF("ida", "idb")
+  private def chain300 = (0L until 300L).sliding(2).map(s => (s(0), s(1))).toSeq
+    .toDF("ida", "idb")
+
+  /** (schema, sorted rows) of `connectedComponents(pairs)`. */
+  private def components(pairs: org.apache.spark.sql.DataFrame, maxIterations: Int = 50) = {
+    val out = DedupOps.connectedComponents(pairs, maxIterations = maxIterations)
+    (out.schema, out.collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("connectedComponents: in-task and join regimes return the same rows and schema") {
+    val ints = Seq((5, 6), (6, 7), (9, 8)).toDF("ida", "idb")
+    val empty = Seq.empty[(Long, Long)].toDF("ida", "idb")
+    // ids that do not pack into longs take the join regime under any cutoff
+    val strings = Seq(("b", "c"), ("a", "b"), ("y", "x")).toDF("ida", "idb")
+    for ((name, pairs) <- Seq("two components" -> twoComponents, "chain" -> chain300,
+        "empty" -> empty, "int ids" -> ints,
+        "string ids" -> strings)) {
+      val (inTask, join) = inTaskAndJoin(components(pairs))
+      assert(inTask === join, name)
+    }
+    val (intSchema, intRows) = components(ints)
+    assert(intSchema.map(f => (f.name, f.dataType.simpleString, f.nullable)) ===
+      Seq(("id", "int", false), ("cluster_id", "int", false)))
+    assert(intRows === Seq("[5,5]", "[6,5]", "[7,5]", "[8,8]", "[9,8]"))
+    assert(components(empty)._2.isEmpty)
+    assert(components(strings)._2 === Seq("[a,a]", "[b,a]", "[c,a]", "[x,x]", "[y,x]"))
+  }
+
+  test("connectedComponents: a pair with a NULL endpoint is no edge, in both regimes") {
+    val pairs = Seq[(java.lang.Long, java.lang.Long)]((1L, null), (2L, 3L), (null, 4L))
+      .toDF("ida", "idb")
+    val (inTask, join) = inTaskAndJoin(components(pairs))
+    for (((schema, rows), regime) <- Seq(inTask -> "in-task", join -> "join")) {
+      assert(rows === Seq("[2,2]", "[3,2]"), regime)
+      assert(schema.forall(!_.nullable), s"$regime: ids are non-nullable")
+    }
+  }
+
+  test("connectedComponents: past maxIterations both regimes throw") {
+    for (cutoff <- Seq(Long.MaxValue, 0L)) {
+      val e = intercept[IllegalStateException](withCutoff(cutoff)(
+        components(chain300, maxIterations = 2)))
+      assert(e.getMessage.contains("did not converge in 2 rounds"), s"cutoff $cutoff")
+    }
+  }
+
+  test("connectedComponents computes the pair relation once per call in both regimes") {
+    val evals = spark.sparkContext.longAccumulator("pair evaluations")
+    val tick = udf { (id: Long) => evals.add(1); id }.asNondeterministic()
+    val pairs = chain300.select(tick(col("ida")).as("ida"), col("idb"))
+    for (cutoff <- Seq(Long.MaxValue, 0L)) {
+      evals.reset()
+      val rows = withCutoff(cutoff)(DedupOps.connectedComponents(pairs).collect())
+      assert(rows.length === 300)
+      assert(evals.value === 299L, s"cutoff $cutoff: the 299 pairs were evaluated ${evals.value} times")
+    }
+  }
+
+  /** Jobs per call with the result collected: `connectedComponents` on
+    * the two-component fixture in each regime (in-task: packing and
+    * sizing, the one task, the read; 28 before the in-task regime) and
+    * `nearDupClusters` on the planted docs in-task (34 before). Measured;
+    * a count may only go down. */
+  private val ccJobBudget: Map[String, Int] = Map(
+    "connectedComponents" -> 3,
+    "connectedComponents/join" -> 26,
+    "nearDupClusters" -> 15)
+
+  test("connected components and near-dup clusters stay within the committed job budget") {
+    def cc() = jobsOf(DedupOps.connectedComponents(twoComponents).collect())
+    val counts = Seq("connectedComponents" -> cc(),
+      "connectedComponents/join" -> withCutoff(0)(cc()),
+      "nearDupClusters" -> jobsOf(DedupOps.nearDupClusters(docs, "doc_id", "text").collect()))
+    info(counts.map { case (op, n) => s"$op=$n" }.mkString(" "))
+    for ((op, n) <- counts) assert(n <= ccJobBudget(op), s"$op submitted $n jobs")
+  }
+
   test("nearDupClusters groups the planted duplicate family under one canonical") {
     val clusters = DedupOps.nearDupClusters(docs, "doc_id", "text",
       shingleN = 3, k = 12, bands = 4, threshold = 0.5)
@@ -356,13 +436,13 @@ class DedupSimSpec extends SparkSpec {
   }
 
   /** Jobs per training call on the sf0.001 embeddings (cells = 4 or 8,
-    * 2 iterations): a checkpoint, one seed collect, then one (subspace,
-    * cell) aggregation per iteration whatever m is. Measured; a count
-    * may only go down. */
+    * 2 iterations), in the in-task regime: the training set's checkpoint
+    * (its size observed by the same job), then the one task that runs
+    * every iteration, whatever m is. Measured; a count may only go down. */
   private val trainJobBudget: Map[String, Int] = Map(
-    "trainIvfCentroids" -> 6,
-    "trainPqCodebooks" -> 6,
-    "trainPqResidualCodebooks" -> 6)
+    "trainIvfCentroids" -> 2,
+    "trainPqCodebooks" -> 2,
+    "trainPqResidualCodebooks" -> 2)
 
   test("Lloyd training submits the same jobs for m = 1, 2 and 4, within " +
       "the committed budget") {
@@ -382,6 +462,64 @@ class DedupSimSpec extends SparkSpec {
     for ((op, n) <- Seq("trainIvfCentroids" -> ivf,
         "trainPqCodebooks" -> pq.max, "trainPqResidualCodebooks" -> resid.max))
       assert(n <= trainJobBudget(op), s"$op submitted $n jobs")
+  }
+
+  /** Every trained model on `emb`, as comparable values: IVF (nlist 8),
+    * PQ for m = 1, 2, 4 and residual PQ for m = 1, 2, 4 under that IVF
+    * model, 2 iterations each, rounded to `round` decimals (residual PQ
+    * always rounds to 6). */
+  private def lloydModels(emb: org.apache.spark.sql.DataFrame, round: Option[Int]) = {
+    val ivf = SimilarityOps.trainIvfCentroids(emb, "vec_id", "embedding",
+      nlist = 8, iterations = 2, roundDecimals = round)
+    val pq = Seq(1, 2, 4).map(m => SimilarityOps.trainPqCodebooks(emb, "vec_id",
+      "embedding", m = m, cells = 4, iterations = 2, roundDecimals = round))
+    val resid = Seq(1, 2, 4).map(m => SimilarityOps.trainPqResidualCodebooks(emb,
+      "vec_id", "embedding", ivf, m = m, cells = 4, iterations = 2))
+    // every model as (cell id or subspace, centroid, norm) rows
+    Seq(ivf.toSeq.map(c => (c._1, c._2.toSeq, c._3))) ++
+      (pq ++ resid).map(_.toSeq.zipWithIndex.flatMap { case (book, j) =>
+        book.toSeq.map(c => (j.toLong, c._1.toSeq, c._2)) })
+  }
+
+  test("Lloyd training: the in-task and distributed regimes train the same models") {
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val (inTask, join) = inTaskAndJoin(lloydModels(emb, Some(6)))
+    assert(inTask.forall(_.nonEmpty))
+    assert(inTask === join, "rounded models are bit-identical")
+    val (rawInTask, rawJoin) = inTaskAndJoin(lloydModels(emb, None))
+    for (((a, b), model) <- rawInTask.zip(rawJoin).zipWithIndex) {
+      assert(a.map(c => (c._1, c._2.length)) === b.map(c => (c._1, c._2.length)), s"model $model")
+      for (((_, u, un), (_, v, vn)) <- a.zip(b)) {
+        assert(math.abs(un - vn) < 1e-12, s"model $model norm")
+        for ((x, y) <- u.zip(v)) assert(math.abs(x - y) < 1e-12, s"model $model coordinate")
+      }
+    }
+  }
+
+  test("Lloyd training: an empty input and a NULL vector behave the same in both regimes") {
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val (emptyInTask, emptyJoin) = inTaskAndJoin(Seq(
+      SimilarityOps.trainIvfCentroids(emb.where(lit(false)), "vec_id", "embedding",
+        nlist = 8, iterations = 2).length,
+      SimilarityOps.trainPqCodebooks(emb.where(lit(false)), "vec_id", "embedding",
+        m = 2, cells = 4).length))
+    assert(emptyInTask === Seq(0, 0))
+    assert(emptyJoin === Seq(0, 0))
+    val nulled = emb.select(col("vec_id"),
+      when(col("vec_id") === 300L, lit(null).cast("array<float>"))
+        .otherwise(col("embedding")).as("embedding"))
+    val (inTask, join) = inTaskAndJoin(lloydModels(nulled, Some(6)))
+    assert(inTask === join)
+    assert(inTask === lloydModels(emb.where(col("vec_id") =!= 300L), Some(6)),
+      "a NULL vector has no cell")
+    val nullSeed = emb.select(col("vec_id"),
+      when(col("vec_id") === 0L, lit(null).cast("array<float>"))
+        .otherwise(col("embedding")).as("embedding"))
+    for (cutoff <- Seq(Long.MaxValue, 0L)) {
+      val e = intercept[IllegalArgumentException](withCutoff(cutoff)(
+        SimilarityOps.trainIvfCentroids(nullSeed, "vec_id", "embedding", nlist = 8)))
+      assert(e.getMessage.contains("seed vec_id 0 has a NULL vector"), s"cutoff $cutoff")
+    }
   }
 
   test("fused PQ training keeps subspaces apart: book j of m = 2 equals " +

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.GraphOps
+import graft.operators.{GraphOps, InTask}
 import org.apache.spark.sql.functions._
 
 /** PageRank-family tests.
@@ -110,7 +110,7 @@ class GraphOpsSpec extends SparkSpec {
     }
 
   test("in-task regime == join regime for all four walks") {
-    // a zero GraphOps.InTaskCutoffKey forces the big-graph JOIN regime onto
+    // a zero InTask.CutoffKey forces the big-graph JOIN regime onto
     // the small fixture, where the default runs the in-task regime. Both
     // must land on the same ranks AND the same convergence round count.
     val (inTask, join) = inTaskAndJoin(allWalks(smallEdges, Some(smallVerts), Seq(1L, 4L)))
@@ -126,16 +126,6 @@ class GraphOpsSpec extends SparkSpec {
       for ((k, v) <- exp) assert(math.abs(got((src, k)) - v) < 1e-12, s"source $src node $k")
     }
   }
-
-  /** Runs `body` once per regime: the in-task default, then the
-    * distributed join regime forced by a zero cutoff. */
-  private def inTaskAndJoin[T](body: => T): (T, T) = {
-    val inTask = body
-    (inTask, withCutoff(0)(body))
-  }
-
-  private def withCutoff[T](cutoff: Long)(body: => T): T =
-    SessionConfs.scoped(spark, Map(GraphOps.InTaskCutoffKey -> cutoff.toString))(body)
 
   test("iterations = 0: every walk returns the same schema and rows in both regimes") {
     def runAll() = Seq(
@@ -295,8 +285,8 @@ class GraphOpsSpec extends SparkSpec {
 
   test("a non-numeric in-task cutoff fails naming its conf key") {
     val e = intercept[IllegalArgumentException](SessionConfs.scoped(spark,
-      Map(GraphOps.InTaskCutoffKey -> "lots"))(GraphOps.pageRank(smallEdges, iterations = 1)))
-    assert(e.getMessage.contains(GraphOps.InTaskCutoffKey) && e.getMessage.contains("lots"),
+      Map(InTask.CutoffKey -> "lots"))(GraphOps.pageRank(smallEdges, iterations = 1)))
+    assert(e.getMessage.contains(InTask.CutoffKey) && e.getMessage.contains("lots"),
       e.getMessage)
   }
 

@@ -28,6 +28,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     try { body; org.apache.spark.ListenerBusDrain(sc); jobs.get }
     finally sc.removeSparkListener(listener)
   }
+
+  /** Runs `body` under an in-task cutoff of `cutoff` array slots. */
+  def withCutoff[T](cutoff: Long)(body: => T): T =
+    SessionConfs.scoped(spark,
+      Map(graft.operators.InTask.CutoffKey -> cutoff.toString))(body)
+
+  /** Runs `body` once per regime: the in-task default, then the
+    * distributed regime forced by a zero cutoff. */
+  def inTaskAndJoin[T](body: => T): (T, T) = {
+    val inTask = body
+    (inTask, withCutoff(0)(body))
+  }
 }
 
 object SparkSpec {
