@@ -4,7 +4,6 @@ import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact (fingerprint group-by), MinHash+LSH near-dup, SimHash, and
@@ -318,13 +317,13 @@ object DedupOps {
     * `maxIterations` rounds don't get there — silently returning partial
     * clusters would merge/miss duplicates invisibly.
     *
-    * Scale design: integral ids are packed once into long arrays
-    * ([[InTask.blocks]], persisted), so the pair lineage runs once per
-    * call whatever the regime. While 2 x pairs is under [[InTask]]'s
-    * cutoff the rounds run in one task over those arrays
-    * ([[componentsInTask]]); above it (and for non-integral ids) they run
-    * as joins ([[joinComponents]]). Both regimes run the same rounds, so
-    * their labels are identical.
+    * Scale design: the pairs are materialized once, their count observed
+    * by that same job ([[Observed.checkpoint]]), so the pair lineage runs
+    * once per call whatever the regime. While 2 x pairs is under
+    * [[InTask]]'s cutoff and the ids are integral, the rounds run in one
+    * task over the pairs packed into long arrays ([[componentsInTask]]);
+    * otherwise they run as joins ([[joinComponents]]). Both regimes run
+    * the same rounds, so their labels are identical.
     *
     * @return (id, cluster_id) for every vertex of the pair graph, typed as
     *         the (widened) id columns and non-nullable
@@ -333,40 +332,28 @@ object DedupOps {
                           bCol: String = "idb",
                           maxIterations: Int = 50): DataFrame = {
     val spark = pairs.sparkSession
-    val ends = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull)
+    val (ends, counted) = Observed.checkpoint(
+      pairs.select(col(aCol).as("u"), col(bCol).as("v"))
+        .where(col("u").isNotNull && col("v").isNotNull),
+      count(lit(1)))
     val idType = ends.select(col("u")).union(ends.select(col("v"))).schema.head.dataType
-    val asId: Long => Any = idType match {
-      case ByteType => _.toByte
-      case ShortType => _.toShort
-      case IntegerType => _.toInt
-      case LongType => identity
-      case _ => // not packable into longs: the join regime over the pairs
-        return joinComponents(ends.union(ends.select(col("v"), col("u"))), maxIterations)
+    val integral = Seq(ByteType, ShortType, IntegerType, LongType).contains(idType)
+    if (!integral || !InTask.fits(spark, 2 * counted.getLong(0)))
+      return joinComponents(ends.union(ends.select(col("v"), col("u"))), maxIterations)
+    val unconverged = spark.sparkContext.longAccumulator("graft.cc.unconverged")
+    val labels = InTask.gather(Seq(InTask.blocks(
+        ends.select(col("u").cast("long"), col("v").cast("long"))))) { bs =>
+      componentsInTask(bs.toSeq, maxIterations) match {
+        case Some((ids, label)) => ids.indices.iterator.map(i => Row(ids(i), ids(label(i))))
+        case None => unconverged.add(1); Iterator.empty
+      }
     }
-    val packed = InTask.blocks(ends.select(col("u").cast("long"), col("v").cast("long")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = packed.map(_.rows.toLong).fold(0L)(_ + _)
-      val schema = StructType(Seq("id", "cluster_id").map(StructField(_, idType, nullable = false)))
-      if (InTask.fits(spark, 2 * n)) {
-        val unconverged = spark.sparkContext.longAccumulator("graft.cc.unconverged")
-        val labels = InTask.gather(Seq(packed)) { bs =>
-          componentsInTask(bs.toSeq, maxIterations) match {
-            case Some((ids, label)) =>
-              ids.indices.iterator.map(i => Row(asId(ids(i)), asId(ids(label(i)))))
-            case None => unconverged.add(1); Iterator.empty
-          }
-        }
-        val out = spark.createDataFrame(labels, schema).localCheckpoint()
-        if (unconverged.value > 0) throw notConverged(maxIterations)
-        out
-      } else joinComponents(spark.createDataFrame(packed.flatMap { b =>
-        val (u, v) = (b.ids(0), b.ids(1))
-        u.indices.iterator.flatMap(i =>
-          Iterator(Row(asId(u(i)), asId(v(i))), Row(asId(v(i)), asId(u(i)))))
-      }, StructType(Seq("u", "v").map(StructField(_, idType, nullable = false)))), maxIterations)
-    } finally packed.unpersist()
+    val out = spark.createDataFrame(labels,
+        StructType(Seq("id", "cluster_id").map(StructField(_, LongType, nullable = false))))
+      .select(col("id").cast(idType).as("id"), col("cluster_id").cast(idType).as("cluster_id"))
+      .localCheckpoint()
+    if (unconverged.value > 0) throw notConverged(maxIterations)
+    out
   }
 
   private def notConverged(maxIterations: Int) = new IllegalStateException(
@@ -440,7 +427,9 @@ object DedupOps {
       it += 1
     }
     if (changed > 0) throw notConverged(maxIterations)
-    labels
+    // no edge has a NULL end, so no label is NULL: say so in the schema
+    labels.sparkSession.createDataFrame(labels.rdd,
+      StructType(labels.schema.map(_.copy(nullable = false))))
   }
 
   /** Near-duplicate clusters end-to-end: MinHash+LSH pairs -> connected

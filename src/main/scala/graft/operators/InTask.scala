@@ -22,7 +22,12 @@ private[graft] object InTask {
   val CutoffKey = "spark.graft.inTaskCutoff"
 
   /** Default cutoff, in array slots (vertices, edges, pair endpoints or
-    * vector coordinates). */
+    * vector coordinates): a bound on what one task holds, not a
+    * crossover. On 4 local cores the one task beat the distributed form at
+    * every size timed around and above it: connected components 4.7-7.2x
+    * from 0.2 to 6 million slots, Lloyd 5-96x from 0.13 to 1.28 million
+    * coordinates with 16 to 256 cells (the distributed assignment's cost
+    * grows with the cells too). */
   val defaultCutoff = 1000000L
 
   private def cutoff(spark: SparkSession): Long =

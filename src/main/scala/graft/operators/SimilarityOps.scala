@@ -254,8 +254,8 @@ object SimilarityOps {
   def trainIvfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                         nlist: Int, iterations: Int = 5,
                         roundDecimals: Option[Int] = None): Array[Centroid] = {
-    val (c, coords) = trainingSet(withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm"))
-    lloyd(c, coords, 1, nlist, iterations, roundDecimals, ivfRule)
+    lloyd(trainingSet(withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm"), ivfRule),
+      1, nlist, iterations, roundDecimals, ivfRule)
       .headOption.getOrElse(Array.empty)
   }
 
@@ -449,12 +449,16 @@ object SimilarityOps {
     * `v(from until from + len)` of a driver vector (`nearest`, returning
     * the cell's index in the book) with the same arithmetic — how it names
     * a cell from its seed's (vec_id, rank), and which norm the model keeps
-    * per cell. */
+    * per cell. A `cosine` rule divides by norms, so both regimes reject a
+    * zero-norm training vector or centroid: the column's division would
+    * fail under ANSI and rank NULL otherwise, where plain double division
+    * gives NaN, which ranks first. */
   private final case class LloydRule(
       assign: (DataFrame, Array[Centroid], Column) => Column,
       nearest: (Array[Centroid], Array[Double], Int, Int) => Int,
       cellName: (Long, Int) => Long,
-      norm: Array[Double] => Double)
+      norm: Array[Double] => Double,
+      cosine: Boolean = false)
 
   /** The dot product of `a(from until from + len)` and `b(0 until len)`,
     * summed in order from 0.0 as the dot kernel and `dot` sum. */
@@ -491,9 +495,13 @@ object SimilarityOps {
     (df, book, sv) => nearestCellFor(df, book, sv, col("nrm")),
     (book, v, from, len) => {
       val nrm = math.sqrt(dotSlice(v, from, len, v, from))
-      bestCell(book, c => dotSlice(v, from, len, c._2) / (c._3 * nrm), compareSql)
+      bestCell(book, c => {
+        val den = c._3 * nrm // zero only by underflow: zero norms are rejected
+        if (den == 0.0) throw new ArithmeticException(s"cosine to IVF cell ${c._1} divides by zero")
+        dotSlice(v, from, len, c._2) / den
+      }, compareSql)
     },
-    (id, _) => id, norm2)
+    (id, _) => id, norm2, cosine = true)
 
   /** PQ: min-L2 per slice, ties to the lowest cell rank; cells named by
     * seed rank; ‖c‖². */
@@ -503,26 +511,37 @@ object SimilarityOps {
       bestCell(book, c => c._3 - 2.0 * dotSlice(v, from, len, c._2), (x, y) => compareSql(y, x)),
     (_, rank) => rank.toLong, normSq)
 
-  /** `df` (vec_id, v, ...) materialized once, with its size in vector
-    * coordinates (rows x the widest vector) from that same job: what
-    * [[lloyd]]'s regime gate reads. */
-  private def trainingSet(df: DataFrame): (DataFrame, Long) = {
+  /** A [[lloyd]] input `c` (vec_id, v, ...), materialized once, with what
+    * [[lloyd]] checks and its regime gate read, observed by that same
+    * job: its size in vector coordinates (rows x the widest vector), its
+    * rows with a NULL id and, when its `nrm` was checked, its lowest id
+    * with a zero norm. */
+  private final case class TrainingSet(c: DataFrame, coords: Long, nullIds: Long,
+                                       zeroNormId: Option[Long])
+
+  /** `df` as a [[TrainingSet]] for `rule`; a cosine rule checks its
+    * `nrm` column. */
+  private def trainingSet(df: DataFrame, rule: LloydRule): TrainingSet = {
     val (c, m) = Observed.checkpoint(df, count(lit(1)),
-      coalesce(max(size(col("v"))), lit(0)))
-    (c, m.getLong(0) * m.getInt(1))
+      coalesce(max(size(col("v"))), lit(0)),
+      count(when(col("vec_id").isNull, 1)),
+      if (rule.cosine) min(when(col("nrm") === 0.0, col("vec_id"))).cast("long")
+      else lit(null).cast("long"))
+    TrainingSet(c, m.getLong(0) * m.getInt(1), m.getLong(2),
+      if (m.isNullAt(3)) None else Some(m.getLong(3)))
   }
 
   /** The one Lloyd trainer behind both quantizers: IVF is the m = 1 case.
-    * `c` holds `vec_id` and an array<double> `v` (plus what `rule` reads),
-    * materialized once by [[trainingSet]] with its size `coords`; each
-    * vector splits into m equal slices, one codebook of up to `cells`
-    * cells each.
+    * `set.c` holds `vec_id` and an array<double> `v` (plus what `rule`
+    * reads); each vector splits into m equal slices, one codebook of up
+    * to `cells` cells each. A NULL id fails the training in both regimes,
+    * as does a zero-norm vector under a cosine rule.
     *
     * Seeds are the `cells` lowest-id rows, which also fix the dimension.
     * Each iteration assigns every slice by `rule` (a NULL vector has no
     * cell), and replaces each cell's centroid by its members' mean,
     * rounded HALF_UP to `roundDecimals`; empty cells keep their centroid.
-    * An empty input trains an empty model. While `coords` is under
+    * An empty input trains an empty model. While `set.coords` is under
     * [[InTask]]'s cutoff every round runs in one task ([[lloydInTask]]):
     * the same seeds, assignment arithmetic and rounding, so its models
     * differ from the distributed regime's only by each mean's summation
@@ -530,12 +549,16 @@ object SimilarityOps {
     * collect and each iteration takes every (subspace, cell) mean in ONE
     * grouped aggregation, collected once: 1 + iterations rounds whatever
     * m is. */
-  private def lloyd(c: DataFrame, coords: Long, m: Int, cells: Int, iterations: Int,
+  private def lloyd(set: TrainingSet, m: Int, cells: Int, iterations: Int,
                     roundDecimals: Option[Int],
                     rule: LloydRule): Array[Array[Centroid]] = {
+    require(set.nullIds == 0, s"Lloyd training needs a vec_id on every row: ${set.nullIds} are NULL")
+    for (id <- set.zeroNormId) throw new IllegalArgumentException(
+      s"IVF training vec_id $id has a zero-norm vector: its cosine is undefined")
+    val c = set.c
     // a failed check in the task (a NULL seed vector, say) is rethrown
     // on the driver, as the distributed regime throws it
-    if (InTask.fits(c.sparkSession, coords))
+    if (InTask.fits(c.sparkSession, set.coords))
       return InTask.gather(Seq(InTask.blocks(
           c.select(col("vec_id").cast("long"), col("v"))))) { bs =>
         Iterator(scala.util.Try(lloydInTask(bs.toSeq, m, cells, iterations, roundDecimals, rule)))
@@ -571,7 +594,14 @@ object SimilarityOps {
   private def centroid(v: Array[Double], name: Long, roundDecimals: Option[Int],
                        rule: LloydRule): Centroid = {
     val r = roundDecimals.fold(v)(d => v.map(roundHalfUp(_, d)))
-    (name, r, rule.norm(r))
+    checked((name, r, rule.norm(r)), rule)
+  }
+
+  /** `c`, unless `rule` is cosine and `c` has a zero norm. */
+  private def checked(c: Centroid, rule: LloydRule): Centroid = {
+    require(!rule.cosine || c._3 != 0.0,
+      s"IVF cell ${c._1} has a zero-norm centroid: its cosine is undefined")
+    c
   }
 
   /** [[lloyd]]'s initial books: the `cells` lowest-id rows of `c`, one
@@ -579,8 +609,10 @@ object SimilarityOps {
   private def lloydSeeds(c: DataFrame, m: Int, cells: Int,
                          rule: LloydRule): Array[Array[Centroid]] =
     seedBooks(c.orderBy("vec_id").limit(cells).select(col("vec_id"), col("v")).collect()
-      .map(r => (r.getAs[Number](0).longValue, Option(r.getSeq[Double](1)).map(_.toArray).orNull)),
-      m, rule)
+      .map { r =>
+        require(!r.isNullAt(0), "Lloyd seeds need a vec_id on every row")
+        (r.getAs[Number](0).longValue, Option(r.getSeq[Double](1)).map(_.toArray).orNull)
+      }, m, rule)
 
   /** The books seeded by `seeds` (vec_id, vector), in rank order: slice j
     * of each seed vector is book j's cell. */
@@ -594,7 +626,7 @@ object SimilarityOps {
     Array.tabulate(m) { j =>
       seeds.zipWithIndex.map { case ((id, v), rank) =>
         val s = v.slice(j * dsub, (j + 1) * dsub)
-        (rule.cellName(id, rank), s, rule.norm(s))
+        checked((rule.cellName(id, rank), s, rule.norm(s)), rule)
       }
     }
   }
@@ -633,9 +665,9 @@ object SimilarityOps {
   }
 
   /** [[lloyd]] with the PQ rule over a [[trainingSet]]. */
-  private def pqModel(set: (DataFrame, Long), m: Int, cells: Int, iterations: Int,
+  private def pqModel(set: TrainingSet, m: Int, cells: Int, iterations: Int,
                       roundDecimals: Option[Int]): PqCodebook =
-    lloyd(set._1, set._2, m, cells, iterations, roundDecimals, pqRule)
+    lloyd(set, m, cells, iterations, roundDecimals, pqRule)
       .map(_.map(e => (e._2, e._3)))
 
   /** Train PQ codebooks (standard PQ, L2 assignment). Seeding is the k
@@ -650,7 +682,7 @@ object SimilarityOps {
                        m: Int, cells: Int, iterations: Int = 2,
                        roundDecimals: Option[Int] = Some(6)): PqCodebook =
     pqModel(trainingSet(corpus.select(col(idCol).cast("long").as("vec_id"),
-        asDouble(col(vecCol)).as("v"))),
+        asDouble(col(vecCol)).as("v")), pqRule),
       m, cells, iterations, roundDecimals)
 
   /** PQ-ANN top-k by asymmetric distance computation. The index-build
@@ -798,7 +830,7 @@ object SimilarityOps {
     * codegen'd, no join against a centroid table. The [[trainingSet]]
     * feeds both residual training and the coding pass. */
   private def residualsFor(corpus: DataFrame, idCol: String, vecCol: String,
-                           cents: Array[Centroid]): (DataFrame, Long) = {
+                           cents: Array[Centroid]): TrainingSet = {
     val c = withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm")
     val assigned = c.withColumn("cell",
       nearestCellFor(c, cents, col("v"), col("nrm")))
@@ -807,7 +839,7 @@ object SimilarityOps {
       case (acc, (cid, cv, _)) => acc.when(col("cell") === cid, vecLit(cv))
     }
     trainingSet(assigned.select(col("vec_id"), col("cell"),
-      zip_with(col("v"), centFor, (a, b) => a - b).as("v")))
+      zip_with(col("v"), centFor, (a, b) => a - b).as("v")), pqRule)
   }
 
   /** Train the residual PQ codebooks for an IVF-PQ index under
@@ -831,7 +863,8 @@ object SimilarityOps {
       trainIvfCentroids(corpus, idCol, vecCol, nlist, iterations,
         roundDecimals = Some(6)))
     if (cents.isEmpty) return emptyTopK(spark, "score")
-    val set @ (resid, _) = residualsFor(corpus, idCol, vecCol, cents)
+    val set = residualsFor(corpus, idCol, vecCol, cents)
+    val resid = set.c
     val books = codebooks.getOrElse(
       pqModel(set, m, cells, iterations, Some(6)))
     if (books.isEmpty || books.exists(_.isEmpty)) return emptyTopK(spark, "score")

@@ -198,13 +198,14 @@ class DedupSimSpec extends SparkSpec {
   }
 
   /** Jobs per call with the result collected: `connectedComponents` on
-    * the two-component fixture in each regime (in-task: packing and
-    * sizing, the one task, the read; 28 before the in-task regime) and
+    * the two-component fixture in each regime (in-task: the pairs'
+    * checkpoint, which also counts them, the one task, the read; 28
+    * before the in-task regime) and
     * `nearDupClusters` on the planted docs in-task (34 before). Measured;
     * a count may only go down. */
   private val ccJobBudget: Map[String, Int] = Map(
     "connectedComponents" -> 3,
-    "connectedComponents/join" -> 26,
+    "connectedComponents/join" -> 22,
     "nearDupClusters" -> 15)
 
   test("connected components and near-dup clusters stay within the committed job budget") {
@@ -520,6 +521,38 @@ class DedupSimSpec extends SparkSpec {
         SimilarityOps.trainIvfCentroids(nullSeed, "vec_id", "embedding", nlist = 8)))
       assert(e.getMessage.contains("seed vec_id 0 has a NULL vector"), s"cutoff $cutoff")
     }
+  }
+
+  test("Lloyd training: a zero norm or a NULL id fails the same way in both regimes") {
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    def zeroAt(id: Long) = emb.select(col("vec_id"),
+      when(col("vec_id") === id, array_repeat(lit(0.0f), 64))
+        .otherwise(col("embedding")).as("embedding"))
+    def ivf(corpus: org.apache.spark.sql.DataFrame, nlist: Int = 8) =
+      SimilarityOps.trainIvfCentroids(corpus, "vec_id", "embedding", nlist = nlist,
+        iterations = 2, roundDecimals = Some(6))
+    def bothThrow(expected: String)(train: => Any): Unit =
+      for (cutoff <- Seq(Long.MaxValue, 0L)) {
+        val e = intercept[IllegalArgumentException](withCutoff(cutoff)(train))
+        assert(e.getMessage.contains(expected), s"cutoff $cutoff: ${e.getMessage}")
+      }
+    // cosine is undefined for a zero vector: a seed, a row, or a mean
+    bothThrow("vec_id 0 has a zero-norm vector")(ivf(zeroAt(0L)))
+    bothThrow("vec_id 300 has a zero-norm vector")(ivf(zeroAt(300L)))
+    val opposite = Seq((0L, Seq(1.0f, 2.0f)), (1L, Seq(-1.0f, -2.0f)))
+      .toDF("vec_id", "embedding")
+    bothThrow("IVF cell 0 has a zero-norm centroid")(ivf(opposite, nlist = 1))
+    // L2 has no division: PQ trains over a zero vector in both regimes
+    val (inTask, join) = inTaskAndJoin(Seq(1, 2, 4).map(m => SimilarityOps.trainPqCodebooks(
+      zeroAt(0L), "vec_id", "embedding", m = m, cells = 4, iterations = 2)
+      .toSeq.map(_.toSeq.map(c => (c._1.toSeq, c._2)))))
+    assert(inTask.forall(_.nonEmpty))
+    assert(inTask === join)
+    val nullId = emb.select(when(col("vec_id") =!= 300L, col("vec_id")).as("vec_id"),
+      col("embedding"))
+    bothThrow("1 are NULL")(ivf(nullId))
+    bothThrow("1 are NULL")(SimilarityOps.trainPqCodebooks(nullId, "vec_id", "embedding",
+      m = 2, cells = 4))
   }
 
   test("fused PQ training keeps subspaces apart: book j of m = 2 equals " +

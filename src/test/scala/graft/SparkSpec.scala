@@ -34,10 +34,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     SessionConfs.scoped(spark,
       Map(graft.operators.InTask.CutoffKey -> cutoff.toString))(body)
 
-  /** Runs `body` once per regime: the in-task default, then the
-    * distributed regime forced by a zero cutoff. */
+  /** Runs `body` once per regime: in-task, forced by an unbounded
+    * cutoff, then distributed, forced by a zero cutoff. */
   def inTaskAndJoin[T](body: => T): (T, T) = {
-    val inTask = body
+    val inTask = withCutoff(Long.MaxValue)(body)
     (inTask, withCutoff(0)(body))
   }
 }
