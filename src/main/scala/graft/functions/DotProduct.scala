@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.functions.{call_function, lit, typedLit}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native Catalyst expression for the dense dot product over
@@ -157,6 +157,21 @@ object GraftFunctions {
             "<int literal maxPieceLen>)")
       })
 
+  private[functions] val nearestCellDescriptor: Descriptor =
+    (new FunctionIdentifier("graft_nearest_cell"),
+      new ExpressionInfo(classOf[NearestCell].getName, "graft_nearest_cell"),
+      {
+        // the book arrives as a FOLDABLE array<array<double>> (lit of a
+        // trained, bounded model) — evaluated once at resolution
+        case Seq(v, book, Literal(metric, StringType))
+            if book.foldable && Set("cosine", "l2")(String.valueOf(metric)) =>
+          val ad = book.eval().asInstanceOf[ArrayData]
+          NearestCell(v, (0 until ad.numElements()).map(ad.getArray(_).toDoubleArray().toSeq),
+            String.valueOf(metric) == "cosine")
+        case _ => throw new IllegalArgumentException(
+          "usage: graft_nearest_cell(v, <array<array<double>> literal book>, 'cosine' | 'l2')")
+      })
+
   private[functions] val postingsEncodeDescriptor: Descriptor =
     (new FunctionIdentifier("graft_postings_encode"),
       new ExpressionInfo(classOf[PostingsEncode].getName, "graft_postings_encode"),
@@ -170,7 +185,8 @@ object GraftFunctions {
   private val descriptors: Seq[Descriptor] = Seq(
     dotDescriptor, shingleDescriptor, minhashDescriptor, jaccardDescriptor,
     stopHitsDescriptor, simhashDescriptor, langIdDescriptor,
-    segmentCountDescriptor, postingsEncodeDescriptor, postingsDecodeDescriptor)
+    segmentCountDescriptor, nearestCellDescriptor, postingsEncodeDescriptor,
+    postingsDecodeDescriptor)
 
   /** Idempotent per-session registration. */
   def register(spark: SparkSession): Unit = descriptors.foreach { d =>
@@ -189,6 +205,14 @@ object GraftFunctions {
   def dot(spark: SparkSession, a: Column, b: Column): Column = {
     register(spark)
     call_function("graft_dot", a, b)
+  }
+
+  /** `v`'s nearest cell in `book` by cosine or L2 via [[NearestCell]]. */
+  def nearestCell(spark: SparkSession, v: Column, book: Seq[Array[Double]],
+                  cosine: Boolean): Column = {
+    register(spark)
+    call_function("graft_nearest_cell", v, typedLit(book.map(_.toSeq)),
+      lit(if (cosine) "cosine" else "l2"))
   }
 
   /** d-gap+VInt postings pack/unpack via the native codec expressions. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.{GraftFunctions, NearestCell}
 
 /** Similarity search over embedding columns (array<float>): brute-force
   * cosine top-k as the exact baseline, random-hyperplane LSH bucketing,
@@ -15,7 +16,9 @@ import org.apache.spark.sql.types._
   *  - All vector math is pure column expressions (`zip_with` + `aggregate`,
   *    or the native dot kernel) inside whole-stage codegen — no UDF boxing
   *    per element. Trained models are tiny driver arrays that re-enter the
-  *    plan as LITERALS, so assignment and scoring never join a model table.
+  *    plan as LITERALS, so assignment and scoring never join a model table;
+  *    every cell assignment is ONE native kernel call
+  *    ([[graft.functions.NearestCell]]), so no plan grows with the cells.
   *  - Every search broadcasts the QUERY set (small) against the corpus
   *    (huge): one pass, no shuffle of the corpus, then one shared
   *    per-query window rank ([[topKPerQuery]]).
@@ -46,14 +49,14 @@ object SimilarityOps {
     * summation order as the columnar form and DuckDB's list_dot_product,
     * so results are bit-compatible. */
   private def fastDot(df: DataFrame, a: Column, b: Column): Column =
-    graft.functions.GraftFunctions.dot(df.sparkSession, a, b)
+    GraftFunctions.dot(df.sparkSession, a, b)
 
-  /** A driver-side vector as a literal array<double> column. */
-  private def vecLit(v: Array[Double]): Column = array(v.map(lit).toIndexedSeq: _*)
-
-  /** Subspace `j`'s `dsub`-wide slice of a vector column. */
-  private def subvector(v: Column, j: Int, dsub: Int): Column =
-    slice(v, j * dsub + 1, dsub)
+  /** The m `dsub`-wide slices of vector column `v`, all NULL unless `v` is
+    * exactly m × dsub wide. */
+  private def subvectors(v: Column, m: Int, dsub: Int): Seq[Column] = {
+    val whole = when(size(v) === m * dsub, v)
+    (0 until m).map(j => slice(whole, j * dsub + 1, dsub))
+  }
 
   /** BigDecimal HALF_UP rounding — what Spark's and DuckDB's round() do,
     * so driver-side rounding matches a rounded column bit for bit. */
@@ -79,8 +82,7 @@ object SimilarityOps {
   }
 
   /** An empty result with the given typed columns: what an empty corpus
-    * or model returns (a zero-argument greatest()/least() fold would fail
-    * analysis). */
+    * or model returns (the kernel needs a non-empty book). */
   private def emptyResult(spark: SparkSession,
                           cols: (String, DataType)*): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
@@ -219,14 +221,6 @@ object SimilarityOps {
   /** (cell id, vector, norm) — the coarse-quantizer model shape. */
   type Centroid = (Long, Array[Double], Double)
 
-  private def norm2(v: Array[Double]): Double = math.sqrt(normSq(v))
-
-  private def normSq(v: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < v.length) { s += v(i) * v(i); i += 1 }
-    s
-  }
-
   /** Deterministic quantizer init: the `nlist` lowest-id corpus vectors
     * (Lloyd with zero iterations). */
   def seedCentroids(corpus: DataFrame, idCol: String, vecCol: String,
@@ -235,8 +229,8 @@ object SimilarityOps {
       .headOption.getOrElse(Array.empty)
 
   /** Spherical k-means (Lloyd) refinement of the IVF coarse quantizer:
-    * assign every vector to its max-cosine centroid (the same codegen'd
-    * argmax fold the probe uses), recompute each cell's centroid as the
+    * assign every vector to its max-cosine centroid (the same kernel the
+    * search uses), recompute each cell's centroid as the
     * element-wise mean of its members, repeat. The seeding and tie-breaks
     * are deterministic (lowest id / lowest cell), so reruns over the SAME
     * physical partitioning rebuild identical centroids; the residual
@@ -253,42 +247,34 @@ object SimilarityOps {
     * m = 1. Empty cells keep their previous centroid. */
   def trainIvfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                         nlist: Int, iterations: Int = 5,
-                        roundDecimals: Option[Int] = None): Array[Centroid] = {
+                        roundDecimals: Option[Int] = None): Array[Centroid] =
     lloyd(trainingSet(withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm"), ivfRule),
       1, nlist, iterations, roundDecimals, ivfRule)
       .headOption.getOrElse(Array.empty)
-  }
 
-  /** Argmax-cosine cell via a greatest() struct fold over literal
-    * centroids (whole-stage codegen); ties -> lowest centroid id. */
-  private def nearestCellFor(df: DataFrame, cents: Array[Centroid],
-                             v: Column, nrm: Column): Column = {
-    val scored = cents.toSeq.map { case (cid, cv, cnrm) =>
-      struct((fastDot(df, v, vecLit(cv)) / (lit(cnrm) * nrm)).as("cos"),
-        lit(-cid).as("negid"))
-    }
-    val best = if (scored.size == 1) scored.head else greatest(scored: _*)
-    -best.getField("negid")
+  /** The id of vector column `v`'s max-cosine IVF cell, ties to the
+    * lowest id; NULL for a NULL or wrong-width vector. */
+  private def ivfCell(df: DataFrame, cents: Array[Centroid], v: Column): Column = {
+    val byId = cents.sortBy(_._1)
+    element_at(lit(byId.map(_._1)), GraftFunctions.nearestCell(df.sparkSession, v,
+      byId.toSeq.map(_._2), cosine = true) + 1)
   }
 
   /** IVF cell probe: each query's top-`nprobe` cells by (cosine desc, cell
     * asc) as (query_id, qv, qnrm, cell, qdotc), where qdotc = dot(qv,
     * centroid) feeds IVF-PQ's score decomposition. `q` carries (query_id,
-    * qv, qnrm); the query side is small by contract, so the explode +
-    * window is cheap. */
+    * qv, qnrm); the query side is small by contract, so exploding it
+    * against the centroids (one literal relation) + a window is cheap. */
   private def probeCells(q: DataFrame, cents: Array[Centroid],
                          nprobe: Int): DataFrame = {
-    val qScored = q.withColumn("sc", explode(array(
-      cents.toSeq.map { case (cid, cv, cnrm) =>
-        val d = fastDot(q, col("qv"), vecLit(cv))
-        struct((d / (lit(cnrm) * col("qnrm"))).as("cos"),
-          d.as("qdotc"), lit(cid).as("cell"))
-      }: _*)))
+    val qScored = q.withColumn("c", explode(typedLit(cents.toSeq.map {
+        case (cid, cv, cnrm) => (cid, cv.toSeq, cnrm) })))
+      .withColumn("qdotc", fastDot(q, col("qv"), col("c._2")))
     val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sc.cos").desc, col("sc.cell").asc)
+      .orderBy((col("qdotc") / (col("c._3") * col("qnrm"))).desc, col("c._1").asc)
     qScored.withColumn("rc", row_number().over(w)).where(col("rc") <= nprobe)
-      .select(col("query_id"), col("qv"), col("qnrm"),
-        col("sc.cell").as("cell"), col("sc.qdotc").as("qdotc"))
+      .select(col("query_id"), col("qv"), col("qnrm"), col("c._1").as("cell"),
+        col("qdotc"))
   }
 
   def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
@@ -296,15 +282,11 @@ object SimilarityOps {
               k: Int, nlist: Int = 16, nprobe: Int = 4,
               centroids: Option[Array[Centroid]] = None): DataFrame = {
     val c = withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm")
-    // the quantizer "model" is tiny (nlist vectors); collecting it to the
-    // driver and re-entering it as LITERAL arrays keeps the per-row
-    // assignment inside whole-stage codegen — no UDF boxing of
-    // Seq[Double] on the corpus (huge) side. Same hoisting trick as
-    // hyperplaneCodeFast. Pass `centroids` (e.g. from trainIvfCentroids)
-    // to swap the quantizer without touching the plan.
+    // the quantizer is a tiny driver model; pass `centroids` (e.g. from
+    // trainIvfCentroids) to swap it without touching the plan
     val cents = centroids.getOrElse(seedCentroids(corpus, idCol, vecCol, nlist))
     if (cents.isEmpty) return emptyTopK(corpus.sparkSession, "cos")
-    val assigned = c.withColumn("cell", nearestCellFor(c, cents, col("v"), col("nrm")))
+    val assigned = c.withColumn("cell", ivfCell(c, cents, col("v")))
     val q = probeCells(withNorms(queries, qidCol, qvecCol, "query_id", "qv",
       "qnrm"), cents, nprobe)
     topKPerQuery(assigned.join(broadcast(q),
@@ -348,7 +330,7 @@ object SimilarityOps {
     * schema-level fact the caller reads once, not per row. */
   def hyperplaneCodeFast(df: DataFrame, v: Column, planes: Int, dim: Int): Column =
     (0 until planes).map { p =>
-      when(fastDot(df, v, vecLit(planeVector(p, dim))) > 0, lit(1L << p))
+      when(fastDot(df, v, lit(planeVector(p, dim))) > 0, lit(1L << p))
         .otherwise(lit(0L))
     }.reduce(_ + _)
 
@@ -368,30 +350,18 @@ object SimilarityOps {
 
   /** Await a concurrently-submitted driver job with a FINITE bound.
     * `Duration.Inf` here would turn a hung Spark job into a silently hung
-    * driver; a generous timeout (default 30 min, `GRAFT_AWAIT_TIMEOUT_S`
-    * to override — model trainings at the 100x fixture finish in minutes)
-    * fails loudly instead, naming which concurrent chain stalled. */
-  private[graft] lazy val awaitTimeout: scala.concurrent.duration.Duration = {
-    // lazy + explicit parse: a malformed env value must fail with a message
-    // naming the variable at first use, not as an opaque
-    // ExceptionInInitializerError from the object's static init
-    val raw = sys.env.getOrElse("GRAFT_AWAIT_TIMEOUT_S", "1800")
-    val secs = raw.toLongOption.getOrElse(throw new IllegalArgumentException(
-      s"GRAFT_AWAIT_TIMEOUT_S must be an integer number of seconds, " +
-        s"got '$raw'"))
-    scala.concurrent.duration.Duration(secs, "s")
-  }
-
+    * driver; 30 minutes (model trainings at the 100x fixture finish in
+    * minutes) fails loudly instead, naming which concurrent chain stalled. */
   private[graft] def awaitOrFail[T](f: scala.concurrent.Future[T],
       what: String,
-      timeout: scala.concurrent.duration.Duration = awaitTimeout): T =
+      timeout: scala.concurrent.duration.Duration =
+        scala.concurrent.duration.Duration(30, "min")): T =
     try scala.concurrent.Await.result(f, timeout)
     catch {
       case _: java.util.concurrent.TimeoutException =>
         throw new IllegalStateException(
           s"concurrent driver job '$what' did not finish within " +
-            s"$timeout — a hung Spark job chain; raise " +
-            "GRAFT_AWAIT_TIMEOUT_S only if the scale genuinely needs it")
+            s"$timeout — a hung Spark job chain")
     }
 
   /** In-plan vector-width guard: rows whose vector is exactly `dim` wide
@@ -409,107 +379,42 @@ object SimilarityOps {
         s"(m x dsub = $dim) — the model was trained for a different " +
         "embedding width; rebuild it with `ann-build`", size(v))))
 
-  /** Argmin-L2 cell for a subvector via a least() struct fold — ties →
-    * lowest cell. ||s−c||² ranks identically to (||c||² − 2·s·c) because
-    * ||s||² is constant per row, so the fold never materializes it. */
-  private def nearestPqCellFor(df: DataFrame,
-      book: Array[(Array[Double], Double)], sv: Column): Column = {
-    val scored = book.zipWithIndex.map { case ((cv, cn2), cid) =>
-      struct((lit(cn2) - lit(2.0) * fastDot(df, sv, vecLit(cv))).as("d"),
-        lit(cid).as("cid"))
-    }.toIndexedSeq
-    val best = if (scored.size == 1) scored.head else least(scored: _*)
-    // NULL vector -> NULL code (and downstream a NULL ADC score that
-    // ranks below every real candidate). Without the guard the all-null
-    // distance structs compare by cid alone and a corrupt row would be
-    // coded as cell 0 — a phantom candidate with a REAL score.
-    when(sv.isNull, lit(null).cast("int")).otherwise(best.getField("cid"))
-  }
-
-  /** The m code columns code0..code{m-1} of vector column `v`. */
-  private def pqCodes(df: DataFrame, books: PqCodebook, dsub: Int,
-                      v: Column): Seq[Column] =
-    books.indices.map(j =>
-      nearestPqCellFor(df, books(j), subvector(v, j, dsub)).as(s"code$j"))
+  /** `df` (vec_id, ...) with `v` replaced by its min-L2 cells code0 ..
+    * code{m-1} (NULL for a NULL or wrong-width vector), checkpointed
+    * lazily: left in the plan, whole-stage codegen would defer the coding
+    * into the scoring join and run it once per (corpus row, query). */
+  private def pqCoded(df: DataFrame, books: PqCodebook, dsub: Int): DataFrame =
+    df.select(df.columns.filter(_ != "v").map(col).toSeq ++
+      subvectors(col("v"), books.length, dsub).zipWithIndex.map { case (sv, j) =>
+        GraftFunctions.nearestCell(df.sparkSession, sv, books(j).map(_._1).toSeq,
+          cosine = false).as(s"code$j")
+      }: _*).localCheckpoint(eager = false)
 
   /** ADC score of a row carrying the query vector `qv` and a corpus
-    * vector's codes: Σ_j dot(qv_j, C_j[code_j]), the codebooks entering
-    * as literal arrays. */
+    * vector's codes: Σ_j dot(qv_j, C_j[code_j]), each codebook entering
+    * as one literal. */
   private def adcScore(df: DataFrame, books: PqCodebook, dsub: Int): Column =
-    books.indices.map { j =>
-      val bookLit = array(books(j).map(e => vecLit(e._1)).toIndexedSeq: _*)
-      fastDot(df, subvector(col("qv"), j, dsub),
-        element_at(bookLit, col(s"code$j") + 1))
+    subvectors(col("qv"), books.length, dsub).zipWithIndex.map { case (qj, j) =>
+      fastDot(df, qj, element_at(typedLit(books(j).map(_._1.toSeq).toSeq),
+        col(s"code$j") + 1))
     }.reduce(_ + _)
 
   // ---- the Lloyd trainer --------------------------------------------------
 
-  /** How [[lloyd]] assigns a slice to a cell given the current book — as a
-    * column (`assign`) and, for the in-task regime, over the slice
-    * `v(from until from + len)` of a driver vector (`nearest`, returning
-    * the cell's index in the book) with the same arithmetic — how it names
-    * a cell from its seed's (vec_id, rank), and which norm the model keeps
-    * per cell. A `cosine` rule divides by norms, so both regimes reject a
-    * zero-norm training vector or centroid: the column's division would
-    * fail under ANSI and rank NULL otherwise, where plain double division
-    * gives NaN, which ranks first. */
-  private final case class LloydRule(
-      assign: (DataFrame, Array[Centroid], Column) => Column,
-      nearest: (Array[Centroid], Array[Double], Int, Int) => Int,
-      cellName: (Long, Int) => Long,
-      norm: Array[Double] => Double,
-      cosine: Boolean = false)
-
-  /** The dot product of `a(from until from + len)` and `b(0 until len)`,
-    * summed in order from 0.0 as the dot kernel and `dot` sum. */
-  private def dotSlice(a: Array[Double], from: Int, len: Int, b: Array[Double],
-                       bFrom: Int = 0): Double = {
-    var s = 0.0; var i = 0
-    while (i < len) { s += a(from + i) * b(bFrom + i); i += 1 }
-    s
+  /** How [[lloyd]] assigns a slice to a cell (the [[NearestCell]] kernel
+    * by max cosine or min L2, in both regimes), names a cell from its
+    * seed's (vec_id, rank), and which norm the model keeps (the kernel's).
+    * A cosine rule rejects a zero-norm training vector or centroid. */
+  private final case class LloydRule(cosine: Boolean, cellName: (Long, Int) => Long) {
+    def norm(v: Array[Double]): Double = NearestCell.norm(v, cosine)
   }
 
-  /** SQL's ordering of doubles, which greatest()/least() over structs
-    * apply: -0.0 equals 0.0 and NaN sorts above every number. */
-  private def compareSql(x: Double, y: Double): Int =
-    if (x == y) 0 else java.lang.Double.compare(x, y)
+  /** IVF: cosine; cells named by their seed's vec_id. Books hold cells in
+    * seed (ascending id) order, so the lowest index is the lowest id. */
+  private val ivfRule = LloydRule(cosine = true, (id, _) => id)
 
-  /** The index of the book cell whose `score` ranks first by `better`
-    * (> 0 when its first argument wins), ties to the lowest index. */
-  private def bestCell(book: Array[Centroid], score: Centroid => Double,
-                       better: (Double, Double) => Int): Int = {
-    var best = 0; var bestScore = score(book(0)); var i = 1
-    while (i < book.length) {
-      val s = score(book(i))
-      if (better(s, bestScore) > 0) { best = i; bestScore = s }
-      i += 1
-    }
-    best
-  }
-
-  /** IVF: max-cosine against the row's precomputed `nrm`, ties to the
-    * lowest centroid id; cells named by their seed's vec_id; √norm. In a
-    * book, cells are in seed (ascending id) order, so the lowest index is
-    * the lowest id. */
-  private val ivfRule = LloydRule(
-    (df, book, sv) => nearestCellFor(df, book, sv, col("nrm")),
-    (book, v, from, len) => {
-      val nrm = math.sqrt(dotSlice(v, from, len, v, from))
-      bestCell(book, c => {
-        val den = c._3 * nrm // zero only by underflow: zero norms are rejected
-        if (den == 0.0) throw new ArithmeticException(s"cosine to IVF cell ${c._1} divides by zero")
-        dotSlice(v, from, len, c._2) / den
-      }, compareSql)
-    },
-    (id, _) => id, norm2, cosine = true)
-
-  /** PQ: min-L2 per slice, ties to the lowest cell rank; cells named by
-    * seed rank; ‖c‖². */
-  private val pqRule = LloydRule(
-    (df, book, sv) => nearestPqCellFor(df, book.map(e => (e._2, e._3)), sv),
-    (book, v, from, len) =>
-      bestCell(book, c => c._3 - 2.0 * dotSlice(v, from, len, c._2), (x, y) => compareSql(y, x)),
-    (_, rank) => rank.toLong, normSq)
+  /** PQ: L2; cells named by seed rank. */
+  private val pqRule = LloydRule(cosine = false, (_, rank) => rank.toLong)
 
   /** A [[lloyd]] input `c` (vec_id, v, ...), materialized once, with what
     * [[lloyd]] checks and its regime gate read, observed by that same
@@ -538,8 +443,8 @@ object SimilarityOps {
     * as does a zero-norm vector under a cosine rule.
     *
     * Seeds are the `cells` lowest-id rows, which also fix the dimension.
-    * Each iteration assigns every slice by `rule` (a NULL vector has no
-    * cell), and replaces each cell's centroid by its members' mean,
+    * Each iteration assigns every slice by `rule` (a NULL or wrong-width
+    * vector has no cell), and replaces each cell's centroid by its members' mean,
     * rounded HALF_UP to `roundDecimals`; empty cells keep their centroid.
     * An empty input trains an empty model. While `set.coords` is under
     * [[InTask]]'s cutoff every round runs in one task ([[lloydInTask]]):
@@ -569,39 +474,42 @@ object SimilarityOps {
     val meanCols = (0 until dsub).map(i =>
       avg(element_at(col("sv"), i + 1)).as(s"m$i"))
     for (_ <- 1 to iterations) {
-      val slices = (0 until m).map { j =>
-        val sv = subvector(col("v"), j, dsub)
-        struct(lit(j).as("subspace"), rule.assign(c, books(j), sv).as("cell"),
+      val slices = subvectors(col("v"), m, dsub).zipWithIndex.map { case (sv, j) =>
+        struct(lit(j).as("subspace"),
+          GraftFunctions.nearestCell(c.sparkSession, sv, books(j).map(_._2).toSeq,
+            rule.cosine).as("cell"),
           sv.as("sv"))
       }
-      // a NULL vector has no cell (PQ) and contributes to no mean
+      // a vector without a cell contributes to no mean
       val means = c.select(explode(array(slices: _*)).as("s")).select("s.*")
         .groupBy("subspace", "cell").agg(meanCols.head, meanCols.tail: _*)
         .collect().filterNot(_.isNullAt(1))
-        .map(r => (r.getInt(0), r.getAs[Number](1).longValue) ->
+        .map(r => (r.getInt(0), r.getInt(1)) ->
           Array.tabulate(dsub)(i => r.getDouble(i + 2))).toMap
-      books = books.zipWithIndex.map { case (book, j) =>
-        book.map { case old @ (name, _, _) =>
-          means.get((j, name)).fold(old)(centroid(_, name, roundDecimals, rule))
-        }
-      }
+      books = moved(books, roundDecimals, rule)((j, i) => means.get((j, i)))
     }
     books
   }
 
-  /** A cell's centroid from a new (mean) vector, rounded HALF_UP to
-    * `roundDecimals`. */
+  /** `books` with each cell (j, i) that has a `mean` moved to its
+    * [[centroid]]; a cell without members keeps its centroid. */
+  private def moved(books: Array[Array[Centroid]], roundDecimals: Option[Int], rule: LloydRule)
+                   (mean: (Int, Int) => Option[Array[Double]]): Array[Array[Centroid]] =
+    books.zipWithIndex.map { case (book, j) =>
+      book.zipWithIndex.map { case (old, i) =>
+        mean(j, i).fold(old)(centroid(_, old._1, roundDecimals, rule))
+      }
+    }
+
+  /** Cell `name`'s centroid from a seed or mean vector, rounded HALF_UP to
+    * `roundDecimals`; a cosine rule rejects a zero norm. */
   private def centroid(v: Array[Double], name: Long, roundDecimals: Option[Int],
                        rule: LloydRule): Centroid = {
     val r = roundDecimals.fold(v)(d => v.map(roundHalfUp(_, d)))
-    checked((name, r, rule.norm(r)), rule)
-  }
-
-  /** `c`, unless `rule` is cosine and `c` has a zero norm. */
-  private def checked(c: Centroid, rule: LloydRule): Centroid = {
-    require(!rule.cosine || c._3 != 0.0,
-      s"IVF cell ${c._1} has a zero-norm centroid: its cosine is undefined")
-    c
+    val norm = rule.norm(r)
+    require(!rule.cosine || norm != 0.0,
+      s"IVF cell $name has a zero-norm centroid: its cosine is undefined")
+    (name, r, norm)
   }
 
   /** [[lloyd]]'s initial books: the `cells` lowest-id rows of `c`, one
@@ -621,12 +529,13 @@ object SimilarityOps {
     if (seeds.isEmpty) return Array.empty
     for ((id, v) <- seeds) require(v != null, s"Lloyd seed vec_id $id has a NULL vector")
     val dim = seeds.head._2.length
+    for ((id, v) <- seeds) require(v.length == dim,
+      s"Lloyd seed vec_id $id is ${v.length} wide, the lowest-id seed $dim")
     require(dim % m == 0, s"dim $dim does not split into $m subspaces")
     val dsub = dim / m
     Array.tabulate(m) { j =>
       seeds.zipWithIndex.map { case ((id, v), rank) =>
-        val s = v.slice(j * dsub, (j + 1) * dsub)
-        checked((rule.cellName(id, rank), s, rule.norm(s)), rule)
+        centroid(v.slice(j * dsub, (j + 1) * dsub), rule.cellName(id, rank), None, rule)
       }
     }
   }
@@ -646,20 +555,17 @@ object SimilarityOps {
     for (_ <- 1 to iterations) {
       val sums = books.map(_.map(_ => new Array[Double](dsub)))
       val members = books.map(b => new Array[Long](b.length))
-      for (i <- order if vecs(i) != null; j <- 0 until m) {
+      val cells = books.map(_.map(_._2))
+      val norms = books.map(_.map(_._3))
+      for (i <- order if vecs(i) != null && vecs(i).length == m * dsub; j <- 0 until m) {
         val v = vecs(i)
-        val cell = rule.nearest(books(j), v, j * dsub, dsub)
+        val cell = NearestCell.index(cells(j), norms(j), rule.cosine, v, j * dsub, dsub)
         val sum = sums(j)(cell)
         for (k <- 0 until dsub) sum(k) += v(j * dsub + k)
         members(j)(cell) += 1
       }
-      books = books.indices.map { j =>
-        books(j).indices.map { c =>
-          val n = members(j)(c)
-          if (n == 0) books(j)(c)
-          else centroid(sums(j)(c).map(_ / n), books(j)(c)._1, roundDecimals, rule)
-        }.toArray
-      }.toArray
+      books = moved(books, roundDecimals, rule)((j, c) =>
+        Option.when(members(j)(c) > 0)(sums(j)(c).map(_ / members(j)(c))))
     }
     books
   }
@@ -708,7 +614,7 @@ object SimilarityOps {
       (if (codebooks.isDefined)
          pqDimGuard(asDouble(col(vecCol)), dim, "corpus")
        else asDouble(col(vecCol))).as("v"))
-    val coded = c.select(col("vec_id") +: pqCodes(c, books, dsub, col("v")): _*)
+    val coded = pqCoded(c, books, dsub)
     val q = queries.select(col(qidCol).cast("long").as("query_id"),
       pqDimGuard(asDouble(col(qvecCol)), dim, "query").as("qv"))
     val joined = coded.join(broadcast(q), col("vec_id") =!= col("query_id"))
@@ -786,8 +692,8 @@ object SimilarityOps {
       ided, "vec_id", md5(to_json(struct(col("v0")))))
     val reps = reps0.select(col("vec_id"), col("v0").as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    val assigned = reps.withColumn("cell",
-      nearestCellFor(reps, cents, col("v"), col("nrm"))).localCheckpoint()
+    val assigned = reps.withColumn("cell", ivfCell(reps, cents, col("v")))
+      .localCheckpoint()
     val pairs = assigned.as("a").join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("ida"), col("b.vec_id").as("idb"),
@@ -825,19 +731,16 @@ object SimilarityOps {
   // and scores round to 6 — hash-stable and oracle-reproducible.
 
   /** Per-vector residuals (vec_id, cell, v = residual) against trained
-    * coarse centroids, materialized once: the cell's centroid enters as a
-    * literal selected by a when-chain over the (bounded) cell ids —
-    * codegen'd, no join against a centroid table. The [[trainingSet]]
-    * feeds both residual training and the coding pass. */
+    * coarse centroids, materialized once: the cell's centroid enters as
+    * one literal map from cell id — codegen'd, no join against a centroid
+    * table. A vector without a cell has a NULL residual. The
+    * [[trainingSet]] feeds both residual training and the coding pass. */
   private def residualsFor(corpus: DataFrame, idCol: String, vecCol: String,
                            cents: Array[Centroid]): TrainingSet = {
-    val c = withNorms(corpus, idCol, vecCol, "vec_id", "v", "nrm")
-    val assigned = c.withColumn("cell",
-      nearestCellFor(c, cents, col("v"), col("nrm")))
-    val centFor = cents.tail.foldLeft(
-      when(col("cell") === cents.head._1, vecLit(cents.head._2))) {
-      case (acc, (cid, cv, _)) => acc.when(col("cell") === cid, vecLit(cv))
-    }
+    val c = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
+    val assigned = c.withColumn("cell", ivfCell(c, cents, col("v")))
+    val centFor = element_at(typedLit(cents.map(c => c._1 -> c._2.toSeq).toMap),
+      col("cell"))
     trainingSet(assigned.select(col("vec_id"), col("cell"),
       zip_with(col("v"), centFor, (a, b) => a - b).as("v")), pqRule)
   }
@@ -864,17 +767,12 @@ object SimilarityOps {
         roundDecimals = Some(6)))
     if (cents.isEmpty) return emptyTopK(spark, "score")
     val set = residualsFor(corpus, idCol, vecCol, cents)
-    val resid = set.c
-    val books = codebooks.getOrElse(
-      pqModel(set, m, cells, iterations, Some(6)))
+    val books = codebooks.getOrElse(pqModel(set, m, cells, iterations, Some(6)))
     if (books.isEmpty || books.exists(_.isEmpty)) return emptyTopK(spark, "score")
     val dsub = books.head.head._1.length
-    val coded = resid.select(col("vec_id") +: col("cell") +:
-      pqCodes(resid, books, dsub, col("v")): _*)
-    // probe: top-nprobe cells by cosine (ivfTopK's rule), carrying
-    // dot(qv, centroid) forward for the scoring decomposition; a stored
-    // model's layout is validated in-plan against the query vectors
-    // (residuals share the corpus width, so one guard covers scoring)
+    val coded = pqCoded(set.c, books, dsub)
+    // a stored model's layout is validated in-plan against the query
+    // vectors (residuals share the corpus width, so one guard covers both)
     val q0 = withNorms(queries, qidCol, qvecCol, "query_id", "qv", "qnrm")
     val q = probeCells(
       if (codebooks.isDefined)
@@ -914,7 +812,7 @@ object SimilarityOps {
     LayoutOps.readManifested(spark, path)
       .select(col("cell").cast("long"), col("v"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
-      .map { case (cid, v) => (cid, v.toArray, norm2(v.toArray)) }
+      .map { case (cid, v) => (cid, v.toArray, ivfRule.norm(v.toArray)) }
   }
 
   /** Persist trained PQ codebooks as a manifested table
@@ -940,7 +838,7 @@ object SimilarityOps {
       .groupBy(_._1).toArray.sortBy(_._1)
       .map { case (_, cells) =>
         cells.sortBy(_._2).map { case (_, _, v) =>
-          val a = v.toArray; (a, normSq(a))
+          val a = v.toArray; (a, pqRule.norm(a))
         }
       }
   }

@@ -641,13 +641,57 @@ class DedupSimSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getDouble(2), r.getInt(3))).toMap
     val brute = toMap(SimilarityOps.bruteForceTopK(emb, "vec_id", "embedding",
       queries, "vec_id", "embedding", k = 5))
-    val full = toMap(SimilarityOps.ivfTopK(emb, "vec_id", "embedding",
-      queries, "vec_id", "embedding", k = 5, nlist = 8, nprobe = 8))
-    assert(full === brute, "nprobe == nlist is exhaustive")
+    for (nlist <- Seq(8, 256)) {
+      val full = toMap(SimilarityOps.ivfTopK(emb, "vec_id", "embedding",
+        queries, "vec_id", "embedding", k = 5, nlist = nlist, nprobe = nlist))
+      assert(full === brute, s"nprobe == nlist = $nlist is exhaustive")
+    }
     val partial = toMap(SimilarityOps.ivfTopK(emb, "vec_id", "embedding",
       queries, "vec_id", "embedding", k = 5, nlist = 8, nprobe = 2))
     partial.foreach { case (key, (cos, _)) =>
       assert(brute.get(key).forall(_._1 === cos), s"score mismatch at $key")
+    }
+  }
+
+  test("ivfTopK: a NULL corpus vector has no cell, so it is never a candidate") {
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val nulled = emb.select(col("vec_id"),
+      when(col("vec_id") === 300L, lit(null).cast("array<float>"))
+        .otherwise(col("embedding")).as("embedding"))
+    // every cell probed and k above the corpus size: all candidates return
+    val got = SimilarityOps.ivfTopK(nulled, "vec_id", "embedding",
+      nulled.where(col("vec_id") < 2), "vec_id", "embedding", k = 1000,
+      nlist = 8, nprobe = 8).collect()
+    assert(got.length === 2 * 498, "each query ranks every other real vector")
+    assert(!got.exists(_.getLong(1) == 300L), "the NULL vector was a candidate")
+  }
+
+  test("256-cell models compile in whole-stage codegen: every trainer in both " +
+      "regimes and every search, with codegen's fallback switched off") {
+    // without the fallback, a generated method past the JVM's 64 KB limit
+    // fails the query instead of silently running slower code
+    val emb = Tables.embeddings(spark, sf0001)
+    val queries = emb.where(col("vec_id") < 2)
+    SessionConfs.scoped(spark, Map("spark.sql.codegen.fallback" -> "false")) {
+      for (cutoff <- Seq(graft.operators.InTask.defaultCutoff, 0L)) withCutoff(cutoff) {
+        val cents = SimilarityOps.trainIvfCentroids(emb, "vec_id", "embedding",
+          nlist = 256, iterations = 1, roundDecimals = Some(6))
+        val books = SimilarityOps.trainPqCodebooks(emb, "vec_id", "embedding",
+          m = 2, cells = 256, iterations = 1)
+        val resid = SimilarityOps.trainPqResidualCodebooks(emb, "vec_id",
+          "embedding", cents, m = 2, cells = 256, iterations = 1)
+        assert(cents.length === 256 && (books ++ resid).forall(_.length === 256),
+          s"cutoff $cutoff")
+        assert(SimilarityOps.ivfTopK(emb, "vec_id", "embedding", queries, "vec_id",
+          "embedding", k = 5, nprobe = 64, centroids = Some(cents)).count() === 10)
+        assert(SimilarityOps.pqTopK(emb, "vec_id", "embedding", queries, "vec_id",
+          "embedding", k = 5, codebooks = Some(books)).count() === 10)
+        assert(SimilarityOps.ivfPqTopK(emb, "vec_id", "embedding", queries,
+          "vec_id", "embedding", k = 5, nprobe = 64, centroids = Some(cents),
+          codebooks = Some(resid)).count() === 10)
+        assert(SimilarityOps.semanticDedup(emb, "vec_id", "embedding", nlist = 256,
+          threshold = 0.9, iterations = 1).count() === 500)
+      }
     }
   }
 

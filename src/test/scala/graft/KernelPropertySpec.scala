@@ -2,7 +2,7 @@ package graft
 
 import java.security.MessageDigest
 
-import graft.functions.{Kernels, KmvSketch}
+import graft.functions.{Kernels, KmvSketch, NearestCell}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Test => SCTest}
@@ -157,5 +157,61 @@ class KernelPropertySpec extends AnyFunSuite {
         hits(i) == expected && hits(i) <= toks.length
       }
     }, "stopHits")
+  }
+
+  /** Independent nearest cell: every score from a left fold of products,
+    * -0.0 folded into 0.0, then ranked by Scala's total order of doubles
+    * (NaN highest), ties to the lowest index. */
+  private def refNearest(cells: Seq[Array[Double]], v: Array[Double],
+                         cosine: Boolean): Int = {
+    def dot(a: Array[Double], b: Array[Double]) =
+      a.indices.foldLeft(0.0)((s, i) => s + a(i) * b(i))
+    val scores = cells.map(c =>
+      if (cosine) dot(v, c) / (math.sqrt(dot(c, c)) * math.sqrt(dot(v, v)))
+      else dot(c, c) - 2 * dot(v, c)).map(_ + 0.0)
+    val ord = Ordering.Double.TotalOrdering
+    cells.indices.reduce { (best, i) =>
+      val c = ord.compare(scores(i), scores(best))
+      if (if (cosine) c > 0 else c < 0) i else best
+    }
+  }
+
+  private def nearest(cells: Seq[Array[Double]], cosine: Boolean, v: Array[Double],
+                      from: Int = 0, len: Int = -1): Int =
+    NearestCell.index(cells.toArray, cells.map(NearestCell.norm(_, cosine)).toArray,
+      cosine, v, from, if (len < 0) v.length - from else len)
+
+  test("nearest cell equals a brute-force argmax/argmin: ties, -0.0, NaN, " +
+      "one cell, zero norms, slices and wrong widths") {
+    // few distinct coordinates, so equal scores (ties) are common
+    val coord = Gen.frequency(9 -> Gen.oneOf(-2.0, -1.0, -0.0, 0.0, 1.0, 2.0),
+      1 -> Gen.const(Double.NaN))
+    val gen = for {
+      dim <- Gen.choose(1, 4)
+      n <- Gen.choose(1, 6)
+      cells <- Gen.listOfN(n, Gen.listOfN(dim, coord).map(_.toArray))
+      v <- Gen.listOfN(dim, coord).map(_.toArray)
+      pad <- Gen.choose(0, 3)
+      cosine <- Gen.oneOf(true, false)
+    } yield (cells, v, pad, cosine)
+    check(forAll(gen) { case (cells, v, pad, cosine) =>
+      // a cosine whose denominator ‖c‖·‖v‖ is zero must throw
+      val zeroNorm = cosine && cells.exists(c =>
+        NearestCell.norm(c, cosine) * NearestCell.norm(v, cosine) == 0.0)
+      val got = scala.util.Try(nearest(cells, cosine, v))
+      // the same slice inside a wider array: the in-task call shape
+      val padded = Array.fill(pad)(7.0) ++ v ++ Array.fill(pad)(7.0)
+      val sliced = scala.util.Try(nearest(cells, cosine, padded, pad, v.length))
+      val wrongWidth = nearest(cells, cosine, v :+ 1.0) == -1 &&
+        nearest(cells, cosine, padded, pad, v.length + 1) == -1
+      if (zeroNorm) got.failed.toOption.exists(_.isInstanceOf[ArithmeticException]) &&
+        sliced.isFailure && wrongWidth
+      else got.toOption.contains(refNearest(cells, v, cosine)) && sliced == got && wrongWidth
+    }, "nearest cell")
+    // a cosine that underflows to -0.0 ties with 0.0: the lower cell wins
+    val underflow = Seq(Array(-1e-200, 1e150), Array(0.0, 1.0))
+    assert(nearest(underflow, cosine = true, Array(1.0, 0.0)) === 0)
+    assert(refNearest(underflow, Array(1.0, 0.0), cosine = true) === 0)
+    assert(nearest(Seq(Array(3.0)), cosine = false, Array(-5.0)) === 0, "one cell")
   }
 }

@@ -181,11 +181,37 @@ class PlanSpec extends SparkSpec {
       s"intra-cell pair generation degenerated to all-pairs:\n$p")
   }
 
+  test("PQ search codes each corpus row once: no cell assignment in a join's codegen stage") {
+    // whole-stage codegen defers a projection's columns to their first use,
+    // so coding fused into the scoring join would run once per candidate
+    // pair; the coding (the kernel, or a greatest()/least() struct fold)
+    // must sit behind a stage boundary
+    import org.apache.spark.sql.catalyst.expressions.{Greatest, Least}
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def stage(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p match { case _: InputAdapter => Nil; case _ => p.children.flatMap(stage) })
+    def codes(p: SparkPlan): Boolean = p.expressions.exists(_.exists {
+      case _: graft.functions.NearestCell | _: Greatest | _: Least => true
+      case _ => false
+    })
+    for (name <- Seq("q_ann_pq", "q_ann_rerank", "q_ann_ivfpq")) {
+      val plan = planned(name) { df => df.collect(); df.queryExecution.executedPlan }
+      val joinStages = aqe.collect(plan) { case w: WholeStageCodegenExec => stage(w.child) }
+        .filter(_.exists(_.isInstanceOf[BaseJoinExec]))
+      assert(joinStages.nonEmpty, s"$name has no codegen'd join:\n$plan")
+      for (st <- joinStages)
+        assert(!st.exists(codes), s"$name codes vectors inside a join's stage:\n${st.head}")
+    }
+  }
+
   test("no gated query plans a Scala UDF — every hot path stays codegen-able") {
     // A ScalaUDF boxes every row and blocks whole-stage codegen; the whole
     // engine is built on native expressions/kernels, so any UDF appearing
     // in a gated plan is a regression (last one out: the IVF cell
-    // assignment, replaced by a literal-centroid greatest() fold).
+    // assignment, now the native graft_nearest_cell kernel).
     import org.apache.spark.sql.catalyst.expressions.ScalaUDF
     for (spec <- Catalog.specs) {
       val name = spec.name

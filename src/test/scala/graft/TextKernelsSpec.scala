@@ -110,6 +110,31 @@ class TextKernelsSpec extends SparkSpec {
       .createOrReplaceTempView("docs")
     val interp = s2.sql(sql).collect().map(_.toString).sorted
     assert(base.toSeq === interp.toSeq)
+    GraftFunctions.register(spark)
+    // the nearest-cell kernel: a tie (to the lower cell), -0.0, a NULL and a
+    // wrong-width vector (no cell); cell 2 repeats cell 0
+    val book = "array(array(1D, 0D), array(0D, 1D), array(1D, 0D))"
+    val cellSql = s"""SELECT id,
+      |  graft_nearest_cell(v, $book, 'cosine') AS cos_cell,
+      |  graft_nearest_cell(v, $book, 'l2') AS l2_cell
+      |FROM vecs""".stripMargin
+    val vecs = Seq((0L, Seq(2.0, 1.0)), (1L, Seq(1.0, 1.0)), (2L, Seq(0.0, 3.0)),
+      (3L, null), (4L, Seq(1.0, 2.0, 3.0)), (5L, Seq(-0.0, 1.0))).toDF("id", "v")
+    vecs.createOrReplaceTempView("vecs")
+    s2.createDataFrame(vecs.collectAsList(), vecs.schema).createOrReplaceTempView("vecs")
+    def cells(s: org.apache.spark.sql.SparkSession) = s.sql(cellSql).collect()
+      .map(r => r.getLong(0) -> (Option(r.get(1)), Option(r.get(2)))).toMap
+    assert(cells(spark) === Map(0L -> (Some(0), Some(0)), 1L -> (Some(0), Some(0)),
+      2L -> (Some(1), Some(1)), 3L -> (None, None), 4L -> (None, None),
+      5L -> (Some(1), Some(1))))
+    assert(cells(s2) === cells(spark))
+    // a zero vector has no cosine: both paths throw, naming the division
+    for (s <- Seq(spark, s2)) {
+      val e = intercept[Exception](s.sql(
+        s"SELECT graft_nearest_cell(array(id * 0D, id * 0D), $book, 'cosine') FROM vecs").collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("divides by zero")), e)
+    }
   }
 
   test("langid still classifies the spanish doc as es and empty as und") {
