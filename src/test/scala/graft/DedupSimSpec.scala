@@ -654,7 +654,7 @@ class DedupSimSpec extends SparkSpec {
   }
 
   test("ivfTopK: a NULL corpus vector has no cell, so it is never a candidate") {
-    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val emb = Tables.embeddings(spark, sf0001)
     val nulled = emb.select(col("vec_id"),
       when(col("vec_id") === 300L, lit(null).cast("array<float>"))
         .otherwise(col("embedding")).as("embedding"))
